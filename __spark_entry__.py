@@ -11,9 +11,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from accountant_pdf_extract_spark.plans.pipeline import extract, spans_view
-from accountant_pdf_extract_spark.sources.synth import interleaved_from_documents
-
 SF0001 = "/root/testdata/sf0.001"
 
 
@@ -22,13 +19,8 @@ def entry(spark: SparkSession) -> DataFrame:
     input shape (deterministic synth keyed on doc_id), run the full
     extraction (decode → pdf layout parse → html strip → boilerplate
     strip → field rules → assemble), return the flattened ordered
-    span sequence."""
-    docs = interleaved_from_documents(
-        spark, SF0001, seed=42, salt_buckets=256, num_partitions=32
-    )
-    return spans_view(
-        extract(docs, salt_buckets=256, num_partitions=32, presalted=True)
-    )
+    span sequence — the registered ``q_extract_spans`` plan."""
+    return queries()["q_extract_spans"](spark, SF0001)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -16,18 +16,27 @@ from accountant_pdf_extract_spark.plans.pipeline import (
     salt,
     spans_view,
 )
-from accountant_pdf_extract_spark.sources.synth import interleaved_from_documents
+from accountant_pdf_extract_spark.sources.synth import (
+    documents_source,
+    interleaved_from_documents,
+)
+
+# salt buckets of every query here; the task count is the pipeline
+# default (one per core, ``pipeline._effective_partitions``)
+QUERY_SALT_BUCKETS = 256
+
+
+def _extracted(spark, sf):
+    """Generate-and-extract over the ``documents`` table as ONE plan:
+    salted proxy shuffle, then one fused generate+kernel runner."""
+    proxy, generate = documents_source(spark, sf, seed=42)
+    return extract(proxy, salt_buckets=QUERY_SALT_BUCKETS, generate=generate)
 
 
 @register("q_extract_spans")
 def q_extract_spans(spark, sf):
     """Full extraction: ordered span sequences (rows-only check)."""
-    docs = interleaved_from_documents(
-        spark, sf, seed=42, salt_buckets=256, num_partitions=32
-    )
-    return spans_view(
-        extract(docs, salt_buckets=256, num_partitions=32, presalted=True)
-    )
+    return spans_view(_extracted(spark, sf))
 
 
 @register("q_extract_fields")
@@ -36,11 +45,9 @@ def q_extract_fields(spark, sf):
     fields-only kernel — one output row per doc, span-text Arrow
     columns never built (equivalence with fields_view(extract(...))
     pinned by tests)."""
-    docs = interleaved_from_documents(
-        spark, sf, seed=42, salt_buckets=256, num_partitions=32
-    )
+    proxy, generate = documents_source(spark, sf, seed=42)
     dv = extract_fields_table(
-        docs, salt_buckets=256, num_partitions=32, presalted=True
+        proxy, salt_buckets=QUERY_SALT_BUCKETS, generate=generate
     )
     return dv.select(
         "doc_id",
@@ -63,10 +70,11 @@ def q_salt(spark, sf):
     """Salt-bucket distribution evidence (rows-only): per-bucket doc
     counts for the skew-defeating repartition key — computed via the
     SAME salt() the pipeline shuffles on (never a re-implementation of
-    the bucketing formula), at the sibling queries' 256 buckets."""
-    docs = interleaved_from_documents(spark, sf, seed=42)
+    the bucketing formula), at the sibling queries' buckets, over the
+    generator's proxy rows (same doc_ids, no payload generated)."""
+    proxy, _generate = documents_source(spark, sf, seed=42)
     return (
-        salt(docs, 256)
+        salt(proxy, QUERY_SALT_BUCKETS)
         .groupBy(F.col(SALT_COL).alias("bucket"))
         .agg(F.count("*").alias("n_docs"))
     )
@@ -75,10 +83,7 @@ def q_salt(spark, sf):
 @register("q_span_stats")
 def q_span_stats(spark, sf):
     """Output span mix per kind (rows-only)."""
-    docs = interleaved_from_documents(
-        spark, sf, seed=42, salt_buckets=256, num_partitions=32
-    )
-    flat = extract(docs, salt_buckets=256, num_partitions=32, presalted=True)
+    flat = _extracted(spark, sf)
     return flat.groupBy("kind").agg(
         F.count("*").alias("n_spans"),
         F.countDistinct("doc_id").alias("n_docs"),
@@ -92,10 +97,7 @@ def q_attachments(spark, sf):
     ``attachment`` span kind (rows-only; the attachment content
     itself is pinned by golden fixtures).  Post-extraction analytics
     stay JVM-side: regexp_extract/length/groupBy, no Python UDF."""
-    docs = interleaved_from_documents(
-        spark, sf, seed=42, salt_buckets=256, num_partitions=32
-    )
-    flat = extract(docs, salt_buckets=256, num_partitions=32, presalted=True)
+    flat = _extracted(spark, sf)
     att = flat.where(F.col("kind") == "attachment")
     return (
         att.select(
@@ -123,10 +125,7 @@ def q_form_fields(spark, sf):
     count and distinct-value count over the ``form`` span kind
     (rows-only; values are pinned by golden fixtures).  Analytics stay
     JVM-side; field name rides media_ref, value rides text."""
-    docs = interleaved_from_documents(
-        spark, sf, seed=42, salt_buckets=256, num_partitions=32
-    )
-    flat = extract(docs, salt_buckets=256, num_partitions=32, presalted=True)
+    flat = _extracted(spark, sf)
     return (
         flat.where(F.col("kind") == "form")
         .groupBy(F.col("media_ref").alias("field_name"))
@@ -157,5 +156,8 @@ def q_corpus_pipeline(spark, sf):
     exact dedup (keep min id) -> quality filter (rows-only check)."""
     from accountant_pdf_extract_spark.plans.corpus_pipeline import curate
 
-    docs = interleaved_from_documents(spark, sf, seed=42)
-    return curate(docs, salt_buckets=256, num_partitions=32, min_quality=0.3)
+    proxy, generate = documents_source(spark, sf, seed=42)
+    return curate(
+        proxy, salt_buckets=QUERY_SALT_BUCKETS, min_quality=0.3,
+        generate=generate,
+    )

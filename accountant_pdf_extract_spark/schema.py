@@ -37,6 +37,26 @@ INPUT_SCHEMA = StructType(
     ]
 )
 
+# Arrow twin of INPUT_SCHEMA: what generators emit and the kernel reads.
+ARROW_INPUT = pa.schema(
+    [
+        pa.field("doc_id", pa.string()),
+        pa.field(
+            "spans",
+            pa.list_(
+                pa.struct(
+                    [
+                        pa.field("kind", pa.string()),
+                        pa.field("text", pa.string()),
+                        pa.field("media_ref", pa.string()),
+                        pa.field("offset", pa.int32()),
+                    ]
+                )
+            ),
+        ),
+    ]
+)
+
 SPAN_OUT_STRUCT = StructType(
     [
         StructField("kind", StringType()),

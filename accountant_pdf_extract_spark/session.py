@@ -26,7 +26,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # default: the cores this process may run on (its affinity mask)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app)

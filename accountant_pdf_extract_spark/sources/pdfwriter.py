@@ -29,6 +29,7 @@ latin-1 plane.
 
 from __future__ import annotations
 
+import math
 import re
 import zlib
 from dataclasses import dataclass, field
@@ -79,7 +80,11 @@ def _n(v: float) -> str:
     [1e-4, 1e6) — geometry would corrupt with no error (the lexer
     reads '1e-05' as 1, unknown op 'e', -05).  Fixed-point, 4
     decimals, trailing zeros stripped — identical output to %g for
-    every coordinate the synth corpus emits."""
+    every coordinate the synth corpus emits.  A non-finite value
+    (NaN/inf) has no content-stream spelling — and ``int(v)`` would
+    raise inside the task that also extracts — so it writes '0'."""
+    if not math.isfinite(v):
+        return "0"
     if v == int(v):
         # integral fast path, same output ('-0.0' still maps to '0');
         # most coordinates are integral and this call is hot (46k/800

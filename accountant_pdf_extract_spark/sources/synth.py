@@ -4,56 +4,38 @@ SURVEY.md §2.1).
 Everything is keyed on ``(seed, doc_key)`` through
 ``numpy.random.default_rng`` — no wall clock, no global RNG — so any
 doc regenerates bit-identically on any executor (idempotent task
-retry, reproducible fixtures).  Two Spark builders:
+retry, reproducible fixtures).  Spark builders:
 
-* ``interleaved_from_documents(spark, sf_dir)`` — wraps the driver's
-  read-only ``documents`` parquet (``TESTDATA.md``) into the pinned
-  input shape ``(doc_id:string, spans:array<struct<kind,text,
-  media_ref,offset>>)`` using each doc's own text as vocabulary.
+* ``documents_source(spark, sf_dir)`` — wraps the read-only
+  ``documents`` parquet (``TESTDATA.md``) into the pinned input shape
+  ``(doc_id:string, spans:array<struct<kind,text,media_ref,offset>>)``
+  using each doc's own text as vocabulary: a narrow proxy frame plus
+  the Arrow generator that ``plans.pipeline.extract`` runs inside its
+  kernel (``interleaved_from_documents`` materializes it instead).
 * ``synth_interleaved(spark, n_docs, seed)`` — standalone corpus from
   ``spark.range`` (used by bench at arbitrary scale).
 
-Both run the per-doc builder inside ``mapInArrow`` — vectorized Arrow
-batches, never per-row Python UDFs (``BASELINE.json:15``).
+Both run the per-doc builder over vectorized Arrow batches inside
+``mapInArrow``, never per-row Python UDFs (``BASELINE.json:15``).
 """
 
 from __future__ import annotations
 
 import datetime as dt
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from decimal import Decimal
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from accountant_pdf_extract_spark.schema import INPUT_SCHEMA
+from accountant_pdf_extract_spark.schema import ARROW_INPUT, INPUT_SCHEMA
 from accountant_pdf_extract_spark.sources.pdfwriter import (
     FormXObject,
     OCGLayer,
     PageBuilder,
     SimpleFont,
     build_pdf,
-)
-
-ARROW_INPUT = pa.schema(
-    [
-        pa.field("doc_id", pa.string()),
-        pa.field(
-            "spans",
-            pa.list_(
-                pa.struct(
-                    [
-                        pa.field("kind", pa.string()),
-                        pa.field("text", pa.string()),
-                        pa.field("media_ref", pa.string()),
-                        pa.field("offset", pa.int32()),
-                    ]
-                )
-            ),
-        ),
-    ]
 )
 
 # proportional-font glyph widths (milli-em) for the /Widths corpus
@@ -524,94 +506,55 @@ def _spans_to_arrow(rows: list[tuple[str, list]]) -> pa.RecordBatch:
     )
 
 
-def interleaved_from_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    seed: int = 42,
-    salt_buckets: int | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Wrap the driver's ``documents`` table into the pinned
-    interleaved input shape, deterministically keyed on doc_id.
+def documents_source(
+    spark: SparkSession, sf_dir: str, seed: int = 42
+) -> tuple[DataFrame, Callable[[pa.RecordBatch], pa.RecordBatch]]:
+    """The ``documents`` table as a generated source: narrow
+    proxy rows ``(doc_id, _num_id, text)`` — ``doc_id`` is already the
+    ``doc-%08d`` id the generated document carries — and the per-batch
+    generator that expands them into the pinned input shape, keyed on
+    ``(seed, _num_id)`` with each doc's own text as vocabulary.
 
-    With ``salt_buckets`` set, the frame is salted and repartitioned on
-    the FUTURE output doc_id BEFORE the generator runs (guide §8:
-    decide placement on the lightweight proxy, move heavy bytes once —
-    here zero times: the generated payload is ~8x the source text, and
-    pre-salting lets ``extract(..., presalted=True)`` skip its own
-    exchange entirely, so the synthesized PDFs never cross a shuffle).
-    The salt formula is ``plans.pipeline.salt`` itself, applied to the
-    same ``doc-%08d`` id the generator emits — the bucketing can never
-    fork between this path and the post-generation path."""
-    from accountant_pdf_extract_spark.operators.dedup import ensure_parallelism
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-
-    if salt_buckets is None:
-        # single small local parquet file → one scan task would
-        # serialize the whole synth+shuffle stage; fan out first
-        # (no-op at scale)
-        docs = ensure_parallelism(docs)
-
-        def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                ids = batch.column("doc_id").to_pylist()
-                texts = batch.column("text").to_pylist()
-                rows = []
-                for did, text in zip(ids, texts):
-                    vocab = (text or "").split() or DEFAULT_WORDS
-                    rows.append(
-                        (f"doc-{did:08d}", build_doc(int(did), seed, vocab))
-                    )
-                yield _spans_to_arrow(rows)
-
-        return docs.mapInArrow(gen, schema=INPUT_SCHEMA)
-
+    ``plans.pipeline.extract(proxy, generate=gen)`` salts and shuffles
+    the proxy rows and runs ``gen`` inside the kernel's own Python
+    runner, so the generated payload (~8x the source text) never
+    crosses a shuffle or a second runner."""
     from pyspark.sql import functions as F
 
-    from accountant_pdf_extract_spark.plans.pipeline import (
-        SALT_COL,
-        _effective_partitions,
-        salt,
-    )
-
-    pre = docs.select(
+    proxy = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.format_string("doc-%08d", F.col("doc_id")).alias("doc_id"),
         F.col("doc_id").alias("_num_id"),
         "text",
     )
-    np_ = _effective_partitions(spark, num_partitions, salt_buckets)
-    pre = salt(pre, salt_buckets).repartition(np_, SALT_COL)
-    # StructType.add MUTATES self — build a fresh schema, never extend
-    # the shared INPUT_SCHEMA constant
-    out_schema = T.StructType(
-        list(INPUT_SCHEMA.fields)
-        + [T.StructField(SALT_COL, T.IntegerType())]
-    )
-    arrow_salted = pa.schema(
-        list(ARROW_INPUT) + [pa.field(SALT_COL, pa.int32())]
-    )
 
-    def gen_salted(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            out_ids = batch.column("doc_id").to_pylist()
-            nums = batch.column("_num_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            rows = []
-            for out_id, did, text in zip(out_ids, nums, texts):
-                vocab = (text or "").split() or DEFAULT_WORDS
-                rows.append((out_id, build_doc(int(did), seed, vocab)))
-            base = _spans_to_arrow(rows)
-            yield pa.RecordBatch.from_arrays(
-                [*base.columns, batch.column(SALT_COL)],
-                schema=arrow_salted,
-            )
+    def generate(batch: pa.RecordBatch) -> pa.RecordBatch:
+        rows = []
+        for out_id, did, text in zip(
+            batch.column("doc_id").to_pylist(),
+            batch.column("_num_id").to_pylist(),
+            batch.column("text").to_pylist(),
+        ):
+            vocab = (text or "").split() or DEFAULT_WORDS
+            rows.append((out_id, build_doc(int(did), seed, vocab)))
+        return _spans_to_arrow(rows)
 
-    return pre.mapInArrow(gen_salted, schema=out_schema)
+    return proxy, generate
+
+
+def interleaved_from_documents(
+    spark: SparkSession, sf_dir: str, seed: int = 42
+) -> DataFrame:
+    """``documents_source`` materialized as an input-shaped frame, for
+    plans that read the spans themselves; extraction plans pass the
+    proxy and generator to ``extract`` instead."""
+    from accountant_pdf_extract_spark.operators.dedup import ensure_parallelism
+
+    proxy, generate = documents_source(spark, sf_dir, seed)
+    # single small local parquet file → one scan task would serialize
+    # the whole synth stage; fan out first (no-op at scale)
+    return ensure_parallelism(proxy).mapInArrow(
+        lambda batches: map(generate, batches), schema=INPUT_SCHEMA
+    )
 
 
 def synth_interleaved(
@@ -621,8 +564,14 @@ def synth_interleaved(
     partitions: int | None = None,
     heavy: bool = False,
 ) -> DataFrame:
-    """Standalone corpus: ``spark.range`` → per-doc builder."""
-    rng_free = spark.range(0, n_docs, numPartitions=partitions or max(32, n_docs // 2000))
+    """Standalone corpus: ``spark.range`` → per-doc builder, one task
+    per core unless ``partitions`` pins the count (each Python task's
+    fixed cost is in ``plans.pipeline._effective_partitions``)."""
+    from accountant_pdf_extract_spark.plans.pipeline import _effective_partitions
+
+    rng_free = spark.range(
+        0, n_docs, numPartitions=_effective_partitions(spark, partitions)
+    )
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:

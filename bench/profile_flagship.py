@@ -1,7 +1,7 @@
 """cProfile BOTH halves of the timed flagship path (r6 optimization):
 
 1. corpus generation — ``build_doc`` exactly as q_extract_spans's
-   ``interleaved_from_documents`` invokes it (vocab from the sf
+   ``documents_source`` generator invokes it (vocab from the sf
    documents table, heavy=False), and
 2. the extraction kernel — ``extract_batches`` over that corpus.
 

@@ -65,3 +65,21 @@ def test_entry_smoke(spark):
     df = __spark_entry__.entry(spark)
     assert df.count() > 0
     assert df.columns == ["doc_id", "kind", "text", "media_ref", "order"]
+
+
+@pytest.mark.parametrize("name", ["q_extract_spans", "q_extract_fields"])
+def test_kernel_plan_has_one_python_runner(spark, contract, name):
+    """Generation is fused into the extraction kernel: one MapInArrow
+    (one Python runner per task), one shuffle Exchange (the salted
+    proxy repartition), and, with no explicit num_partitions, one
+    task per core."""
+    import re
+
+    qs, _ = contract
+    plan = qs[name](spark, SF_DIR)._jdf.queryExecution().sparkPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    exchanges = re.findall(r"Exchange (\w+)\((.*?), (\d+)\)", plan)
+    assert len(exchanges) == 1 and plan.count("Exchange") == 1, plan
+    kind, key, n = exchanges[0]
+    assert kind == "hashpartitioning" and key.startswith("_salt_bucket"), plan
+    assert int(n) == spark.sparkContext.defaultParallelism

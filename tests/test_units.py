@@ -1019,6 +1019,21 @@ def test_pdfwriter_numbers_never_use_exponent_notation():
     assert abs(rule.x) <= 1e-4 and rule.length == 1500000.0
 
 
+def test_pdfwriter_non_finite_numbers_do_not_raise():
+    """The integral fast path's int(v) raised on NaN/inf, which would
+    kill the task that generates and extracts the document; a
+    non-finite coordinate writes '0' and the PDF still parses."""
+    from accountant_pdf_extract_spark.sources.pdfwriter import _n
+
+    for v in (float("nan"), float("inf"), float("-inf")):
+        assert _n(v) == "0"
+    pg = PageBuilder()
+    pg.text(float("nan"), float("inf"), "hello")
+    pages = parse_pdf(build_pdf([pg]).encode("latin-1"))
+    r = pages[0].runs[0]
+    assert (r.x, r.y) == (0.0, 0.0)
+
+
 def test_rules_fixes_wrong_value_and_missed_match_corners():
     """Shared-rule corners where engine AND oracle previously agreed on
     WRONG financial values (invisible to parity): spaced EUR parens,

@@ -18,12 +18,13 @@ COMMENT = {
         "Catalyst/AQE; one final group-by exchange."
     ),
     "extract": (
-        "The extraction pipeline proper has ONE Exchange (the "
-        "spec-mandated salted repartition); everything after it is "
-        "map-only: PythonMapInArrow then the sink. The extra exchange "
-        "below the synth MapInArrow is the LOCAL small-file fan-out "
-        "(ensure_parallelism; no-op at scale where inputs ship many "
-        "files). Scan shows ReadSchema pruned to doc_id+text."
+        "q_extract_spans: ONE Exchange (the spec-mandated salted "
+        "repartition, on the narrow proxy rows before any payload "
+        "exists, into defaultParallelism partitions — one task per "
+        "core); everything after it is map-only: ONE MapInArrow that "
+        "generates each document and extracts it in the same Python "
+        "runner, then the sink. Scan shows ReadSchema pruned to "
+        "doc_id+text."
     ),
     "q_agg": (
         "partial_ hash aggregate before the exchange (map-side "
@@ -157,7 +158,6 @@ def grab_plan(df) -> str:
 
 def main() -> None:
     from accountant_pdf_extract_spark.plans import driver_queries
-    from accountant_pdf_extract_spark.plans.pipeline import extract
     from accountant_pdf_extract_spark.session import get_spark
     from accountant_pdf_extract_spark.sources.synth import (
         interleaved_from_documents,
@@ -168,8 +168,7 @@ def main() -> None:
     qs = driver_queries.queries()
 
     sections = []
-    docs = interleaved_from_documents(spark, sf)
-    sections.append(("extract", extract(docs, 256, 32)))
+    sections.append(("extract", qs["q_extract_spans"](spark, sf)))
     for name in ("q_filter", "q_agg", "q_join_bcast", "q_dedup_minhash",
                  "q_dedup_simhash", "q_embed_topk", "q_asof", "tpch_q5",
                  "q_ntile", "q_range_join", "q_global_rank", "tpch_q10",
@@ -186,6 +185,7 @@ def main() -> None:
     from accountant_pdf_extract_spark.plans.pipeline import SALT_COL, salt
 
     tmp = tempfile.mkdtemp(prefix="plans_bucketed_")
+    docs = interleaved_from_documents(spark, sf)
     write_bucketed_input(docs.select("doc_id", "spans"), tmp, salt_buckets=8)
     binp = spark.read.parquet(tmp)
     pruned = salt(binp, 8).where(~F.col(SALT_COL).isin([0, 1, 2, 3]))

@@ -12,6 +12,9 @@ pruning → one exchange → embarrassingly parallel extraction.
 
 from __future__ import annotations
 
+import os
+import zipimport
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,6 +44,53 @@ def salt(df: DataFrame, buckets: int = 1024) -> DataFrame:
     )
 
 
+def _stat_checked_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive changed on disk.
+
+    The PySpark worker calls ``importlib.invalidate_caches()`` at the
+    start of every task; under Python 3.11 each zip importer then
+    re-reads its whole archive directory.  A kernel worker holds 16 zip
+    importers over three archives (``pyspark.zip``, the py4j zip and
+    the spark-core jar): 140–230 ms per task.  The wrapper stamps each
+    archive with ``(st_mtime_ns, st_size)`` when it reads the directory
+    and, while ``os.stat`` shows the same stamp and the directory is
+    still cached, only re-points the importer at the cached directory.
+    A changed, vanished or unreadable archive is re-read by the stock
+    method, so what imports is unchanged.  Installing it again does
+    nothing.
+
+    Called inside the Python worker (first statement of the kernel's
+    ``mapInArrow`` function), not from a ``spark.python.daemon.module``
+    hook: with ``spark-submit --py-files`` the daemon cannot import this
+    package, and ``pyspark/daemon.py`` ignores any worker module not
+    named ``pyspark*``.  Pooled workers keep the patch, for every UDF
+    they later run: a worker's first task pays the stock re-read, its
+    second reads each archive once (35–70 ms), later tasks 0.1–0.25 ms
+    (local[1] on a 4-core host, after the sf0.001 kernel)."""
+    stock = zipimport.zipimporter.invalidate_caches
+    if getattr(stock, "stat_checked", False):
+        return
+    stamps = {}  # archive path -> stamp taken before its last read
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and stamp == stamps.get(self.archive) \
+                and files is not None:
+            self._files = files
+            return
+        stock(self)
+        stamps[self.archive] = stamp
+
+    invalidate_caches.stat_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
 def _with_drop_metric(spark, kernel_fn, acc=None, generate=None):
     """Wrap an Arrow kernel so per-doc extraction failures increment a
     driver-readable accumulator (surfaced as ``dropped_docs_acc`` on
@@ -64,6 +114,8 @@ def _with_drop_metric(spark, kernel_fn, acc=None, generate=None):
     dropped = acc if acc is not None else spark.sparkContext.accumulator(0)
 
     def run(batches):
+        _stat_checked_zip_invalidation()
+
         def note(doc_id, exc):
             dropped.add(1)
             print(f"extract_doc failed for {doc_id!r}: {exc!r}", flush=True)
@@ -166,28 +218,24 @@ def _effective_partitions(
     (e.g. ``job.py --num-partitions`` on a cluster), otherwise the core
     budget — ``defaultParallelism`` tasks, one wave.
 
-    One wave, because every Python task pays a fixed cost per
-    ``mapInArrow`` runner that dwarfs small inputs: the PySpark worker
-    calls ``importlib.invalidate_caches()`` on each task, and under
-    Python 3.11 that makes ``zipimport`` re-read the whole directory of
-    ``pyspark.zip`` once per zip importer in
-    ``sys.path_importer_cache`` (16 of them once the kernel's imports
-    ran) — ≈0.31 s per runner per task on Spark 4.1 (an identity
-    ``mapInArrow`` costs 307–310 ms per extra task; a JVM-only stage
-    7–19 ms).  Measured on local[4], warm, noop sink, interleaved A/B,
-    identical span output in every variant:
+    One wave, because a Python task still has a fixed cost.  The
+    largest part, the worker's per-task zip re-read, is paid in full
+    only by a worker's first task (``_stat_checked_zip_invalidation``),
+    but more tasks still cost more on these inputs.  perfbench
+    ``wall_s`` with that fix, local[4] on a 4-core host, warm, three
+    interleaved rounds per cell (median):
 
-    =====  =========================  ========  ========  =======  =======
-    docs   plan                       32 tasks  16 tasks  8 tasks  4 tasks
-    =====  =========================  ========  ========  =======  =======
-    500    two runners per task       4.75 s    –         –        1.13 s
-    500    one fused runner per task  2.98 s    –         –        0.90 s
-    5,000  two runners per task       6.89 s    –         –        –
-    5,000  one fused runner per task  –         3.89 s    3.79 s   3.22 s
-    =====  =========================  ========  ========  =======  =======
+    =========  =======  =======  ========
+    workload   4 tasks  8 tasks  16 tasks
+    =========  =======  =======  ========
+    flagship   0.86 s   0.91 s   1.22 s
+    heavy_job  5.08 s   4.94 s   5.25 s
+    =========  =======  =======  ========
 
-    ``run_job`` over 200 heavy docs: 16 tasks 5.21 s, 8 tasks 4.43 s,
-    4 tasks 4.13 s.
+    heavy_job's 8-task cell is within its run-to-run spread
+    (4.36–5.17 s at 4 tasks).  More tasks per core would let a
+    giant-PDF task finish alongside the others instead of being the
+    tail; choosing that needs a giant-PDF tail corpus to measure.
 
     With ``salt_buckets`` the repartition KEY is the salt bucket, so
     partitions beyond ``salt_buckets`` can only sit empty (there are at

@@ -1,6 +1,7 @@
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may run
+on) and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -30,7 +31,8 @@ The driver captures only the TAIL of stdout (~2000 chars), so the final
 line carries ONLY the compact summary (metric/value/queries/sf/cpus/
 policy/noisy/all_polluted — r4's enriched line overflowed the window and
 the round's record parsed as null). The run-level evidence (raw runs,
-clean subsets, per-pass steal) goes to BENCH/bench_detail.json.
+clean subsets, per-pass steal) goes to BENCH/bench_detail.json, or to
+$SPARK_GRAFT_BENCH_DETAIL when set.
 """
 
 from __future__ import annotations
@@ -118,7 +120,7 @@ MAX_EXTRA_PASSES = 2  # full-pass re-runs when every pass was polluted
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     # parse the scale factor BEFORE the multi-minute run — a dir not
     # ending in sf<number> must not discard three finished passes with
     # a ValueError while building the output dict
@@ -244,7 +246,7 @@ def main() -> None:
         if hasattr(os, "sched_getaffinity")
         else None,
     }
-    detail_path = os.path.join(
+    detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL") or os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH",
         "bench_detail.json",
     )

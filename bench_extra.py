@@ -43,7 +43,8 @@ def main() -> None:
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get(
+                        "SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))))
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--explain-dir", default=None)
     ap.add_argument("--suffix", default="before")

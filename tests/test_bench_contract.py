@@ -12,10 +12,13 @@ import sys
 ROOT = pathlib.Path(__file__).parent.parent
 
 
-def test_bench_one_json_line():
+def test_bench_one_json_line(tmp_path):
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.001"
     env["SPARK_GRAFT_CPUS"] = "8"
+    # keep the tracked BENCH/bench_detail.json out of the test's writes
+    detail_path = tmp_path / "bench_detail.json"
+    env["SPARK_GRAFT_BENCH_DETAIL"] = str(detail_path)
     out = subprocess.run(
         [sys.executable, "bench.py"],
         capture_output=True,
@@ -43,7 +46,7 @@ def test_bench_one_json_line():
     # computed over the recorded clean subset
     import statistics
 
-    detail = json.loads((ROOT / "BENCH" / "bench_detail.json").read_text())
+    detail = json.loads(detail_path.read_text())
     assert detail["summary"]["queries"] == payload["queries"]
     for name, med in payload["queries"].items():
         rs = detail["runs"][name]

@@ -94,7 +94,13 @@ except Exception:
 
 def rc4(key: bytes, data: bytes) -> bytes:
     """Plain RC4 (the PDF 'V2' cipher) — symmetric, so this is both
-    encrypt and decrypt."""
+    encrypt and decrypt.
+
+    Not reentrant: the native (libcrypto) path reuses one module-level
+    key-state buffer and one output buffer across calls.  That is safe
+    for a Python worker running one task at a time, but concurrent
+    calls from several threads in one process would corrupt each
+    other's output."""
     if _rc4_native is not None:
         return _rc4_native(key, data)
     return _rc4_py(key, data)

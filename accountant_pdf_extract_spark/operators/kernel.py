@@ -2,24 +2,29 @@
 ``mapInArrow`` pass).
 
 Input batches: (doc_id: string, spans: list<struct<kind,text,media_ref,
-offset>>).  Output batches: one row per output span, flattened; the doc's
-extracted fields ride on its order==0 row (``schema.ARROW_FLAT_FIELDS``).  Arrow in, Arrow out — the only Python
-boundary in the hot path; no per-row Python at the Spark API level
-(``BASELINE.json:15``).
+offset>>).  One per-document loop (``_extract_rows``) feeds two output
+projections: ``extract_batches`` emits one row per output span, the
+doc's extracted fields riding on its order==0 row
+(``schema.ARROW_FLAT_FIELDS``); ``extract_fields_batches`` emits one
+row per document (``schema.ARROW_DOC_FIELDS``).  Arrow in, Arrow out —
+the only Python boundary in the hot path; no per-row Python at the
+Spark API level (``BASELINE.json:15``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from itertools import repeat
+from operator import itemgetter
 
 import pyarrow as pa
 
 from accountant_pdf_extract_spark.operators.doccore import extract_doc
-from accountant_pdf_extract_spark.schema import ARROW_FLAT_FIELDS
+from accountant_pdf_extract_spark.schema import ARROW_DOC_FIELDS, ARROW_FLAT_FIELDS
 
 
 def _decode_spans_batch(batch: pa.RecordBatch):
-    """Shared Arrow decode for both kernels: the list<struct> column
+    """Arrow decode of one input batch: the list<struct> column
     via flat child arrays + offsets instead of to_pylist() (which
     builds a dict per span — ~2x slower on string-heavy batches).
     .offsets index absolutely into .values (even for sliced arrays and
@@ -41,10 +46,13 @@ def _decode_spans_batch(batch: pa.RecordBatch):
     )
 
 
-# DERIVED from the pinned schema — a hand-maintained copy could drift
+# DERIVED from the pinned schemas — a hand-maintained copy could drift
 # after a schema edit, and (because of the per-doc isolation fallback)
 # the drift would surface as every doc silently dropped, not an error
 _FLAT_TYPES = [f.type for f in ARROW_FLAT_FIELDS]
+_DOC_TYPES = [f.type for f in ARROW_DOC_FIELDS]
+# a doc's field values in schema column order (column 0 is doc_id)
+_field_values = itemgetter(*ARROW_DOC_FIELDS.names[1:])
 
 
 def _yield_with_doc_isolation(cols, types, schema, bounds, on_drop):
@@ -113,34 +121,27 @@ def _refuse_all_fail_batch(failures: list[Exception], n_docs: int) -> None:
 
 
 def _report_drop(on_drop, doc_id, exc) -> None:
-    """Per-doc fault isolation sink: callback when wired (the pipeline
-    wires an accumulator through it), executor-stdout line otherwise."""
+    """Per-doc fault isolation sink: the executor-stdout line, then the
+    ``on_drop`` callback when wired (the pipeline wires an accumulator
+    through it)."""
+    print(f"extract_doc failed for {doc_id!r}: {exc!r}", flush=True)
     if on_drop is not None:
         on_drop(doc_id, exc)
-    else:
-        print(f"extract_doc failed for {doc_id!r}: {exc!r}", flush=True)
 
 
-def extract_batches(
-    batches: Iterator[pa.RecordBatch],
-    on_drop=None,
-) -> Iterator[pa.RecordBatch]:
-    """``on_drop(doc_id, exc)`` is invoked for each document whose
-    extraction raised (per-doc fault isolation); the default logs to
-    executor stdout.  ``plans.pipeline.extract`` wires an accumulator
-    through it so dropped-doc counts surface as a driver-readable
-    metric, not just a buried print."""
+def _extract_rows(batches, on_drop, project, schema, types):
+    """The per-batch loop both outputs share: span decode,
+    ``extract_doc`` per document with per-doc fault isolation, the
+    all-fail guard, then the isolated Arrow build.
+    ``project(cols, doc_id, spans, fields)`` appends one document's
+    output rows to ``cols``, one list per ``schema`` column."""
     for batch in batches:
         doc_ids, list_offsets, f_kind, f_text, f_ref, f_off = (
             _decode_spans_batch(batch)
         )
-
-        col_doc, col_kind, col_text, col_ref, col_order = [], [], [], [], []
-        col_inv, col_idate, col_ddate, col_ccy = [], [], [], []
-        col_total, col_amounts, col_codes = [], [], []
+        cols: list[list] = [[] for _ in types]
         bounds: list[tuple[str, int, int]] = []  # per-doc row spans
         doc_failures: list[Exception] = []
-
         for i, doc_id in enumerate(doc_ids):
             lo, hi = list_offsets[i], list_offsets[i + 1]
             try:
@@ -151,103 +152,68 @@ def extract_batches(
                 )
             except Exception as exc:  # noqa: BLE001 — per-doc fault isolation:
                 # one malformed payload must not kill a 100-TB job; the
-                # doc yields zero spans and the skew shows up in the
+                # doc yields zero rows and the skew shows up in the
                 # commit-log n_docs-vs-output delta.
                 _report_drop(on_drop, doc_id, exc)
                 doc_failures.append(exc)
                 continue
-            bounds.append((doc_id, len(col_doc), len(col_doc) + len(out)))
-            for kind, text, ref, order in out:
-                col_doc.append(doc_id)
-                col_kind.append(kind)
-                col_text.append(text)
-                col_ref.append(ref)
-                col_order.append(order)
-                if order == 0:
-                    # fields ride on the doc's first span row only —
-                    # duplicating Decimal/list cells per span row costs
-                    # 20-50x more Arrow build time for zero information
-                    col_inv.append(fields["invoice_id"])
-                    col_idate.append(fields["invoice_date"])
-                    col_ddate.append(fields["due_date"])
-                    col_ccy.append(fields["currency"])
-                    col_total.append(fields["total"])
-                    col_amounts.append(fields["amounts"])
-                    col_codes.append(fields["account_codes"])
-                else:
-                    col_inv.append(None)
-                    col_idate.append(None)
-                    col_ddate.append(None)
-                    col_ccy.append(None)
-                    col_total.append(None)
-                    col_amounts.append(None)
-                    col_codes.append(None)
+            start = len(cols[0])
+            project(cols, doc_id, out, fields)
+            bounds.append((doc_id, start, len(cols[0])))
 
         _refuse_all_fail_batch(doc_failures, len(doc_ids))
-        yield from _yield_with_doc_isolation(
-            [
-                col_doc, col_kind, col_text, col_ref, col_order,
-                col_inv, col_idate, col_ddate, col_ccy,
-                col_total, col_amounts, col_codes,
-            ],
-            _FLAT_TYPES,
-            ARROW_FLAT_FIELDS,
-            bounds,
-            on_drop,
-        )
+        yield from _yield_with_doc_isolation(cols, types, schema, bounds, on_drop)
+
+
+def _span_columns(cols, doc_id, spans, fields):
+    """One row per output span.  The fields ride on the doc's order==0
+    row only — duplicating Decimal/list cells per span row costs 20-50x
+    more Arrow build time for zero information.  Whole-column extends,
+    not a tuple per row: per-row tuples made a batch of span-heavy
+    documents ~20% slower to assemble, mostly in cyclic-GC passes."""
+    start, n = len(cols[0]), len(spans)
+    if not n:
+        return
+    cols[0] += repeat(doc_id, n)
+    for col, vals in zip(cols[1:5], zip(*spans)):
+        col += vals
+    heads = [start + i for i, span in enumerate(spans) if span[3] == 0]
+    for col, val in zip(cols[5:], _field_values(fields)):
+        col += repeat(None, n)
+        for i in heads:
+            col[i] = val
+
+
+def _doc_columns(cols, doc_id, _spans, fields):
+    """One row per document: doc_id + its fields, no span columns."""
+    for col, val in zip(cols, (doc_id, *_field_values(fields))):
+        col.append(val)
+
+
+def extract_batches(
+    batches: Iterator[pa.RecordBatch],
+    on_drop=None,
+) -> Iterator[pa.RecordBatch]:
+    """One row per output span (``schema.ARROW_FLAT_FIELDS``).
+
+    ``on_drop(doc_id, exc)`` is invoked for each document whose
+    extraction raised (per-doc fault isolation), after the
+    executor-stdout line.  ``plans.pipeline.extract`` wires an
+    accumulator through it so dropped-doc counts surface as a
+    driver-readable metric, not just a buried print."""
+    yield from _extract_rows(
+        batches, on_drop, _span_columns, ARROW_FLAT_FIELDS, _FLAT_TYPES
+    )
 
 
 def extract_fields_batches(
     batches: Iterator[pa.RecordBatch],
     on_drop=None,
 ) -> Iterator[pa.RecordBatch]:
-    """Fields-only variant of ``extract_batches``: same decode and
-    per-doc extraction, but emits ONE row per document (doc_id +
-    accounting fields) and never materializes the span-text Arrow
-    columns — the cheap path when only the structured fields are
-    wanted (parse cost is identical; Arrow build drops ~20x)."""
-    from accountant_pdf_extract_spark.schema import ARROW_DOC_FIELDS
-
-    for batch in batches:
-        doc_ids, list_offsets, f_kind, f_text, f_ref, f_off = (
-            _decode_spans_batch(batch)
-        )
-
-        col_doc = []
-        col_inv, col_idate, col_ddate, col_ccy = [], [], [], []
-        col_total, col_amounts, col_codes = [], [], []
-        bounds: list[tuple[str, int, int]] = []
-        doc_failures: list[Exception] = []
-        for i, doc_id in enumerate(doc_ids):
-            lo, hi = list_offsets[i], list_offsets[i + 1]
-            try:
-                _out, fields = extract_doc(
-                    list(
-                        zip(f_kind[lo:hi], f_text[lo:hi], f_ref[lo:hi], f_off[lo:hi])
-                    )
-                )
-            except Exception as exc:  # noqa: BLE001 — per-doc fault isolation
-                _report_drop(on_drop, doc_id, exc)
-                doc_failures.append(exc)
-                continue
-            bounds.append((doc_id, len(col_doc), len(col_doc) + 1))
-            col_doc.append(doc_id)
-            col_inv.append(fields["invoice_id"])
-            col_idate.append(fields["invoice_date"])
-            col_ddate.append(fields["due_date"])
-            col_ccy.append(fields["currency"])
-            col_total.append(fields["total"])
-            col_amounts.append(fields["amounts"])
-            col_codes.append(fields["account_codes"])
-
-        _refuse_all_fail_batch(doc_failures, len(doc_ids))
-        yield from _yield_with_doc_isolation(
-            [
-                col_doc, col_inv, col_idate, col_ddate, col_ccy,
-                col_total, col_amounts, col_codes,
-            ],
-            [f.type for f in ARROW_DOC_FIELDS],
-            ARROW_DOC_FIELDS,
-            bounds,
-            on_drop,
-        )
+    """Fields-only projection of the same loop: ONE row per document
+    (``schema.ARROW_DOC_FIELDS``), never materializing the span-text
+    Arrow columns — the cheap path when only the structured fields
+    are wanted (parse cost is identical; Arrow build drops ~20x)."""
+    yield from _extract_rows(
+        batches, on_drop, _doc_columns, ARROW_DOC_FIELDS, _DOC_TYPES
+    )

@@ -1521,6 +1521,13 @@ def parse_pdf_full(
             # page yields nothing) instead of raising and losing the
             # whole document; oracle mirrors this.
             streams[num] = _decode_stream(payload, dict_part)
+        else:
+            # last definition wins for the stream too: an incremental
+            # update that redefines an object without a stream must not
+            # leave the superseded stream behind (ObjStm/XRef expansion
+            # would read it; the oracle gates on the final body)
+            stream_dicts.pop(num, None)
+            streams.pop(num, None)
 
     # ---- PDF 1.5: expand object streams (/Type /ObjStm) --------------
     # Embedded objects carry no "N 0 obj" headers in the raw bytes, so

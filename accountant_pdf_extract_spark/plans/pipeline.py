@@ -18,9 +18,13 @@ import zipimport
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from accountant_pdf_extract_spark.operators.kernel import extract_batches
+from accountant_pdf_extract_spark.operators.kernel import (
+    extract_batches,
+    extract_fields_batches,
+)
 from accountant_pdf_extract_spark.schema import (
     ARROW_INPUT,
+    DOC_FIELDS_SCHEMA,
     FLAT_FIELDS_SCHEMA,
     assert_input_schema,
 )
@@ -95,8 +99,8 @@ def _with_drop_metric(spark, kernel_fn, acc=None, generate=None):
     """Wrap an Arrow kernel so per-doc extraction failures increment a
     driver-readable accumulator (surfaced as ``dropped_docs_acc`` on
     the result DataFrame and recorded in commit-log lineage) in
-    addition to the executor-stdout line — silent data loss is not
-    acceptable at 10^12 docs.
+    addition to the kernel's executor-stdout line — silent data loss
+    is not acceptable at 10^12 docs.
 
     Accumulator caveat (inherent to updates inside transformations):
     counts are AT-LEAST-ONCE — task retries / speculative duplicates
@@ -116,9 +120,8 @@ def _with_drop_metric(spark, kernel_fn, acc=None, generate=None):
     def run(batches):
         _stat_checked_zip_invalidation()
 
-        def note(doc_id, exc):
+        def note(_doc_id, _exc):
             dropped.add(1)
-            print(f"extract_doc failed for {doc_id!r}: {exc!r}", flush=True)
 
         if generate is not None:
             batches = _generated(batches, generate)
@@ -277,11 +280,6 @@ def extract_fields_table(
     fields table is per-document, the flat table is per-span, and a
     zero-span doc has no row to carry fields on.  Pinned by
     ``test_zero_span_doc_fields_vs_flat``."""
-    from accountant_pdf_extract_spark.operators.kernel import (
-        extract_fields_batches,
-    )
-    from accountant_pdf_extract_spark.schema import DOC_FIELDS_SCHEMA
-
     # no keep_salt: this is a per-document side table, not the
     # bucket-partitioned sink path — nothing downstream keys on it
     out, dropped = _run_kernel(

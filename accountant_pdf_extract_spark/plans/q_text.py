@@ -522,27 +522,6 @@ def q_rolling_fp(spark, sf):
     )
 
 
-@register("q_media_features")
-def q_media_features(spark, sf):
-    """Multimodal path at the driver surface (rows-only): synthesize a
-    deterministic media table (real PNG/WAV binary payloads + typed
-    metadata), decode/feature-extract via the Arrow-batched kernel
-    (from-scratch PNG codec), and join the Catalyst-side resize plan.
-    Exercises the full binary-column plumbing end to end."""
-    from accountant_pdf_extract_spark.operators import multimodal
-
-    media = multimodal.synth_media(spark, 500, seed=42)
-    feats = multimodal.image_features(media)
-    plan = multimodal.resize_plan(media)
-    return (
-        feats.join(plan.select("media_ref", "target_w", "target_h"), "media_ref")
-        .select(
-            "media_ref", "width", "height", "byte_entropy_milli",
-            "target_w", "target_h",
-        )
-    )
-
-
 @register(
     "q_split",
     """

@@ -39,6 +39,31 @@ def test_every_query_has_callable(contract):
     assert len(oracles) / len(qs) > 0.8
 
 
+# SHA-256 over (name, NUL, oracle SQL, NUL) of the 50 scored queries, in
+# order.  A change here changes the scored contract: update it only on
+# purpose, never to make an unrelated edit pass.
+SCORED_SQL_SHA256 = (
+    "84917820efb9fe77119ce74d3f46d42b1ca07b079a36cf8f356036aa06df13af"
+)
+
+
+def test_scored_slots_pinned(contract):
+    """Only the first 50 registered queries are scored: they are
+    exactly ``_PRIORITY``, in order, and their oracle SQL is
+    byte-identical to the pinned digest."""
+    import hashlib
+
+    from accountant_pdf_extract_spark.plans.driver_queries import _PRIORITY
+
+    qs, oracles = contract
+    scored = list(qs)[:50]
+    assert scored == _PRIORITY
+    h = hashlib.sha256()
+    for name in scored:
+        h.update(name.encode() + b"\0" + oracles[name].encode() + b"\0")
+    assert h.hexdigest() == SCORED_SQL_SHA256
+
+
 def test_oracle_parity(spark, contract, duck):
     # Typed comparison through the same pandas/Arrow path the driver uses
     # (Spark toPandas vs DuckDB .df()) — int-kind vs float-kind vs Decimal

@@ -1,15 +1,12 @@
 """Streaming ingestion (AvailableNow → foreachBatch → same pipeline)
-and multimodal plumbing (binary payload kernels, resize/frame plans)."""
+and the stateful, windowed, dedup and join streaming operators."""
 
 from __future__ import annotations
 
 import pathlib
 
-import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
-from accountant_pdf_extract_spark.operators import multimodal
 from accountant_pdf_extract_spark.sources.synth import synth_interleaved
 
 
@@ -42,86 +39,6 @@ def test_stream_extract_available_now(spark, tmp_path: pathlib.Path):
         salt_buckets=8, num_partitions=4,
     )
     assert spark.read.parquet(out).count() == n1
-
-
-def test_media_features_real_png(spark):
-    """image_features decodes the REAL PNG payloads (image rows plus
-    video poster frames) and reports the decoded dims, which must
-    equal the metadata dims; audio (WAV) rows are skipped."""
-    media = multimodal.synth_media(spark, 30, seed=9)
-    visual = media.where(F.col("modality") != "audio")
-    feats = multimodal.image_features(media)
-    rows = feats.collect()
-    assert len(rows) == visual.count() > 0
-    meta = {
-        r["media_ref"]: (r["width"], r["height"]) for r in visual.collect()
-    }
-    for r in rows:
-        assert (r["width"], r["height"]) == meta[r["media_ref"]]
-        assert 0 <= r["mean_intensity"] <= 255
-        assert 0 <= r["byte_entropy_milli"] <= 8000
-
-
-def test_audio_features_real_wav(spark):
-    media = multimodal.synth_media(spark, 30, seed=9)
-    audio = media.where(F.col("modality") == "audio")
-    rows = multimodal.audio_features(media).collect()
-    assert len(rows) == audio.count() > 0
-    for r in rows:
-        assert r["sample_rate"] == 8000
-        assert 1 <= r["n_samples"] <= 8000
-        assert r["rms_milli"] > 0 and r["peak"] <= 32767
-
-
-def test_resize_images_real_pixels(spark):
-    """Nearest-neighbour resize: payload decodes to exactly the
-    planned target dims and stays valid in its SOURCE container (the
-    r4 corpus mixes PNG and baseline-JPEG rows; resize re-encodes in
-    kind, so both formats must appear in the output)."""
-    media = multimodal.synth_media(spark, 20, seed=9)
-    visual = media.where(F.col("modality") != "audio")
-    plan = {
-        r["media_ref"]: (r["target_w"], r["target_h"])
-        for r in multimodal.resize_plan(visual, max_side=64).collect()
-    }
-    formats = set()
-    for r in multimodal.resize_images(visual, max_side=64).collect():
-        assert (r["width"], r["height"]) == plan[r["media_ref"]]
-        payload = bytes(r["payload"])
-        formats.add("jpeg" if payload[:2] == b"\xff\xd8" else "png")
-        px = multimodal.decode_image(payload)
-        assert px.shape[:2] == (r["height"], r["width"])
-        assert max(r["width"], r["height"]) <= 64
-    assert formats == {"png", "jpeg"}
-
-
-def test_media_decode_garbage_raises():
-    from accountant_pdf_extract_spark.functions.png import decode_png
-
-    with pytest.raises(ValueError):
-        decode_png(b"\x89PNG-not-really-data")
-
-
-def test_resize_plan(spark):
-    media = multimodal.synth_media(spark, 20, seed=9)
-    plan = multimodal.resize_plan(media, max_side=224).collect()
-    for r in plan:
-        assert max(r["target_w"], r["target_h"]) <= 224
-        # aspect preserved within rounding
-        if r["width"] >= r["height"]:
-            assert r["target_w"] >= r["target_h"] - 1
-
-
-def test_frame_sample_plan(spark):
-    media = multimodal.synth_media(spark, 50, seed=9)
-    frames = multimodal.frame_sample_plan(media, every_ms=500)
-    agg = frames.groupBy("media_ref").agg(F.count("*").alias("n")).collect()
-    vids = media.where(F.col("modality") == "video").collect()
-    expect = {
-        r["media_ref"]: max(r["duration_ms"] - 1, 0) // 500 + 1 for r in vids
-    }
-    got = {r["media_ref"]: r["n"] for r in agg}
-    assert got == expect
 
 
 def test_stateful_running_counts(spark, tmp_path: pathlib.Path):
@@ -285,26 +202,6 @@ def test_stream_static_broadcast_enrichment(spark, tmp_path: pathlib.Path):
     assert tiers[4] == "silver" and tiers[6] == "bronze" and tiers[8] == "gold"
 
 
-def test_corrupt_media_payload_skipped_not_fatal(spark):
-    """Truncated PNGs, CRC-corrupted PNGs, and non-PNG bytes must skip
-    the ROW, never kill the job."""
-    from accountant_pdf_extract_spark.functions.png import encode_png
-    from accountant_pdf_extract_spark.operators import multimodal
-
-    good = encode_png(np.full((8, 8, 3), 128, dtype=np.uint8))
-    flipped = bytearray(good)
-    flipped[40] ^= 0xFF  # inside IDAT -> CRC mismatch
-    rows = [
-        ("m1", "image", good, 8, 8, 0),
-        ("m2", "image", good[: len(good) // 2], 8, 8, 0),  # truncated
-        ("m3", "image", bytes(flipped), 8, 8, 0),          # bad CRC
-        ("m4", "image", b"not an image at all", 0, 0, 0),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    got = multimodal.image_features(df).collect()
-    assert [r["media_ref"] for r in got] == ["m1"]
-
-
 def test_stream_stream_join_matches_batch(spark, tmp_path: pathlib.Path):
     """Watermarked stream-stream band join over an AvailableNow drain
     equals the batch join on the same inputs, and a second drain with
@@ -365,53 +262,6 @@ def test_stream_stream_join_matches_batch(spark, tmp_path: pathlib.Path):
         ).collect()
     )
     assert got_pairs() == want
-
-
-def test_null_payload_and_fullscale_negative_audio(spark):
-    """NULL payloads skip the row in every kernel; a full-scale
-    negative sample (-32768) must report peak 32768, not wrap."""
-    from accountant_pdf_extract_spark.functions.png import encode_png
-    from accountant_pdf_extract_spark.functions.wav import encode_wav
-
-    wav = encode_wav(np.array([-32768, 5], dtype=np.int16), sample_rate=8000)
-    png = encode_png(np.full((4, 4, 3), 7, dtype=np.uint8))
-    rows = [
-        ("img", "image", png, 4, 4, 0),
-        ("aud", "audio", wav, 0, 0, 250),
-        ("nul", "image", None, 0, 0, 0),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    assert [r["media_ref"] for r in multimodal.image_features(df).collect()] == ["img"]
-    audio = multimodal.audio_features(df).collect()
-    assert [r["media_ref"] for r in audio] == ["aud"]
-    assert audio[0]["peak"] == 32768
-    assert [r["media_ref"] for r in multimodal.resize_images(df).collect()] == ["img"]
-
-
-def test_resize_half_pixel_rounding_matches_plan(spark):
-    """Exact .5 scale products: the kernel must round HALF_UP like
-    resize_plan's F.round (Python round() is banker's and would give
-    4 for 4.5), and extreme aspect ratios never plan a zero side."""
-    from accountant_pdf_extract_spark.functions.png import encode_png
-
-    rows = [
-        # 18x36 at max_side 9 -> scale 0.25 -> 4.5 x 9.0
-        ("half", "image", encode_png(np.zeros((36, 18, 3), np.uint8)), 18, 36, 0),
-        # 1x256 at max_side 64 -> 0.25 x 64 -> clamps to 1 x 64
-        ("thin", "image", encode_png(np.zeros((256, 1, 3), np.uint8)), 1, 256, 0),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    for max_side in (9, 64):
-        plan = {
-            r["media_ref"]: (r["target_w"], r["target_h"])
-            for r in multimodal.resize_plan(df, max_side=max_side).collect()
-        }
-        got = {
-            r["media_ref"]: (r["width"], r["height"])
-            for r in multimodal.resize_images(df, max_side=max_side).collect()
-        }
-        assert got == plan, (max_side, got, plan)
-    assert all(w >= 1 and h >= 1 for w, h in plan.values())
 
 
 def test_streaming_session_windows_match_batch(spark, tmp_path: pathlib.Path):
@@ -483,3 +333,76 @@ def test_streaming_session_windows_match_batch(spark, tmp_path: pathlib.Path):
     assert got == batch
     assert len(got) == 3  # two sessions for user 1, one for user 2
     assert (1, str(ts(0)), 3, 600) in got
+
+
+def test_corrupt_media_payload_skipped_not_fatal(spark):
+    """Media spans are carried through by media_ref, never decoded: an
+    image XObject whose stream payload is a truncated JPEG, corrupt
+    Flate data, or bytes that look like page content yields exactly
+    the spans of the payload-free image — the media span by ref plus
+    the page text, engine ≡ oracle — and a job over those docs keeps
+    every doc."""
+    from accountant_pdf_extract_spark.operators.doccore import extract_doc
+    from accountant_pdf_extract_spark.plans.pipeline import extract, spans_view
+    from accountant_pdf_extract_spark.schema import INPUT_SCHEMA
+    from accountant_pdf_extract_spark.sources.pdfwriter import (
+        PageBuilder,
+        build_pdf,
+    )
+    from tests.oracle import pdf_spans
+
+    ref = "media://sha/feedface"
+    pg = PageBuilder()
+    pg.text(72, 700, "Invoice 42")
+    pg.image(100, 200, 50, 40, ref)
+    pg.text(72, 100, "Total: $10.00")
+    clean = build_pdf([pg])
+    im_dict = (
+        f"<< /Type /XObject /Subtype /Image /Name ({ref}) "
+        "/Width 100 /Height 100 >>"
+    )
+    assert clean.count(im_dict) == 1
+
+    def with_payload(filt: str, payload: bytes) -> str:
+        body = payload.decode("latin-1")
+        obj = (
+            f"<< /Type /XObject /Subtype /Image /Name ({ref}) /Width 100 "
+            f"/Height 100{filt} /Length {len(payload)} >>\n"
+            f"stream\n{body}\nendstream"
+        )
+        return clean.replace(im_dict, obj)
+
+    docs = {
+        "clean": clean,
+        "jpeg": with_payload(
+            " /Filter /DCTDecode", b"\xff\xd8\xff\xe0\x00\x10JFIF\x00\x01"
+        ),
+        "flate": with_payload(" /Filter /FlateDecode", b"\x78\x9cnot zlib"),
+        "ghost": with_payload("", b"BT /F1 10 Tf 72 400 Td (ghost) Tj ET"),
+    }
+    want, _ = extract_doc([("pdf", clean, "", 0)])
+    assert ("media", "", ref) in [(k, t, m) for k, t, m, _ in want]
+    assert {"Invoice 42", "Total: $10.00"} <= {t for _k, t, _m, _ in want}
+    for name, doc in docs.items():
+        got, _ = extract_doc([("pdf", doc, "", 0)])
+        assert got == want, name
+        assert [(k, t, m) for k, t, m, _ in got] == pdf_spans(doc), name
+
+    inp = spark.createDataFrame(
+        [
+            (name, [{"kind": "pdf", "text": doc, "media_ref": "", "offset": 0}])
+            for name, doc in docs.items()
+        ],
+        INPUT_SCHEMA,
+    )
+    rows = spans_view(
+        extract(inp, salt_buckets=4, num_partitions=2)
+    ).select("doc_id", "order", "kind", "text", "media_ref").collect()
+    per_doc: dict = {}
+    for r in sorted(rows, key=lambda r: (r["doc_id"], r["order"])):
+        per_doc.setdefault(r["doc_id"], []).append(
+            (r["kind"], r["text"], r["media_ref"])
+        )
+    assert set(per_doc) == set(docs)
+    assert all(spans == per_doc["clean"] for spans in per_doc.values())
+    assert ("media", "", ref) in per_doc["clean"]

@@ -6,6 +6,8 @@ from __future__ import annotations
 import datetime as dt
 from decimal import Decimal
 
+import pytest
+
 from accountant_pdf_extract_spark.operators.doccore import extract_doc
 from accountant_pdf_extract_spark.operators.fields import (
     amounts_in,
@@ -437,396 +439,70 @@ def test_giant_amount_rejected_not_crashing():
     assert got == want == [("USD", Decimal("12.50"))]
 
 
-def test_kernel_arrow_build_isolation():
-    # If one doc's extracted values break the Arrow column build (after
-    # all per-doc extraction trys succeeded), only that doc is dropped.
-    from decimal import Decimal
+# the two output projections of the kernel's shared per-doc loop
+KERNEL_FNS = ["extract_batches", "extract_fields_batches"]
 
+
+def _kernel_batch(texts):
+    """One input batch: doc d{i} holds a single text span texts[i]."""
     import pyarrow as pa
 
-    from accountant_pdf_extract_spark.operators import kernel
     from accountant_pdf_extract_spark.sources.synth import ARROW_INPUT
 
-    def fake_extract(spans):
-        txt = spans[0][1]
-        fields = {
-            "invoice_id": None, "invoice_date": None, "due_date": None,
-            "currency": None,
-            # doc 'bad' gets a Decimal that overflows decimal128(18,2)
-            "total": Decimal(10) ** 20 if txt == "bad" else Decimal("1.00"),
-            "amounts": None, "account_codes": None,
-        }
-        return [("text", txt, "", 0)], fields
-
-    batch = pa.RecordBatch.from_pydict(
+    return pa.RecordBatch.from_pydict(
         {
-            "doc_id": ["d1", "d2", "d3"],
+            "doc_id": [f"d{i}" for i in range(len(texts))],
             "spans": [
                 [{"kind": "text", "text": t, "media_ref": "", "offset": 0}]
-                for t in ("ok-one", "bad", "ok-two")
+                for t in texts
             ],
         },
         schema=ARROW_INPUT,
     )
+
+
+def _run_kernel_with(fn, fake_extract, texts):
+    """(output batches, dropped doc ids) of kernel ``fn`` over
+    ``_kernel_batch(texts)`` with ``extract_doc`` replaced."""
+    from accountant_pdf_extract_spark.operators import kernel
+
     dropped = []
     orig = kernel.extract_doc
     kernel.extract_doc = fake_extract
     try:
-        out = list(
-            kernel.extract_batches(
-                iter([batch]), on_drop=lambda d, e: dropped.append(d)
-            )
-        )
+        out = list(getattr(kernel, fn)(
+            iter([_kernel_batch(texts)]),
+            on_drop=lambda d, e: dropped.append(d),
+        ))
     finally:
         kernel.extract_doc = orig
-    kept = [d for b in out for d in b.column("doc_id").to_pylist()]
-    assert kept == ["d1", "d3"]
-    assert dropped == ["d2"]
+    return out, dropped
 
 
-# --------------------------------------------------------------------------
-# From-scratch PNG / WAV codecs
-# --------------------------------------------------------------------------
+def _overflow_when_bad(spans):
+    """Fake extract_doc: one span; a text starting 'bad' gets a total
+    that overflows decimal128(18,2), so only its Arrow build fails."""
+    txt = spans[0][1]
+    fields = {
+        "invoice_id": None, "invoice_date": None, "due_date": None,
+        "currency": None,
+        "total": Decimal(10) ** 20 if txt.startswith("bad") else Decimal("1.00"),
+        "amounts": None, "account_codes": None,
+    }
+    return [("text", txt, "", 0)], fields
 
 
-def test_png_roundtrip_all_filters_and_colors():
-    import numpy as np
-
-    from accountant_pdf_extract_spark.functions.png import (
-        decode_png,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(7)
-    shapes = [(5, 3), (7, 11, 3), (4, 6, 4), (1, 1, 3), (3, 1)]
-    for shape in shapes:
-        px = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        want = px[:, :, None] if px.ndim == 2 else px
-        for ft in range(5):
-            got = decode_png(encode_png(px, filter_type=ft))
-            assert got.shape == want.shape, (shape, ft)
-            assert (got == want).all(), (shape, ft)
-
-
-def test_png_rejects_unsupported_and_corrupt():
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest
-
-    from accountant_pdf_extract_spark.functions.png import (
-        PNG_SIG,
-        _chunk,
-        decode_png,
-        encode_png,
-    )
-
-    good = encode_png(np.zeros((4, 4, 3), dtype=np.uint8))
-    with pytest.raises(ValueError, match="signature"):
-        decode_png(b"JUNK" + good[4:])
-    bad_crc = bytearray(good)
-    bad_crc[-5] ^= 0x01  # inside IEND CRC... flip IDAT body instead
-    bad_crc = bytearray(good)
-    idat_at = good.index(b"IDAT")
-    bad_crc[idat_at + 6] ^= 0xFF
-    with pytest.raises(ValueError, match="CRC"):
-        decode_png(bytes(bad_crc))
-    with pytest.raises(ValueError, match="truncated"):
-        decode_png(good[:-8])
-    # unknown interlace METHOD (2) must be rejected, not mis-decoded
-    # (method 1 = Adam7 is supported since r5)
-    ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 2)
-    raw = zlib.compress(bytes(4 * (1 + 12)))
-    interlaced = (
-        PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", raw)
-        + _chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="interlace"):
-        decode_png(interlaced)
-    # an Adam7 file whose IDAT carries non-interlaced-sized data is a
-    # size mismatch, never garbage pixels
-    ihdr7 = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 1)
-    adam_bad = (
-        PNG_SIG + _chunk(b"IHDR", ihdr7) + _chunk(b"IDAT", raw)
-        + _chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="size"):
-        decode_png(adam_bad)
-    # 16-bit is supported since r5 — an odd depth must still reject
-    ihdr12 = struct.pack(">IIBBBBB", 4, 4, 12, 2, 0, 0, 0)
-    deep = (
-        PNG_SIG + _chunk(b"IHDR", ihdr12) + _chunk(b"IDAT", raw)
-        + _chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="depth"):
-        decode_png(deep)
-
-
-def test_png_16bit_and_gray_alpha():
-    """16-bit samples (big-endian) reduce to their HIGH byte on
-    decode — verified against a handcrafted Up-filtered file where
-    low bytes are noise; grey+alpha (color type 4) round-trips
-    through the encoder across filters and Adam7."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from accountant_pdf_extract_spark.functions.png import (
-        PNG_SIG,
-        _chunk,
-        decode_png,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(21)
-    for ft in (0, 2, 4):
-        for il in (False, True):
-            px = rng.integers(0, 256, (11, 17, 2), np.uint8)
-            out = decode_png(encode_png(px, filter_type=ft, interlace=il))
-            assert out.shape == (11, 17, 2)
-            assert np.array_equal(out, px), (ft, il)
-    # 16-bit grey, Up filter over 2-byte samples (bpp = 2)
-    h, w = 4, 3
-    hi = rng.integers(0, 256, (h, w), np.uint8)
-    lo = rng.integers(0, 256, (h, w), np.uint8)
-    rows = np.stack([hi, lo], axis=-1).reshape(h, w * 2).astype(np.int16)
-    raw = bytearray()
-    prev = np.zeros(w * 2, np.int16)
-    for r in range(h):
-        raw.append(2)
-        raw += ((rows[r] - prev) % 256).astype(np.uint8).tobytes()
-        prev = rows[r]
-    ihdr = struct.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 0)
-    png16 = (
-        PNG_SIG + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + _chunk(b"IEND", b"")
-    )
-    out = decode_png(png16)
-    assert out.shape == (h, w, 1)
-    assert np.array_equal(out[..., 0], hi)
-
-
-def test_png_palette_roundtrip_and_trns():
-    """Color type 3 (web PNG8): depths 1/2/4/8 pack MSB-first, any
-    scanline filter byte-wise over the packed rows; decode expands
-    through PLTE (and tRNS → RGBA); out-of-range indices and a
-    missing PLTE reject with ValueError."""
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest
-
-    from accountant_pdf_extract_spark.functions.png import (
-        PNG_SIG,
-        _chunk,
-        decode_png,
-        encode_png_palette,
-    )
-
-    rng = np.random.default_rng(5)
-    for depth in (1, 2, 4, 8):
-        for ft in (0, 1, 2, 3, 4):
-            h, w = 13, 29
-            npal = min(1 << depth, 17)
-            pal = rng.integers(0, 256, (npal, 3), np.uint8)
-            idx = rng.integers(0, npal, (h, w), np.uint8)
-            out = decode_png(
-                encode_png_palette(idx, pal, depth=depth, filter_type=ft)
-            )
-            assert out.shape == (h, w, 3)
-            assert np.array_equal(out, pal[idx]), (depth, ft)
-    # tRNS upgrades to RGBA; entries past the table are opaque
-    pal = rng.integers(0, 256, (5, 3), np.uint8)
-    idx = rng.integers(0, 5, (9, 7), np.uint8)
-    out = decode_png(encode_png_palette(
-        idx, pal, trns=np.array([0, 128, 255], np.uint8), depth=4,
-    ))
-    assert out.shape == (9, 7, 4)
-    alpha = np.array([0, 128, 255, 255, 255], np.uint8)
-    assert np.array_equal(out[..., 3], alpha[idx])
-    # encoder refuses an index outside the palette/depth
-    with pytest.raises(ValueError, match="palette"):
-        encode_png_palette(np.full((4, 4), 3, np.uint8), pal[:3])
-    # decoder refuses an index beyond PLTE (handcrafted: 1 entry,
-    # index 1) and a palette file without PLTE
-    ihdr = struct.pack(">IIBBBBB", 2, 1, 8, 3, 0, 0, 0)
-    raw = zlib.compress(bytes([0, 0, 1]))  # filter 0, indices 0,1
-    bad = (
-        PNG_SIG + _chunk(b"IHDR", ihdr)
-        + _chunk(b"PLTE", b"\x10\x20\x30")
-        + _chunk(b"IDAT", raw) + _chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="palette index"):
-        decode_png(bad)
-    no_plte = (
-        PNG_SIG + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", raw) + _chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="PLTE"):
-        decode_png(no_plte)
-
-
-def test_png_adam7_interlace_roundtrip():
-    """Adam7 (interlace method 1): seven independently-filtered
-    passes scatter into place — lossless roundtrip across color
-    types, filters, palette depths, and sizes smaller than one pass
-    grid (empty passes contribute zero bytes, PNG §8.2)."""
-    import numpy as np
-
-    from accountant_pdf_extract_spark.functions.png import (
-        decode_png,
-        encode_png,
-        encode_png_palette,
-    )
-
-    rng = np.random.default_rng(17)
-    for (h, w) in [(1, 1), (3, 2), (7, 5), (8, 8), (23, 41)]:
-        for c in (1, 3, 4):
-            for ft in (0, 1, 2, 4):
-                px = rng.integers(0, 256, (h, w, c), np.uint8)
-                out = decode_png(
-                    encode_png(px, filter_type=ft, interlace=True)
-                )
-                assert out.shape == (h, w, c), (h, w, c, ft)
-                assert np.array_equal(out, px), (h, w, c, ft)
-    # interlaced ≡ non-interlaced pixels
-    px = rng.integers(0, 256, (19, 31, 3), np.uint8)
-    assert np.array_equal(
-        decode_png(encode_png(px, interlace=True)),
-        decode_png(encode_png(px)),
-    )
-    # palette + Adam7 (per-pass sub-byte packing)
-    for depth in (1, 4, 8):
-        npal = min(1 << depth, 11)
-        pal = rng.integers(0, 256, (npal, 3), np.uint8)
-        idx = rng.integers(0, npal, (13, 21), np.uint8)
-        out = decode_png(encode_png_palette(
-            idx, pal, depth=depth, filter_type=2, interlace=True,
-        ))
-        assert np.array_equal(out, pal[idx]), depth
-
-
-def test_wav_roundtrip_mono_stereo():
-    import numpy as np
-    import pytest
-
-    from accountant_pdf_extract_spark.functions.wav import (
-        decode_wav,
-        encode_wav,
-    )
-
-    rng = np.random.default_rng(3)
-    mono = rng.integers(-32768, 32767, size=100, dtype=np.int16)
-    rate, got = decode_wav(encode_wav(mono, sample_rate=8000))
-    assert rate == 8000 and (got[:, 0] == mono).all()
-
-    stereo = rng.integers(-32768, 32767, size=(50, 2), dtype=np.int16)
-    rate, got = decode_wav(encode_wav(stereo, sample_rate=44100))
-    assert rate == 44100 and (got == stereo).all()
-
-    with pytest.raises(ValueError):
-        decode_wav(b"RIFFxxxxWAVEnothing-else")
-    with pytest.raises(ValueError):
-        decode_wav(encode_wav(mono)[:-11])
-
-
-def test_wav_mulaw_and_pcm8():
-    """G.711 μ-law (format 7) and 8-bit unsigned PCM expand to int16
-    on decode.  The μ-law table is G.711-self-consistent
-    (encode(decode(code)) == code for all codes except the negative-
-    zero alias 0x7F) and roundtrip error stays within the companding
-    segment step; pcm8 keeps exactly the high byte."""
-    import numpy as np
-
-    from accountant_pdf_extract_spark.functions.wav import (
-        _MULAW_DEC,
-        decode_wav,
-        encode_wav,
-        mulaw_encode,
-    )
-
-    codes = np.arange(256, dtype=np.uint8)
-    re_enc = mulaw_encode(_MULAW_DEC[codes])
-    assert all(re_enc[c] == c for c in range(256) if c != 0x7F)
-
-    rng = np.random.default_rng(3)
-    x = rng.integers(-32768, 32767, size=2000, dtype=np.int16)
-    rate, got = decode_wav(encode_wav(x, 8000, fmt="mulaw"))
-    assert rate == 8000 and got.shape == (2000, 1)
-    err = np.abs(
-        got[:, 0].astype(int) - np.clip(x.astype(int), -32635, 32635)
-    )
-    bound = (np.abs(x.astype(int)) + 132) / 16 + 1
-    assert (err <= bound).all()
-
-    rate, g8 = decode_wav(encode_wav(x, 11025, fmt="pcm8"))
-    assert rate == 11025
-    assert np.array_equal(g8[:, 0], (x >> 8).astype(np.int16) << 8)
-
-    st = rng.integers(-30000, 30000, size=(50, 2), dtype=np.int16)
-    _, g = decode_wav(encode_wav(st, 8000, fmt="mulaw"))
-    assert g.shape == (50, 2)
-
-
-def test_png_bomb_and_short_structs_raise_valueerror():
-    """Codec errors must surface as ValueError (the kernels' row-skip
-    contract): decompression bombs are stopped at the declared size,
-    short IHDR/fmt chunks never leak struct.error, zero sample rates
-    are rejected."""
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest
-
-    from accountant_pdf_extract_spark.functions.png import (
-        PNG_SIG,
-        _chunk,
-        decode_png,
-    )
-    from accountant_pdf_extract_spark.functions.wav import (
-        decode_wav,
-        encode_wav,
-    )
-
-    # bomb: IHDR says 4x4 RGB (~52 bytes) but IDAT inflates to 64 MB
-    bomb_raw = zlib.compress(b"\x00" * (64 * 1024 * 1024), 9)
-    ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)
-    bomb = (
-        PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", bomb_raw)
-        + _chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="size does not match"):
-        decode_png(bomb)
-
-    # short IHDR -> ValueError, not struct.error
-    short = (
-        PNG_SIG + _chunk(b"IHDR", b"\x00" * 8)
-        + _chunk(b"IDAT", zlib.compress(b"\x00"))
-        + _chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="IHDR length"):
-        decode_png(short)
-
-    # WAV: truncated fmt chunk and zero sample rate -> ValueError
-    def wav_with_fmt(fmt_body: bytes) -> bytes:
-        body = (
-            b"WAVE" + b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body
-            + b"data" + struct.pack("<I", 0)
+def test_kernel_arrow_build_isolation():
+    # If one doc's extracted values break the Arrow column build (after
+    # all per-doc extraction trys succeeded), only that doc is dropped,
+    # in both output projections.
+    for fn in KERNEL_FNS:
+        out, dropped = _run_kernel_with(
+            fn, _overflow_when_bad, ["ok-one", "bad", "ok-two"]
         )
-        return b"RIFF" + struct.pack("<I", len(body)) + body
-
-    with pytest.raises(ValueError, match="truncated fmt"):
-        decode_wav(wav_with_fmt(b"\x01\x00\x01\x00"))
-    with pytest.raises(ValueError, match="sample rate"):
-        decode_wav(wav_with_fmt(struct.pack("<HHIIHH", 1, 1, 0, 0, 2, 16)))
-
-    good = encode_wav(np.zeros(4, dtype=np.int16))
-    assert decode_wav(good)[0] == 16000
+        kept = [d for b in out for d in b.column("doc_id").to_pylist()]
+        assert kept == ["d0", "d2"], fn
+        assert dropped == ["d1"], fn
 
 
 # --------------------------------------------------------------------------
@@ -941,40 +617,23 @@ def test_kernel_isolation_vs_systemic_failure():
     """One bad doc among good ones drops ONLY the offender; an
     all-docs Arrow failure across >=8 docs re-raises (systemic drift
     must not become a silent zero-output success); tiny all-bad
-    batches keep plain per-doc drop semantics."""
-    import pyarrow as pa
-    import pytest
+    batches keep plain per-doc drop semantics — in both output
+    projections."""
+    for fn in KERNEL_FNS:
+        # mixed: doc d1's total can't convert to decimal128(18,2)
+        got, dropped = _run_kernel_with(
+            fn, _overflow_when_bad, ["a", "bad", "c"]
+        )
+        assert dropped == ["d1"], fn
+        assert sum(b.num_rows for b in got) == 2, fn
 
-    from accountant_pdf_extract_spark.operators.kernel import (
-        _yield_with_doc_isolation,
-    )
+        # systemic: every doc fails across >= 8 docs -> raise
+        with pytest.raises(RuntimeError, match="systemic"):
+            _run_kernel_with(fn, _overflow_when_bad, ["bad"] * 8)
 
-    schema = pa.schema([pa.field("doc", pa.string()), pa.field("n", pa.int32())])
-    types = [f.type for f in schema]
-
-    # mixed: doc d1's n value can't convert to int32
-    cols = [["a", "b", "c"], [1, "boom", 3]]
-    bounds = [("d0", 0, 1), ("d1", 1, 2), ("d2", 2, 3)]
-    dropped = []
-    got = list(_yield_with_doc_isolation(
-        cols, types, schema, bounds, lambda d, e: dropped.append(d)))
-    assert dropped == ["d1"]
-    assert sum(b.num_rows for b in got) == 2
-
-    # systemic: every doc fails across >= 8 docs -> raise
-    n = 8
-    cols = [[f"r{i}" for i in range(n)], ["x"] * n]
-    bounds = [(f"d{i}", i, i + 1) for i in range(n)]
-    with pytest.raises(RuntimeError, match="systemic"):
-        list(_yield_with_doc_isolation(
-            cols, types, schema, bounds, lambda d, e: None))
-
-    # tiny all-bad batch: per-doc drops, no raise
-    cols = [["r0"], ["x"]]
-    dropped = []
-    got = list(_yield_with_doc_isolation(
-        cols, types, schema, [("d0", 0, 1)], lambda d, e: dropped.append(d)))
-    assert dropped == ["d0"] and got == []
+        # tiny all-bad batch: per-doc drops, no raise
+        got, dropped = _run_kernel_with(fn, _overflow_when_bad, ["bad"])
+        assert dropped == ["d0"] and got == [], fn
 
 
 def test_hostile_html_bails_to_plain_text_fast():
@@ -1215,13 +874,12 @@ def test_predictor_pdf15_layout_matches_oracle():
 def test_predictor_filters_cross_validated_and_corrupt_degrades():
     """All five PNG row filters + the TIFF predictor reconstruct
     correctly in BOTH the engine and the oracle — cross-validated
-    against the independent functions/png.py encoder — and corrupt
-    predictor data degrades to an empty stream, never raises."""
+    against the independent ``oracle.png_filter_rows`` encoder — and
+    corrupt predictor data degrades to an empty stream, never raises."""
     import zlib
 
     import numpy as np
 
-    from accountant_pdf_extract_spark.functions.png import encode_png
     from accountant_pdf_extract_spark.operators.pdfparse import (
         _unpredict,
         parse_pdf,
@@ -1232,15 +890,8 @@ def test_predictor_filters_cross_validated_and_corrupt_degrades():
     img = rng.integers(0, 256, (9, 13, 3), dtype=np.uint8)
     parms_b = b"/Predictor 15 /Columns 13 /Colors 3 /BitsPerComponent 8"
     for f in range(5):
-        data = encode_png(img, filter_type=f)
-        i, idat = 8, b""
-        while i < len(data):
-            ln = int.from_bytes(data[i : i + 4], "big")
-            tag = data[i + 4 : i + 8]
-            if tag == b"IDAT":
-                idat += data[i + 8 : i + 8 + ln]
-            i += 12 + ln
-        filt = zlib.decompress(idat)
+        filt = oracle.png_filter_rows(img.tobytes(), 13 * 3, 3, f)
+        assert filt[:: 13 * 3 + 1] == bytes([f]) * 9, f
         assert _unpredict(filt, parms_b) == img.tobytes(), f
         assert oracle._unpredict(
             filt.decode("latin-1"), parms_b.decode()
@@ -1295,6 +946,207 @@ def test_predictor_filters_cross_validated_and_corrupt_degrades():
         % (len(content), content)
     )
     assert [r.text for r in parse_pdf(plain_doc)[0].runs] == ["hi"]
+
+
+# ---- PNG / TIFF predictors (ISO 32000-1 §7.4.4.4) ---------------------
+# The PNG predictor is the PNG row-filter layer (PNG §9) and predictor 2
+# is TIFF horizontal differencing; both are reversed by the engine and
+# the oracle independently, checked here against oracle.png_filter_rows.
+
+
+def _predictor_bpp(colors: int, bpc: int) -> int:
+    return max(1, (colors * bpc + 7) // 8)
+
+
+def _assert_unpredicts(filt: bytes, parms: bytes, want: bytes) -> None:
+    """Engine and oracle both reverse ``filt`` under ``parms`` to
+    ``want``."""
+    from accountant_pdf_extract_spark.operators.pdfparse import _unpredict
+    from tests import oracle
+
+    assert _unpredict(filt, parms) == want, parms
+    assert oracle._unpredict(
+        filt.decode("latin-1"), parms.decode()
+    ).encode("latin-1") == want, parms
+
+
+def _assert_rejected(raw: bytes, parms: bytes) -> None:
+    """Engine and oracle both raise ValueError on ``raw`` under
+    ``parms``, and inside a Flate stream the whole stream degrades to
+    empty in both."""
+    import zlib
+
+    from accountant_pdf_extract_spark.operators.pdfparse import (
+        _decode_stream,
+        _unpredict,
+    )
+    from tests import oracle
+
+    with pytest.raises(ValueError):
+        _unpredict(raw, parms)
+    with pytest.raises(ValueError):
+        oracle._unpredict(raw.decode("latin-1"), parms.decode())
+    dict_part = b"/Filter /FlateDecode /DecodeParms << " + parms + b" >>"
+    comp = zlib.compress(raw)
+    assert _decode_stream(comp, dict_part) == b"", parms
+    assert oracle._decode_stream_oracle(
+        comp.decode("latin-1"), dict_part.decode()
+    ) == "", parms
+
+
+def test_png_roundtrip_all_filters_and_colors():
+    """The PNG predictor reverses every row filter (None, Sub, Up,
+    Average, Paeth) for /Colors 1-4 at 8 bits under every declared
+    predictor number 10-15 (the number only names the encoder's
+    choice), a stream that switches filter on every row, and a short
+    final row; engine ≡ oracle ≡ the unfiltered bytes."""
+    import numpy as np
+
+    from tests import oracle
+
+    rng = np.random.default_rng(11)
+    cols, nrows = 7, 6
+    for colors in (1, 2, 3, 4):
+        rowlen = cols * colors
+        data = rng.integers(0, 256, nrows * rowlen, dtype=np.uint8).tobytes()
+        encs = [oracle.png_filter_rows(data, rowlen, colors, ft) for ft in range(5)]
+        for ft, filt in enumerate(encs):
+            assert filt[:: rowlen + 1] == bytes([ft]) * nrows
+            for pred in range(10, 16):
+                parms = b"/Predictor %d /Columns %d /Colors %d" % (
+                    pred, cols, colors,
+                )
+                _assert_unpredicts(filt, parms, data)
+        parms = b"/Predictor 15 /Columns %d /Colors %d" % (cols, colors)
+        # row i of the ft-encoding is row i filtered with ft against
+        # the true previous row, so rows can be spliced across filters
+        step = rowlen + 1
+        mixed = b"".join(
+            encs[i % 5][i * step : (i + 1) * step] for i in range(nrows)
+        )
+        assert mixed[::step] == bytes(i % 5 for i in range(nrows))
+        _assert_unpredicts(mixed, parms, data)
+        short = data + bytes(range(3))
+        for ft in range(5):
+            _assert_unpredicts(
+                oracle.png_filter_rows(short, rowlen, colors, ft), parms, short
+            )
+
+
+def test_png_16bit_and_gray_alpha():
+    """16-bit components and gray+alpha (/Colors 2) widen the filter's
+    bytes-per-pixel to 2, 4 or 8; sub-byte depths (1, 2, 4 bits) clamp
+    it to 1 with a rounded-up row length.  Every filter reverses
+    exactly in engine and oracle, and a 16-bit gray+alpha Paeth-
+    predicted content stream extracts its text."""
+    import zlib
+
+    import numpy as np
+
+    from tests import oracle
+
+    rng = np.random.default_rng(16)
+    for colors, bpc, cols in (
+        (1, 16, 5), (2, 16, 5), (4, 16, 3), (2, 8, 6),
+        (1, 1, 13), (1, 2, 7), (3, 4, 5),
+    ):
+        rowlen = (cols * colors * bpc + 7) // 8
+        bpp = _predictor_bpp(colors, bpc)
+        data = rng.integers(0, 256, 5 * rowlen, dtype=np.uint8).tobytes()
+        parms = b"/Predictor 15 /Columns %d /Colors %d /BitsPerComponent %d" % (
+            cols, colors, bpc,
+        )
+        for ft in range(5):
+            filt = oracle.png_filter_rows(data, rowlen, bpp, ft)
+            assert len(filt) == 5 * (rowlen + 1)
+            _assert_unpredicts(filt, parms, data)
+
+    # in a document: /Columns 4 /Colors 2 /BitsPerComponent 16 makes
+    # 16-byte rows with a 4-byte pixel
+    content = b"BT /F1 10 Tf 72 700 Td (gray alpha sixteen) Tj ET"
+    comp = zlib.compress(oracle.png_filter_rows(content, 16, 4, 4))
+    doc = (
+        b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+        b"2 0 obj\n<< /Type /Pages /Kids [ 3 0 R ] /Count 1 >>\nendobj\n"
+        b"3 0 obj\n<< /Type /Page /Contents 4 0 R >>\nendobj\n"
+        b"4 0 obj\n<< /Filter /FlateDecode /DecodeParms << /Predictor 14 "
+        b"/Columns 4 /Colors 2 /BitsPerComponent 16 >> /Length %d >>\n"
+        b"stream\n%sendstream\nendobj\n" % (len(comp), comp)
+    )
+    assert [r.text for r in parse_pdf(doc)[0].runs] == ["gray alpha sixteen"]
+
+
+def test_png_rejects_unsupported_and_corrupt():
+    """Unknown predictor numbers, non-positive /Columns, /Colors or
+    /BitsPerComponent, and a filter-type byte above 4 — on full rows,
+    on a short stream, or only in a later row — raise ValueError in
+    engine and oracle, and degrade the whole Flate stream to empty
+    (never partial output).  Predictor 1 or absent passes through."""
+    import numpy as np
+
+    from accountant_pdf_extract_spark.operators.pdfparse import _unpredict
+    from tests import oracle
+
+    good = oracle.png_filter_rows(bytes(range(24)), 6, 1, 4)
+    for pred in (3, 9, 16, 99):
+        _assert_rejected(good, b"/Predictor %d /Columns 6" % pred)
+    for zeroed in (
+        b"/Predictor 12 /Columns 0",
+        b"/Predictor 12 /Columns 6 /Colors 0",
+        b"/Predictor 12 /Columns 6 /BitsPerComponent 0",
+    ):
+        _assert_rejected(good, zeroed)
+    parms = b"/Predictor 12 /Columns 6"
+    for bad_ft in (5, 0x80, 0xFF):
+        full = bytes([bad_ft]) + good[1:]        # full rows: fast path
+        _assert_rejected(full, parms)
+        _assert_rejected(bytes([bad_ft]) + b"ab", parms)  # short stream
+        later = good[:14] + bytes([bad_ft]) + good[15:]  # row 3 only
+        assert later[: 2 * 7 : 7] == bytes([4, 4])
+        _assert_rejected(later, parms)
+    # an all-Up stream takes the column-cumsum fast path; one bad byte
+    # among Up rows must still be caught there
+    up = oracle.png_filter_rows(bytes(range(24)), 6, 1, 2)
+    _assert_unpredicts(up, parms, bytes(range(24)))
+    _assert_rejected(up[:7] + b"\x07" + up[8:], parms)
+
+    raw = np.arange(10, dtype=np.uint8).tobytes()
+    for p in (b"/Predictor 1 /Columns 3", b"/Columns 3", b""):
+        assert _unpredict(raw, p) == raw
+        assert oracle._unpredict(raw.decode("latin-1"), p.decode()) == (
+            raw.decode("latin-1")
+        )
+
+
+def test_tiff_rejects_malformed_and_unsupported():
+    """TIFF predictor 2 supports 8-bit components only: 1, 2, 4 and 16
+    bits raise ValueError in engine and oracle and degrade the Flate
+    stream to empty, as do non-positive /Columns or /Colors.  What it
+    does support still reverses: 3-colour 8-bit rows with a short
+    final row, engine ≡ oracle ≡ the undifferenced bytes."""
+    import numpy as np
+
+    rng = np.random.default_rng(2)
+    cols, colors = 5, 3
+    rowlen = cols * colors
+    raw = rng.integers(0, 256, 4 * rowlen + 4, dtype=np.uint8).tobytes()
+    diff = bytearray(raw)
+    for r0 in range(0, len(diff), rowlen):
+        for j in range(min(r0 + rowlen, len(diff)) - 1, r0 + colors - 1, -1):
+            diff[j] = (diff[j] - diff[j - colors]) & 0xFF
+    diff = bytes(diff)
+    assert diff != raw
+    _assert_unpredicts(
+        diff, b"/Predictor 2 /Columns %d /Colors %d" % (cols, colors), raw
+    )
+    for bpc in (1, 2, 4, 16):
+        _assert_rejected(
+            diff,
+            b"/Predictor 2 /Columns %d /Colors %d /BitsPerComponent %d"
+            % (cols, colors, bpc),
+        )
+    _assert_rejected(diff, b"/Predictor 2 /Columns 0")
+    _assert_rejected(diff, b"/Predictor 2 /Columns 5 /Colors 0")
 
 
 def test_encrypted_rc4_roundtrip_matches_oracle():
@@ -2369,6 +2221,40 @@ def test_corrupt_objstm_degrades_not_raises():
     assert [(k_, t, m) for k_, t, m, _ in eng] == ora == []
 
 
+def test_objstm_redefined_without_stream_is_not_expanded():
+    """An incremental update redefines the ObjStm object as a plain
+    dict (last definition wins): the superseded stream must not be
+    expanded, so the page packed only in it is gone — engine ≡
+    oracle, with the top-level page still read."""
+    from tests.oracle import oracle_extract
+
+    kept = "BT /F1 10 Tf 72 700 Td (kept page) Tj ET\n"
+    stale = "BT /F1 10 Tf 72 700 Td (stale page) Tj ET\n"
+    header = "4 0\n"
+    payload = header + (
+        "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        "/Contents 8 0 R >>"
+    )
+    pdf = (
+        "%PDF-1.5\n"
+        "1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+        "2 0 obj\n<< /Type /Pages /Kids [4 0 R 7 0 R] /Count 2 >>\nendobj\n"
+        f"3 0 obj\n<< /Length {len(kept)} >>\nstream\n{kept}endstream\nendobj\n"
+        f"5 0 obj\n<< /Type /ObjStm /N 1 /First {len(header)} "
+        f"/Length {len(payload)} >>\nstream\n{payload}endstream\nendobj\n"
+        "7 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        "/Contents 3 0 R >>\nendobj\n"
+        f"8 0 obj\n<< /Length {len(stale)} >>\nstream\n{stale}endstream\nendobj\n"
+        "trailer\n<< /Size 9 /Root 1 0 R >>\n%%EOF\n"
+        # incremental update: object 5 loses its stream
+        "5 0 obj\n<< /Type /Null >>\nendobj\n"
+        "trailer\n<< /Size 9 /Root 1 0 R >>\n%%EOF\n"
+    )
+    spans = [("pdf", pdf, "", 0)]
+    eng, _ = extract_doc(spans)
+    assert eng == oracle_extract(spans)[0] == [("text", "kept page", "", 0)]
+
+
 def test_simplefont_encode_rejects_unmappable():
     from accountant_pdf_extract_spark.sources.pdfwriter import SimpleFont
 
@@ -2388,271 +2274,6 @@ def test_font_identity_without_resource():
     pdf = build_pdf([pg])
     eng, _ = extract_doc([("pdf", pdf, "", 0)])
     assert eng == [("text", "caf\xe9 \x96 x", "", 0)]
-
-
-# --------------------------------------------------------------------------
-# JPEG (DCTDecode) codec — round 4
-# --------------------------------------------------------------------------
-
-
-def _grad_rgb(h, w, seed=3):
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    gx = np.linspace(0, 255, w)[None, :]
-    gy = np.linspace(0, 255, h)[:, None]
-    img = np.stack([gx + 0 * gy, 0 * gx + gy, (gx + gy) / 2], 2)
-    return np.clip(img + rng.integers(-8, 9, (h, w, 3)), 0, 255).astype(
-        np.uint8
-    )
-
-
-def test_jpeg_roundtrip_444_420_restarts_grey():
-    """Lossy round-trip within tight error bounds across every encoder
-    layout: 4:4:4, 4:2:0 (subsampled chroma), restart intervals, and
-    single-component grey — odd (non-multiple-of-8/16) dims included."""
-    import numpy as np
-
-    from accountant_pdf_extract_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    img = _grad_rgb(117, 203)
-    for sub in ("444", "420"):
-        for ri in (0, 3):
-            enc = encode_jpeg(img, quality=90, subsampling=sub,
-                              restart_interval=ri)
-            assert enc[:2] == b"\xff\xd8" and enc[-2:] == b"\xff\xd9"
-            dec = decode_jpeg(enc)
-            assert dec.shape == img.shape
-            err = np.abs(dec.astype(int) - img.astype(int))
-            assert err.mean() < 6 and err.max() < 40
-
-    grey = np.clip(
-        np.linspace(0, 255, 117)[:, None] + np.zeros((1, 203)), 0, 255
-    ).astype(np.uint8)
-    dec = decode_jpeg(encode_jpeg(grey, quality=85))
-    assert dec.shape == (117, 203, 1)
-    assert np.abs(dec[:, :, 0].astype(int) - grey.astype(int)).mean() < 4
-
-
-def test_jpeg_rejects_corrupt_and_unsupported():
-    import numpy as np
-    import pytest
-
-    from accountant_pdf_extract_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    enc = encode_jpeg(_grad_rgb(32, 32))
-    for bad in (b"", b"\x89PNG1234", b"\xff\xd8\xff\xd9", enc[:40],
-                enc[:200]):
-        with pytest.raises(ValueError):
-            decode_jpeg(bad)
-    # SOF2 on a baseline-style SOS (Ss=0,Se=63) is a malformed
-    # progressive scan script — rejected, not mis-decoded
-    prog = bytearray(enc)
-    sof = prog.index(b"\xff\xc0")
-    prog[sof + 1] = 0xC2
-    with pytest.raises(ValueError):
-        decode_jpeg(bytes(prog))
-    # genuinely unsupported frame type (SOF3 lossless)
-    lossless = bytearray(enc)
-    lossless[sof + 1] = 0xC3
-    with pytest.raises(ValueError, match="supported"):
-        decode_jpeg(bytes(lossless))
-    # huge-dims bomb guard: patch SOF dims to 60000x60000
-    bomb = bytearray(enc)
-    bomb[sof + 5 : sof + 9] = (60000).to_bytes(2, "big") * 2
-    with pytest.raises(ValueError):
-        decode_jpeg(bytes(bomb))
-    with pytest.raises(ValueError):
-        encode_jpeg(np.zeros((0, 4, 3), dtype=np.uint8))
-    with pytest.raises(ValueError):
-        encode_jpeg(_grad_rgb(8, 8), subsampling="422")
-    # entropy truncation INSIDE the final byte must raise, not decode
-    # the reader's zero slack as data (r4 advice) — chop the last
-    # pre-EOI entropy byte
-    assert enc.endswith(b"\xff\xd9")
-    with pytest.raises(ValueError):
-        decode_jpeg(enc[:-3] + b"\xff\xd9")
-
-
-def test_jpeg_progressive_roundtrip_matches_baseline():
-    """Progressive (SOF2) decode (r4 verdict item 7): the 5-stage
-    scan script (DC first Al=1, split-band AC first, AC refinement
-    with EOBRUN batching + correction bits, DC refinement) decodes to
-    EXACTLY the pixels the baseline path produces from identical
-    coefficients — grey + color, 4:4:4 + 4:2:0, odd dims, low quality
-    (dense EOBRUNs) and high quality (dense coefficients)."""
-    import numpy as np
-
-    from accountant_pdf_extract_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    rng = np.random.default_rng(11)
-    for shape, sub in (
-        ((8, 8, 1), "444"), ((33, 41, 3), "444"),
-        ((33, 41, 3), "420"), ((64, 80, 3), "420"),
-    ):
-        if shape[2] == 1:
-            img = rng.integers(0, 256, shape[:2], dtype=np.uint8)
-        else:
-            yy, xx = np.mgrid[0 : shape[0], 0 : shape[1]]
-            img = np.stack(
-                [(yy * 3 + xx * 2) % 256, (yy * 5) % 256, (xx * 7) % 256],
-                axis=2,
-            ).astype(np.uint8)
-            img = np.clip(
-                img.astype(int) + rng.integers(-20, 20, shape), 0, 255
-            ).astype(np.uint8)
-        for q in (30, 95):
-            base = encode_jpeg(img, quality=q, subsampling=sub)
-            prog = encode_jpeg(
-                img, quality=q, subsampling=sub, progressive=True
-            )
-            assert b"\xff\xc2" in prog and b"\xff\xc2" not in base
-            assert np.array_equal(decode_jpeg(base), decode_jpeg(prog)), (
-                shape, sub, q,
-            )
-
-
-def test_jpeg_progressive_rejects_corrupt():
-    """Truncated / malformed progressive streams raise ValueError
-    (skip-the-row contract), never emit garbage pixels."""
-    import numpy as np
-    import pytest
-
-    from accountant_pdf_extract_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    img = _grad_rgb(32, 32)
-    prog = encode_jpeg(img, progressive=True)
-    assert prog.endswith(b"\xff\xd9")
-    # truncation exactly BETWEEN scans (after a complete scan, before
-    # the next SOS) must also raise — not return a partially-refined
-    # image as if EOI had been seen
-    scan2 = prog.index(b"\xff\xda", prog.index(b"\xff\xda") + 2)
-    for bad in (
-        prog[:60], prog[: len(prog) // 2], prog[:-4] + b"\xff\xd9",
-        prog[:scan2], prog[: scan2 - 2] + b"\xff",
-    ):
-        with pytest.raises(ValueError):
-            decode_jpeg(bad)
-    # an AC scan claiming multiple components is malformed (G.1.1.1.1)
-    sos = prog.index(b"\xff\xda")
-    # progressive + restart is refused by the encoder
-    with pytest.raises(ValueError):
-        encode_jpeg(img, progressive=True, restart_interval=4)
-    assert sos > 0
-
-
-def test_jpeg_fill_bytes_before_marker_ok():
-    """T.81 B.1.1.2: 0xFF fill bytes before a marker are legal padding
-    and must not be parsed as an unknown segment (r4 advice)."""
-    import numpy as np
-
-    from accountant_pdf_extract_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    img = _grad_rgb(16, 16)
-    enc = encode_jpeg(img)
-    sof = enc.index(b"\xff\xc0")
-    padded = enc[:sof] + b"\xff\xff\xff" + enc[sof:]
-    assert np.array_equal(decode_jpeg(padded), decode_jpeg(enc))
-
-
-def test_jpeg_flat_image_is_near_exact():
-    """A flat color block has only DC energy — the lossy pipeline must
-    reproduce it (almost) exactly through quant/dequant."""
-    import numpy as np
-
-    from accountant_pdf_extract_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    flat = np.full((64, 48, 3), (200, 64, 120), dtype=np.uint8)
-    dec = decode_jpeg(encode_jpeg(flat, quality=90))
-    assert np.abs(dec.astype(int) - flat.astype(int)).max() <= 2
-
-
-def test_jpeg_exif_orientation():
-    """Exif APP1 tag 274: all eight orientations rotate/flip decoded
-    pixels into display orientation (5-8 swap dims); a malformed Exif
-    block degrades to upright instead of failing the decode."""
-    import numpy as np
-
-    from accountant_pdf_extract_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    flat = np.zeros((24, 40, 3), np.uint8)
-    flat[:12] = (200, 30, 60)
-    flat[:, :10] = (10, 180, 90)
-    base = decode_jpeg(encode_jpeg(flat, quality=95))
-    ops = {
-        1: lambda a: a,
-        2: lambda a: a[:, ::-1],
-        3: lambda a: a[::-1, ::-1],
-        4: lambda a: a[::-1],
-        5: lambda a: a.transpose(1, 0, 2),
-        6: lambda a: np.rot90(a, -1),
-        7: lambda a: np.rot90(a.transpose(1, 0, 2), 2),
-        8: lambda a: np.rot90(a, 1),
-    }
-    for o, op in ops.items():
-        out = decode_jpeg(encode_jpeg(flat, quality=95, exif_orientation=o))
-        assert np.array_equal(out, op(base)), o
-    enc = bytearray(encode_jpeg(flat, exif_orientation=6))
-    enc[enc.index(b"Exif\x00\x00") + 6] = 0x58  # corrupt byte order
-    assert decode_jpeg(bytes(enc)).shape == (24, 40, 3)
-
-
-def test_jpeg_cmyk_ycck_roundtrip():
-    """Adobe 4-component JPEGs (APP14): transform 0 (inverted CMYK
-    direct) and 2 (YCCK) both decode to the composited RGB —
-    R = (255-C)(255-K)/255 — within DCT tolerance; 4:2:0 and
-    progressive CMYK encode requests reject."""
-    import numpy as np
-    import pytest
-
-    from accountant_pdf_extract_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    h, w = 40, 56
-    yy, xx = np.mgrid[0:h, 0:w]
-    ink = np.zeros((h, w, 4), np.float64)
-    ink[..., 0] = 80 + 40 * np.sin(yy / 9.0)
-    ink[..., 1] = 120 + 30 * np.cos(xx / 7.0)
-    ink[..., 2] = 60
-    ink[..., 3] = 30 + 20 * np.sin((xx + yy) / 11.0)
-    cmyk = np.clip(np.rint(ink), 0, 255).astype(np.uint8)
-    inv = 255.0 - cmyk.astype(np.float64)
-    want = np.clip(
-        np.rint(inv[..., :3] * inv[..., 3:4] / 255.0), 0, 255
-    ).astype(np.uint8)
-    for tr in (0, 2):
-        out = decode_jpeg(encode_jpeg(cmyk, quality=95, adobe_transform=tr))
-        assert out.shape == (h, w, 3)
-        assert np.abs(out.astype(int) - want.astype(int)).max() <= 14, tr
-    with pytest.raises(ValueError):
-        encode_jpeg(cmyk, subsampling="420")
-    with pytest.raises(ValueError):
-        encode_jpeg(cmyk, progressive=True)
-    with pytest.raises(ValueError):
-        encode_jpeg(cmyk, adobe_transform=1)
 
 
 # --------------------------------------------------------------------------
@@ -2941,74 +2562,33 @@ def test_tz_horizontal_scaling_persists_across_bt():
 
 
 def test_kernel_systemic_all_fail_guards():
-    """Two systemic fail-fast guards (r4 review): (a) extract_doc
-    raising for EVERY doc of a >=8-doc batch must raise, not
-    'succeed' with zero output; (b) a zero-span doc in the batch must
-    NOT defeat the all-Arrow-build-fail guard (empty segments always
-    build, so they carry no evidence)."""
-    from decimal import Decimal
+    """Two systemic fail-fast guards (r4 review), in both output
+    projections: (a) extract_doc raising for EVERY doc of a >=8-doc
+    batch must raise, not 'succeed' with zero output; (b) a zero-span
+    doc in the batch must NOT defeat the all-Arrow-build-fail guard
+    (empty segments always build, so they carry no evidence)."""
 
-    import pyarrow as pa
-    import pytest
-
-    from accountant_pdf_extract_spark.operators import kernel
-    from accountant_pdf_extract_spark.sources.synth import ARROW_INPUT
-
-    def mk_batch(texts):
-        return pa.RecordBatch.from_pydict(
-            {
-                "doc_id": [f"d{i}" for i in range(len(texts))],
-                "spans": [
-                    [{"kind": "text", "text": t, "media_ref": "",
-                      "offset": 0}]
-                    for t in texts
-                ],
-            },
-            schema=ARROW_INPUT,
-        )
-
-    # (a) all-extract_doc-fail on a >=8-doc batch raises
     def always_raise(spans):
         raise RuntimeError("deploy-level drift")
 
-    orig = kernel.extract_doc
-    kernel.extract_doc = always_raise
-    try:
-        with pytest.raises(RuntimeError, match="ALL 8"):
-            list(kernel.extract_batches(
-                iter([mk_batch([f"t{i}" for i in range(8)])]),
-                on_drop=lambda d, e: None,
-            ))
-        # below the threshold: per-doc drop semantics, empty output
-        out = list(kernel.extract_batches(
-            iter([mk_batch(["a", "b"])]), on_drop=lambda d, e: None,
-        ))
-        assert sum(b.num_rows for b in out) == 0
-    finally:
-        kernel.extract_doc = orig
-
-    # (b) 8 bad-build docs + 1 zero-span doc: the build guard must
-    # still fire (the empty segment is not a survivor)
     def bad_fields(spans):
-        txt = spans[0][1]
-        fields = {
-            "invoice_id": None, "invoice_date": None, "due_date": None,
-            "currency": None,
-            "total": Decimal(10) ** 20,  # overflows decimal128(18,2)
-            "amounts": None, "account_codes": None,
-        }
-        out = [] if txt == "empty" else [("text", txt, "", 0)]
-        return out, fields
+        out, fields = _overflow_when_bad([("text", "bad", "", 0)])
+        return ([] if spans[0][1] == "empty" else out), fields
 
-    kernel.extract_doc = bad_fields
-    try:
+    for fn in KERNEL_FNS:
+        # (a) all-extract_doc-fail on a >=8-doc batch raises
+        with pytest.raises(RuntimeError, match="ALL 8"):
+            _run_kernel_with(fn, always_raise, [f"t{i}" for i in range(8)])
+        # below the threshold: per-doc drop semantics, empty output
+        out, _ = _run_kernel_with(fn, always_raise, ["a", "b"])
+        assert sum(b.num_rows for b in out) == 0, fn
+
+        # (b) 8 bad-build docs + 1 zero-span doc: the build guard must
+        # still fire (the empty segment is not a survivor)
         with pytest.raises(RuntimeError, match="non-empty docs"):
-            list(kernel.extract_batches(
-                iter([mk_batch([f"t{i}" for i in range(8)] + ["empty"])]),
-                on_drop=lambda d, e: None,
-            ))
-    finally:
-        kernel.extract_doc = orig
+            _run_kernel_with(
+                fn, bad_fields, [f"t{i}" for i in range(8)] + ["empty"]
+            )
 
 
 def test_total_prefers_amount_after_anchor():
@@ -3241,136 +2821,6 @@ def test_invisible_ocr_text_is_extracted():
         ("text", "Received payment 2024-05-01", ""),
         ("media", "", "media://scan/abc"),
     ]
-
-
-def test_tiff_roundtrip_gray_bilevel_both_orders():
-    """From-scratch TIFF subset: gray + bilevel, PackBits + none,
-    II + MM, multi-strip — lossless roundtrip (bilevel thresholded)."""
-    import numpy as np
-
-    from accountant_pdf_extract_spark.functions.tiff import (
-        decode_tiff, encode_tiff,
-    )
-
-    rng = np.random.default_rng(11)
-    for (h, w) in [(1, 1), (65, 17), (129, 301)]:
-        px = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-        for comp in ("packbits", "none"):
-            for bo in ("II", "MM"):
-                out = decode_tiff(
-                    encode_tiff(px, compression=comp, byte_order=bo)
-                )
-                assert out.shape == (h, w, 1)
-                assert (out[..., 0] == px).all()
-                bl = decode_tiff(encode_tiff(
-                    px, bilevel=True, compression=comp, byte_order=bo
-                ))
-                want = np.where(px >= 128, 255, 0).astype(np.uint8)
-                assert (bl[..., 0] == want).all()
-
-
-def test_tiff_rejects_malformed_and_unsupported():
-    """Out-of-subset / corrupt TIFFs raise ValueError (the media
-    kernels' skip-the-row contract), never crash or return garbage."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from accountant_pdf_extract_spark.functions.tiff import (
-        decode_tiff, encode_tiff,
-    )
-
-    good = encode_tiff(np.full((10, 10), 7, np.uint8), compression="none")
-    bad_inputs = [
-        b"",                                    # empty
-        b"XX\x2a\x00\x08\x00\x00\x00",          # bad byte order
-        b"II\x2b\x00\x08\x00\x00\x00",          # bad magic
-        b"II\x2a\x00\xff\xff\x00\x00",          # IFD out of range
-        good[:40],                              # truncated strip
-    ]
-    # unsupported: RGB (SamplesPerPixel 3) via a patched entry
-    patched = bytearray(good)
-    idx = good.index(struct.pack("<HHI", 277, 3, 1))
-    patched[idx + 8] = 3
-    bad_inputs.append(bytes(patched))
-    for bad in bad_inputs:
-        with pytest.raises(ValueError):
-            decode_tiff(bad)
-
-
-def test_g4_roundtrip_shapes():
-    """CCITT Group 4 (T.6) codec: lossless roundtrip across the mode
-    mix — all-white, all-black, random noise, document-like single
-    runs, vertical stripes (vertical-mode stress), odd widths not on
-    byte boundaries, and a wide row needing repeated makeup codes."""
-    import numpy as np
-
-    from accountant_pdf_extract_spark.functions.tiff import (
-        g4_decode, g4_encode,
-    )
-
-    rng = np.random.default_rng(7)
-    for trial in range(60):
-        h = int(rng.integers(1, 40))
-        w = int(rng.integers(1, 130))
-        kind = trial % 5
-        if kind == 0:
-            bits = np.zeros((h, w), np.uint8)
-        elif kind == 1:
-            bits = np.ones((h, w), np.uint8)
-        elif kind == 2:
-            bits = (rng.random((h, w)) < 0.5).astype(np.uint8)
-        elif kind == 3:  # one black run per row — the text-line shape
-            bits = np.zeros((h, w), np.uint8)
-            for r in range(h):
-                if rng.random() < 0.7:
-                    a = int(rng.integers(0, w))
-                    b = int(rng.integers(a, w))
-                    bits[r, a : b + 1] = 1
-        else:  # vertical stripes
-            period = max(1, int(rng.integers(1, 9)))
-            bits = np.tile(
-                (np.arange(w) // period % 2).astype(np.uint8), (h, 1)
-            )
-        assert np.array_equal(g4_decode(g4_encode(bits), w, h), bits), (
-            trial, h, w, kind,
-        )
-    # run > 2560: extended makeup codes must chain
-    wide = np.zeros((3, 6000), np.uint8)
-    wide[1, 100:5900] = 1
-    assert np.array_equal(g4_decode(g4_encode(wide), 6000, 3), wide)
-
-
-def test_g4_container_and_rejection():
-    """G4 inside the TIFF container: single- and multi-strip
-    (independent per-strip reference lines), both byte orders;
-    truncated payloads and G4-with-grayscale reject with ValueError;
-    encode_tiff refuses g4 without bilevel."""
-    import numpy as np
-    import pytest
-
-    from accountant_pdf_extract_spark.functions.tiff import (
-        decode_tiff, encode_tiff, g4_decode,
-    )
-
-    rng = np.random.default_rng(13)
-    px = (rng.random((77, 91)) < 0.3).astype(np.uint8) * 255
-    want = np.where(px < 128, 0, 255).astype(np.uint8)[..., None]
-    for bo in ("II", "MM"):
-        for rps in (64, 7):
-            t = encode_tiff(
-                px, bilevel=True, compression="g4",
-                byte_order=bo, rows_per_strip=rps,
-            )
-            assert np.array_equal(decode_tiff(t), want), (bo, rps)
-    with pytest.raises(ValueError):
-        encode_tiff(px, compression="g4")  # grayscale G4
-    with pytest.raises(ValueError):
-        g4_decode(b"\x00\x00\x00", 50, 5)  # truncated / bad codes
-    good = encode_tiff(px, bilevel=True, compression="g4")
-    with pytest.raises(ValueError):
-        decode_tiff(good[:-10] if len(good) > 10 else good[:8])
 
 
 def test_type3_font_differences_decode():

@@ -155,7 +155,12 @@ def run_job(
     # order-independent fingerprint + span/doc/field counts.  The output
     # is partitioned by SALT_COL, so the NOT-IN on committed buckets is a
     # PartitionFilter — previously committed bucket directories are never
-    # read here, only the freshly written ones.
+    # read here, only the freshly written ones.  The records are derived
+    # from the bytes on disk, not from the plan that wrote them, so they
+    # certify the output.  Listing the bucket directories is one wave of
+    # tasks (``get_spark`` caps partition discovery at the core budget),
+    # and ``CommitLog.commit`` seals on the driver without a Spark job,
+    # so this listing and aggregate are the seal's only Spark work.
     from pyspark.errors import AnalysisException
 
     try:
@@ -200,7 +205,7 @@ def run_job(
         # transformation) — an upper bound / alarm, not an exact ledger
         "dropped_docs": str(flat.dropped_docs_acc.value),
     }
-    snapshot_id = log.commit(spark, records, lineage) if records else None
+    snapshot_id = log.commit(records, lineage) if records else None
     return {
         "processed_buckets": sorted(r["partition_id"] for r in records),
         "skipped": len(done),

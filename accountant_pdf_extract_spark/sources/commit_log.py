@@ -2,32 +2,41 @@
 lineage + metrics records with atomic JSON snapshots for exact resume
 (``BASELINE.json:6,14``).
 
-Locally this is partitioned parquet + atomic-rename JSON snapshots —
-the same protocol surface an Iceberg commit would serve (append-only
-metadata, snapshot pinning, committed-partition listing).  On a real
-cluster the sink swaps to ``df.writeTo("catalog.db.log").append()``
-with ``iceberg-spark-runtime`` on the classpath; the engine code path
-is identical (documented swap, SURVEY.md §0.2: no Iceberg jar + no
-network in this sandbox).
+Locally this is one driver-written parquet file of per-bucket records
+per snapshot plus an atomic-rename JSON seal — the same protocol
+surface an Iceberg commit would serve (append-only metadata, snapshot
+pinning, committed-partition listing).  The records are a few hundred
+small rows, so they are written with pyarrow on the driver: a Spark
+write would schedule a job and a task for them, which cost more than
+the rest of the seal.  On a real cluster the sink swaps to
+``df.writeTo("catalog.db.log").append()`` with
+``iceberg-spark-runtime`` on the classpath (documented swap,
+SURVEY.md §0.2: no Iceberg jar + no network in this sandbox).
 
 Protocol (two-level commit):
 1. task output for bucket B lands under ``output/bucket=B/`` (dynamic
    partition overwrite → idempotent redo);
-2. only after the write action succeeds is a commit record for B
-   appended here, then a snapshot JSON is atomically renamed into
-   place.  A killed job therefore resumes exactly: committed buckets
-   are skipped via anti-join, uncommitted buckets are redone
-   idempotently (deterministic kernels, seeded synth).
+2. only after the write action succeeds is a record file for B's
+   snapshot written here (to a dot-prefixed temp name, then renamed to
+   ``records/<snapshot_id>.parquet``), then a snapshot JSON is
+   atomically renamed into place.  A killed job therefore resumes
+   exactly: committed buckets are skipped via anti-join, uncommitted
+   buckets are redone idempotently (deterministic kernels, seeded
+   synth).
 
 Durability scope, stated honestly: the exact-resume guarantee covers
 PROCESS failure (kill/crash of the job), the case the protocol is
-exercised against.  Across an OS crash or power loss it is weaker
-than a real table format: the snapshot JSON is fsynced before the
-rename, but the bucket parquet it certifies is written by Spark
-WITHOUT fsync, so the journal could persist a seal whose data pages
-were still dirty.  Production table formats inherit close-durability
-from HDFS/S3; on local disk, a power-loss-safe variant would need to
-fsync the bucket files (and directories) before sealing.
+exercised against.  The log's own files are durable in order: the
+records file is fsynced, renamed and ``records/`` fsynced before the
+snapshot JSON is written; the JSON is fsynced before its rename, and
+``snapshots/`` is fsynced after it, so a seal that survives an OS
+crash always has its records.  Across an OS crash or power loss the
+guarantee is still weaker than a real table format: the
+bucket parquet the seal certifies is written by Spark WITHOUT fsync,
+so the journal could persist a seal whose data pages were still
+dirty.  Production table formats inherit close-durability from
+HDFS/S3; on local disk, a power-loss-safe variant would need to fsync
+the bucket files (and directories) before sealing.
 """
 
 from __future__ import annotations
@@ -37,9 +46,23 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from accountant_pdf_extract_spark.schema import COMMIT_LOG_SCHEMA
+
+_ARROW_SCHEMA = to_arrow_schema(COMMIT_LOG_SCHEMA)
+
+
+def _fsync_dir(path: str) -> None:
+    """Make the renames into ``path`` durable."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 class CommitLog:
@@ -84,29 +107,39 @@ class CommitLog:
 
     # -- write side --------------------------------------------------------
 
-    def commit(
-        self, spark: SparkSession, records: list[dict], lineage: dict[str, str]
-    ) -> str:
+    def commit(self, records: list[dict], lineage: dict[str, str]) -> str:
         """Append per-bucket records + seal with an atomic snapshot.
-        Returns the snapshot id."""
+        Returns the snapshot id.
+
+        Runs no Spark job: the records go to one parquet file written
+        by pyarrow on the driver (fsynced, then renamed from a
+        dot-prefixed temp name that ``records()`` never lists), and
+        the snapshot JSON seals them (fsynced, renamed, then
+        ``snapshots/`` fsynced)."""
         snapshot_id = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
-        rows = [
-            {
-                "partition_id": int(r["partition_id"]),
-                "input_fingerprint": str(r["input_fingerprint"]),
-                "n_docs": int(r["n_docs"]),
-                "n_spans": int(r["n_spans"]),
-                "n_fields": int(r["n_fields"]),
-                "job_wall_ms": int(r["job_wall_ms"]),
-                "lineage": dict(lineage),
-                "snapshot_id": snapshot_id,
-            }
-            for r in records
-        ]
-        df = spark.createDataFrame(rows, COMMIT_LOG_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(
-            os.path.join(self.records_dir, f"{snapshot_id}.parquet")
+        table = pa.Table.from_pylist(
+            [
+                {
+                    "partition_id": int(r["partition_id"]),
+                    "input_fingerprint": str(r["input_fingerprint"]),
+                    "n_docs": int(r["n_docs"]),
+                    "n_spans": int(r["n_spans"]),
+                    "n_fields": int(r["n_fields"]),
+                    "job_wall_ms": int(r["job_wall_ms"]),
+                    "lineage": dict(lineage),
+                    "snapshot_id": snapshot_id,
+                }
+                for r in records
+            ],
+            schema=_ARROW_SCHEMA,
         )
+        tmp = os.path.join(self.records_dir, f".{snapshot_id}.parquet.tmp")
+        with open(tmp, "wb") as f:
+            pq.write_table(table, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(self.records_dir, f"{snapshot_id}.parquet"))
+        _fsync_dir(self.records_dir)
         snap = {
             "snapshot_id": snapshot_id,
             "buckets": sorted(int(r["partition_id"]) for r in records),
@@ -120,6 +153,7 @@ class CommitLog:
             f.flush()
             os.fsync(f.fileno())
         os.rename(tmp, final)  # atomic seal
+        _fsync_dir(self.snapshot_dir)
         return snapshot_id
 
     def drop_snapshots(self, snapshot_ids: set[str]) -> None:

@@ -30,7 +30,6 @@ def _session(evdir: str):
 
     return get_spark(
         app="resume-bench",
-        master="local[32]",
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": evdir,
@@ -124,7 +123,7 @@ def main() -> None:
         for b in all_buckets[len(all_buckets) // 2 :]
     ]
     log.drop_snapshots({s["snapshot_id"] for s in log.snapshots()})
-    log.commit(spark, kept, {"job_id": "partial"})
+    log.commit(kept, {"job_id": "partial"})
 
     # the resume filter as a PartitionFilter at the scan (plan evidence)
     binp = read_bucketed_input(spark, inp, args.buckets)

@@ -166,7 +166,6 @@ def test_orphan_record_files_excluded_from_commit_log(spark, tmp_path: pathlib.P
 
     log = CommitLog(str(tmp_path / "clog"))
     log.commit(
-        spark,
         [{"partition_id": 1, "input_fingerprint": "a", "n_docs": 1,
           "n_spans": 2, "n_fields": 0, "job_wall_ms": 1}],
         {"job_id": "ok"},

@@ -6,6 +6,9 @@ buckets were recomputed."""
 from __future__ import annotations
 
 import pathlib
+import shutil
+import time
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -63,7 +66,7 @@ def test_exact_resume(spark, tmp_path: pathlib.Path):
         for b in sorted(all_buckets - set(lost))
     ]
     log.drop_snapshots({snaps[0]["snapshot_id"]})
-    log.commit(spark, kept_records, {"job_id": "run1-partial"})
+    log.commit(kept_records, {"job_id": "run1-partial"})
     assert log.committed_buckets() == all_buckets - set(lost)
 
     # resume: only the lost buckets may be recomputed
@@ -132,7 +135,7 @@ def test_resume_partition_pruning(spark, tmp_path: pathlib.Path):
         for b in sorted(all_buckets - set(lost))
     ]
     log.drop_snapshots({snaps[0]["snapshot_id"]})
-    log.commit(spark, kept, {"job_id": "b1-partial"})
+    log.commit(kept, {"job_id": "b1-partial"})
     res2 = run_job(spark, binp, out, log_path,
                    salt_buckets=BUCKETS, num_partitions=8, job_id="b2",
                    trust_input_bucketing=True)
@@ -192,7 +195,7 @@ def test_commit_log_records_roundtrip(spark, tmp_path: pathlib.Path):
         {"partition_id": 5, "input_fingerprint": "def", "n_docs": 2,
          "n_spans": 9, "n_fields": 1, "job_wall_ms": 123},
     ]
-    sid = log.commit(spark, recs, {"job_id": "t", "attempt": "1"})
+    sid = log.commit(recs, {"job_id": "t", "attempt": "1"})
     df = log.records(spark)
     rows = {r["partition_id"]: r for r in df.collect()}
     assert set(rows) == {3, 5}
@@ -206,6 +209,90 @@ def test_commit_log_empty_records(spark, tmp_path: pathlib.Path):
     log = CommitLog(str(tmp_path / "clog2"))
     assert log.records(spark).count() == 0
     assert log.committed_buckets() == set()
+
+
+def _jobs_started_by(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    ids of the Spark jobs it started.  The status listener sees jobs
+    in order, so once a sentinel job started afterwards is visible,
+    every job ``fn`` started is too."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def grouped(group, f):
+        sc.setJobGroup(group, group)
+        try:
+            return f()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    group, sentinel = (f"{p}-{uuid.uuid4().hex}" for p in ("run", "sentinel"))
+    out = grouped(group, fn)
+    grouped(sentinel, lambda: sc.parallelize([0], 1).count())
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(sentinel) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(sentinel), "status listener never saw the sentinel"
+    return out, tracker.getJobIdsForGroup(group)
+
+
+def test_commit_runs_no_spark_job_and_records_roundtrip(spark, tmp_path):
+    """The seal is a driver-side write: no Spark job, and the records
+    read back exactly through Spark and through pyarrow."""
+    import pyarrow.parquet as pq
+
+    from accountant_pdf_extract_spark.schema import COMMIT_LOG_SCHEMA
+
+    log = CommitLog(str(tmp_path / "clog"))
+    recs = [
+        {"partition_id": b, "input_fingerprint": str(b * 7919),
+         "n_docs": b + 1, "n_spans": 10 * b, "n_fields": b % 3,
+         "job_wall_ms": 42}
+        for b in range(40)
+    ]
+    lineage = {"job_id": "t", "salt_buckets": "64", "dropped_docs": "0"}
+    sid, jobs = _jobs_started_by(spark, lambda: log.commit(recs, lineage))
+    assert jobs == []
+
+    def check(rows):
+        rows = sorted(rows, key=lambda r: r["partition_id"])
+        assert [{k: r[k] for k in recs[0]} for r in rows] == recs
+        assert all(dict(r["lineage"]) == lineage for r in rows)
+        assert {r["snapshot_id"] for r in rows} == {sid}
+
+    df = log.records(spark)
+    assert df.schema == COMMIT_LOG_SCHEMA
+    check(r.asDict() for r in df.collect())
+    check(pq.read_table(f"{log.records_dir}/{sid}.parquet").to_pylist())
+
+    # a crash between the record write and its rename leaves a temp
+    # file (also one named after a sealed snapshot): never a record
+    for leftover in (f".{sid}.parquet.tmp", ".snap-0-deadbeef.parquet.tmp"):
+        shutil.copy(f"{log.records_dir}/{sid}.parquet",
+                    f"{log.records_dir}/{leftover}")
+    check(r.asDict() for r in log.records(spark).collect())
+
+
+def test_partition_listing_sized_by_core_budget(spark, tmp_path):
+    """Listing more bucket directories than Spark's parallel-discovery
+    threshold (32) runs one wave of tasks, not one task per
+    directory."""
+    path = str(tmp_path / "wide")
+    n_dirs = 48
+    (
+        spark.range(n_dirs).withColumn("b", F.col("id"))
+        .write.partitionBy("b").parquet(path)
+    )
+    df, jobs = _jobs_started_by(spark, lambda: spark.read.parquet(path))
+    assert jobs, "a listing above the threshold runs as a Spark job"
+    tracker = spark.sparkContext.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert max(tasks) <= spark.sparkContext.defaultParallelism, tasks
+    assert df.count() == n_dirs
 
 
 def test_incremental_job_extracts_only_new_snapshots(spark, tmp_path):

@@ -92,17 +92,18 @@ def grouped_stats(events: DataFrame) -> DataFrame:
     cents — numpy per group, Arrow in/out, no per-row Python."""
 
     def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        from accountant_pdf_extract_spark.functions.money import (
-            half_up_cents_np,
-        )
-
         # NULL values: count(*) counts the row, the quantiles skip it
         # (DuckDB quantile_cont semantics).  NaN AND ±inf must be
         # dropped BEFORE the int cast — floor(NaN/±inf).astype('int64')
         # silently emits INT64_MIN and drags the quantiles to garbage.
         v = pdf["value"].to_numpy()
         v = v[np.isfinite(v)]
-        cents = pd.Series(half_up_cents_np(v).astype("int64"))
+        # half-up AWAY FROM ZERO, the numpy twin of driver_queries.cents
+        # (pandas .round() is half-to-even, and floor(x*100+0.5) rounds
+        # toward +inf on negatives: both diverge from DuckDB round())
+        cents = pd.Series(
+            np.copysign(np.floor(np.abs(v) * 100 + 0.5), v).astype("int64")
+        )
 
         def q(p):
             # linear interpolation == DuckDB quantile_cont; all-NULL

@@ -44,19 +44,17 @@ def curate(
     salt_buckets: int = 1024,
     num_partitions: int | None = None,
     min_quality: float = 0.3,
-    drop_acc=None,
     generate=None,
 ) -> DataFrame:
     """Interleaved docs → deduped, quality-filtered corpus table.
 
-    ``drop_acc`` threads the dropped-doc accumulator through extract()
-    (derived DataFrames do not inherit the attribute); the returned
-    frame re-exposes it as ``dropped_docs_acc`` so curate() callers
+    Derived DataFrames do not inherit extract()'s ``dropped_docs_acc``
+    attribute, so the returned frame re-exposes it: curate() callers
     keep a driver-readable drop metric.  ``generate``: ``docs`` is a
     generator proxy, expanded inside the extraction kernel (extract())."""
     flat = extract(
         docs, salt_buckets=salt_buckets, num_partitions=num_partitions,
-        drop_acc=drop_acc, generate=generate,
+        generate=generate,
     )
     texts = doc_text(flat)
 

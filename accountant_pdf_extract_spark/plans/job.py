@@ -233,12 +233,17 @@ def run_incremental_job(
       across a compaction; compaction snapshots add no rows, so they
       are skipped, and rows committed before one are still emitted).
     - Each segment writes via the batch-keyed dynamic-overwrite sink
-      with batch id = the segment's end sequence: a crashed/re-run
-      segment REPLACES its own ``_batch_id`` partitions (idempotent),
-      earlier windows are never touched.
+      (``_batch_keyed_sink``) with batch id = the segment's end
+      sequence: a crashed/re-run segment REPLACES its own
+      ``_batch_id`` partitions (idempotent), earlier windows are never
+      touched.
     - The cursor file advances by atomic replace only AFTER all
       segment writes committed — crash anywhere re-runs the same
-      window idempotently (exactly-once to the sink).
+      window idempotently (exactly-once to the sink), however many
+      segments and tombstones it holds.
+    - An output holding a ``_batch_id`` beyond the table's current
+      sequence was written from another table or history: the run
+      refuses before it writes anything.
 
     Key-version semantics: a key appended in one run and upserted in a
     later one appears once per run, under increasing ``_batch_id`` —
@@ -258,10 +263,6 @@ def run_incremental_job(
     import os
     import tempfile
 
-    from accountant_pdf_extract_spark.streaming.sink import (
-        batch_keyed_parquet_sink,
-    )
-
     cur = table.current_snapshot()
     if cur is None:
         raise FileNotFoundError("table has no snapshots")
@@ -272,6 +273,11 @@ def run_incremental_job(
     if cursor == cur["snapshot_id"]:
         return {"segments": [], "skipped": True,
                 "cursor": cur["snapshot_id"]}
+
+    sink = _batch_keyed_sink(output_path, cur["sequence"], SALT_COL)
+    tomb_sink = _batch_keyed_sink(
+        os.path.join(output_path, "_tombstones"), cur["sequence"]
+    )
 
     snaps = sorted(table.snapshots(), key=lambda s: s["sequence"])
     by_id = {s["snapshot_id"]: s for s in snaps}
@@ -311,7 +317,6 @@ def run_incremental_job(
             else:
                 open_seg[1] = s
 
-    sink = batch_keyed_parquet_sink(output_path, SALT_COL)
     done_segments = []
     for frm, to in segments:
         # metadata-only emptiness check: a segment of delete-only
@@ -350,9 +355,6 @@ def run_incremental_job(
         if not dels:
             continue
         keys = spark.read.parquet(*[d["path"] for d in dels]).distinct()
-        tomb_sink = batch_keyed_parquet_sink(
-            os.path.join(output_path, "_tombstones")
-        )
         tomb_sink(keys, s["sequence"])
         tombstones.append(
             {"snapshot": s["snapshot_id"], "batch_id": s["sequence"]}
@@ -365,6 +367,61 @@ def run_incremental_job(
     os.replace(tmp, cursor_path)
     return {"segments": done_segments, "tombstones": tombstones,
             "skipped": False, "cursor": cur["snapshot_id"]}
+
+
+def _batch_keyed_sink(output_dir: str, head_sequence: int,
+                      *extra_partition_cols: str):
+    """Return ``sink(df, batch_id)`` writing ``df`` to ``output_dir``
+    partitioned by ``_batch_id`` (plus any ``extra_partition_cols``,
+    e.g. the salt bucket) with dynamic partition overwrite scoped to
+    THIS writer (per-write option, never a session-wide conf): a batch
+    re-run after a crash REPLACES its own ``_batch_id`` partitions
+    instead of appending duplicates.
+
+    Batch ids are table sequences, so an output whose newest
+    ``_batch_id`` is beyond ``head_sequence`` (the table's current
+    sequence) was written from another table or history, and writing
+    into it would silently mix the two.  That is refused here, once,
+    before anything is written.  A replayed window writes batch ids at
+    or below the head in any order, so the check is against the head,
+    not against each write's predecessor."""
+    existing = _max_batch_id(output_dir)
+    if existing is not None and existing > head_sequence:
+        raise ValueError(
+            f"{output_dir!r} holds _batch_id={existing}, beyond the "
+            f"table's current sequence {head_sequence} — it was written "
+            "from another table or history; use a new output dir"
+        )
+
+    def sink(df, batch_id):
+        (
+            df.withColumn("_batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_batch_id", *extra_partition_cols)
+            .parquet(output_dir)
+        )
+
+    return sink
+
+
+def _max_batch_id(output_dir: str) -> int | None:
+    """Largest existing ``_batch_id=`` partition value, driver-side
+    listdir only (no Spark job)."""
+    import os
+
+    try:
+        names = os.listdir(output_dir)
+    except FileNotFoundError:
+        return None
+    ids = []
+    for n in names:
+        if n.startswith("_batch_id="):
+            try:
+                ids.append(int(float(n.split("=", 1)[1])))
+            except ValueError:
+                continue
+    return max(ids) if ids else None
 
 
 def main() -> None:

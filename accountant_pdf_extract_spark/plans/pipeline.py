@@ -95,41 +95,6 @@ def _stat_checked_zip_invalidation() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-def _with_drop_metric(spark, kernel_fn, acc=None, generate=None):
-    """Wrap an Arrow kernel so per-doc extraction failures increment a
-    driver-readable accumulator (surfaced as ``dropped_docs_acc`` on
-    the result DataFrame and recorded in commit-log lineage) in
-    addition to the kernel's executor-stdout line — silent data loss
-    is not acceptable at 10^12 docs.
-
-    Accumulator caveat (inherent to updates inside transformations):
-    counts are AT-LEAST-ONCE — task retries / speculative duplicates
-    re-increment, so treat the value as an upper bound / alarm signal,
-    not an exact ledger.  The exact ground truth is the commit-log
-    n_docs-vs-input delta per bucket.
-
-    ``acc`` lets long-lived callers (streaming foreachBatch) reuse ONE
-    accumulator across calls — each extract() otherwise registers a
-    fresh entry in the driver's global accumulator registry, which is
-    never released (unbounded growth on a continuous stream).
-
-    ``generate`` (see ``_run_kernel``) expands each proxy batch into
-    the input shape in the same iterator the kernel consumes."""
-    dropped = acc if acc is not None else spark.sparkContext.accumulator(0)
-
-    def run(batches):
-        _stat_checked_zip_invalidation()
-
-        def note(_doc_id, _exc):
-            dropped.add(1)
-
-        if generate is not None:
-            batches = _generated(batches, generate)
-        yield from kernel_fn(batches, on_drop=note)
-
-    return run, dropped
-
-
 def _generated(batches, generate):
     """Run ``generate`` over proxy batches, checked the way
     ``assert_input_schema`` checks a DataFrame input: every generated
@@ -151,10 +116,21 @@ def _generated(batches, generate):
 
 
 def _run_kernel(df, kernel_fn, out_schema, salt_buckets, num_partitions,
-                drop_acc, generate=None):
+                generate=None):
     """The shared assert → salt → repartition → Arrow-kernel pipeline
     (single-sourced so the clamp/accumulator wiring can never fork
-    between the span and fields paths).
+    between the span and fields paths).  Returns the output DataFrame
+    and the dropped-doc accumulator.
+
+    Per-doc extraction failures increment that driver-readable
+    accumulator (surfaced as ``dropped_docs_acc`` on the result
+    DataFrame and recorded in commit-log lineage) in addition to the
+    kernel's executor-stdout line — silent data loss is not acceptable
+    at 10^12 docs.  Accumulator caveat (inherent to updates inside
+    transformations): counts are AT-LEAST-ONCE — task retries /
+    speculative duplicates re-increment, so treat the value as an
+    upper bound / alarm signal, not an exact ledger.  The exact ground
+    truth is the commit-log n_docs-vs-input delta per bucket.
 
     ``generate`` fuses an input generator into the kernel: ``df`` is
     then the narrow proxy of the documents (its ``doc_id`` is the id
@@ -174,7 +150,18 @@ def _run_kernel(df, kernel_fn, out_schema, salt_buckets, num_partitions,
     spark = df.sparkSession
     np = _effective_partitions(spark, num_partitions, salt_buckets)
     salted = salt(df, salt_buckets).repartition(np, SALT_COL)
-    run, dropped = _with_drop_metric(spark, kernel_fn, drop_acc, generate)
+    dropped = spark.sparkContext.accumulator(0)
+
+    def run(batches):
+        _stat_checked_zip_invalidation()
+
+        def note(_doc_id, _exc):
+            dropped.add(1)
+
+        if generate is not None:
+            batches = _generated(batches, generate)
+        yield from kernel_fn(batches, on_drop=note)
+
     out = salted.select(*cols).mapInArrow(run, schema=out_schema)
     return out, dropped
 
@@ -184,26 +171,24 @@ def extract(
     salt_buckets: int = 1024,
     num_partitions: int | None = None,
     keep_salt: bool = False,
-    drop_acc=None,
     generate=None,
 ) -> DataFrame:
     """Interleaved input table → flattened output spans + fields.
 
     One row per output span: (doc_id, kind, text, media_ref, order,
     invoice_id, invoice_date, due_date, currency, total, amounts,
-    account_codes).  ``drop_acc``: optional shared accumulator for the
-    dropped-doc metric (streaming callers pass one per stream).
-    ``generate``: ``df`` is a proxy expanded inside the kernel's task
-    (``_run_kernel``; ``synth.documents_source`` returns such a pair).
+    account_codes).  ``generate``: ``df`` is a proxy expanded inside
+    the kernel's task (``_run_kernel``; ``synth.documents_source``
+    returns such a pair).
 
     The returned DataFrame carries ``dropped_docs_acc`` as a plain
     attribute — DERIVED DataFrames do not inherit it, so callers that
-    transform the result must keep their own reference (or pass
-    ``drop_acc``) to read the metric.
+    transform the result must keep their own reference to read the
+    metric.
     """
     out, dropped = _run_kernel(
         df, extract_batches, FLAT_FIELDS_SCHEMA, salt_buckets,
-        num_partitions, drop_acc, generate,
+        num_partitions, generate,
     )
     if keep_salt:
         # same formula via salt() — the bucketing expression must never
@@ -263,7 +248,6 @@ def extract_fields_table(
     df: DataFrame,
     salt_buckets: int = 1024,
     num_partitions: int | None = None,
-    drop_acc=None,
     generate=None,
 ) -> DataFrame:
     """Fields-only extraction: one row per document (doc_id +
@@ -284,7 +268,7 @@ def extract_fields_table(
     # bucket-partitioned sink path — nothing downstream keys on it
     out, dropped = _run_kernel(
         df, extract_fields_batches, DOC_FIELDS_SCHEMA, salt_buckets,
-        num_partitions, drop_acc, generate,
+        num_partitions, generate,
     )
     out.dropped_docs_acc = dropped
     return out

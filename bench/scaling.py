@@ -159,7 +159,7 @@ def main() -> None:
                     "import sys\n"
                     "from accountant_pdf_extract_spark.session import get_spark\n"
                     "from accountant_pdf_extract_spark.sources.synth import synth_interleaved\n"
-                    f"spark = get_spark(app='gen', master='local[32]')\n"
+                    "spark = get_spark(app='gen')\n"
                     f"synth_interleaved(spark, {args.docs}, seed=42, partitions=256, heavy=True)"
                     f".write.mode('overwrite').parquet({inp!r})\n"
                     "spark.stop()\n"

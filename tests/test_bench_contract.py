@@ -78,5 +78,5 @@ def test_package_zip_matches_source(tmp_path):
         assert names == set(src), names ^ set(src)
         for name in names:
             assert zf.read(name) == src[name], name
-    # sanity: the zip actually carries the package (udtfs regression)
-    assert "accountant_pdf_extract_spark/operators/udtfs.py" in names
+    # sanity: the zip actually carries the package
+    assert "accountant_pdf_extract_spark/plans/job.py" in names

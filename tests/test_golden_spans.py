@@ -1,7 +1,8 @@
 """THE correctness gate (``BASELINE.json:15``): per-document
 span-sequence equality (kind, text, media_ref, order) between the
 engine run under Spark and the committed oracle-generated golden
-fixtures, plus extracted-fields equality."""
+fixtures, plus extracted-fields equality, and media spans carried
+through by ``media_ref`` whatever their payload."""
 
 from __future__ import annotations
 
@@ -83,3 +84,76 @@ def test_doc_view_spans_schema_pinned(spark):
     row = dv.where(dv.doc_id == "fix-0000").first()
     orders = [s["order"] for s in row["spans"]]
     assert orders == sorted(orders) and orders[0] == 0
+
+
+def test_corrupt_media_payload_skipped_not_fatal(spark):
+    """Media spans are carried through by media_ref, never decoded: an
+    image XObject whose stream payload is a truncated JPEG, corrupt
+    Flate data, or bytes that look like page content yields exactly
+    the spans of the payload-free image — the media span by ref plus
+    the page text, engine ≡ oracle — and a job over those docs keeps
+    every doc."""
+    from accountant_pdf_extract_spark.operators.doccore import extract_doc
+    from accountant_pdf_extract_spark.plans.pipeline import extract, spans_view
+    from accountant_pdf_extract_spark.schema import INPUT_SCHEMA
+    from accountant_pdf_extract_spark.sources.pdfwriter import (
+        PageBuilder,
+        build_pdf,
+    )
+    from tests.oracle import pdf_spans
+
+    ref = "media://sha/feedface"
+    pg = PageBuilder()
+    pg.text(72, 700, "Invoice 42")
+    pg.image(100, 200, 50, 40, ref)
+    pg.text(72, 100, "Total: $10.00")
+    clean = build_pdf([pg])
+    im_dict = (
+        f"<< /Type /XObject /Subtype /Image /Name ({ref}) "
+        "/Width 100 /Height 100 >>"
+    )
+    assert clean.count(im_dict) == 1
+
+    def with_payload(filt: str, payload: bytes) -> str:
+        body = payload.decode("latin-1")
+        obj = (
+            f"<< /Type /XObject /Subtype /Image /Name ({ref}) /Width 100 "
+            f"/Height 100{filt} /Length {len(payload)} >>\n"
+            f"stream\n{body}\nendstream"
+        )
+        return clean.replace(im_dict, obj)
+
+    docs = {
+        "clean": clean,
+        "jpeg": with_payload(
+            " /Filter /DCTDecode", b"\xff\xd8\xff\xe0\x00\x10JFIF\x00\x01"
+        ),
+        "flate": with_payload(" /Filter /FlateDecode", b"\x78\x9cnot zlib"),
+        "ghost": with_payload("", b"BT /F1 10 Tf 72 400 Td (ghost) Tj ET"),
+    }
+    want, _ = extract_doc([("pdf", clean, "", 0)])
+    assert ("media", "", ref) in [(k, t, m) for k, t, m, _ in want]
+    assert {"Invoice 42", "Total: $10.00"} <= {t for _k, t, _m, _ in want}
+    for name, doc in docs.items():
+        got, _ = extract_doc([("pdf", doc, "", 0)])
+        assert got == want, name
+        assert [(k, t, m) for k, t, m, _ in got] == pdf_spans(doc), name
+
+    inp = spark.createDataFrame(
+        [
+            (name, [{"kind": "pdf", "text": doc, "media_ref": "", "offset": 0}])
+            for name, doc in docs.items()
+        ],
+        INPUT_SCHEMA,
+    )
+    rows = spans_view(
+        extract(inp, salt_buckets=4, num_partitions=2)
+    ).select("doc_id", "order", "kind", "text", "media_ref").collect()
+    per_doc: dict = {}
+    for r in sorted(rows, key=lambda r: (r["doc_id"], r["order"])):
+        per_doc.setdefault(r["doc_id"], []).append(
+            (r["kind"], r["text"], r["media_ref"])
+        )
+    assert set(per_doc) == set(docs)
+    assert all(spans == per_doc["clean"] for spans in per_doc.values())
+    assert ("media", "", ref) in per_doc["clean"]

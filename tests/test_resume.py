@@ -20,6 +20,16 @@ N_DOCS = 120
 BUCKETS = 8
 
 
+def _ledger_docs(spark, *ids):
+    from accountant_pdf_extract_spark.schema import INPUT_SCHEMA
+
+    return spark.createDataFrame(
+        [(d, [{"kind": "text", "text": f"ledger {d}", "media_ref": "",
+               "offset": 0}]) for d in ids],
+        INPUT_SCHEMA,
+    )
+
+
 def _collect(spark, path):
     df = spark.read.parquet(path)
     return sorted(
@@ -301,24 +311,13 @@ def test_incremental_job_extracts_only_new_snapshots(spark, tmp_path):
     append-only segments around a compaction (whose rewritten rows
     must NOT be re-emitted); an up-to-date cursor is a no-op."""
     from accountant_pdf_extract_spark.plans.job import run_incremental_job
-    from accountant_pdf_extract_spark.schema import INPUT_SCHEMA
     from accountant_pdf_extract_spark.sources.catalog import DocTable
-
-    def docs(*ids):
-        return spark.createDataFrame(
-            [
-                (d, [{"kind": "text", "text": f"ledger {d}", "media_ref": "",
-                      "offset": 0}])
-                for d in ids
-            ],
-            INPUT_SCHEMA,
-        )
 
     tbl = DocTable(str(tmp_path / "tbl"))
     out = str(tmp_path / "out")
     cursor = str(tmp_path / "cursor.json")
 
-    tbl.append(docs("d1", "d2"))
+    tbl.append(_ledger_docs(spark, "d1", "d2"))
     r1 = run_incremental_job(
         spark, tbl, out, cursor, salt_buckets=8, num_partitions=2)
     assert not r1["skipped"] and len(r1["segments"]) == 1
@@ -332,9 +331,9 @@ def test_incremental_job_extracts_only_new_snapshots(spark, tmp_path):
 
     assert by_batch() == {1: {"d1", "d2"}}
 
-    tbl.append(docs("d3"))               # seq 2
-    tbl.compact(spark, target_files=1)   # seq 3 (rewrites d1-d3)
-    tbl.append(docs("d4"))               # seq 4
+    tbl.append(_ledger_docs(spark, "d3"))  # seq 2
+    tbl.compact(spark, target_files=1)     # seq 3 (rewrites d1-d3)
+    tbl.append(_ledger_docs(spark, "d4"))  # seq 4
     r2 = run_incremental_job(
         spark, tbl, out, cursor, salt_buckets=8, num_partitions=2)
     assert [s["batch_id"] for s in r2["segments"]] == [2, 4]
@@ -355,20 +354,12 @@ def test_incremental_job_retracts_deletes_as_tombstones(spark, tmp_path):
     documented consumer contract (max-batch row minus tombstoned docs)
     yields the table's live set."""
     from accountant_pdf_extract_spark.plans.job import run_incremental_job
-    from accountant_pdf_extract_spark.schema import INPUT_SCHEMA
     from accountant_pdf_extract_spark.sources.catalog import DocTable
-
-    def docs(*ids):
-        return spark.createDataFrame(
-            [(d, [{"kind": "text", "text": f"ledger {d}", "media_ref": "",
-                   "offset": 0}]) for d in ids],
-            INPUT_SCHEMA,
-        )
 
     tbl = DocTable(str(tmp_path / "tbl"))
     out = str(tmp_path / "out")
     cursor = str(tmp_path / "cursor.json")
-    tbl.append(docs("d1", "d2"))                              # seq 1
+    tbl.append(_ledger_docs(spark, "d1", "d2"))               # seq 1
     run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
                         num_partitions=2)
     tbl.delete_where(spark, "doc_id = 'd1'", "doc_id")        # seq 2
@@ -416,18 +407,10 @@ def test_incremental_first_consumption_after_compaction(spark, tmp_path):
     table, not anchor on the compaction and drop everything it
     rewrote.  Also the compaction-only-window case."""
     from accountant_pdf_extract_spark.plans.job import run_incremental_job
-    from accountant_pdf_extract_spark.schema import INPUT_SCHEMA
     from accountant_pdf_extract_spark.sources.catalog import DocTable
 
-    def docs(*ids):
-        return spark.createDataFrame(
-            [(d, [{"kind": "text", "text": f"ledger {d}", "media_ref": "",
-                   "offset": 0}]) for d in ids],
-            INPUT_SCHEMA,
-        )
-
     tbl = DocTable(str(tmp_path / "tbl"))
-    tbl.append(docs("d1", "d2"))
+    tbl.append(_ledger_docs(spark, "d1", "d2"))
     tbl.compact(spark, target_files=1)
     tbl.expire_snapshots(keep_last=1)   # history = [compaction] only
     out = str(tmp_path / "out")
@@ -441,10 +424,10 @@ def test_incremental_first_consumption_after_compaction(spark, tmp_path):
 
     # compaction FIRST then an append: fresh consumer still gets all
     tbl2 = DocTable(str(tmp_path / "tbl2"))
-    tbl2.append(docs("a1"))
+    tbl2.append(_ledger_docs(spark, "a1"))
     tbl2.compact(spark, target_files=1)
     tbl2.expire_snapshots(keep_last=1)
-    tbl2.append(docs("a2"))
+    tbl2.append(_ledger_docs(spark, "a2"))
     out2 = str(tmp_path / "out2")
     r2 = run_incremental_job(
         spark, tbl2, out2, str(tmp_path / "c2.json"),
@@ -498,3 +481,110 @@ def test_run_job_zero_row_output_returns_empty(spark, tmp_path):
         salt_buckets=8, num_partitions=2,
     )
     assert r["processed_buckets"] == [] and r["snapshot_id"] is None
+
+
+def _batches(spark, path):
+    """``_batch_id`` → set of doc_ids under a batch-keyed sink dir."""
+    got = {}
+    for r in spark.read.parquet(path).select("_batch_id", "doc_id").collect():
+        got.setdefault(int(r["_batch_id"]), set()).add(r["doc_id"])
+    return got
+
+
+def test_incremental_replay_of_multi_segment_window(spark, tmp_path):
+    """A crash after a window's segment writes but before the cursor
+    advance re-runs the whole window: segment 2 is rewritten after
+    segment 4 is already on disk, and the output ends exactly as the
+    run that did not crash left it."""
+    from accountant_pdf_extract_spark.plans.job import run_incremental_job
+    from accountant_pdf_extract_spark.sources.catalog import DocTable
+
+    tbl = DocTable(str(tmp_path / "tbl"))
+    out = str(tmp_path / "out")
+    cursor = str(tmp_path / "cursor.json")
+    tbl.append(_ledger_docs(spark, "d1", "d2"))           # seq 1
+    run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
+                        num_partitions=2)
+    shutil.copy(cursor, str(tmp_path / "cursor_r1.json"))
+    tbl.append(_ledger_docs(spark, "d3"))                 # seq 2
+    tbl.compact(spark, target_files=1)                    # seq 3
+    tbl.append(_ledger_docs(spark, "d4"))                 # seq 4
+    r2 = run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
+                             num_partitions=2)
+    want = _batches(spark, out)
+    assert want == {1: {"d1", "d2"}, 2: {"d3"}, 4: {"d4"}}
+
+    shutil.copy(str(tmp_path / "cursor_r1.json"), cursor)  # the crash
+    replay = run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
+                                 num_partitions=2)
+    assert replay["segments"] == r2["segments"]
+    assert [s["batch_id"] for s in replay["segments"]] == [2, 4]
+    assert _batches(spark, out) == want
+
+
+def test_incremental_replay_of_multi_tombstone_window(spark, tmp_path):
+    """The same crash over a window holding two ``delete_where``
+    snapshots: tombstone 2 is rewritten after tombstone 3, and the
+    sink and its tombstones end as in the run that did not crash."""
+    from accountant_pdf_extract_spark.plans.job import run_incremental_job
+    from accountant_pdf_extract_spark.sources.catalog import DocTable
+
+    tbl = DocTable(str(tmp_path / "tbl"))
+    out = str(tmp_path / "out")
+    tombs = f"{out}/_tombstones"
+    cursor = str(tmp_path / "cursor.json")
+    tbl.append(_ledger_docs(spark, "d1", "d2", "d3"))     # seq 1
+    run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
+                        num_partitions=2)
+    shutil.copy(cursor, str(tmp_path / "cursor_r1.json"))
+    tbl.delete_where(spark, "doc_id = 'd1'", "doc_id")    # seq 2
+    tbl.delete_where(spark, "doc_id = 'd2'", "doc_id")    # seq 3
+    r2 = run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
+                             num_partitions=2)
+    assert [t["batch_id"] for t in r2["tombstones"]] == [2, 3]
+    want_rows, want_tombs = _batches(spark, out), _batches(spark, tombs)
+    assert want_tombs == {2: {"d1"}, 3: {"d2"}}
+
+    shutil.copy(str(tmp_path / "cursor_r1.json"), cursor)  # the crash
+    replay = run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
+                                 num_partitions=2)
+    assert replay["tombstones"] == r2["tombstones"]
+    assert _batches(spark, out) == want_rows == {1: {"d1", "d2", "d3"}}
+    assert _batches(spark, tombs) == want_tombs
+
+
+def test_incremental_refuses_output_beyond_table_head(spark, tmp_path):
+    """An output holding a ``_batch_id`` beyond the table's current
+    sequence came from another table or history: a fresh cursor run
+    against it raises before writing anything, and the cursor stays
+    absent."""
+    import os
+
+    import pytest
+
+    from accountant_pdf_extract_spark.plans.job import run_incremental_job
+    from accountant_pdf_extract_spark.sources.catalog import DocTable
+
+    out = str(tmp_path / "out")
+    old = DocTable(str(tmp_path / "old"))
+    for d in ("a1", "a2", "a3"):                          # seq 1..3
+        old.append(_ledger_docs(spark, d))
+    run_incremental_job(spark, old, out, str(tmp_path / "old.json"),
+                        salt_buckets=8, num_partitions=2)
+    assert set(_batches(spark, out)) == {3}
+
+    def tree():
+        return sorted(
+            (os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _dirs, files in os.walk(out) for f in files
+        )
+
+    before = tree()
+    new = DocTable(str(tmp_path / "new"))
+    new.append(_ledger_docs(spark, "b1"))                 # seq 1
+    cursor = str(tmp_path / "new.json")
+    with pytest.raises(ValueError, match="_batch_id=3"):
+        run_incremental_job(spark, new, out, cursor, salt_buckets=8,
+                            num_partitions=2)
+    assert tree() == before
+    assert not os.path.exists(cursor)

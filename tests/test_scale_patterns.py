@@ -1,5 +1,6 @@
 """Scale-pattern evidence tests: bucketed co-located joins (no
-Exchange) and salted skew joins (row-identical to plain joins)."""
+Exchange), map-side dedup plans, as-of, range and ranking operators
+checked against their plain forms."""
 
 from __future__ import annotations
 
@@ -7,87 +8,7 @@ import pathlib
 
 from pyspark.sql import functions as F
 
-from accountant_pdf_extract_spark.operators.skewjoin import salted_join
-
 SF = "/root/testdata/sf0.001"
-
-
-def test_salted_join_equals_plain_join(spark):
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    # make a skewed big side: every lineitem key plus a hot key burst
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    hot = li.limit(1).crossJoin(spark.range(500).select(F.lit(1).alias("_x"))).drop("_x")
-    big = li.unionByName(hot)
-    small = orders.select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_orderstatus"
-    )
-
-    plain = big.join(small, "l_orderkey").groupBy("o_orderstatus").agg(
-        F.count("*").alias("n"),
-        F.sum(F.round(F.col("l_quantity") * 100).cast("long")).alias("q"),
-    )
-    salted = salted_join(big, small, "l_orderkey", salt_buckets=8).groupBy(
-        "o_orderstatus"
-    ).agg(
-        F.count("*").alias("n"),
-        F.sum(F.round(F.col("l_quantity") * 100).cast("long")).alias("q"),
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(
-        map(tuple, salted.collect())
-    )
-
-
-def test_salted_join_spreads_hot_key(spark):
-    """BYTE-IDENTICAL duplicate rows of one hot key (the canonical
-    skew case) must land in >1 salt bucket when the caller supplies a
-    tiebreak id — exercised through the REAL ``_salt_expr`` used by
-    salted_join, not a stand-in expression.  The salt must be a pure
-    function of row content (retry-safe): position-derived salts
-    (spark_partition_id/monotonically_increasing_id) are banned
-    because a map-task retry would re-salt rows differently than
-    reducers that already fetched (SPARK-23207 class)."""
-    from accountant_pdf_extract_spark.operators import skewjoin
-
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").select("l_orderkey")
-    hot_key = li.first()["l_orderkey"]
-    # 400 payload-identical rows of the hot key, each with a unique id
-    big = li.where(F.col("l_orderkey") == hot_key).limit(1).crossJoin(
-        spark.range(400).select(F.col("id").alias("rid"))
-    ).repartition(4)
-    salted = big.withColumn(
-        skewjoin._SALT, skewjoin._salt_expr(big, "l_orderkey", 8, "rid")
-    )
-    n_buckets = salted.select(skewjoin._SALT).distinct().count()
-    assert n_buckets >= 6
-
-    # determinism: recomputing the same expression on a reshuffled
-    # lineage assigns every rid the SAME salt (retry-safety proxy)
-    a = {r["rid"]: r[skewjoin._SALT] for r in salted.collect()}
-    resalted = big.repartition(11).withColumn(
-        skewjoin._SALT, skewjoin._salt_expr(big, "l_orderkey", 8, "rid")
-    )
-    b = {r["rid"]: r[skewjoin._SALT] for r in resalted.collect()}
-    assert a == b
-
-    # and the full operator still returns join-identical results
-    small = spark.createDataFrame([(int(hot_key), "X")],
-                                  "l_orderkey long, tag string")
-    out = skewjoin.salted_join(
-        big, small, "l_orderkey", salt_buckets=8, tiebreak="rid"
-    )
-    assert out.count() == 400
-
-    import pytest
-
-    with pytest.raises(ValueError, match="tiebreak"):
-        skewjoin.salted_join(
-            big, small, "l_orderkey", salt_buckets=8, tiebreak="nope"
-        )
-
-    with pytest.raises(ValueError, match="salt_buckets"):
-        skewjoin.salted_join(big, small, "l_orderkey", salt_buckets=0)
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path: pathlib.Path):
@@ -297,31 +218,6 @@ def test_duplicate_clusters_match_union_find(spark):
         ).collect()
     }
     assert got4 == union_find(redges)
-
-
-def test_salted_join_refuses_outer_and_is_content_deterministic(spark):
-    import pytest
-
-    big = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    small = spark.createDataFrame([(1, "x")], "k long, w string")
-    with pytest.raises(ValueError, match="salted_join"):
-        salted_join(big, small, "k", how="full")
-    with pytest.raises(ValueError, match="salted_join"):
-        salted_join(big, small, "k", how="right")
-    # 'cross' is refused too: Spark plans a using-columns 'cross' join
-    # as INNER, silently dropping unmatched keys — never allow it
-    with pytest.raises(ValueError, match="salted_join"):
-        salted_join(big, small, "k", how="cross")
-    # inputs carrying the internal salt column are refused, not
-    # silently clobbered-and-dropped
-    with pytest.raises(ValueError, match="_sj_salt"):
-        salted_join(big.withColumn("_sj_salt", F.lit(1)), small, "k")
-    # content-keyed salt: same result regardless of partitioning
-    a = sorted(map(tuple, salted_join(big, small, "k").collect()))
-    b = sorted(
-        map(tuple, salted_join(big.repartition(7), small, "k").collect())
-    )
-    assert a == b == [(1, "a", "x")]
 
 
 def test_global_row_number_matches_window(spark):

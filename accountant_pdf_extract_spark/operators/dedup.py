@@ -270,104 +270,6 @@ def jaccard_pairs(
     )
 
 
-def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Connected components over candidate duplicate pairs → cluster
-    assignment (sid, cluster = min member id) — the step that turns
-    pairwise near-dup hits into keep-one groups.
-
-    Two-phase large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    algorithm): each round rewires every node's strictly-larger
-    neighbors (large-star) then its smaller neighbors (small-star) to
-    the neighborhood minimum, halving component DEPTH per round, so
-    convergence is O(log diameter) rounds instead of the O(diameter)
-    of naive min-label propagation — a 64-long chain converges in ~6
-    rounds, not 64.  Each phase is one groupBy-min + a generator
-    explode over the (small, LSH-pruned) edge relation; frames are
-    localCheckpoint-ed per round so lineage stays O(1).
-
-    Not SQL-expressible (iterative) — correctness is pinned against a
-    Python union-find in tests."""
-    nodes = (
-        pairs.select(F.col("a").alias("sid"))
-        .unionByName(pairs.select(F.col("b").alias("sid")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # canonical undirected edge list, no self loops
-    edges = (
-        pairs.select(
-            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_edges = edges.count()
-
-    def large_star(e: DataFrame) -> DataFrame:
-        # neighborhoods over BOTH directions; connect each neighbor
-        # v > u to m = min(N(u) ∪ {u})
-        both = e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        m = both.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        return (
-            both.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("m").alias("u"), F.col("v"))
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # orient large→small: group by the larger endpoint u, connect
-        # every smaller neighbor AND u itself to the minimum
-        m = e.groupBy("v").agg(F.min("u").alias("m"))
-        # e is canonical (u < v): v is the larger endpoint, u smaller
-        rewired = e.join(m, "v").select(
-            F.col("m").alias("u"), F.col("u").alias("v")
-        )
-        self_edge = m.select(F.col("m").alias("u"), F.col("v"))
-        return rewired.unionByName(self_edge).where(F.col("u") != F.col("v"))
-
-    def canon(e: DataFrame) -> DataFrame:
-        return (
-            e.select(
-                F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    for _ in range(max_iter):
-        if n_edges == 0:
-            break
-        new_edges = canon(small_star(canon(large_star(edges)))).localCheckpoint()
-        new_n = new_edges.count()
-        if new_n == n_edges:
-            union_n = edges.unionByName(new_edges).distinct().count()
-            if union_n == n_edges:  # identical sets → star fixed point
-                edges = new_edges
-                break
-        edges, n_edges = new_edges, new_n
-    else:
-        raise RuntimeError(
-            f"duplicate_clusters did not converge within max_iter={max_iter} "
-            "rounds — raise max_iter; returning partial labels would "
-            "silently split clusters"
-        )
-
-    # at the fixed point every edge is (component_min, member)
-    stars = edges.select(
-        F.col("v").alias("sid"), F.col("u").alias("cluster")
-    )
-    return (
-        nodes.join(stars, "sid", "left")
-        .select("sid", F.coalesce("cluster", "sid").alias("cluster"))
-    )
-
-
 def contamination_check(
     df: DataFrame,
     benchmark: DataFrame,

@@ -2,11 +2,9 @@
 ``mapInArrow`` pass).
 
 Input batches: (doc_id: string, spans: list<struct<kind,text,media_ref,
-offset>>).  One per-document loop (``_extract_rows``) feeds two output
-projections: ``extract_batches`` emits one row per output span, the
-doc's extracted fields riding on its order==0 row
-(``schema.ARROW_FLAT_FIELDS``); ``extract_fields_batches`` emits one
-row per document (``schema.ARROW_DOC_FIELDS``).  Arrow in, Arrow out —
+offset>>).  ``extract_batches`` runs one per-document loop and emits
+one row per output span, the doc's extracted fields riding on its
+order==0 row (``schema.ARROW_FLAT_FIELDS``).  Arrow in, Arrow out —
 the only Python boundary in the hot path; no per-row Python at the
 Spark API level (``BASELINE.json:15``).
 """
@@ -20,7 +18,7 @@ from operator import itemgetter
 import pyarrow as pa
 
 from accountant_pdf_extract_spark.operators.doccore import extract_doc
-from accountant_pdf_extract_spark.schema import ARROW_DOC_FIELDS, ARROW_FLAT_FIELDS
+from accountant_pdf_extract_spark.schema import ARROW_FLAT_FIELDS
 
 
 def _decode_spans_batch(batch: pa.RecordBatch):
@@ -46,16 +44,15 @@ def _decode_spans_batch(batch: pa.RecordBatch):
     )
 
 
-# DERIVED from the pinned schemas — a hand-maintained copy could drift
+# DERIVED from the pinned schema — a hand-maintained copy could drift
 # after a schema edit, and (because of the per-doc isolation fallback)
 # the drift would surface as every doc silently dropped, not an error
 _FLAT_TYPES = [f.type for f in ARROW_FLAT_FIELDS]
-_DOC_TYPES = [f.type for f in ARROW_DOC_FIELDS]
-# a doc's field values in schema column order (column 0 is doc_id)
-_field_values = itemgetter(*ARROW_DOC_FIELDS.names[1:])
+# a doc's field values in schema column order (columns 0-4 are the span)
+_field_values = itemgetter(*ARROW_FLAT_FIELDS.names[5:])
 
 
-def _yield_with_doc_isolation(cols, types, schema, bounds, on_drop):
+def _yield_with_doc_isolation(cols, bounds, on_drop):
     """Build the output RecordBatch; if ONE doc's values break Arrow
     conversion (the build runs after all per-doc trys), retry doc by
     doc so only the offender is dropped — per-doc fault isolation must
@@ -71,7 +68,8 @@ def _yield_with_doc_isolation(cols, types, schema, bounds, on_drop):
 
     def build(segments):
         return pa.RecordBatch.from_arrays(
-            [pa.array(c, t) for c, t in zip(segments, types)], schema=schema
+            [pa.array(c, t) for c, t in zip(segments, _FLAT_TYPES)],
+            schema=ARROW_FLAT_FIELDS,
         )
 
     try:
@@ -129,42 +127,6 @@ def _report_drop(on_drop, doc_id, exc) -> None:
         on_drop(doc_id, exc)
 
 
-def _extract_rows(batches, on_drop, project, schema, types):
-    """The per-batch loop both outputs share: span decode,
-    ``extract_doc`` per document with per-doc fault isolation, the
-    all-fail guard, then the isolated Arrow build.
-    ``project(cols, doc_id, spans, fields)`` appends one document's
-    output rows to ``cols``, one list per ``schema`` column."""
-    for batch in batches:
-        doc_ids, list_offsets, f_kind, f_text, f_ref, f_off = (
-            _decode_spans_batch(batch)
-        )
-        cols: list[list] = [[] for _ in types]
-        bounds: list[tuple[str, int, int]] = []  # per-doc row spans
-        doc_failures: list[Exception] = []
-        for i, doc_id in enumerate(doc_ids):
-            lo, hi = list_offsets[i], list_offsets[i + 1]
-            try:
-                out, fields = extract_doc(
-                    list(
-                        zip(f_kind[lo:hi], f_text[lo:hi], f_ref[lo:hi], f_off[lo:hi])
-                    )
-                )
-            except Exception as exc:  # noqa: BLE001 — per-doc fault isolation:
-                # one malformed payload must not kill a 100-TB job; the
-                # doc yields zero rows and the skew shows up in the
-                # commit-log n_docs-vs-output delta.
-                _report_drop(on_drop, doc_id, exc)
-                doc_failures.append(exc)
-                continue
-            start = len(cols[0])
-            project(cols, doc_id, out, fields)
-            bounds.append((doc_id, start, len(cols[0])))
-
-        _refuse_all_fail_batch(doc_failures, len(doc_ids))
-        yield from _yield_with_doc_isolation(cols, types, schema, bounds, on_drop)
-
-
 def _span_columns(cols, doc_id, spans, fields):
     """One row per output span.  The fields ride on the doc's order==0
     row only — duplicating Decimal/list cells per span row costs 20-50x
@@ -184,36 +146,44 @@ def _span_columns(cols, doc_id, spans, fields):
             col[i] = val
 
 
-def _doc_columns(cols, doc_id, _spans, fields):
-    """One row per document: doc_id + its fields, no span columns."""
-    for col, val in zip(cols, (doc_id, *_field_values(fields))):
-        col.append(val)
-
-
 def extract_batches(
     batches: Iterator[pa.RecordBatch],
     on_drop=None,
 ) -> Iterator[pa.RecordBatch]:
-    """One row per output span (``schema.ARROW_FLAT_FIELDS``).
+    """One row per output span (``schema.ARROW_FLAT_FIELDS``): span
+    decode, ``extract_doc`` per document with per-doc fault isolation,
+    the all-fail guard, then the isolated Arrow build.
 
     ``on_drop(doc_id, exc)`` is invoked for each document whose
     extraction raised (per-doc fault isolation), after the
     executor-stdout line.  ``plans.pipeline.extract`` wires an
     accumulator through it so dropped-doc counts surface as a
     driver-readable metric, not just a buried print."""
-    yield from _extract_rows(
-        batches, on_drop, _span_columns, ARROW_FLAT_FIELDS, _FLAT_TYPES
-    )
+    for batch in batches:
+        doc_ids, list_offsets, f_kind, f_text, f_ref, f_off = (
+            _decode_spans_batch(batch)
+        )
+        cols: list[list] = [[] for _ in _FLAT_TYPES]
+        bounds: list[tuple[str, int, int]] = []  # per-doc row spans
+        doc_failures: list[Exception] = []
+        for i, doc_id in enumerate(doc_ids):
+            lo, hi = list_offsets[i], list_offsets[i + 1]
+            try:
+                out, fields = extract_doc(
+                    list(
+                        zip(f_kind[lo:hi], f_text[lo:hi], f_ref[lo:hi], f_off[lo:hi])
+                    )
+                )
+            except Exception as exc:  # noqa: BLE001 — per-doc fault isolation:
+                # one malformed payload must not kill a 100-TB job; the
+                # doc yields zero rows and the skew shows up in the
+                # commit-log n_docs-vs-output delta.
+                _report_drop(on_drop, doc_id, exc)
+                doc_failures.append(exc)
+                continue
+            start = len(cols[0])
+            _span_columns(cols, doc_id, out, fields)
+            bounds.append((doc_id, start, len(cols[0])))
 
-
-def extract_fields_batches(
-    batches: Iterator[pa.RecordBatch],
-    on_drop=None,
-) -> Iterator[pa.RecordBatch]:
-    """Fields-only projection of the same loop: ONE row per document
-    (``schema.ARROW_DOC_FIELDS``), never materializing the span-text
-    Arrow columns — the cheap path when only the structured fields
-    are wanted (parse cost is identical; Arrow build drops ~20x)."""
-    yield from _extract_rows(
-        batches, on_drop, _doc_columns, ARROW_DOC_FIELDS, _DOC_TYPES
-    )
+        _refuse_all_fail_batch(doc_failures, len(doc_ids))
+        yield from _yield_with_doc_isolation(cols, bounds, on_drop)

@@ -1,31 +1,21 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float>), pure
+Catalyst and oracle-checkable:
 
-Two paths, per the scale mandate:
+* ``brute_force_topk_df`` — exploded-join dot product, exact top-k.
+  Fine when the query set is small; the join fans out
+  |queries| × |corpus| × dim rows, so gate query count.
+* ``cosine_near_dup_pairs`` — embedding-cosine near-duplicate pairs
+  over an id-capped pair space.
+* ``quantize_embeddings`` — per-vector int8 quantization.
 
-* ``brute_force_topk_df`` — pure-Catalyst exploded-join dot product,
-  exact, oracle-checkable.  Fine when the query set is small; the
-  join fans out |queries| × |corpus| × dim rows, so gate query count.
-* ``brute_force_topk_pandas`` — the scale path for top-k against a
-  SMALL query set: queries are collected to a numpy matrix and
-  broadcast; a ``mapInPandas`` pass computes per-batch numpy
-  GEMM + per-doc top-k, then one final global top-k per query.
-  No shuffle of the corpus at all — map-side everything except the
-  final k·|queries|-row reduction.
-* ``lsh_bucketed_topk`` — random-hyperplane LSH variant: corpus and
-  queries bucketed by sign-pattern; candidates only within matching
-  buckets (+ optional multi-probe), then exact rescoring.
-
-Quantization note: for engine-vs-oracle determinism the DF path works
-on milli-quantized integer components (round(x*1000)::bigint) so dot
-products are exact integers — float sum order never matters.
+Quantization note: for engine-vs-oracle determinism the top-k and
+near-dup paths work on milli-quantized integer components
+(round(x*1000)::bigint) so dot products are exact integers — float
+sum order never matters.
 """
 
 from __future__ import annotations
 
-import functools
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -33,21 +23,8 @@ from pyspark.sql.window import Window
 
 def quantized_array(c):
     """Milli-quantized component array — THE single quantizer the
-    oracle-parity contract depends on; every path (explode relation,
-    LSH rescore) must use this exact expression or the LSH rescore
-    silently desynchronizes from the brute-force path it is a
-    documented verified subset of."""
+    oracle-parity contract depends on."""
     return F.transform(c, lambda x: F.round(x.cast("double") * 1000).cast("long"))
-
-
-@functools.lru_cache(maxsize=8)
-def _derived_planes(seed: int, n_bits: int, dim: int):
-    """Seed-derived hyperplane matrix, cached per worker process."""
-    return (
-        np.random.default_rng(seed)
-        .standard_normal((n_bits, dim))
-        .astype(np.float32)
-    )
 
 
 def quantized_components(
@@ -101,455 +78,6 @@ def brute_force_topk_df(
     )
 
 
-def _finite_matrix(pdf, vec_col: str, dim: int | None):
-    """(keep_mask, stacked float32 matrix) for one Arrow batch:
-    NULL embeddings, ragged lengths AND rows containing NaN/inf (or
-    NULL elements, which Arrow surfaces as None → NaN) are DROPPED
-    (the documented semantics of the Catalyst twins, which explode
-    NULL to zero rows) instead of crashing np.stack in the executor
-    or poisoning a whole batch's top-k cut (one NaN score makes the
-    argpartition threshold NaN → empty candidate sets → ragged
-    np.stack ValueError)."""
-    vals = pdf[vec_col].to_list()
-    keep = [
-        v is not None and (dim is None or len(v) == dim) for v in vals
-    ]
-    if dim is None:
-        lens = {len(v) for v, k in zip(vals, keep) if k}
-        if len(lens) > 1:
-            # deterministic tie-break: larger count wins, then larger
-            # dim (a pure max-by-count over a set is iteration-order
-            # dependent on ties).  Per-batch majority — ragged rows
-            # are rare corruption; pass explicit planes/dim for
-            # strict cross-partition control.
-            majority = max(
-                lens,
-                key=lambda L: (
-                    sum(1 for v, k in zip(vals, keep) if k and len(v) == L),
-                    L,
-                ),
-            )
-            keep = [k and len(v) == majority for v, k in zip(vals, keep)]
-    if not any(keep):
-        return keep, None
-    # None ELEMENTS inside a kept list become NaN under a float dtype,
-    # so the finite-row mask below covers them too
-    mat = np.array(
-        [v for v, k in zip(vals, keep) if k], dtype=np.float32
-    )
-    finite = np.isfinite(mat).all(axis=1)
-    if not finite.all():
-        it = iter(finite)
-        keep = [k and bool(next(it)) for k in keep]
-        mat = mat[finite]
-    if mat.shape[0] == 0:
-        return keep, None
-    return keep, mat
-
-
-def brute_force_topk_pandas(
-    df: DataFrame,
-    queries: np.ndarray,
-    query_ids: np.ndarray,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    metric: str = "cosine",
-) -> DataFrame:
-    """Scale path: numpy GEMM per Arrow batch against the broadcast
-    query matrix; per-batch top-k then global top-k.  Corpus is never
-    shuffled; the reduction is k·|queries| rows per partition."""
-    spark = df.sparkSession
-    if metric not in ("cosine", "dot"):
-        # an unknown metric must not silently degrade to raw dot —
-        # wrong neighbors with no signal
-        raise ValueError(f"unknown metric {metric!r}; use 'cosine' or 'dot'")
-    out_schema = "qid long, cid long, score double"
-    if len(queries) == 0:
-        # np.stack over zero queries would crash every executor task;
-        # an empty query set has a well-defined empty answer
-        return spark.createDataFrame(
-            [], out_schema + ", rank int"
-        ).select("qid", "cid", "score", "rank")
-    qn = queries.astype(np.float32)
-    if metric == "cosine":
-        qn = qn / np.maximum(np.linalg.norm(qn, axis=1, keepdims=True), 1e-12)
-    bc = spark.sparkContext.broadcast((qn, query_ids.astype(np.int64)))
-
-    def score(batches):
-        qm, qids = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep, mat = _finite_matrix(pdf, vec_col, qm.shape[1])
-            if mat is None:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)[keep]
-            if metric == "cosine":
-                mat = mat / np.maximum(
-                    np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-                )
-            sims = qm @ mat.T  # |q| x |batch|
-            # k+1 slots: when the query itself lives in this batch its
-            # self-match would otherwise evict the true k-th neighbor
-            # (the self row is filtered later, after the global top-k)
-            kk = min(k + 1, sims.shape[1])
-            # per-batch selection must cut boundary TIES by the same
-            # (score desc, cid asc) order the global window uses —
-            # a bare argpartition keeps an arbitrary tied subset,
-            # making the result depend on partition/batch boundaries.
-            # But a FULL lexsort per query is O(q·n log n); instead:
-            # argpartition the top-kk cut O(n), widen the candidate
-            # set to every row tying the kk-th score, then lexsort
-            # only those few candidates deterministically.
-            rows = []
-            for qi in range(sims.shape[0]):
-                s = sims[qi]
-                if kk >= s.shape[0]:
-                    cand = np.arange(s.shape[0])
-                else:
-                    part = np.argpartition(-s, kk - 1)
-                    thresh = s[part[kk - 1]]
-                    cand = np.nonzero(s >= thresh)[0]
-                order = np.lexsort((ids[cand], -s[cand]))
-                rows.append(cand[order[:kk]])
-            idx = np.stack(rows)
-            out = {
-                "qid": np.repeat(qids, kk),
-                "cid": ids[idx].ravel(),
-                "score": np.take_along_axis(sims, idx, 1).ravel().astype("float64"),
-            }
-            yield pd.DataFrame(out)
-
-    partial = df.select(id_col, vec_col).mapInPandas(
-        score, schema="qid long, cid long, score double"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
-    return (
-        partial.where(F.col("qid") != F.col("cid"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-
-
-def hyperplane_signature(
-    df: DataFrame,
-    planes: np.ndarray | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tables: int = 1,
-    seed: int | None = None,
-    n_bits: int | None = None,
-) -> DataFrame:
-    """Random-hyperplane LSH signatures via mapInPandas GEMM — the
-    bucketing primitive for ANN at scale.  ``planes`` has shape
-    (n_tables * bits_per_table, dim); output is one row per (vector,
-    table): (vid, table, bucket).
-
-    When ``planes`` is None, pass ``seed`` + ``n_bits`` instead: the
-    identical plane matrix is derived from the seed at the first batch,
-    once the embedding dim is observed — so building the plan never
-    runs a Spark job to sniff the dimension (round-1 used a driver-side
-    ``df.first()`` per call; VERDICT r1 'What's wrong' #5).  The
-    derivation is cached per (seed, bits, dim) in the Python worker
-    PROCESS (lru_cache), so it runs once per worker, not once per
-    task."""
-    spark = df.sparkSession
-    if planes is not None:
-        if planes.shape[0] % n_tables:
-            raise ValueError(
-                f"planes rows ({planes.shape[0]}) must divide evenly into "
-                f"n_tables={n_tables} — a remainder would silently drop "
-                "the trailing hyperplanes and coarsen every bucket"
-            )
-        bc = spark.sparkContext.broadcast(planes.astype(np.float32))
-        bits_per = planes.shape[0] // n_tables
-    else:
-        if seed is None or n_bits is None:
-            raise ValueError("pass either planes or (seed, n_bits)")
-        if n_bits % n_tables:
-            raise ValueError(
-                f"n_bits={n_bits} must divide evenly into n_tables="
-                f"{n_tables} — a remainder would silently drop bits"
-            )
-        bc = spark.sparkContext.broadcast((int(seed), int(n_bits)))
-        bits_per = n_bits // n_tables
-
-    # capture only a bool — capturing `planes` itself would pickle the
-    # full matrix into every task closure, defeating the broadcast
-    derive_planes = planes is None
-
-    def sig(batches):
-        pl = None if derive_planes else bc.value
-        weights = 1 << np.arange(bits_per, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep, mat = _finite_matrix(
-                pdf, vec_col, None if pl is None else pl.shape[1]
-            )
-            if mat is None:
-                continue
-            if pl is None:
-                s, nb = bc.value
-                pl = _derived_planes(s, nb, mat.shape[1])
-            bits = (mat @ pl.T) > 0  # |batch| x (n_tables*bits_per)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)[keep]
-            frames = []
-            for t in range(n_tables):
-                chunk = bits[:, t * bits_per : (t + 1) * bits_per]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vid": ids,
-                            "table": np.full(len(ids), t, dtype=np.int32),
-                            "bucket": (chunk @ weights).astype(np.int64),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    return df.select(id_col, vec_col).mapInPandas(
-        sig, schema="vid long, table int, bucket long"
-    )
-
-
-def lsh_bucketed_topk(
-    df: DataFrame,
-    query_max_id: int = 20,
-    k: int = 5,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN via multi-table hyperplane LSH (OR-construction): a pair is
-    a candidate iff it shares a bucket in ANY of ``n_tables`` tables of
-    ``n_planes`` bits; candidates are exact-rescored with a float dot
-    product.  Recall ~ 1-(1-p^b)^L; candidate volume stays near
-    sum-of-bucket-squares per table — the scale win is that pairs only
-    form inside (table, bucket) hash partitions.  Planes derive from
-    ``seed`` executor-side (no driver action during plan build);
-    measured recall@5 vs brute force is pinned by
-    ``tests/test_similarity_textstats.py``."""
-    sigs = hyperplane_signature(
-        df,
-        None,
-        id_col,
-        vec_col,
-        n_tables=n_tables,
-        seed=seed,
-        n_bits=n_planes * n_tables,
-    )
-    vecs = df.select(
-        F.col(id_col).alias("vid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    q = sigs.where(F.col("vid") < query_max_id).select(
-        F.col("vid").alias("qid"), "table", "bucket"
-    )
-    c = sigs.select(F.col("vid").alias("cid"), "table", "bucket")
-    cand = (
-        q.join(c, ["table", "bucket"])
-        .where(F.col("qid") != F.col("cid"))
-        .select("qid", "cid")
-        .distinct()
-    )
-    qv = vecs.select(F.col("vid").alias("qid"), F.col("v").alias("qv"))
-    cv = vecs.select(F.col("vid").alias("cid"), F.col("v").alias("cv"))
-    dots = (
-        cand.join(qv, "qid")
-        .join(cv, "cid")
-        .select(
-            "qid",
-            "cid",
-            F.aggregate(
-                F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("dot"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("dot"), F.asc("cid"))
-    return (
-        dots.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "cid", "dot", "rank")
-    )
-
-
-def ivf_topk(
-    df: DataFrame,
-    query_max_id: int = 20,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN via IVF (inverted-file) coarse quantization — the companion
-    to the hyperplane-LSH path: a KMeans codebook (pyspark.ml) assigns
-    every corpus vector to a cell map-side; each query probes only its
-    ``n_probe`` nearest cells and exact-rescores the candidates with a
-    float dot product.
-
-    Scale shape: codebook training is one MLlib job (sample-able at
-    10^9 vectors); cell assignment is a map-side model transform; the
-    query set is small BY CONTRACT (same as the GEMM path) so probing
-    is driver-side numpy against the tiny centroid matrix; candidates
-    form through a broadcastable (qid, cell) relation joined to the
-    cell-partitioned corpus — the corpus never joins against itself.
-    Recall vs brute force is pinned by pytest."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    # NULL or ragged embeddings would crash KMeans.fit (MLlib
-    # requires one consistent dimension), a NULL ELEMENT crashes
-    # array_to_vector outright, and NaN/inf poison the centroids —
-    # drop all of them like the pandas paths' _finite_matrix.  The
-    # x - x == 0 idiom is a pure-Catalyst finiteness test (NaN-NaN
-    # and inf-inf are both NaN).  The dominant dim comes from one
-    # tiny global count-agg (deterministic: majority count, ties to
-    # the larger dim), cheap next to the KMeans job itself.
-    nn = df.where(F.col(vec_col).isNotNull()).where(
-        F.forall(
-            F.col(vec_col),
-            lambda x: x.isNotNull() & (x - x == F.lit(0.0)),
-        )
-    )
-    dim_row = (
-        nn.groupBy(F.size(F.col(vec_col)).alias("_d"))
-        .count()
-        .orderBy(F.desc("count"), F.desc("_d"))
-        .first()
-    )
-    if dim_row is None:
-        raise ValueError("ivf_topk: no non-null embeddings to index")
-    feats = nn.where(F.size(F.col(vec_col)) == dim_row["_d"]).select(
-        F.col(id_col).alias("cid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("arr"),
-    ).withColumn("features", array_to_vector("arr"))
-    model = KMeans(k=n_cells, seed=seed, maxIter=10).fit(feats)
-    assigned = model.transform(feats).select(
-        "cid", "arr", F.col("prediction").alias("cell")
-    )
-
-    centroids = np.stack(model.clusterCenters())  # (n_cells, dim) — tiny
-    q_rows = (
-        df.where(F.col(id_col) < query_max_id)
-        .select(
-            F.col(id_col).alias("qid"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-        )
-        .collect()  # query set is small by contract (cf. GEMM path)
-    )
-    probe_rows = []
-    for r in q_rows:
-        qv = np.array(r["qv"])
-        d2 = ((centroids - qv) ** 2).sum(axis=1)
-        for cell in np.argsort(d2)[:n_probe]:
-            probe_rows.append((r["qid"], r["qv"], int(cell)))
-    spark = df.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows, "qid long, qv array<double>, cell int"
-    )
-
-    dot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("arr"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("dot"), F.asc("cid"))
-    return (
-        assigned.join(F.broadcast(probes), "cell")
-        .where(F.col("qid") != F.col("cid"))
-        .select("qid", "cid", dot.alias("dot"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "cid", "dot", "rank")
-    )
-
-
-def cosine_near_dup_pairs_lsh(
-    df: DataFrame,
-    threshold_milli: int = 250,
-    n_planes: int = 3,
-    n_tables: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The documented 100-TB path for embedding near-dup: candidate
-    pairs form ONLY inside shared (table, bucket) hyperplane-LSH
-    partitions (never the all-pairs id-capped join of
-    ``cosine_near_dup_pairs``), then are exact-rescored with the same
-    integer-quantized milli-cosine — so every emitted pair is exactly a
-    pair the brute-force operator would emit (a verified subset; recall
-    is pinned by ``tests/test_similarity_textstats.py``).
-
-    Plan shape: mapInPandas signature GEMM (map-side) → self-equi-join
-    on (table, bucket) → distinct → two array joins + per-row HOF
-    rescore.  No driver actions, no cartesian products.
-
-    Knob guidance (measured on the sf0.001 synth embeddings, seed 42):
-    recall-oriented 3 planes × 16 tables → recall 0.977 at cos≥0.25 but
-    only mild candidate pruning on weakly-clustered data; selectivity-
-    oriented 8 planes × 8 tables → candidates drop to 3.5% of all pairs
-    (the shape that matters at 10^9 vectors, where near-dup thresholds
-    sit far above the background similarity)."""
-    sigs = hyperplane_signature(
-        df, None, id_col, vec_col,
-        n_tables=n_tables, seed=seed, n_bits=n_planes * n_tables,
-    )
-    sa = sigs.select(F.col("vid").alias("a"), "table", "bucket")
-    sb = sigs.select(F.col("vid").alias("b"), "table", "bucket")
-    cand = (
-        sa.join(sb, ["table", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    quant = df.select(
-        F.col(id_col).alias("vid"),
-        quantized_array(F.col(vec_col)).alias("q"),
-    )
-    qa = quant.select(F.col("vid").alias("a"), F.col("q").alias("qa"))
-    qb = quant.select(F.col("vid").alias("b"), F.col("q").alias("qb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    nsq = lambda c: F.aggregate(  # noqa: E731
-        F.transform(F.col(c), lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return (
-        cand.join(qa, "a")
-        .join(qb, "b")
-        # a vector that milli-quantizes to all zeros has nsq=0; under
-        # ANSI the division would THROW (the oracle yields NULL and
-        # drops the pair) — filter degenerate vectors, same outcome
-        .where((nsq("qa") > 0) & (nsq("qb") > 0))
-        .select(
-            "a",
-            "b",
-            # norm product in DOUBLE: nsq*nsq as long*long wraps past
-            # 2^63 for unnormalized embeddings (oracle sums in HUGEINT)
-            F.floor(
-                F.lit(1000) * dot
-                / F.sqrt(nsq("qa").cast("double") * nsq("qb").cast("double"))
-            )
-            .cast("long")
-            .alias("cos_milli"),
-        )
-        .where(F.col("cos_milli") >= threshold_milli)
-    )
-
-
 def cosine_near_dup_pairs(
     df: DataFrame,
     max_id: int = 100,
@@ -560,8 +88,7 @@ def cosine_near_dup_pairs(
     """Embedding-cosine near-duplicate pairs (dedup variant): cosine in
     thousandths over milli-quantized components, so both engines
     compute floor(1000 * dot / sqrt(na * nb)) from exact integers.
-    At scale, gate the pair space through ``hyperplane_signature``
-    buckets instead of the id-range cap used for the oracle query."""
+    The pair space is all-pairs under the ``max_id`` cap."""
     comps = quantized_components(df, id_col, vec_col).where(
         F.col("vid") < max_id
     )
@@ -581,7 +108,9 @@ def cosine_near_dup_pairs(
     return (
         dots.join(na, "a")
         .join(nb, "b")
-        # zero-norm guard: same rationale as the LSH variant above
+        # a vector that milli-quantizes to all zeros has nsq=0; under
+        # ANSI the division would THROW (the oracle yields NULL and
+        # drops the pair) — filter degenerate vectors, same outcome
         .where((F.col("na") > 0) & (F.col("nb") > 0))
         .select(
             "a",
@@ -603,9 +132,8 @@ def quantize_embeddings(
     """Symmetric int8 quantization per vector (the storage/ANN-index
     compression step): q_i = round(x_i * 127 / max|x|), scale recorded
     in milli units.  Pure Catalyst per-row HOFs — map-only, no
-    shuffle, 4x smaller than float32 at ~equal recall for IVF/LSH
-    candidate generation.  Zero vectors quantize to all zeros with
-    scale 0."""
+    shuffle, 4x smaller than float32.  Zero vectors quantize to all
+    zeros with scale 0."""
     as_double = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     mx = F.array_max(F.transform(as_double, lambda x: F.abs(x)))
     q = F.when(mx > 0, F.transform(

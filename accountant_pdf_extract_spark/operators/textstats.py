@@ -1,6 +1,7 @@
 """Text-analysis operators for large-scale training-data pipelines:
-language-ID (stopword heuristic), quality scoring, token counting,
-document fingerprinting.  All pure Catalyst expressions — JVM-side,
+language-ID (stopword heuristic), token and stopword counts,
+document fingerprinting, repetition / OOV signals and term
+statistics.  All pure Catalyst expressions — JVM-side,
 whole-stage-codegen-friendly, no Python in the hot path.
 
 Each has a driver-checkable query twin in ``plans/q_text.py``.
@@ -22,30 +23,12 @@ STOPWORDS = {
 }
 
 
-def tokens(col: Column) -> Column:
-    """Whitespace tokenization (split on runs of whitespace)."""
-    return F.split(F.trim(col), r"\s+")
-
-
 def token_count(col: Column) -> Column:
     """Count of non-blank tokens via the shared token identity — a
     trailing newline must not add a phantom '' token (raw split gave
     'foo bar\n' count 3 while term_stats/repetition/oov counted 2
     for the same doc)."""
     return F.size(_tokens_arr(col))
-
-
-def bpe_ish_token_count(col: Column) -> Column:
-    """BPE-ish proxy: count word pieces + digit runs + punctuation
-    marks via regex — a deterministic stand-in for a real tokenizer.
-    NULL text counts 0 (the module's shared NULL contract — bare
-    size(NULL) is NULL under ANSI / -1 legacy)."""
-    return F.size(
-        F.regexp_extract_all(
-            F.coalesce(col, F.lit("")),
-            F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0),
-        )
-    )
 
 
 def stopword_hits(col: Column, lang: str) -> Column:
@@ -72,38 +55,6 @@ def lang_id(col: Column) -> Column:
     return out
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / punctuation / stopword-ratio quality features, plus a
-    single [0,1] quality score (simple monotone combination)."""
-    c = F.col(text_col)
-    n_chars = F.length(c)
-    n_tok = token_count(c)
-    n_punct = n_chars - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    n_stop = stopword_hits(c, "en")
-    punct_ratio = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
-    stop_ratio = F.when(n_tok > 0, n_stop / n_tok).otherwise(F.lit(0.0))
-    # average over the tokens' OWN characters — the old
-    # (n_chars - (n_tok-1))/n_tok assumed exactly one separator char
-    # and no padding ('  hi  ' scored 6.0 instead of 2.0)
-    tok_chars = F.length(F.concat_ws("", _tokens_arr(c)))
-    avg_tok_len = F.when(n_tok > 0, tok_chars / n_tok).otherwise(F.lit(0.0))
-    score = (
-        F.when((n_tok >= 5) & (n_tok <= 100000), F.lit(0.4)).otherwise(F.lit(0.0))
-        # the low-punctuation reward needs CONTENT to reward — a blank
-        # or NULL doc (punct_ratio defaulted 0.0) must score 0, not 0.3
-        + F.when((n_tok > 0) & (punct_ratio < 0.2), F.lit(0.3)).otherwise(F.lit(0.0))
-        + F.when(stop_ratio > 0.05, F.lit(0.3)).otherwise(F.lit(0.0))
-    )
-    return df.select(
-        "*",
-        n_tok.alias("n_tokens"),
-        punct_ratio.alias("punct_ratio"),
-        stop_ratio.alias("stopword_ratio"),
-        avg_tok_len.alias("avg_token_len"),
-        score.alias("quality_score"),
-    )
-
-
 def fingerprint(col: Column) -> Column:
     """Deterministic document fingerprint: md5 of the
     whitespace-collapsed, lowercased text — the SAME content identity
@@ -114,26 +65,9 @@ def fingerprint(col: Column) -> Column:
     return F.md5(norm_text(col))
 
 
-def rolling_fingerprint(col: Column) -> Column:
-    """Order-sensitive rolling hash over the token sequence (the
-    Rabin-Karp shape): fold acc = (acc * 31 + h(token)) mod 2^31 left
-    to right, so token REORDERING changes the fingerprint while the
-    md5 ``fingerprint`` only sees the multiset of characters.  Pure
-    Catalyst fold — intermediate values stay < 2^36, so the arithmetic
-    never overflows a long even under ANSI mode.  Empty/blank/NULL
-    text fingerprints to 0."""
-    toks = _tokens_arr(col)
-    m = F.lit(2_147_483_648)  # 2^31
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: F.pmod(acc * 31 + F.pmod(F.xxhash64(t), m), m),
-    )
-
-
 def _tokens_arr(col: Column) -> Column:
     """Lowercased whitespace tokens, blanks dropped — the single
-    shared token identity for repetition / OOV / fingerprint / TF-IDF
+    shared token identity for token counts / repetition / OOV / TF-IDF
     (a normalization tweak here moves all of them together, never
     forks them).  NULL text tokenizes like empty text: the DuckDB
     oracle twins emit 0-rows-then-coalesce for NULL, so the engine
@@ -287,7 +221,7 @@ def term_doc_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     term's document frequency, the doc's token length, and the corpus
     size.  All integers, so it verifies exactly cross-engine; the
     float weighting (idf = ln(N/df), BM25 saturation) is a trivial
-    per-row map on top (``bm25_rank``).
+    per-row map on top.
 
     Plan: token explode map-side → (doc, term, tf) agg → df per term
     (second agg) joined back on term; N and doc lengths ride along as
@@ -309,65 +243,4 @@ def term_doc_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
         .join(doc_len, "doc")
         .crossJoin(F.broadcast(n_docs))
         .select("term", "doc", "tf", "df", "dl", "n_docs")
-    )
-
-
-def bm25_rank(
-    df: DataFrame,
-    query_terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25 document ranking for a fixed term set: idf(t) *
-    (tf*(k1+1)) / (tf + k1*(1-b+b*dl/avgdl)) summed over query terms.
-    Stats come from ``term_doc_stats`` (min_df=1 so rare query terms
-    still count); floats appear only in the final per-row scoring map.
-    Ties break on doc id (deterministic).  Scores in milli-units.
-
-    Global top-k via ``orderBy(...).limit(k)`` — Spark plans this as
-    TakeOrderedAndProject (per-partition partial top-k, then a k·P-row
-    reduction), NOT a single-partition global sort: every doc matching
-    a query term flows through it, so at 100 TB an unpartitioned
-    ``Window.orderBy`` here would funnel the whole match set through
-    one task.  ``rank`` is derived by a window over the k SURVIVORS
-    only — a constant-size (k-row) frame, so its single partition is
-    O(k log k) regardless of corpus size."""
-    from pyspark.sql.window import Window
-
-    # One shared stats relation: both the query-term filter and avgdl
-    # derive from it, so the corpus tokenization appears once in the
-    # plan (identical agg subtrees are exchange-reusable) instead of a
-    # second full split/filter scan just for avgdl.  avgdl = sum(tf) /
-    # n_docs — zero-token docs add nothing to the numerator and are
-    # counted in the n_docs denominator.
-    base = term_doc_stats(df, text_col, id_col, min_df=1)
-    stats = base.where(F.col("term").isin(query_terms))
-    avgdl = base.agg((F.sum("tf") / F.first("n_docs")).alias("avgdl"))
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    tf_part = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
-    )
-    scored = (
-        stats.crossJoin(F.broadcast(avgdl))
-        # quantize each TERM's score to integer milli BEFORE the sum:
-        # summing doubles across shuffle partitions is merge-order
-        # dependent, so round(sum)*1000 could flip a 0.0005-boundary
-        # tie and reorder the top-k cut between runs (CLAUDE.md:
-        # never aggregate doubles)
-        .select(
-            "doc",
-            F.round((idf * tf_part) * 1000).cast("long").alias("s_milli"),
-        )
-        .groupBy("doc")
-        .agg(F.sum("s_milli").cast("long").alias("score_milli"))
-    )
-    topk = scored.orderBy(F.desc("score_milli"), F.asc("doc")).limit(k)
-    w = Window.orderBy(F.desc("score_milli"), F.asc("doc"))
-    return topk.withColumn("rank", F.row_number().over(w)).select(
-        "doc", "score_milli", "rank"
     )

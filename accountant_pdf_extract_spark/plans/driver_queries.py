@@ -7,9 +7,12 @@ aliased identically on both sides; numeric aggregates are computed in
 DECIMAL (exact, associative) so hash comparison is deterministic
 across engines.
 
-Kernel-backed operators (the extraction pipeline itself) appear as
-rows-only entries (no oracle) — their correctness gate is the golden
-span-sequence fixtures under pytest (``BASELINE.json:15``).
+The two views of the extraction kernel (``q_extract_spans``,
+``q_extract_fields``) are the only rows-only entries (no oracle): their
+correctness gate is the golden span-sequence and fields fixtures under
+pytest (``BASELINE.json:15``).  Any other query must register its
+oracle SQL — ``tests/test_driver_contract.py`` refuses one that does
+not.
 """
 
 from __future__ import annotations

@@ -5,7 +5,11 @@ exact resume from the commit log.
         accountant_pdf_extract_spark/plans/job.py \\
         --input /data/interleaved --output /data/extracted \\
         --commit-log /data/extracted/_commit_log \\
-        --salt-buckets 1024 --num-partitions 4096
+        --salt-buckets 4096 --num-partitions 1024
+
+The kernel runs at most ``--salt-buckets`` tasks (the repartition key
+is the bucket): ``--num-partitions`` above it is clamped to it, and the
+default is ``min(defaultParallelism, salt_buckets // 4)``.
 
 Plan shape (one shuffle): scan → anti-join committed buckets (metadata
 only — the committed set is a broadcast list, so resume pruning is a

@@ -18,13 +18,9 @@ import zipimport
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from accountant_pdf_extract_spark.operators.kernel import (
-    extract_batches,
-    extract_fields_batches,
-)
+from accountant_pdf_extract_spark.operators.kernel import extract_batches
 from accountant_pdf_extract_spark.schema import (
     ARROW_INPUT,
-    DOC_FIELDS_SCHEMA,
     FLAT_FIELDS_SCHEMA,
     assert_input_schema,
 )
@@ -115,33 +111,44 @@ def _generated(batches, generate):
         yield out
 
 
-def _run_kernel(df, kernel_fn, out_schema, salt_buckets, num_partitions,
-                generate=None):
-    """The shared assert → salt → repartition → Arrow-kernel pipeline
-    (single-sourced so the clamp/accumulator wiring can never fork
-    between the span and fields paths).  Returns the output DataFrame
-    and the dropped-doc accumulator.
+def extract(
+    df: DataFrame,
+    salt_buckets: int = 1024,
+    num_partitions: int | None = None,
+    keep_salt: bool = False,
+    generate=None,
+) -> DataFrame:
+    """Interleaved input table → flattened output spans + fields:
+    assert → salt → repartition → the Arrow kernel.
 
-    Per-doc extraction failures increment that driver-readable
-    accumulator (surfaced as ``dropped_docs_acc`` on the result
-    DataFrame and recorded in commit-log lineage) in addition to the
+    One row per output span: (doc_id, kind, text, media_ref, order,
+    invoice_id, invoice_date, due_date, currency, total, amounts,
+    account_codes).
+
+    Per-doc extraction failures increment a driver-readable
+    accumulator, returned as ``dropped_docs_acc`` on the result
+    DataFrame and recorded in commit-log lineage, in addition to the
     kernel's executor-stdout line — silent data loss is not acceptable
-    at 10^12 docs.  Accumulator caveat (inherent to updates inside
-    transformations): counts are AT-LEAST-ONCE — task retries /
-    speculative duplicates re-increment, so treat the value as an
-    upper bound / alarm signal, not an exact ledger.  The exact ground
-    truth is the commit-log n_docs-vs-input delta per bucket.
+    at 10^12 docs.  ``dropped_docs_acc`` is a plain attribute: DERIVED
+    DataFrames do not inherit it, so callers that transform the result
+    must keep their own reference to read the metric.  Accumulator
+    caveat (inherent to updates inside transformations): counts are
+    AT-LEAST-ONCE — task retries / speculative duplicates re-increment,
+    so treat the value as an upper bound / alarm signal, not an exact
+    ledger.  The exact ground truth is the commit-log n_docs-vs-input
+    delta per bucket.
 
     ``generate`` fuses an input generator into the kernel: ``df`` is
     then the narrow proxy of the documents (its ``doc_id`` is the id
     the generated document carries), and ``generate`` maps one proxy
-    Arrow batch to one input-shaped batch.  The proxy is salted and
-    shuffled before any payload exists (guide §8: shuffle the
-    lightweight proxy, not the heavy bytes), and the ONE
-    ``mapInArrow`` generates and extracts in the same Python iterator:
-    the generated payloads never leave the worker, and each task pays
-    for one Python runner, not two (see ``_effective_partitions`` for
-    what a runner costs)."""
+    Arrow batch to one input-shaped batch (``synth.documents_source``
+    returns such a pair).  The proxy is salted and shuffled before any
+    payload exists (guide §8: shuffle the lightweight proxy, not the
+    heavy bytes), and the ONE ``mapInArrow`` generates and extracts in
+    the same Python iterator: the generated payloads never leave the
+    worker, and each task pays for one Python runner, not two (see
+    ``_effective_partitions`` for what a runner costs).
+    """
     if generate is None:
         cols = ["doc_id", "spans"]
         assert_input_schema(df.select(*cols))
@@ -160,36 +167,9 @@ def _run_kernel(df, kernel_fn, out_schema, salt_buckets, num_partitions,
 
         if generate is not None:
             batches = _generated(batches, generate)
-        yield from kernel_fn(batches, on_drop=note)
+        yield from extract_batches(batches, on_drop=note)
 
-    out = salted.select(*cols).mapInArrow(run, schema=out_schema)
-    return out, dropped
-
-
-def extract(
-    df: DataFrame,
-    salt_buckets: int = 1024,
-    num_partitions: int | None = None,
-    keep_salt: bool = False,
-    generate=None,
-) -> DataFrame:
-    """Interleaved input table → flattened output spans + fields.
-
-    One row per output span: (doc_id, kind, text, media_ref, order,
-    invoice_id, invoice_date, due_date, currency, total, amounts,
-    account_codes).  ``generate``: ``df`` is a proxy expanded inside
-    the kernel's task (``_run_kernel``; ``synth.documents_source``
-    returns such a pair).
-
-    The returned DataFrame carries ``dropped_docs_acc`` as a plain
-    attribute — DERIVED DataFrames do not inherit it, so callers that
-    transform the result must keep their own reference to read the
-    metric.
-    """
-    out, dropped = _run_kernel(
-        df, extract_batches, FLAT_FIELDS_SCHEMA, salt_buckets,
-        num_partitions, generate,
-    )
+    out = salted.select(*cols).mapInArrow(run, schema=FLAT_FIELDS_SCHEMA)
     if keep_salt:
         # same formula via salt() — the bucketing expression must never
         # fork between the input path and the output column
@@ -244,36 +224,6 @@ def _effective_partitions(
     return max(1, min(np, salt_buckets // 4))
 
 
-def extract_fields_table(
-    df: DataFrame,
-    salt_buckets: int = 1024,
-    num_partitions: int | None = None,
-    generate=None,
-) -> DataFrame:
-    """Fields-only extraction: one row per document (doc_id +
-    accounting fields), same salted single-shuffle plan (``generate``
-    as in ``extract``), but the kernel never materializes the
-    span-text Arrow columns — the cheap path when only structured
-    fields are wanted.
-
-    Equivalence with ``fields_view(extract(df))`` (pinned by
-    ``tests/test_corpus_pipeline.py``) holds for every document that
-    emits at least one span.  A document whose spans all normalize to
-    NOTHING (e.g. one whitespace-only text span) appears HERE with
-    null fields but has no rows at all in the flat span output — the
-    fields table is per-document, the flat table is per-span, and a
-    zero-span doc has no row to carry fields on.  Pinned by
-    ``test_zero_span_doc_fields_vs_flat``."""
-    # no keep_salt: this is a per-document side table, not the
-    # bucket-partitioned sink path — nothing downstream keys on it
-    out, dropped = _run_kernel(
-        df, extract_fields_batches, DOC_FIELDS_SCHEMA, salt_buckets,
-        num_partitions, generate,
-    )
-    out.dropped_docs_acc = dropped
-    return out
-
-
 def spans_view(flat: DataFrame) -> DataFrame:
     """Span-sequence view: (doc_id, kind, text, media_ref, order) — the
     fixture-comparable projection (``BASELINE.json:15``)."""
@@ -283,7 +233,9 @@ def spans_view(flat: DataFrame) -> DataFrame:
 def fields_view(flat: DataFrame) -> DataFrame:
     """Doc-level accounting fields with ZERO shuffle: the kernel puts
     each doc's fields on its order==0 span row.  (doc_view's groupBy
-    is only needed when the nested spans array itself is wanted.)"""
+    is only needed when the nested spans array itself is wanted.)  A
+    doc whose spans all normalize to nothing (e.g. one whitespace-only
+    text span) has no span row, so it has no row here either."""
     return flat.where(F.col("order") == 0).select(
         "doc_id",
         "invoice_id",

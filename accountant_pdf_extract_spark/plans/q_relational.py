@@ -587,26 +587,6 @@ def q_hof_filter(spark, sf):
     )
 
 
-@register("q_approx_distinct")
-def q_approx_distinct(spark, sf):
-    """HLL++ sketch (rows-only: sketch values are engine-specific)."""
-    return t(spark, sf, "lineitem").agg(
-        F.approx_count_distinct("l_partkey").alias("approx_parts"),
-        F.approx_count_distinct("l_orderkey").alias("approx_orders"),
-    )
-
-
-@register("q_hash")
-def q_hash(spark, sf):
-    """xxhash64/sha2 fingerprints (rows-only: DuckDB lacks xxhash64)."""
-    return t(spark, sf, "documents").select(
-        "doc_id",
-        F.xxhash64("text").alias("xx64"),
-        F.sha2(F.col("text"), 256).alias("sha256"),
-        F.pmod(F.xxhash64("text"), F.lit(64)).cast("int").alias("bucket"),
-    )
-
-
 @register(
     "q_sessionize",
     """

@@ -467,30 +467,6 @@ def q_dedup_embed(spark, sf):
     )
 
 
-@register("q_lsh_topk")
-def q_lsh_topk(spark, sf):
-    """ANN top-k via multi-table hyperplane LSH + exact rescore
-    (rows-only: numpy planes aren't reproducible in DuckDB; recall vs
-    brute force is pinned at 0.90 by test_lsh_recall_quantified)."""
-    return similarity.lsh_bucketed_topk(
-        t(spark, sf, "embeddings"), query_max_id=10, k=5,
-        n_planes=4, n_tables=16, seed=42,
-    )
-
-
-@register("q_dedup_embed_lsh")
-def q_dedup_embed_lsh(spark, sf):
-    """The 100-TB embedding near-dup path: hyperplane-LSH-bucketed
-    candidates + exact integer-quantized rescore.  Rows-only (the
-    numpy plane matrix isn't reproducible in DuckDB SQL); correctness
-    is gated by the subset+recall pytest instead — every emitted pair
-    is provably a pair q_dedup_embed's brute-force semantics would
-    emit."""
-    return similarity.cosine_near_dup_pairs_lsh(
-        t(spark, sf, "embeddings"), threshold_milli=250
-    )
-
-
 @register(
     "q_amount_cents_udf",
     """
@@ -509,16 +485,6 @@ def q_amount_cents_udf(spark, sf):
     )
     return t(spark, sf, "orders").select(
         "o_orderkey", amount_to_cents(amount_str).alias("cents")
-    )
-
-
-@register("q_rolling_fp")
-def q_rolling_fp(spark, sf):
-    """Order-sensitive rolling-hash fingerprint (rows-only: built on
-    xxhash64, which DuckDB lacks; order-sensitivity and determinism
-    are pinned by unit test instead)."""
-    return t(spark, sf, "documents").select(
-        "doc_id", textstats.rolling_fingerprint(F.col("text")).alias("rfp")
     )
 
 
@@ -644,29 +610,6 @@ def q_decontaminate(spark, sf):
     )
 
 
-@register("q_dedup_clusters")
-def q_dedup_clusters(spark, sf):
-    """Duplicate clusters: MinHash candidate pairs -> connected
-    components (iterative min-label propagation; rows-only — the
-    iteration isn't SQL-expressible; equality with a Python union-find
-    is pinned by pytest)."""
-    docs = t(spark, sf, "documents").where(F.col("doc_id") < 200)
-    cand = dedup.minhash_candidate_pairs(dedup.minhash_bands(docs, k=8, bands=4))
-    return dedup.duplicate_clusters(cand)
-
-
-@register("q_ivf_topk")
-def q_ivf_topk(spark, sf):
-    """ANN via IVF coarse quantization (KMeans codebook + n_probe
-    cells + exact rescore).  Rows-only: the codebook is a trained
-    model, not SQL-reproducible; recall vs brute force is pinned by
-    test_ivf_recall_quantified."""
-    return similarity.ivf_topk(
-        t(spark, sf, "embeddings"), query_max_id=10, k=5,
-        n_cells=8, n_probe=4, seed=42,
-    )
-
-
 @register(
     "q_term_stats",
     """
@@ -690,18 +633,6 @@ def q_term_stats(spark, sf):
     cross-engine; float weighting is a per-row map on top."""
     return textstats.term_doc_stats(
         t(spark, sf, "documents"), min_df=50
-    )
-
-
-@register("q_bm25")
-def q_bm25(spark, sf):
-    """BM25 top-20 docs for a fixed query (rows-only: the scoring sum
-    is floating-point; equality with a pure-Python BM25 is pinned by
-    pytest within quantization tolerance)."""
-    return textstats.bm25_rank(
-        t(spark, sf, "documents"),
-        ["join", "scan", "filter"],
-        k=20,
     )
 
 

@@ -92,14 +92,6 @@ FLAT_OUT_SCHEMA = StructType(
     ]
 )
 
-DOC_OUT_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("spans", ArrayType(SPAN_OUT_STRUCT)),
-        StructField("fields", FIELDS_STRUCT),
-    ]
-)
-
 # Arrow twin of FLAT_OUT_SCHEMA + fields (what the fused kernel emits).
 ARROW_FLAT_FIELDS = pa.schema(
     [
@@ -120,16 +112,6 @@ ARROW_FLAT_FIELDS = pa.schema(
 
 FLAT_FIELDS_SCHEMA = StructType(
     list(FLAT_OUT_SCHEMA.fields) + list(FIELDS_STRUCT.fields)
-)
-
-# Fields-only extraction output: one row per DOCUMENT (no span rows).
-DOC_FIELDS_SCHEMA = StructType(
-    [StructField("doc_id", StringType())] + list(FIELDS_STRUCT.fields)
-)
-
-ARROW_DOC_FIELDS = pa.schema(
-    [pa.field("doc_id", pa.string())]
-    + [ARROW_FLAT_FIELDS.field(f.name) for f in FIELDS_STRUCT.fields]
 )
 
 COMMIT_LOG_SCHEMA = StructType(

@@ -94,9 +94,6 @@ def _n(v: float) -> str:
     return s if s not in ("", "-", "-0") else "0"
 
 
-_GLYPH_BY_CHAR = {v: k for k, v in spec.GLYPH_UNICODE.items()}
-
-
 @dataclass(frozen=True)
 class SimpleFont:
     """A single-byte simple font (/Type1 shape) for the synth corpus.

@@ -52,7 +52,6 @@ DEFAULT_WORDS = (
 ).split()
 
 _COMPANIES = ["ACME GmbH", "Globex Corp", "Initech LLC", "Umbrella SA"]
-_CCYS = ["USD", "EUR", "GBP"]
 
 
 def _fmt_amount(val: Decimal, ccy: str, neg: bool = False) -> str:

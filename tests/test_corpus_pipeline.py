@@ -1,97 +1,11 @@
-"""The composed curation pipeline: dedup keeps one representative per
-content, the quality gate drops junk, survivors keep ordered text."""
+"""Generation fused into the extraction kernel: the same rows as
+generating first, and a generator that breaks the input contract fails
+the task."""
 
 from __future__ import annotations
 
-from accountant_pdf_extract_spark.plans.corpus_pipeline import curate, doc_text
 from accountant_pdf_extract_spark.plans.pipeline import extract
-from accountant_pdf_extract_spark.schema import ARROW_INPUT, INPUT_SCHEMA
-
-
-def _mkdocs(spark, rows):
-    return spark.createDataFrame(
-        [
-            (
-                did,
-                [
-                    {"kind": "text", "text": t, "media_ref": "", "offset": i}
-                    for i, t in enumerate(texts)
-                ],
-            )
-            for did, texts in rows
-        ],
-        INPUT_SCHEMA,
-    )
-
-
-def test_dedup_keeps_min_and_quality_filters(spark):
-    rows = [
-        ("a-1", ["the ledger is in the balance today and it is fine"]),
-        ("a-2", ["the ledger is in the balance today and it is fine"]),  # dup
-        ("b-1", ["!!!"]),  # junk → quality gate
-        ("c-1", ["a completely different entry in the journal is here now"]),
-    ]
-    out = curate(_mkdocs(spark, rows), salt_buckets=8, num_partitions=4).collect()
-    ids = sorted(r["doc_id"] for r in out)
-    assert ids == ["a-1", "c-1"]
-    for r in out:
-        assert r["quality_score"] >= 0.3
-        assert r["n_tokens"] >= 5
-
-
-def test_doc_text_preserves_order(spark):
-    rows = [("d-1", ["first line", "second line", "third line"])]
-    flat = extract(_mkdocs(spark, rows), salt_buckets=4, num_partitions=2)
-    txt = doc_text(flat).first()["text"]
-    assert txt == "first line\nsecond line\nthird line"
-
-
-def test_fields_only_kernel_equals_fields_view(spark):
-    """extract_fields_table must produce exactly fields_view(extract())
-    — same docs, same field values — while never building span rows."""
-    from accountant_pdf_extract_spark.plans.pipeline import (
-        extract,
-        extract_fields_table,
-        fields_view,
-    )
-    from accountant_pdf_extract_spark.sources.synth import synth_interleaved
-
-    inp = synth_interleaved(spark, 120, seed=21, partitions=4)
-    via_flat = fields_view(extract(inp, salt_buckets=8, num_partitions=4))
-    via_fields = extract_fields_table(inp, salt_buckets=8, num_partitions=4)
-    assert via_fields.columns == via_flat.columns
-    a = sorted(map(tuple, via_flat.collect()))
-    b = sorted(map(tuple, via_fields.collect()))
-    assert a == b and len(a) == 120
-
-
-def test_zero_span_doc_fields_vs_flat(spark):
-    """Documented divergence pinned: a doc whose spans all normalize
-    to nothing has ONE null-fields row in the fields table but ZERO
-    rows in the flat span output (fields ride on span rows)."""
-    from accountant_pdf_extract_spark.plans.pipeline import (
-        extract,
-        extract_fields_table,
-        fields_view,
-    )
-    from accountant_pdf_extract_spark.schema import INPUT_SCHEMA
-
-    inp = spark.createDataFrame(
-        [
-            ("empty", [{"kind": "text", "text": "   ", "media_ref": "", "offset": 0}]),
-            ("real", [{"kind": "text", "text": "invoice body", "media_ref": "", "offset": 0}]),
-        ],
-        INPUT_SCHEMA,
-    )
-    flat = extract(inp, salt_buckets=4, num_partitions=2)
-    ft = extract_fields_table(inp, salt_buckets=4, num_partitions=2)
-    assert sorted(r["doc_id"] for r in ft.select("doc_id").collect()) == [
-        "empty", "real"
-    ]
-    assert sorted(
-        r["doc_id"] for r in fields_view(flat).select("doc_id").collect()
-    ) == ["real"]
-    assert flat.where("doc_id = 'empty'").count() == 0
+from accountant_pdf_extract_spark.schema import ARROW_INPUT
 
 
 def test_fused_generation_equals_generate_then_extract(spark):

@@ -25,33 +25,61 @@ def test_span_sequence_equality(spark):
 
 
 def test_extracted_fields(spark):
-    from accountant_pdf_extract_spark.plans.pipeline import doc_view, extract
+    """Both doc-level views of the extraction output — ``doc_view``
+    (re-nested) and ``fields_view`` (the order==0 rows, what
+    ``q_extract_fields`` projects) — match the golden fields.  A doc
+    with zero output spans has no row in either view: its spans all
+    normalized to nothing, and the fields ride on span rows."""
+    from accountant_pdf_extract_spark.plans.pipeline import (
+        doc_view,
+        extract,
+        fields_view,
+    )
+    from accountant_pdf_extract_spark.schema import INPUT_SCHEMA
 
     docs = spark.read.parquet(str(FIXDIR / "fixture_docs.parquet"))
-    got = doc_view(extract(docs, salt_buckets=16, num_partitions=8)).select(
-        "doc_id", "invoice_id", "invoice_date", "due_date", "currency",
-        "total", "amounts", "account_codes",
-    )
+    flat = extract(docs, salt_buckets=16, num_partitions=8)
     golden = spark.read.parquet(str(FIXDIR / "golden_fields.parquet"))
 
     def key(df):
-        out = {}
-        for r in df.collect():
-            out[r["doc_id"]] = (
+        rows = df.collect()
+        out = {
+            r["doc_id"]: (
                 r["invoice_id"], r["invoice_date"], r["due_date"],
                 r["currency"], r["total"], tuple(r["amounts"] or []),
                 tuple(r["account_codes"] or []),
             )
+            for r in rows
+        }
+        assert len(out) == len(rows), "more than one row for a doc"
         return out
 
-    got_k, gold_k = key(got), key(golden)
-    # docs with zero output spans produce no doc_view row; golden keeps
-    # them with all-null fields
-    for doc_id, vals in gold_k.items():
-        if doc_id in got_k:
-            assert got_k[doc_id] == vals, doc_id
-        else:
-            assert vals == (None, None, None, None, None, (), ()), doc_id
+    gold_k = key(golden)
+    for view in (doc_view, fields_view):
+        got_k = key(view(flat))
+        # docs with zero output spans have no row; golden keeps them
+        # with all-null fields
+        for doc_id, vals in gold_k.items():
+            if doc_id in got_k:
+                assert got_k[doc_id] == vals, (view.__name__, doc_id)
+            else:
+                assert vals == (None, None, None, None, None, (), ()), (
+                    view.__name__, doc_id,
+                )
+        assert set(got_k) <= set(gold_k), view.__name__
+
+    # a doc whose only span is whitespace emits no span, so it has zero
+    # rows in extract and none in fields_view
+    inp = spark.createDataFrame(
+        [
+            ("empty", [{"kind": "text", "text": "   ", "media_ref": "", "offset": 0}]),
+            ("real", [{"kind": "text", "text": "invoice body", "media_ref": "", "offset": 0}]),
+        ],
+        INPUT_SCHEMA,
+    )
+    flat = extract(inp, salt_buckets=4, num_partitions=2)
+    assert flat.where("doc_id = 'empty'").count() == 0
+    assert [r["doc_id"] for r in fields_view(flat).collect()] == ["real"]
 
 
 def test_partition_invariance(spark):

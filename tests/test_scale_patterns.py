@@ -145,81 +145,6 @@ def test_asof_join_matches_bruteforce_oracle(spark):
         assert got[lid] == expect, (lid, got[lid], expect)
 
 
-def test_duplicate_clusters_match_union_find(spark):
-    """Iterative min-label propagation must equal a Python union-find
-    on the same edge set — both on a handcrafted chain/star graph and
-    on the real MinHash candidate pairs from sf0.001 documents."""
-    from accountant_pdf_extract_spark.operators import dedup
-
-    def union_find(pairs):
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # normalize: every member -> min of its component
-        return {x: find(x) for x in list(parent)}
-
-    # handcrafted: a 5-chain, a star, a lone pair
-    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (10, 12), (10, 13), (20, 21)]
-    pairs_df = spark.createDataFrame(edges, "a long, b long")
-    got = {
-        r["sid"]: r["cluster"]
-        for r in dedup.duplicate_clusters(pairs_df).collect()
-    }
-    assert got == union_find(edges)
-    assert got[5] == 1 and got[13] == 10 and got[21] == 20
-
-    # real candidate pairs
-    docs = spark.read.parquet(f"{SF}/documents.parquet").where("doc_id < 200")
-    cand = dedup.minhash_candidate_pairs(dedup.minhash_bands(docs, k=8, bands=4))
-    cand_pairs = [(r["a"], r["b"]) for r in cand.collect()]
-    assert cand_pairs, "expected some candidate pairs"
-    got2 = {
-        r["sid"]: r["cluster"]
-        for r in dedup.duplicate_clusters(cand).collect()
-    }
-    assert got2 == union_find(cand_pairs)
-
-    # chain-shaped pathology: a 64-long chain converges in O(log n)
-    # star-contraction rounds (naive label propagation needs 64) —
-    # max_iter=8 would fail the old algorithm
-    import random
-
-    chain = [(i, i + 1) for i in range(64)]
-    rnd = random.Random(13)
-    shuffled = [(b, a) if rnd.random() < 0.5 else (a, b) for a, b in chain]
-    rnd.shuffle(shuffled)
-    chain_df = spark.createDataFrame(shuffled, "a long, b long")
-    got3 = {
-        r["sid"]: r["cluster"]
-        for r in dedup.duplicate_clusters(chain_df, max_iter=8).collect()
-    }
-    assert got3 == {i: 0 for i in range(65)}
-
-    # random graph fuzz vs union-find
-    rnd = random.Random(7)
-    redges = [
-        (rnd.randrange(200), rnd.randrange(200)) for _ in range(150)
-    ]
-    redges = [(a, b) for a, b in redges if a != b]
-    got4 = {
-        r["sid"]: r["cluster"]
-        for r in dedup.duplicate_clusters(
-            spark.createDataFrame(redges, "a long, b long"), max_iter=10
-        ).collect()
-    }
-    assert got4 == union_find(redges)
-
-
 def test_global_row_number_matches_window(spark):
     """Exact equivalence with row_number() OVER (ORDER BY ...) — but
     built from partitioned windows + broadcast offsets only (scale
@@ -296,11 +221,9 @@ def test_scalable_ntile_matches_window_ntile(spark):
 
 
 def test_ranking_plans_have_no_global_data_window(spark):
-    """The physical plans of q_ntile and bm25_rank must not sort the
-    DATA through an unpartitioned window: q_ntile's windows are all
-    partitioned or bounded-metadata-sized; bm25's global top-k is
-    TakeOrderedAndProject."""
-    from accountant_pdf_extract_spark.operators import textstats
+    """The physical plan of q_ntile must not sort the DATA through an
+    unpartitioned window: its windows are all partitioned or
+    bounded-metadata-sized."""
     from accountant_pdf_extract_spark.plans.driver_queries import queries
 
     sf = "/root/testdata/sf0.001"
@@ -317,13 +240,6 @@ def test_ranking_plans_have_no_global_data_window(spark):
         partitioned = "windowspecdefinition(_bkt#" in ln
         metadata_sized = "sum(_cnt#" in ln
         assert partitioned or metadata_sized, ln
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    bm_plan = (
-        textstats.bm25_rank(docs, ["join", "scan"], k=10)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrderedAndProject" in bm_plan
 
 
 def test_range_join_matches_nonequi_join(spark):

@@ -439,8 +439,8 @@ def test_giant_amount_rejected_not_crashing():
     assert got == want == [("USD", Decimal("12.50"))]
 
 
-# the two output projections of the kernel's shared per-doc loop
-KERNEL_FNS = ["extract_batches", "extract_fields_batches"]
+# the kernel's entry points (its one per-doc loop)
+KERNEL_FNS = ["extract_batches"]
 
 
 def _kernel_batch(texts):
@@ -494,8 +494,7 @@ def _overflow_when_bad(spans):
 
 def test_kernel_arrow_build_isolation():
     # If one doc's extracted values break the Arrow column build (after
-    # all per-doc extraction trys succeeded), only that doc is dropped,
-    # in both output projections.
+    # all per-doc extraction trys succeeded), only that doc is dropped.
     for fn in KERNEL_FNS:
         out, dropped = _run_kernel_with(
             fn, _overflow_when_bad, ["ok-one", "bad", "ok-two"]
@@ -617,8 +616,7 @@ def test_kernel_isolation_vs_systemic_failure():
     """One bad doc among good ones drops ONLY the offender; an
     all-docs Arrow failure across >=8 docs re-raises (systemic drift
     must not become a silent zero-output success); tiny all-bad
-    batches keep plain per-doc drop semantics — in both output
-    projections."""
+    batches keep plain per-doc drop semantics."""
     for fn in KERNEL_FNS:
         # mixed: doc d1's total can't convert to decimal128(18,2)
         got, dropped = _run_kernel_with(
@@ -2562,8 +2560,7 @@ def test_tz_horizontal_scaling_persists_across_bt():
 
 
 def test_kernel_systemic_all_fail_guards():
-    """Two systemic fail-fast guards (r4 review), in both output
-    projections: (a) extract_doc raising for EVERY doc of a >=8-doc
+    """Two systemic fail-fast guards (r4 review): (a) extract_doc raising for EVERY doc of a >=8-doc
     batch must raise, not 'succeed' with zero output; (b) a zero-span
     doc in the batch must NOT defeat the all-Arrow-build-fail guard
     (empty segments always build, so they carry no evidence)."""

@@ -439,7 +439,7 @@ def test_giant_amount_rejected_not_crashing():
     assert got == want == [("USD", Decimal("12.50"))]
 
 
-# the kernel's entry points (its one per-doc loop)
+# the kernel entry points the isolation tests run
 KERNEL_FNS = ["extract_batches"]
 
 
@@ -2560,10 +2560,11 @@ def test_tz_horizontal_scaling_persists_across_bt():
 
 
 def test_kernel_systemic_all_fail_guards():
-    """Two systemic fail-fast guards (r4 review): (a) extract_doc raising for EVERY doc of a >=8-doc
-    batch must raise, not 'succeed' with zero output; (b) a zero-span
-    doc in the batch must NOT defeat the all-Arrow-build-fail guard
-    (empty segments always build, so they carry no evidence)."""
+    """Two systemic fail-fast guards (r4 review): (a) extract_doc
+    raising for EVERY doc of a >=8-doc batch must raise, not 'succeed'
+    with zero output; (b) a zero-span doc in the batch must NOT defeat
+    the all-Arrow-build-fail guard (empty segments always build, so
+    they carry no evidence)."""
 
     def always_raise(spans):
         raise RuntimeError("deploy-level drift")

@@ -5,11 +5,15 @@ exact resume from the commit log.
         accountant_pdf_extract_spark/plans/job.py \\
         --input /data/interleaved --output /data/extracted \\
         --commit-log /data/extracted/_commit_log \\
-        --salt-buckets 4096 --num-partitions 1024
+        --num-partitions 8000
 
-The kernel runs at most ``--salt-buckets`` tasks (the repartition key
-is the bucket): ``--num-partitions`` above it is clamped to it, and the
-default is ``min(defaultParallelism, salt_buckets // 4)``.
+With no ``--salt-buckets`` the bucket count is derived from the core
+budget, 4 per task (``pipeline.default_salt_buckets``): 32,000 buckets
+and 8,000 kernel tasks above.  The first run pins the count in the
+commit log and every later run reuses it, so a resume on a resized
+cluster keeps its modulus.  The kernel runs at most ``--salt-buckets``
+tasks (the repartition key is the bucket): a ``--num-partitions``
+above it raises.
 
 Plan shape (one shuffle): scan → anti-join committed buckets (metadata
 only — the committed set is a broadcast list, so resume pruning is a
@@ -26,7 +30,12 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from accountant_pdf_extract_spark.plans.pipeline import SALT_COL, extract, salt
+from accountant_pdf_extract_spark.plans.pipeline import (
+    SALT_COL,
+    default_salt_buckets,
+    extract,
+    salt,
+)
 from accountant_pdf_extract_spark.sources.commit_log import CommitLog
 
 
@@ -34,7 +43,7 @@ _SALT_META = "_salt_meta.json"
 
 
 def write_bucketed_input(
-    df: DataFrame, path: str, salt_buckets: int = 1024
+    df: DataFrame, path: str, salt_buckets: int | None = None
 ) -> None:
     """Persist the interleaved input physically partitioned by the salt
     bucket.  Resume then reads this table and the committed-bucket
@@ -45,9 +54,14 @@ def write_bucketed_input(
     A ``_salt_meta.json`` sidecar records the bucket count so
     ``read_bucketed_input`` can refuse a job run with a DIFFERENT
     count — the stored column would prune wholesale buckets that were
-    only partially committed under the new modulus (silent data loss)."""
+    only partially committed under the new modulus (silent data loss).
+    With no ``salt_buckets`` the count is ``default_salt_buckets``, as
+    in ``run_job``."""
     import json
     import os
+
+    if salt_buckets is None:
+        salt_buckets = default_salt_buckets(df.sparkSession)
 
     # Never pass through a caller-supplied salt column: a foreign-modulus
     # _salt_bucket would make the sidecar lie about the stored bucket
@@ -61,12 +75,10 @@ def write_bucketed_input(
         json.dump({"salt_buckets": int(salt_buckets)}, f)
 
 
-def read_bucketed_input(
-    spark: SparkSession, path: str, salt_buckets: int
-) -> DataFrame:
-    """Read a ``write_bucketed_input`` table, validating that the
-    stored bucket count matches the job's — raises on mismatch or a
-    missing sidecar (never silently trust a foreign bucket column)."""
+def bucketed_input_salt_buckets(path: str) -> int:
+    """The bucket count a ``write_bucketed_input`` table was written
+    with — raises on a missing sidecar (never silently trust a foreign
+    bucket column)."""
     import json
     import os
 
@@ -77,8 +89,18 @@ def read_bucketed_input(
             "write_bucketed_input may be trusted for resume pruning"
         )
     with open(meta_path) as f:
-        stored = int(json.load(f)["salt_buckets"])
-    if stored != salt_buckets:
+        return int(json.load(f)["salt_buckets"])
+
+
+def read_bucketed_input(
+    spark: SparkSession, path: str, salt_buckets: int | None = None
+) -> DataFrame:
+    """Read a ``write_bucketed_input`` table, validating that the
+    stored bucket count matches the job's — raises on mismatch or a
+    missing sidecar.  With no ``salt_buckets`` the stored count is the
+    job's (``bucketed_input_salt_buckets``)."""
+    stored = bucketed_input_salt_buckets(path)
+    if salt_buckets is not None and stored != salt_buckets:
         raise ValueError(
             f"input at {path} was bucketed with salt_buckets={stored}, "
             f"but this job runs with salt_buckets={salt_buckets} — "
@@ -92,38 +114,50 @@ def run_job(
     input_df: DataFrame,
     output_path: str,
     commit_log_path: str,
-    salt_buckets: int = 1024,
+    salt_buckets: int | None = None,
     num_partitions: int | None = None,
     job_id: str = "job",
     trust_input_bucketing: bool = False,
 ) -> dict:
     """Returns {"processed_buckets": [...], "skipped": int, "snapshot_id": ...}.
 
+    ``salt_buckets``: the bucket modulus, pinned in the commit log by
+    the log's first run, before anything is written.  None reuses the
+    pin, or on a fresh log pins ``default_salt_buckets`` (4 per task
+    of the core budget).  An explicit value that differs from the pin
+    raises, sealed snapshots or not: under another modulus the resume
+    filter would skip uncommitted docs whose new bucket id collides
+    with a committed one, and bucket directories a crashed first run
+    left behind would be certified by the next lineage pass.
+
     ``trust_input_bucketing``: only set True for input read via
-    ``read_bucketed_input`` (which validates the stored bucket count).
-    Otherwise a pre-existing ``_salt_bucket`` column is DROPPED and
-    recomputed — a column bucketed under a different modulus would make
-    resume pruning silently skip partially-committed documents."""
+    ``read_bucketed_input`` under this job's bucket count (which
+    validates the stored count).  Otherwise a pre-existing
+    ``_salt_bucket`` column is DROPPED and recomputed — a column
+    bucketed under a different modulus would make resume pruning
+    silently skip partially-committed documents."""
     log = CommitLog(commit_log_path)
-    done = log.committed_buckets()
-    if done:
-        # resume guard: prior commits under a DIFFERENT bucket modulus
-        # would make the NOT-IN filter below skip uncommitted docs
-        # whose new bucket id collides with an old committed id —
-        # exactly the hazard read_bucketed_input guards on the input
-        # side.  Every snapshot records its modulus in lineage.
-        prior = {
-            s_.get("lineage", {}).get("salt_buckets")
-            for s_ in log.snapshots()
-        } - {None}
-        if prior and prior != {str(salt_buckets)}:
+    pinned = log.pinned_salt_buckets()
+    if pinned is None:
+        if log.snapshots():
             raise ValueError(
-                f"commit log at {commit_log_path!r} was written with "
-                f"salt_buckets={sorted(prior)} but this run uses "
-                f"{salt_buckets}; resuming across a modulus change "
-                "would silently skip documents — use the original "
-                "value or a fresh commit log + output path"
+                f"commit log at {commit_log_path!r} has sealed snapshots "
+                "but no pinned salt_buckets — it predates the pin; use "
+                "a fresh commit log + output path"
             )
+        if salt_buckets is None:
+            salt_buckets = default_salt_buckets(spark, num_partitions)
+    elif salt_buckets is None:
+        salt_buckets = pinned
+    elif salt_buckets != pinned:
+        raise ValueError(
+            f"commit log at {commit_log_path!r} is pinned to "
+            f"salt_buckets={pinned} but this run uses {salt_buckets}; "
+            "resuming across a modulus change would silently skip "
+            "documents — use the original value or a fresh commit log "
+            "+ output path"
+        )
+    done = log.committed_buckets()
 
     if SALT_COL in input_df.columns and not trust_input_bucketing:
         input_df = input_df.drop(SALT_COL)
@@ -141,6 +175,9 @@ def run_job(
         num_partitions=num_partitions,
         keep_salt=True,
     )
+    if pinned is None:
+        # after extract() has accepted the plan, before the first write
+        log.pin_salt_buckets(salt_buckets)
 
     # Idempotent per-bucket overwrite: a redone bucket replaces only
     # its own partition directory.  Writer-scoped option, NOT a
@@ -438,7 +475,8 @@ def main() -> None:
                    help="generate the input instead of reading it")
     p.add_argument("--output", required=True)
     p.add_argument("--commit-log", required=True)
-    p.add_argument("--salt-buckets", type=int, default=1024)
+    p.add_argument("--salt-buckets", type=int, default=None,
+                   help="default: the commit log's pin, else 4 per task")
     p.add_argument("--num-partitions", type=int, default=None)
     p.add_argument("--job-id", default="job")
     p.add_argument("--master", default=None)
@@ -450,12 +488,16 @@ def main() -> None:
     import os
 
     trusted = False
+    salt_buckets = args.salt_buckets
     if args.synth_docs:
         inp = synth_interleaved(spark, args.synth_docs)
     elif os.path.exists(os.path.join(args.input, _SALT_META)):
-        # bucket-partitioned input: validate the stored bucket count
-        # (raises on mismatch), then let resume prune at the scan
-        inp = read_bucketed_input(spark, args.input, args.salt_buckets)
+        # bucket-partitioned input: run under its stored bucket count
+        # (an explicit --salt-buckets that differs raises), and let
+        # resume prune at the scan
+        if salt_buckets is None:
+            salt_buckets = bucketed_input_salt_buckets(args.input)
+        inp = read_bucketed_input(spark, args.input, salt_buckets)
         trusted = True
     else:
         inp = spark.read.parquet(args.input)
@@ -464,7 +506,7 @@ def main() -> None:
         inp,
         args.output,
         args.commit_log,
-        salt_buckets=args.salt_buckets,
+        salt_buckets=salt_buckets,
         num_partitions=args.num_partitions,
         job_id=args.job_id,
         trust_input_bucketing=trusted,

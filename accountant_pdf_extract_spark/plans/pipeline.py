@@ -178,6 +178,27 @@ def extract(
     return out
 
 
+# Expected salt buckets per kernel task: the default task count is
+# ``salt_buckets // BUCKETS_PER_TASK`` and the derived bucket count is
+# ``BUCKETS_PER_TASK`` per task, so the two rules cannot drift apart.
+BUCKETS_PER_TASK = 4
+
+
+def default_salt_buckets(spark, num_partitions: int | None = None) -> int:
+    """The salt-bucket count of a job that does not pin one:
+    ``BUCKETS_PER_TASK`` per task of the core budget (``num_partitions``
+    if given, else ``defaultParallelism``).  4 cores give 16 buckets
+    and 4 tasks; 8,000 cores give 32,000 buckets and 8,000 tasks.
+
+    The bucket is the commit and resume unit and one output file, and
+    each bucket file costs about 5.7 ms to write and re-read (``run_job``
+    over 200 heavy docs, local[4]), so the count follows the task count:
+    enough buckets per task to bound collision skew, no more files."""
+    return BUCKETS_PER_TASK * (
+        num_partitions or spark.sparkContext.defaultParallelism
+    )
+
+
 def _effective_partitions(
     spark, num_partitions: int | None = None, salt_buckets: int | None = None
 ) -> int:
@@ -205,23 +226,30 @@ def _effective_partitions(
     giant-PDF task finish alongside the others instead of being the
     tail; choosing that needs a giant-PDF tail corpus to measure.
 
-    With ``salt_buckets`` the repartition KEY is the salt bucket, so
-    partitions beyond ``salt_buckets`` can only sit empty (there are at
-    most that many distinct keys) — clamp, and get more parallelism by
-    raising ``salt_buckets`` instead.  The exchange hash-maps bucket
-    VALUES to partitions, so at np ≈ salt_buckets collisions leave ~1/e
-    of partitions empty and pile 3-5 buckets into single tasks (the
-    giant-PDF straggler the salt exists to prevent); the DEFAULT
-    therefore also caps np at salt_buckets // 4 — ≥4 expected buckets
-    per task bounds the collision skew near 2x whp.  An EXPLICIT
-    num_partitions is honored up to salt_buckets (callers pinning small
-    test plans)."""
+    With ``salt_buckets`` the repartition KEY is the salt bucket, so a
+    partition beyond ``salt_buckets`` could only sit empty (there are
+    at most that many distinct keys): an explicit ``num_partitions``
+    above ``salt_buckets`` raises, and more parallelism comes from more
+    buckets (``default_salt_buckets`` derives them from the same core
+    budget).  The exchange hash-maps bucket VALUES to partitions, so at
+    np ≈ salt_buckets collisions leave ~1/e of partitions empty and
+    pile 3-5 buckets into single tasks (the giant-PDF straggler the
+    salt exists to prevent); the DEFAULT therefore also caps np at
+    ``salt_buckets // BUCKETS_PER_TASK`` — ≥4 expected buckets per task
+    bounds the collision skew near 2x whp."""
     if salt_buckets is None:
         return num_partitions or spark.sparkContext.defaultParallelism
     if num_partitions is not None:
-        return min(num_partitions, salt_buckets)
+        if num_partitions > salt_buckets:
+            raise ValueError(
+                f"num_partitions={num_partitions} exceeds "
+                f"salt_buckets={salt_buckets}: the repartition key is the "
+                "bucket, so the extra partitions would sit empty — raise "
+                "salt_buckets or lower num_partitions"
+            )
+        return num_partitions
     np = spark.sparkContext.defaultParallelism
-    return max(1, min(np, salt_buckets // 4))
+    return max(1, min(np, salt_buckets // BUCKETS_PER_TASK))
 
 
 def spans_view(flat: DataFrame) -> DataFrame:
@@ -232,10 +260,9 @@ def spans_view(flat: DataFrame) -> DataFrame:
 
 def fields_view(flat: DataFrame) -> DataFrame:
     """Doc-level accounting fields with ZERO shuffle: the kernel puts
-    each doc's fields on its order==0 span row.  (doc_view's groupBy
-    is only needed when the nested spans array itself is wanted.)  A
-    doc whose spans all normalize to nothing (e.g. one whitespace-only
-    text span) has no span row, so it has no row here either."""
+    each doc's fields on its order==0 span row.  A doc whose spans all
+    normalize to nothing (e.g. one whitespace-only text span) has no
+    span row, so it has no row here either."""
     return flat.where(F.col("order") == 0).select(
         "doc_id",
         "invoice_id",
@@ -247,29 +274,3 @@ def fields_view(flat: DataFrame) -> DataFrame:
         "account_codes",
     )
 
-
-def doc_view(flat: DataFrame) -> DataFrame:
-    """Re-nest the flat output to one row per doc with the ordered
-    spans array + fields struct (X2 collect, SURVEY.md §2.3)."""
-    return flat.groupBy("doc_id").agg(
-        F.transform(
-            F.sort_array(
-                F.collect_list(F.struct("order", "kind", "text", "media_ref"))
-            ),
-            # re-project into the pinned span struct order
-            # (kind, text, media_ref, order) — schema.SPAN_OUT_STRUCT
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["order"].alias("order"),
-            ),
-        ).alias("spans"),
-        F.first("invoice_id", ignorenulls=True).alias("invoice_id"),
-        F.first("invoice_date", ignorenulls=True).alias("invoice_date"),
-        F.first("due_date", ignorenulls=True).alias("due_date"),
-        F.first("currency", ignorenulls=True).alias("currency"),
-        F.first("total", ignorenulls=True).alias("total"),
-        F.first("amounts", ignorenulls=True).alias("amounts"),
-        F.first("account_codes", ignorenulls=True).alias("account_codes"),
-    )

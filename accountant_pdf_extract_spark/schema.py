@@ -57,15 +57,6 @@ ARROW_INPUT = pa.schema(
     ]
 )
 
-SPAN_OUT_STRUCT = StructType(
-    [
-        StructField("kind", StringType()),
-        StructField("text", StringType()),
-        StructField("media_ref", StringType()),
-        StructField("order", IntegerType()),
-    ]
-)
-
 FIELDS_STRUCT = StructType(
     [
         StructField("invoice_id", StringType()),

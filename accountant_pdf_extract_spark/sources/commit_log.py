@@ -24,6 +24,11 @@ Protocol (two-level commit):
    buckets are redone idempotently (deterministic kernels, seeded
    synth).
 
+A bucket id means something only under one modulus, so the log's
+first run pins its salt-bucket count (``salt_buckets.json``, written
+like a seal) before that run writes output, and every later run
+reuses or refuses it.
+
 Durability scope, stated honestly: the exact-resume guarantee covers
 PROCESS failure (kill/crash of the job), the case the protocol is
 exercised against.  The log's own files are durable in order: the
@@ -54,6 +59,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from accountant_pdf_extract_spark.schema import COMMIT_LOG_SCHEMA
 
 _ARROW_SCHEMA = to_arrow_schema(COMMIT_LOG_SCHEMA)
+_PIN = "salt_buckets.json"
 
 
 def _fsync_dir(path: str) -> None:
@@ -63,6 +69,18 @@ def _fsync_dir(path: str) -> None:
         os.fsync(fd)
     finally:
         os.close(fd)
+
+
+def _write_json_atomic(dir_path: str, name: str, obj) -> None:
+    """Write ``obj`` to ``dir_path/name``: fsynced under a dot-prefixed
+    temp name, atomically renamed, then ``dir_path`` fsynced."""
+    tmp = os.path.join(dir_path, f".{name}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.rename(tmp, os.path.join(dir_path, name))
+    _fsync_dir(dir_path)
 
 
 class CommitLog:
@@ -82,6 +100,14 @@ class CommitLog:
                 with open(os.path.join(self.snapshot_dir, name)) as f:
                     out.append(json.load(f))
         return out
+
+    def pinned_salt_buckets(self) -> int | None:
+        """The modulus ``pin_salt_buckets`` recorded, or None."""
+        try:
+            with open(os.path.join(self.path, _PIN)) as f:
+                return int(json.load(f)["salt_buckets"])
+        except FileNotFoundError:
+            return None
 
     def committed_buckets(self) -> set[int]:
         done: set[int] = set()
@@ -146,15 +172,18 @@ class CommitLog:
             "lineage": lineage,
             "ts_ms": int(time.time() * 1000),
         }
-        tmp = os.path.join(self.snapshot_dir, f".{snapshot_id}.json.tmp")
-        final = os.path.join(self.snapshot_dir, f"{snapshot_id}.json")
-        with open(tmp, "w") as f:
-            json.dump(snap, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, final)  # atomic seal
-        _fsync_dir(self.snapshot_dir)
+        _write_json_atomic(self.snapshot_dir, f"{snapshot_id}.json", snap)
         return snapshot_id
+
+    def pin_salt_buckets(self, salt_buckets: int) -> None:
+        """Pin the salt-bucket modulus of this log, before the job's
+        first write: every bucket id the log certifies is
+        ``pmod(xxhash64(doc_id), salt_buckets)``, so a run under another
+        modulus would skip documents whose new bucket id collides with
+        a committed one.  Written like the snapshot seal."""
+        _write_json_atomic(
+            self.path, _PIN, {"salt_buckets": int(salt_buckets)}
+        )
 
     def drop_snapshots(self, snapshot_ids: set[str]) -> None:
         """Test hook: simulate a crash that lost some commits."""

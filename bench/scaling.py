@@ -1,10 +1,14 @@
 """N→4N scaling-efficiency evidence (``BASELINE.json:14``): the same
-extraction job on the same on-disk input at local[8] and local[32] —
+extraction job on the same on-disk input at two pinned core budgets —
 the driver-sanctioned sandbox proxy for N vs 4N executors.  Writes
 BENCH/BASELINE.md with both throughputs, efficiency, and the
 max/median task-time skew ratio.
 
-    python -m bench.scaling [--docs 4000] [--low 8] [--high 32]
+    python -m bench.scaling [--docs 4000] [--low 1] [--high 4]
+
+The levels default to the cores this process may run on: ``--high``
+is all of them and ``--low`` a quarter (at least 1), so neither level
+oversubscribes the host.
 
 Each parallelism level runs in a fresh subprocess (own JVM) so nothing
 leaks between runs; per-level timing covers the job action only (input
@@ -132,8 +136,9 @@ def run_level(cores: int, inp: str, n_docs: int) -> dict:
 def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--docs", type=int, default=80000)
-    p.add_argument("--low", type=int, default=2)
-    p.add_argument("--high", type=int, default=8)
+    cores = len(os.sched_getaffinity(0))
+    p.add_argument("--low", type=int, default=max(1, cores // 4))
+    p.add_argument("--high", type=int, default=cores)
     p.add_argument("--keep-input", default=None)
     args = p.parse_args()
 

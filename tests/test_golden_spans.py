@@ -25,16 +25,11 @@ def test_span_sequence_equality(spark):
 
 
 def test_extracted_fields(spark):
-    """Both doc-level views of the extraction output — ``doc_view``
-    (re-nested) and ``fields_view`` (the order==0 rows, what
-    ``q_extract_fields`` projects) — match the golden fields.  A doc
-    with zero output spans has no row in either view: its spans all
-    normalized to nothing, and the fields ride on span rows."""
-    from accountant_pdf_extract_spark.plans.pipeline import (
-        doc_view,
-        extract,
-        fields_view,
-    )
+    """The doc-level view of the extraction output — ``fields_view``
+    (the order==0 rows, what ``q_extract_fields`` projects) — matches
+    the golden fields.  A doc with zero output spans has no row: its
+    spans all normalized to nothing, and the fields ride on span rows."""
+    from accountant_pdf_extract_spark.plans.pipeline import extract, fields_view
     from accountant_pdf_extract_spark.schema import INPUT_SCHEMA
 
     docs = spark.read.parquet(str(FIXDIR / "fixture_docs.parquet"))
@@ -55,18 +50,15 @@ def test_extracted_fields(spark):
         return out
 
     gold_k = key(golden)
-    for view in (doc_view, fields_view):
-        got_k = key(view(flat))
-        # docs with zero output spans have no row; golden keeps them
-        # with all-null fields
-        for doc_id, vals in gold_k.items():
-            if doc_id in got_k:
-                assert got_k[doc_id] == vals, (view.__name__, doc_id)
-            else:
-                assert vals == (None, None, None, None, None, (), ()), (
-                    view.__name__, doc_id,
-                )
-        assert set(got_k) <= set(gold_k), view.__name__
+    got_k = key(fields_view(flat))
+    # docs with zero output spans have no row; golden keeps them with
+    # all-null fields
+    for doc_id, vals in gold_k.items():
+        if doc_id in got_k:
+            assert got_k[doc_id] == vals, doc_id
+        else:
+            assert vals == (None, None, None, None, None, (), ()), doc_id
+    assert set(got_k) <= set(gold_k)
 
     # a doc whose only span is whitespace emits no span, so it has zero
     # rows in extract and none in fields_view
@@ -93,25 +85,6 @@ def test_partition_invariance(spark):
     a = _rows(spans_view(extract(docs, salt_buckets=2, num_partitions=2)), cols)
     b = _rows(spans_view(extract(docs, salt_buckets=512, num_partitions=64)), cols)
     assert a == b and len(a) > 0
-
-
-def test_doc_view_spans_schema_pinned(spark):
-    """doc_view's nested span element must match SPAN_OUT_STRUCT."""
-    from accountant_pdf_extract_spark.plans.pipeline import doc_view, extract
-    from accountant_pdf_extract_spark.schema import SPAN_OUT_STRUCT
-    from pyspark.sql.types import ArrayType
-
-    docs = spark.read.parquet(str(FIXDIR / "fixture_docs.parquet"))
-    dv = doc_view(extract(docs, salt_buckets=8, num_partitions=4))
-    spans_type = dict(zip(dv.schema.names, [f.dataType for f in dv.schema.fields]))["spans"]
-    assert isinstance(spans_type, ArrayType)
-    got = [(f.name, f.dataType.simpleString()) for f in spans_type.elementType.fields]
-    want = [(f.name, f.dataType.simpleString()) for f in SPAN_OUT_STRUCT.fields]
-    assert got == want
-    # and order inside the array is ascending by `order`
-    row = dv.where(dv.doc_id == "fix-0000").first()
-    orders = [s["order"] for s in row["spans"]]
-    assert orders == sorted(orders) and orders[0] == 0
 
 
 def test_corrupt_media_payload_skipped_not_fatal(spark):

@@ -588,3 +588,170 @@ def test_incremental_refuses_output_beyond_table_head(spark, tmp_path):
                             num_partitions=2)
     assert tree() == before
     assert not os.path.exists(cursor)
+
+
+def _stub_spark(parallelism):
+    """Just enough of a session for the task-count derivations."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=parallelism))
+
+
+def test_salt_buckets_and_tasks_follow_core_budget():
+    """The derived bucket count is 4 per task of the core budget, and
+    the default task count over it is the core budget again: 8,000
+    cores give 32,000 buckets and 8,000 tasks, not 1,024 and 256."""
+    from accountant_pdf_extract_spark.plans.pipeline import (
+        _effective_partitions,
+        default_salt_buckets,
+    )
+
+    for cores, buckets in ((4, 16), (8000, 32000)):
+        spark = _stub_spark(cores)
+        assert default_salt_buckets(spark) == buckets
+        assert _effective_partitions(spark, None, buckets) == cores
+    # an explicit task count is the budget, whatever the session has
+    assert default_salt_buckets(_stub_spark(4), 8000) == 32000
+    assert _effective_partitions(_stub_spark(4), 8000, 32000) == 8000
+
+
+def test_num_partitions_above_salt_buckets_raises(spark, tmp_path):
+    """More tasks than buckets is refused, naming both values, not cut
+    down to the bucket count; on a fresh log the refusal comes before
+    the pin and before any output."""
+    import os
+
+    import pytest
+
+    from accountant_pdf_extract_spark.plans.pipeline import (
+        _effective_partitions,
+    )
+
+    with pytest.raises(ValueError, match="num_partitions=4096.*salt_buckets=1024"):
+        _effective_partitions(_stub_spark(4), 4096, 1024)
+    assert _effective_partitions(_stub_spark(4), 1024, 1024) == 1024
+
+    out, log = str(tmp_path / "out"), str(tmp_path / "log")
+    with pytest.raises(ValueError, match="num_partitions=16.*salt_buckets=8"):
+        run_job(spark, _ledger_docs(spark, "d1"), out, log,
+                salt_buckets=8, num_partitions=16)
+    assert CommitLog(log).pinned_salt_buckets() is None
+    assert not os.path.exists(out)
+
+
+def _bucket_dirs(path):
+    import os
+
+    from accountant_pdf_extract_spark.plans.pipeline import SALT_COL
+
+    return sorted(d for d in os.listdir(path) if d.startswith(SALT_COL + "="))
+
+
+def test_run_job_derives_and_pins_salt_buckets(spark, tmp_path):
+    """With no salt_buckets a fresh log gets 4 × defaultParallelism
+    buckets, one directory each, and pins that count."""
+    inp = _ledger_docs(spark, *(f"d{i}" for i in range(200)))
+    out, log = str(tmp_path / "out"), str(tmp_path / "log")
+    res = run_job(spark, inp, out, log)
+    n = 4 * spark.sparkContext.defaultParallelism
+    assert len(_bucket_dirs(out)) == len(res["processed_buckets"]) == n
+    assert CommitLog(log).pinned_salt_buckets() == n
+    assert CommitLog(log).snapshots()[0]["lineage"]["salt_buckets"] == str(n)
+
+
+def test_resume_keeps_pinned_salt_buckets(spark, tmp_path):
+    """A resume with no salt_buckets runs under the pinned count, not
+    the one its own core budget would derive: only the lost buckets
+    are redone and the output matches the uninterrupted run."""
+    inp = _ledger_docs(spark, *(f"d{i}" for i in range(60)))
+    out, log_path = str(tmp_path / "out"), str(tmp_path / "log")
+    res1 = run_job(spark, inp, out, log_path, salt_buckets=8,
+                   num_partitions=2)
+    reference = _collect(spark, out)
+    log = CommitLog(log_path)
+    all_buckets = set(res1["processed_buckets"])
+    lost = sorted(all_buckets)[: len(all_buckets) // 2]
+    log.drop_snapshots({s["snapshot_id"] for s in log.snapshots()})
+    log.commit(
+        [{"partition_id": b, "input_fingerprint": "x", "n_docs": 0,
+          "n_spans": 0, "n_fields": 0, "job_wall_ms": 0}
+         for b in sorted(all_buckets - set(lost))],
+        {"job_id": "partial"},
+    )
+
+    from accountant_pdf_extract_spark.plans.pipeline import default_salt_buckets
+
+    assert default_salt_buckets(spark) != 8
+    res2 = run_job(spark, inp, out, log_path)
+    assert res2["processed_buckets"] == lost
+    assert log.pinned_salt_buckets() == 8
+    assert log.snapshots()[-1]["lineage"]["salt_buckets"] == "8"
+    assert len(_bucket_dirs(out)) == len(all_buckets)
+    assert _collect(spark, out) == reference
+
+
+def test_pin_refuses_mismatch_before_first_commit(spark, tmp_path):
+    """A first run that crashed before its seal leaves a pin and bucket
+    directories but no snapshot: a re-run under another modulus raises
+    before it writes anything, and a re-run under the pin redoes every
+    bucket.  A log with snapshots but no pin is refused."""
+    import os
+
+    import pytest
+
+    inp = _ledger_docs(spark, *(f"d{i}" for i in range(20)))
+    out, log_path = str(tmp_path / "out"), str(tmp_path / "log")
+    res1 = run_job(spark, inp, out, log_path, salt_buckets=8,
+                   num_partitions=2)
+    log = CommitLog(log_path)
+    log.drop_snapshots({s["snapshot_id"] for s in log.snapshots()})
+    assert log.snapshots() == [] and log.pinned_salt_buckets() == 8
+
+    def tree():
+        return sorted(
+            (os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _dirs, files in os.walk(out) for f in files
+        )
+
+    before = tree()
+    with pytest.raises(ValueError, match="salt_buckets=8"):
+        run_job(spark, inp, out, log_path, salt_buckets=16,
+                num_partitions=2)
+    assert tree() == before
+    res2 = run_job(spark, inp, out, log_path)
+    assert res2["processed_buckets"] == res1["processed_buckets"]
+
+    legacy = CommitLog(str(tmp_path / "legacy"))
+    legacy.commit(
+        [{"partition_id": 0, "input_fingerprint": "x", "n_docs": 0,
+          "n_spans": 0, "n_fields": 0, "job_wall_ms": 0}],
+        {"job_id": "old", "salt_buckets": "1024"},
+    )
+    with pytest.raises(ValueError, match="no pinned salt_buckets"):
+        run_job(spark, inp, str(tmp_path / "lout"), legacy.path)
+
+
+def test_bucketed_input_defaults_to_stored_count(spark, tmp_path):
+    """write_bucketed_input with no count uses the derived one;
+    read_bucketed_input with no count takes the stored one, and an
+    explicit count that differs still raises."""
+    import pytest
+
+    from accountant_pdf_extract_spark.plans.job import (
+        bucketed_input_salt_buckets,
+        read_bucketed_input,
+        write_bucketed_input,
+    )
+    from accountant_pdf_extract_spark.plans.pipeline import (
+        SALT_COL,
+        default_salt_buckets,
+    )
+
+    path = str(tmp_path / "bin")
+    write_bucketed_input(_ledger_docs(spark, "a", "b", "c"), path)
+    n = default_salt_buckets(spark)
+    assert bucketed_input_salt_buckets(path) == n
+    assert SALT_COL in read_bucketed_input(spark, path).columns
+    with pytest.raises(ValueError, match="salt_buckets"):
+        read_bucketed_input(spark, path, n * 2)

@@ -120,8 +120,7 @@ def _refuse_all_fail_batch(failures: list[Exception], n_docs: int) -> None:
 
 def _report_drop(on_drop, doc_id, exc) -> None:
     """Per-doc fault isolation sink: the executor-stdout line, then the
-    ``on_drop`` callback when wired (the pipeline wires an accumulator
-    through it)."""
+    ``on_drop`` callback when wired."""
     print(f"extract_doc failed for {doc_id!r}: {exc!r}", flush=True)
     if on_drop is not None:
         on_drop(doc_id, exc)
@@ -156,9 +155,9 @@ def extract_batches(
 
     ``on_drop(doc_id, exc)`` is invoked for each document whose
     extraction raised (per-doc fault isolation), after the
-    executor-stdout line.  ``plans.pipeline.extract`` wires an
-    accumulator through it so dropped-doc counts surface as a
-    driver-readable metric, not just a buried print."""
+    executor-stdout line.  ``plans.pipeline.extract(keep_salt=True)``
+    counts the drops per bucket through it, so they reach the commit
+    log, not just a buried print."""
     for batch in batches:
         doc_ids, list_offsets, f_kind, f_text, f_ref, f_off = (
             _decode_spans_batch(batch)
@@ -176,8 +175,7 @@ def extract_batches(
                 )
             except Exception as exc:  # noqa: BLE001 — per-doc fault isolation:
                 # one malformed payload must not kill a 100-TB job; the
-                # doc yields zero rows and the skew shows up in the
-                # commit-log n_docs-vs-output delta.
+                # doc yields zero rows and is counted through on_drop.
                 _report_drop(on_drop, doc_id, exc)
                 doc_failures.append(exc)
                 continue

@@ -20,6 +20,10 @@ only — the committed set is a broadcast list, so resume pruning is a
 filter that Iceberg/parquet partition pruning can push to the scan) →
 salted repartition on hash(doc_id) → fused Arrow kernel → write
 partitioned by bucket (dynamic overwrite = idempotent redo) → commit.
+The commit records are the rows that the committed tasks wrote, as the
+kernel counted them per bucket while yielding them
+(``pipeline.BucketTally``), so the commit starts no Spark job and
+never lists or re-reads the output.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ from pyspark.sql import functions as F
 
 from accountant_pdf_extract_spark.plans.pipeline import (
     SALT_COL,
+    bucket_tallies,
     default_salt_buckets,
     extract,
     salt,
@@ -128,7 +133,7 @@ def run_job(
     raises, sealed snapshots or not: under another modulus the resume
     filter would skip uncommitted docs whose new bucket id collides
     with a committed one, and bucket directories a crashed first run
-    left behind would be certified by the next lineage pass.
+    left behind would stay in the output beside the new modulus's.
 
     ``trust_input_bucketing``: only set True for input read via
     ``read_bucketed_input`` under this job's bucket count (which
@@ -192,59 +197,32 @@ def run_job(
 
     wall_ms = int((time.monotonic() - t0) * 1000)
 
-    # Per-bucket lineage metrics from the (already materialized) output:
-    # order-independent fingerprint + span/doc/field counts.  The output
-    # is partitioned by SALT_COL, so the NOT-IN on committed buckets is a
-    # PartitionFilter — previously committed bucket directories are never
-    # read here, only the freshly written ones.  The records are derived
-    # from the bytes on disk, not from the plan that wrote them, so they
-    # certify the output.  Listing the bucket directories is one wave of
-    # tasks (``get_spark`` caps partition discovery at the core budget),
-    # and ``CommitLog.commit`` seals on the driver without a Spark job,
-    # so this listing and aggregate are the seal's only Spark work.
-    from pyspark.errors import AnalysisException
-
-    try:
-        out = spark.read.parquet(output_path)
-    except AnalysisException:
-        # zero-row first run: only _SUCCESS on disk, no parquet
-        # footers to infer a schema from — an empty result, not an
-        # error; commit nothing and report zero processed buckets
-        out = None
-    stats = [] if out is None else (
-        out.where(~F.col(SALT_COL).isin(sorted(done)) if done else F.lit(True))
-        .groupBy(SALT_COL)
-        .agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count("*").alias("n_spans"),
-            F.count("invoice_id").alias("n_fields"),
-            F.sum(F.xxhash64("doc_id", "order").cast("decimal(38,0)")).alias("fp"),
-        )
-        .collect()
-    )
+    # The records are the kernel's own per-bucket tally of the rows its
+    # tasks yielded to this write (``pipeline.BucketTally``), so sealing
+    # starts no Spark job: nothing lists or re-reads the output.  A
+    # bucket that yielded no row is not committed and is redone on resume.
+    tallies = bucket_tallies(flat.bucket_tally.value)
     records = [
         {
-            "partition_id": r[SALT_COL],
-            "input_fingerprint": str(r["fp"]),
-            "n_docs": r["n_docs"],
-            "n_spans": r["n_spans"],
-            "n_fields": r["n_fields"],
+            "partition_id": b,
+            "input_fingerprint": str(t.fingerprint),
+            "n_docs": t.n_docs,
+            "n_spans": t.n_spans,
+            "n_fields": t.n_fields,
             # whole-job wall time, identical across this snapshot's
             # buckets (hence the name — per-bucket skew lives in the
             # Spark task metrics, not here)
             "job_wall_ms": wall_ms,
         }
-        for r in stats
+        for b, t in sorted(tallies.items())
+        if t.n_spans
     ]
     lineage = {
         "job_id": job_id,
         "salt_buckets": str(salt_buckets),
         "engine": "accountant_pdf_extract_spark",
-        # per-doc fault-isolation metric (accumulated during the write
-        # action above): docs whose extraction raised and yielded no
-        # spans.  At-least-once under task retries (accumulator in a
-        # transformation) — an upper bound / alarm, not an exact ledger
-        "dropped_docs": str(flat.dropped_docs_acc.value),
+        # docs whose extraction raised and yielded no spans, exact
+        "dropped_docs": str(sum(t.dropped for t in tallies.values())),
     }
     snapshot_id = log.commit(records, lineage) if records else None
     return {

@@ -14,9 +14,14 @@ from __future__ import annotations
 
 import os
 import zipimport
+from hashlib import blake2b
+from typing import NamedTuple
 
+import pyarrow as pa
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from accountant_pdf_extract_spark.operators.kernel import extract_batches
 from accountant_pdf_extract_spark.schema import (
@@ -111,6 +116,106 @@ def _generated(batches, generate):
         yield out
 
 
+class BucketTally(NamedTuple):
+    """One salt bucket's commit record, counted by ``extract(keep_salt=
+    True)`` over the rows the kernel yielded for the bucket."""
+
+    n_docs: int  # rows with order == 0
+    n_spans: int  # rows
+    n_fields: int  # rows with a non-null invoice_id
+    dropped: int  # docs whose extraction raised (no rows)
+    fingerprint: int  # sum of row_print(doc_id, order) mod 2**64
+
+
+def row_print(doc_id: str, order: int) -> int:
+    """One row's share of its bucket's fingerprint: the 8-byte BLAKE2b
+    digest of ``doc_id``, a NUL and the decimal ``order``, read
+    little-endian.  The fingerprint sums these mod 2**64, so it does
+    not depend on the order the rows were written in."""
+    digest = blake2b(f"{doc_id}\0{order}".encode(), digest_size=8).digest()
+    return int.from_bytes(digest, "little")
+
+
+def merge_tallies(a: dict, b: dict) -> dict:
+    """The tally accumulator's merge, into ``a`` in place: per bucket,
+    the union of the tallies reported for it.  A bucket is one task's
+    (the repartition key is the bucket) and the kernel is deterministic,
+    so a retried or speculative attempt reports the same tally and the
+    union absorbs it.  A conflicting one is kept beside it and
+    ``bucket_tallies`` raises: this merge runs in the driver's
+    accumulator-server thread, where an exception makes Spark log and
+    drop the whole update."""
+    for bucket, seen in b.items():
+        a[bucket] = a.get(bucket, frozenset()) | seen
+    return a
+
+
+def bucket_tallies(value: dict) -> dict[int, BucketTally]:
+    """The exact per-bucket tallies of a tally accumulator's value;
+    raises on a bucket whose attempts reported different tallies."""
+    out = {}
+    for bucket, seen in value.items():
+        if len(seen) != 1:
+            raise RuntimeError(
+                f"salt bucket {bucket} was reported with {len(seen)} "
+                f"different tallies {sorted(seen)}: the kernel is not "
+                "deterministic, or the bucket was split across tasks"
+            )
+        (out[bucket],) = seen
+    return out
+
+
+class _TallyParam(AccumulatorParam):
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, a, b):
+        return merge_tallies(a, b)
+
+
+def _tallied(batches, generate, tally):
+    """The kernel over salted batches: appends each output row's bucket
+    and, once the last row is out, adds one ``BucketTally`` per bucket
+    to ``tally``.  A task that fails adds nothing.
+
+    The kernel yields every row of an input batch before it pulls the
+    next one, so ``bucket_of`` (the current batch's doc_id → bucket)
+    covers every output row and every drop."""
+    bucket_of: dict = {}
+    counts: dict = {}  # bucket -> [n_docs, n_spans, n_fields, dropped, fp]
+
+    def unsalted():
+        for batch in batches:
+            bucket_of.clear()
+            bucket_of.update(zip(
+                batch.column("doc_id").to_pylist(),
+                batch.column(SALT_COL).to_pylist(),
+            ))
+            yield batch.drop_columns([SALT_COL])
+
+    def note(doc_id, _exc):
+        counts.setdefault(bucket_of[doc_id], [0, 0, 0, 0, 0])[3] += 1
+
+    src = unsalted()
+    if generate is not None:
+        src = _generated(src, generate)
+    for out in extract_batches(src, on_drop=note):
+        doc_ids = out.column("doc_id").to_pylist()
+        buckets = [bucket_of[d] for d in doc_ids]
+        for b, d, order, has_id in zip(
+            buckets, doc_ids,
+            out.column("order").to_pylist(),
+            out.column("invoice_id").is_valid().to_pylist(),
+        ):
+            c = counts.setdefault(b, [0, 0, 0, 0, 0])
+            c[0] += order == 0
+            c[1] += 1
+            c[2] += has_id
+            c[4] = (c[4] + row_print(d, order)) & 0xFFFF_FFFF_FFFF_FFFF
+        yield out.append_column(SALT_COL, pa.array(buckets, pa.int32()))
+    tally.add({b: frozenset([BucketTally(*c)]) for b, c in counts.items()})
+
+
 def extract(
     df: DataFrame,
     salt_buckets: int = 1024,
@@ -125,18 +230,16 @@ def extract(
     invoice_id, invoice_date, due_date, currency, total, amounts,
     account_codes).
 
-    Per-doc extraction failures increment a driver-readable
-    accumulator, returned as ``dropped_docs_acc`` on the result
-    DataFrame and recorded in commit-log lineage, in addition to the
-    kernel's executor-stdout line — silent data loss is not acceptable
-    at 10^12 docs.  ``dropped_docs_acc`` is a plain attribute: DERIVED
-    DataFrames do not inherit it, so callers that transform the result
-    must keep their own reference to read the metric.  Accumulator
-    caveat (inherent to updates inside transformations): counts are
-    AT-LEAST-ONCE — task retries / speculative duplicates re-increment,
-    so treat the value as an upper bound / alarm signal, not an exact
-    ledger.  The exact ground truth is the commit-log n_docs-vs-input
-    delta per bucket.
+    ``keep_salt`` carries the salt bucket through the kernel onto every
+    output row (``SALT_COL``) and counts each bucket's rows in the task
+    that yields them: after an action, ``bucket_tallies(
+    out.bucket_tally.value)`` is the exact ``BucketTally`` of every
+    bucket that yielded a row or dropped a doc.  Only tasks that finish
+    add to it, and a retried or speculative duplicate adds the same
+    tally, so the count is exact whatever Spark's accumulator rules.
+    ``bucket_tally`` is a plain attribute: DERIVED DataFrames do not
+    inherit it, so callers that transform the result must keep their
+    own reference.
 
     ``generate`` fuses an input generator into the kernel: ``df`` is
     then the narrow proxy of the documents (its ``doc_id`` is the id
@@ -157,24 +260,26 @@ def extract(
     spark = df.sparkSession
     np = _effective_partitions(spark, num_partitions, salt_buckets)
     salted = salt(df, salt_buckets).repartition(np, SALT_COL)
-    dropped = spark.sparkContext.accumulator(0)
+    schema, tally = FLAT_FIELDS_SCHEMA, None
+    if keep_salt:
+        cols.append(SALT_COL)
+        schema = StructType(
+            schema.fields + [StructField(SALT_COL, IntegerType())]
+        )
+        tally = spark.sparkContext.accumulator({}, _TallyParam())
 
     def run(batches):
         _stat_checked_zip_invalidation()
-
-        def note(_doc_id, _exc):
-            dropped.add(1)
-
+        if keep_salt:
+            yield from _tallied(batches, generate, tally)
+            return
         if generate is not None:
             batches = _generated(batches, generate)
-        yield from extract_batches(batches, on_drop=note)
+        yield from extract_batches(batches)
 
-    out = salted.select(*cols).mapInArrow(run, schema=FLAT_FIELDS_SCHEMA)
+    out = salted.select(*cols).mapInArrow(run, schema=schema)
     if keep_salt:
-        # same formula via salt() — the bucketing expression must never
-        # fork between the input path and the output column
-        out = salt(out, salt_buckets)
-    out.dropped_docs_acc = dropped
+        out.bucket_tally = tally
     return out
 
 
@@ -191,7 +296,7 @@ def default_salt_buckets(spark, num_partitions: int | None = None) -> int:
     and 4 tasks; 8,000 cores give 32,000 buckets and 8,000 tasks.
 
     The bucket is the commit and resume unit and one output file, and
-    each bucket file costs about 5.7 ms to write and re-read (``run_job``
+    each bucket file cost about 5.7 ms written and re-read (``run_job``
     over 200 heavy docs, local[4]), so the count follows the task count:
     enough buckets per task to bound collision skew, no more files."""
     return BUCKETS_PER_TASK * (

@@ -74,8 +74,8 @@ def get_spark(
     # discovery threshold) runs a Spark job with, by default, one task
     # per directory.  Capped at the core budget it is one wave of
     # tasks: a warm `spark.read.parquet` of 183 bucket directories on
-    # local[4] went 1.16-1.48 s -> 0.21-0.28 s.  run_job's lineage
-    # re-read and every resume or bucketed-input read list this way.
+    # local[4] went 1.16-1.48 s -> 0.21-0.28 s.  A read of run_job's
+    # output or of a bucketed input lists this way.
     if _LISTING_PARALLELISM not in (extra_conf or {}):
         spark.conf.set(
             _LISTING_PARALLELISM, str(spark.sparkContext.defaultParallelism)

@@ -61,7 +61,8 @@ def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--docs", type=int, default=20000)
     p.add_argument("--buckets", type=int, default=64)
-    p.add_argument("--partitions", type=int, default=128)
+    # default: one task per core (at most --buckets, the repartition key)
+    p.add_argument("--partitions", type=int, default=None)
     args = p.parse_args()
 
     from pyspark.sql import functions as F

@@ -40,6 +40,38 @@ def _collect(spark, path):
     )
 
 
+def _reread_tallies(spark, path, buckets=None):
+    """Bucket → (n_docs, n_spans, n_fields, fingerprint) aggregated
+    from a re-read of the written output (the test oracle for the
+    records the kernel counts while it writes)."""
+    from accountant_pdf_extract_spark.plans.pipeline import SALT_COL, row_print
+
+    got = {}
+    for r in spark.read.parquet(path).collect():
+        if buckets is not None and r[SALT_COL] not in buckets:
+            continue
+        t = got.setdefault(r[SALT_COL], [0, 0, 0, 0])
+        t[0] += r["order"] == 0
+        t[1] += 1
+        t[2] += r["invoice_id"] is not None
+        t[3] = (t[3] + row_print(r["doc_id"], r["order"])) % 2**64
+    return {b: tuple(t) for b, t in got.items()}
+
+
+def _assert_records_match_output(spark, log_path, snapshot_id, out):
+    import pyarrow.parquet as pq
+
+    recs = pq.read_table(
+        f"{CommitLog(log_path).records_dir}/{snapshot_id}.parquet"
+    ).to_pylist()
+    got = {
+        r["partition_id"]: (r["n_docs"], r["n_spans"], r["n_fields"],
+                            int(r["input_fingerprint"]))
+        for r in recs
+    }
+    assert got and got == _reread_tallies(spark, out, set(got))
+
+
 def test_exact_resume(spark, tmp_path: pathlib.Path):
     inp = synth_interleaved(spark, N_DOCS, seed=11, partitions=8)
 
@@ -89,6 +121,12 @@ def test_exact_resume(spark, tmp_path: pathlib.Path):
 
     # byte-identical final result
     assert _collect(spark, out) == reference
+
+    # the records the kernel counted certify the bytes on disk
+    _assert_records_match_output(spark, log_path, res2["snapshot_id"], out)
+    _assert_records_match_output(
+        spark, str(tmp_path / "ref_log"), res_ref["snapshot_id"], ref_out
+    )
 
     # a third run is a no-op
     res3 = run_job(
@@ -755,3 +793,161 @@ def test_bucketed_input_defaults_to_stored_count(spark, tmp_path):
     assert SALT_COL in read_bucketed_input(spark, path).columns
     with pytest.raises(ValueError, match="salt_buckets"):
         read_bucketed_input(spark, path, n * 2)
+
+
+def test_run_job_counts_a_dropped_doc_exactly(spark, tmp_path):
+    """A document whose extraction raises is counted once in the
+    lineage's dropped_docs, and the other documents are committed.
+    (A 30-digit dollar amount makes ``fields.parse_amount`` raise.)"""
+    from accountant_pdf_extract_spark.schema import INPUT_SCHEMA
+
+    inp = _ledger_docs(spark, "d1", "d2", "d3").union(spark.createDataFrame(
+        [("bad", [{"kind": "text", "text": "Total $" + "9" * 30,
+                   "media_ref": "", "offset": 0}])],
+        INPUT_SCHEMA,
+    ))
+    log_path = str(tmp_path / "log")
+    res = run_job(spark, inp, str(tmp_path / "out"), log_path,
+                  salt_buckets=8, num_partitions=2)
+    (snap,) = CommitLog(log_path).snapshots()
+    assert snap["snapshot_id"] == res["snapshot_id"]
+    assert snap["lineage"]["dropped_docs"] == "1"
+    recs = CommitLog(log_path).records(spark).collect()
+    assert sum(r["n_docs"] for r in recs) == 3
+
+
+def test_run_job_starts_only_its_write_jobs(spark, tmp_path):
+    """Sealing starts no Spark job: run_job starts exactly the jobs
+    that the same extraction's write starts on its own."""
+    from accountant_pdf_extract_spark.plans.pipeline import SALT_COL, extract
+
+    inp = _ledger_docs(spark, *(f"d{i}" for i in range(40)))
+    res, jobs = _jobs_started_by(spark, lambda: run_job(
+        spark, inp, str(tmp_path / "out"), str(tmp_path / "log"),
+        salt_buckets=8, num_partitions=2,
+    ))
+    assert res["snapshot_id"] is not None
+
+    def bare_write():
+        (
+            extract(inp, salt_buckets=8, num_partitions=2, keep_salt=True)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(SALT_COL)
+            .parquet(str(tmp_path / "bare"))
+        )
+
+    _, write_jobs = _jobs_started_by(spark, bare_write)
+    assert write_jobs and len(jobs) == len(write_jobs)
+
+
+def test_tally_merge_absorbs_duplicates_and_refuses_conflicts():
+    """The tally accumulator's merge: a duplicate report of a bucket's
+    tally (a retried or speculative attempt) is absorbed; a different
+    tally for the same bucket raises when the tallies are read."""
+    import pytest
+
+    from accountant_pdf_extract_spark.plans.pipeline import (
+        BucketTally,
+        bucket_tallies,
+        merge_tallies,
+    )
+
+    t3, t5 = BucketTally(2, 5, 1, 0, 123), BucketTally(1, 1, 0, 1, 7)
+    merged = {}
+    for update in ({3: {t3}}, {5: {t5}}, {3: {t3}}, {3: {t3}, 5: {t5}}):
+        merged = merge_tallies(merged, {b: frozenset(t) for b, t in update.items()})
+    assert bucket_tallies(merged) == {3: t3, 5: t5}
+    merge_tallies(merged, {3: frozenset([t3._replace(n_spans=6)])})
+    with pytest.raises(RuntimeError, match="salt bucket 3"):
+        bucket_tallies(merged)
+
+
+def _retry_child(work: str) -> None:
+    """Subprocess body of ``test_tally_exact_under_task_retry``: a
+    clean fused run, then one whose generator raises on attempt 0 of
+    partition 0 after that attempt yielded one batch.  Prints both
+    tallies and a re-read aggregate of the retried run's output."""
+    import json
+    import os
+
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    from accountant_pdf_extract_spark.plans.pipeline import (
+        SALT_COL,
+        bucket_tallies,
+        extract,
+    )
+    from accountant_pdf_extract_spark.schema import ARROW_INPUT
+    from accountant_pdf_extract_spark.session import get_spark
+
+    spark = get_spark(app="tally-retry", master="local[2,2]",
+                      shuffle_partitions=2,
+                      extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "4"})
+    proxy = spark.range(40).select(
+        F.format_string("d%03d", "id").alias("doc_id"), F.col("id").alias("n"))
+    marker = os.path.join(work, "raised")
+
+    def run(out, fail):
+        calls = {}
+
+        def generate(batch):
+            ctx = TaskContext.get()
+            k = ctx.taskAttemptId()
+            calls[k] = calls.get(k, 0) + 1
+            if (fail and ctx.partitionId() == 0 and ctx.attemptNumber() == 0
+                    and calls[k] == 2):
+                open(marker, "w").close()
+                raise RuntimeError("injected failure after one batch")
+            docs = []
+            for d, n in zip(batch.column("doc_id").to_pylist(),
+                            batch.column("n").to_pylist()):
+                text = ("Total $" + "9" * 30 if n == 7 else
+                        f"Invoice INV-{n:04d}\nTotal ${n}.00" if n % 3 else
+                        f"ledger {d}\nbalance {n}")
+                docs.append({"doc_id": d, "spans": [
+                    {"kind": "text", "text": text, "media_ref": "", "offset": 0}]})
+            return pa.RecordBatch.from_pylist(docs, schema=ARROW_INPUT)
+
+        flat = extract(proxy, salt_buckets=8, num_partitions=2,
+                       keep_salt=True, generate=generate)
+        flat.write.partitionBy(SALT_COL).parquet(out)
+        return {b: list(t) for b, t in bucket_tallies(flat.bucket_tally.value).items()}
+
+    clean = run(os.path.join(work, "clean"), False)
+    retried = run(os.path.join(work, "retried"), True)
+    reread = _reread_tallies(spark, os.path.join(work, "retried"))
+    print("RESULT " + json.dumps({
+        "clean": clean, "retried": retried,
+        "reread": {b: list(t) for b, t in reread.items()},
+        "raised": os.path.exists(marker),
+    }))
+    spark.stop()
+
+
+def test_tally_exact_under_task_retry(tmp_path):
+    """A task attempt that fails after yielding a batch adds nothing
+    to the tally; the retry's tally equals a clean run's and a re-read
+    aggregate of the committed output (local[2,2]: two attempts)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).parent.parent
+    res = subprocess.run(
+        [sys.executable, "-c",
+         "import sys; from tests.test_resume import _retry_child; "
+         "_retry_child(sys.argv[1])", str(tmp_path)],
+        capture_output=True, text=True, timeout=300, cwd=str(root),
+        env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    line = next(ln for ln in res.stdout.splitlines() if ln.startswith("RESULT "))
+    got = json.loads(line[len("RESULT "):])
+    assert got["raised"]
+    assert got["retried"] == got["clean"]
+    assert sum(t[3] for t in got["clean"].values()) == 1  # the dropped doc
+    assert {b: t[:3] + t[4:] for b, t in got["clean"].items() if t[1]} == (
+        got["reread"])

@@ -11,9 +11,9 @@ With no ``--salt-buckets`` the bucket count is derived from the core
 budget, 4 per task (``pipeline.default_salt_buckets``): 32,000 buckets
 and 8,000 kernel tasks above.  The first run pins the count in the
 commit log and every later run reuses it, so a resume on a resized
-cluster keeps its modulus.  The kernel runs at most ``--salt-buckets``
-tasks (the repartition key is the bucket): a ``--num-partitions``
-above it raises.
+cluster keeps its modulus.  Bucket ``b`` runs on kernel task ``b`` mod
+the task count, so the kernel runs at most ``--salt-buckets`` tasks: a
+``--num-partitions`` above it raises.
 
 Plan shape (one shuffle): scan → anti-join committed buckets (metadata
 only — the committed set is a broadcast list, so resume pruning is a
@@ -24,11 +24,17 @@ The commit records are the rows that the committed tasks wrote, as the
 kernel counted them per bucket while yielding them
 (``pipeline.BucketTally``), so the commit starts no Spark job and
 never lists or re-reads the output.
+
+``run_incremental_job`` writes its sink partitioned by ``_batch_id``
+only: a replayed batch is replaced whole, whatever bucket count it ran
+under.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,7 +47,10 @@ from accountant_pdf_extract_spark.plans.pipeline import (
     extract,
     salt,
 )
-from accountant_pdf_extract_spark.sources.commit_log import CommitLog
+from accountant_pdf_extract_spark.sources.commit_log import (
+    CommitLog,
+    _write_json_atomic,
+)
 
 
 _SALT_META = "_salt_meta.json"
@@ -62,9 +71,6 @@ def write_bucketed_input(
     only partially committed under the new modulus (silent data loss).
     With no ``salt_buckets`` the count is ``default_salt_buckets``, as
     in ``run_job``."""
-    import json
-    import os
-
     if salt_buckets is None:
         salt_buckets = default_salt_buckets(df.sparkSession)
 
@@ -76,17 +82,13 @@ def write_bucketed_input(
     salt(df, salt_buckets).write.mode("overwrite").partitionBy(SALT_COL).parquet(
         path
     )
-    with open(os.path.join(path, _SALT_META), "w") as f:
-        json.dump({"salt_buckets": int(salt_buckets)}, f)
+    _write_json_atomic(path, _SALT_META, {"salt_buckets": int(salt_buckets)})
 
 
 def bucketed_input_salt_buckets(path: str) -> int:
     """The bucket count a ``write_bucketed_input`` table was written
     with — raises on a missing sidecar (never silently trust a foreign
     bucket column)."""
-    import json
-    import os
-
     meta_path = os.path.join(path, _SALT_META)
     if not os.path.exists(meta_path):
         raise ValueError(
@@ -238,13 +240,12 @@ def run_incremental_job(
     table,
     output_path: str,
     cursor_path: str,
-    salt_buckets: int = 1024,
     num_partitions: int | None = None,
 ) -> dict:
     """Snapshot-cursor incremental extraction over a ``DocTable``: the
     steady-state driver for a table that grows by commits — each run
     extracts ONLY the rows added since the stored cursor and lands
-    them in the same salted sink, then advances the cursor.
+    them in the batch-keyed sink, then advances the cursor.
 
     Mechanics:
     - The window (cursor → current) is split into MAXIMAL append-only
@@ -252,10 +253,11 @@ def run_incremental_job(
       across a compaction; compaction snapshots add no rows, so they
       are skipped, and rows committed before one are still emitted).
     - Each segment writes via the batch-keyed dynamic-overwrite sink
-      (``_batch_keyed_sink``) with batch id = the segment's end
-      sequence: a crashed/re-run segment REPLACES its own
-      ``_batch_id`` partitions (idempotent), earlier windows are never
-      touched.
+      (``_batch_keyed_sink``), partitioned by ``_batch_id`` only, with
+      batch id = the segment's end sequence: a crashed/re-run segment
+      REPLACES its whole ``_batch_id`` partition (idempotent, even
+      under another core budget and so another salt-bucket count),
+      earlier windows are never touched.
     - The cursor file advances by atomic replace only AFTER all
       segment writes committed — crash anywhere re-runs the same
       window idempotently (exactly-once to the sink), however many
@@ -278,10 +280,6 @@ def run_incremental_job(
     tombstone with ``_batch_id`` >= that row's batch.  (Upsert delete
     files need no tombstone — the replacement rows in the same batch
     win the max-batch race on their own.)"""
-    import json
-    import os
-    import tempfile
-
     cur = table.current_snapshot()
     if cur is None:
         raise FileNotFoundError("table has no snapshots")
@@ -293,7 +291,7 @@ def run_incremental_job(
         return {"segments": [], "skipped": True,
                 "cursor": cur["snapshot_id"]}
 
-    sink = _batch_keyed_sink(output_path, cur["sequence"], SALT_COL)
+    sink = _batch_keyed_sink(output_path, cur["sequence"])
     tomb_sink = _batch_keyed_sink(
         os.path.join(output_path, "_tombstones"), cur["sequence"]
     )
@@ -349,13 +347,11 @@ def run_incremental_job(
             if frm is not None
             else table.read(spark, snapshot_id=to["snapshot_id"])
         )
-        flat = extract(
-            delta.select("doc_id", "spans"),
-            salt_buckets=salt_buckets,
-            num_partitions=num_partitions,
-            keep_salt=True,
+        sink(
+            extract(delta.select("doc_id", "spans"),
+                    num_partitions=num_partitions),
+            to["sequence"],
         )
-        sink(flat, to["sequence"])
         done_segments.append(
             {"from": frm, "to": to["snapshot_id"], "batch_id": to["sequence"]}
         )
@@ -380,22 +376,21 @@ def run_incremental_job(
         )
 
     # atomic cursor advance, only after every segment write committed
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(cursor_path) or ".")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"snapshot_id": cur["snapshot_id"]}, f)
-    os.replace(tmp, cursor_path)
+    _write_json_atomic(
+        os.path.dirname(cursor_path) or ".",
+        os.path.basename(cursor_path),
+        {"snapshot_id": cur["snapshot_id"]},
+    )
     return {"segments": done_segments, "tombstones": tombstones,
             "skipped": False, "cursor": cur["snapshot_id"]}
 
 
-def _batch_keyed_sink(output_dir: str, head_sequence: int,
-                      *extra_partition_cols: str):
+def _batch_keyed_sink(output_dir: str, head_sequence: int):
     """Return ``sink(df, batch_id)`` writing ``df`` to ``output_dir``
-    partitioned by ``_batch_id`` (plus any ``extra_partition_cols``,
-    e.g. the salt bucket) with dynamic partition overwrite scoped to
-    THIS writer (per-write option, never a session-wide conf): a batch
-    re-run after a crash REPLACES its own ``_batch_id`` partitions
-    instead of appending duplicates.
+    partitioned by ``_batch_id`` with dynamic partition overwrite
+    scoped to THIS writer (per-write option, never a session-wide
+    conf): a batch re-run after a crash REPLACES its own ``_batch_id``
+    partition instead of appending duplicates.
 
     Batch ids are table sequences, so an output whose newest
     ``_batch_id`` is beyond ``head_sequence`` (the table's current
@@ -417,7 +412,7 @@ def _batch_keyed_sink(output_dir: str, head_sequence: int,
             df.withColumn("_batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id", *extra_partition_cols)
+            .partitionBy("_batch_id")
             .parquet(output_dir)
         )
 
@@ -427,8 +422,6 @@ def _batch_keyed_sink(output_dir: str, head_sequence: int,
 def _max_batch_id(output_dir: str) -> int | None:
     """Largest existing ``_batch_id=`` partition value, driver-side
     listdir only (no Spark job)."""
-    import os
-
     try:
         names = os.listdir(output_dir)
     except FileNotFoundError:
@@ -463,8 +456,6 @@ def main() -> None:
         p.error("one of --input or --synth-docs is required")
 
     spark = get_spark(app=f"extract-{args.job_id}", master=args.master)
-    import os
-
     trusted = False
     salt_buckets = args.salt_buckets
     if args.synth_docs:

@@ -2,8 +2,8 @@
 so Catalyst owns pushdown/pruning/physical strategy; exactly ONE
 shuffle in the whole job — the spec-mandated salted repartition on
 ``hash(doc_id)`` (``BASELINE.json:6,14``) that defeats giant-PDF skew
-by spreading docs uniformly over fine-grained salt buckets, grouped
-into one wave of tasks (``_effective_partitions``).  Everything
+by spreading docs uniformly over salt buckets, bucket ``b`` placed on
+task ``b mod np`` of one wave (``_effective_partitions``).  Everything
 downstream is map-only: the fused Arrow kernel — which for generated
 inputs also runs the generator, in the same Python runner — then the
 sink.  At 100 TB this shape means: parquet/Iceberg scan with column
@@ -33,7 +33,7 @@ from accountant_pdf_extract_spark.schema import (
 SALT_COL = "_salt_bucket"
 
 
-def salt(df: DataFrame, buckets: int = 1024) -> DataFrame:
+def salt(df: DataFrame, buckets: int) -> DataFrame:
     """J5: deterministic salt bucket from the doc id hash.
 
     If the input already carries a physical ``_salt_bucket`` column
@@ -139,7 +139,7 @@ def row_print(doc_id: str, order: int) -> int:
 def merge_tallies(a: dict, b: dict) -> dict:
     """The tally accumulator's merge, into ``a`` in place: per bucket,
     the union of the tallies reported for it.  A bucket is one task's
-    (the repartition key is the bucket) and the kernel is deterministic,
+    (bucket ``b`` runs on task ``b mod np``) and the kernel is deterministic,
     so a retried or speculative attempt reports the same tally and the
     union absorbs it.  A conflicting one is kept beside it and
     ``bucket_tallies`` raises: this merge runs in the driver's
@@ -218,7 +218,7 @@ def _tallied(batches, generate, tally):
 
 def extract(
     df: DataFrame,
-    salt_buckets: int = 1024,
+    salt_buckets: int | None = None,
     num_partitions: int | None = None,
     keep_salt: bool = False,
     generate=None,
@@ -229,6 +229,11 @@ def extract(
     One row per output span: (doc_id, kind, text, media_ref, order,
     invoice_id, invoice_date, due_date, currency, total, amounts,
     account_codes).
+
+    With no ``salt_buckets`` the count is ``default_salt_buckets`` of
+    the same core budget.  The repartition places bucket ``b`` on task
+    ``b mod np`` (``repartitionById``): every bucket belongs to exactly
+    one task, and the tasks' bucket counts differ by at most one.
 
     ``keep_salt`` carries the salt bucket through the kernel onto every
     output row (``SALT_COL``) and counts each bucket's rows in the task
@@ -258,8 +263,10 @@ def extract(
     else:
         cols = [c for c in df.columns if c != SALT_COL]
     spark = df.sparkSession
+    if salt_buckets is None:
+        salt_buckets = default_salt_buckets(spark, num_partitions)
     np = _effective_partitions(spark, num_partitions, salt_buckets)
-    salted = salt(df, salt_buckets).repartition(np, SALT_COL)
+    salted = salt(df, salt_buckets).repartitionById(np, SALT_COL)
     schema, tally = FLAT_FIELDS_SCHEMA, None
     if keep_salt:
         cols.append(SALT_COL)
@@ -283,22 +290,21 @@ def extract(
     return out
 
 
-# Expected salt buckets per kernel task: the default task count is
-# ``salt_buckets // BUCKETS_PER_TASK`` and the derived bucket count is
-# ``BUCKETS_PER_TASK`` per task, so the two rules cannot drift apart.
 BUCKETS_PER_TASK = 4
 
 
 def default_salt_buckets(spark, num_partitions: int | None = None) -> int:
-    """The salt-bucket count of a job that does not pin one:
+    """The salt-bucket count of a plan that does not pin one:
     ``BUCKETS_PER_TASK`` per task of the core budget (``num_partitions``
     if given, else ``defaultParallelism``).  4 cores give 16 buckets
     and 4 tasks; 8,000 cores give 32,000 buckets and 8,000 tasks.
 
     The bucket is the commit and resume unit and one output file, and
     each bucket file cost about 5.7 ms written and re-read (``run_job``
-    over 200 heavy docs, local[4]), so the count follows the task count:
-    enough buckets per task to bound collision skew, no more files."""
+    over 200 heavy docs, local[4]), so the count follows the task count.
+    A few buckets per task keep the resume unit finer than a task's
+    share, and let a resume on up to ``BUCKETS_PER_TASK`` times the
+    cores still give every task a bucket."""
     return BUCKETS_PER_TASK * (
         num_partitions or spark.sparkContext.defaultParallelism
     )
@@ -331,30 +337,24 @@ def _effective_partitions(
     giant-PDF task finish alongside the others instead of being the
     tail; choosing that needs a giant-PDF tail corpus to measure.
 
-    With ``salt_buckets`` the repartition KEY is the salt bucket, so a
-    partition beyond ``salt_buckets`` could only sit empty (there are
-    at most that many distinct keys): an explicit ``num_partitions``
-    above ``salt_buckets`` raises, and more parallelism comes from more
-    buckets (``default_salt_buckets`` derives them from the same core
-    budget).  The exchange hash-maps bucket VALUES to partitions, so at
-    np ≈ salt_buckets collisions leave ~1/e of partitions empty and
-    pile 3-5 buckets into single tasks (the giant-PDF straggler the
-    salt exists to prevent); the DEFAULT therefore also caps np at
-    ``salt_buckets // BUCKETS_PER_TASK`` — ≥4 expected buckets per task
-    bounds the collision skew near 2x whp."""
+    With ``salt_buckets`` the repartition places bucket ``b`` on task
+    ``b mod np``, so a partition beyond ``salt_buckets`` could only sit
+    empty: the default is ``min(defaultParallelism, salt_buckets)``,
+    an explicit ``num_partitions`` above ``salt_buckets`` raises, and
+    more parallelism comes from more buckets (``default_salt_buckets``
+    derives them from the same core budget)."""
     if salt_buckets is None:
         return num_partitions or spark.sparkContext.defaultParallelism
-    if num_partitions is not None:
-        if num_partitions > salt_buckets:
-            raise ValueError(
-                f"num_partitions={num_partitions} exceeds "
-                f"salt_buckets={salt_buckets}: the repartition key is the "
-                "bucket, so the extra partitions would sit empty — raise "
-                "salt_buckets or lower num_partitions"
-            )
-        return num_partitions
-    np = spark.sparkContext.defaultParallelism
-    return max(1, min(np, salt_buckets // BUCKETS_PER_TASK))
+    if num_partitions is None:
+        return min(spark.sparkContext.defaultParallelism, salt_buckets)
+    if num_partitions > salt_buckets:
+        raise ValueError(
+            f"num_partitions={num_partitions} exceeds "
+            f"salt_buckets={salt_buckets}: bucket b runs on task "
+            "b mod num_partitions, so the extra partitions would sit "
+            "empty — raise salt_buckets or lower num_partitions"
+        )
+    return num_partitions
 
 
 def spans_view(flat: DataFrame) -> DataFrame:

@@ -17,16 +17,13 @@ from accountant_pdf_extract_spark.plans.pipeline import (
 )
 from accountant_pdf_extract_spark.sources.synth import documents_source
 
-# salt buckets of every query here; the task count is the pipeline
-# default (one per core, ``pipeline._effective_partitions``)
-QUERY_SALT_BUCKETS = 256
-
 
 def _extracted(spark, sf):
     """Generate-and-extract over the ``documents`` table as ONE plan:
-    salted proxy shuffle, then one fused generate+kernel runner."""
+    salted proxy shuffle, then one fused generate+kernel runner, at the
+    pipeline's default bucket and task counts."""
     proxy, generate = documents_source(spark, sf, seed=42)
-    return extract(proxy, salt_buckets=QUERY_SALT_BUCKETS, generate=generate)
+    return extract(proxy, generate=generate)
 
 
 @register("q_extract_spans")

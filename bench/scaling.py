@@ -25,16 +25,10 @@ import subprocess
 import sys
 import tempfile
 
-# single source for the measured job's kernel-stage task count — the
-# runner both plans with it AND uses it to attribute event-log task
-# stats to the right stage (a bare hardcoded 256 drifted silently)
-KERNEL_PARTITIONS = 256
-
 RUNNER = r"""
 import json, sys, time
 
 cores = int(sys.argv[1]); inp = sys.argv[2]; n_docs = int(sys.argv[3])
-kernel_np = int(sys.argv[4])
 # cluster-proxy session: this process is taskset-pinned to `cores` CPUs,
 # so GC/shuffle threads are sized to the budget like a real executor.
 # Session comes from the ONE measured config in session.get_spark (so
@@ -61,15 +55,13 @@ df = spark.read.schema(INPUT_SCHEMA).parquet(inp)
 
 # warm the Python worker pool (imports, fork) — steady-state clusters
 # have warm workers; worker spawn is not part of N-vs-4N throughput
-extract(df.limit(64), salt_buckets=1024, num_partitions=4).write.format(
-    "noop").mode("overwrite").save()
+extract(df.limit(64)).write.format("noop").mode("overwrite").save()
 
 t0 = time.monotonic()
 t0_epoch_ms = time.time() * 1000.0  # event-log timestamps are epoch ms
-# identical plan at every parallelism level (kernel_np threaded from
-# bench.scaling.KERNEL_PARTITIONS — the ONE source for this number)
-flat = extract(df, salt_buckets=1024, num_partitions=kernel_np)
-flat.write.format("noop").mode("overwrite").save()
+# the program's default plan: one kernel task per core
+kernel_np = spark.sparkContext.defaultParallelism
+extract(df).write.format("noop").mode("overwrite").save()
 wall = time.monotonic() - t0
 spark.stop()
 
@@ -121,7 +113,7 @@ def run_level(cores: int, inp: str, n_docs: int) -> dict:
     allowed = sorted(os.sched_getaffinity(0))
     pick = ",".join(str(c) for c in allowed[:cores])
     cmd = ["taskset", "-c", pick, sys.executable, "-c", RUNNER,
-           str(cores), inp, str(n_docs), str(KERNEL_PARTITIONS)]
+           str(cores), inp, str(n_docs)]
     out = subprocess.run(
         cmd,
         capture_output=True,
@@ -198,9 +190,9 @@ README); these are the first real measurements, per the protocol in
 Skew evidence (kernel stage, {hi['n_tasks']} tasks at local[{args.high}]):
 median task {hi['task_ms_median']:.0f} ms, max task {hi['task_ms_max']:.0f} ms —
 max/median = {hi['task_ms_max'] / max(hi['task_ms_median'], 1):.2f}
-(salted repartition on pmod(xxhash64(doc_id), 1024) spreads the
-giant-PDF tail; without salting a single partition would carry
-multi-second stragglers).
+(salted repartition on pmod(xxhash64(doc_id), 4 × cores), bucket b
+on task b mod cores, spreads the giant-PDF tail; without salting a
+single partition would carry multi-second stragglers).
 
 **Scaling efficiency (N→{args.high // args.low}N) = {eff:.3f}**  (target ≥ 0.8, `BASELINE.json:14`)
 
@@ -210,9 +202,8 @@ core budget** — a real N-core executor runs JVM + GC + Python workers
 inside N cores; unpinned local[N] on a 32-core box borrows idle cores
 for the JVM and stops measuring N vs 4N.  Timing covers only the
 extraction job action (salted repartition → fused Arrow kernel → noop
-sink) after a JVM warm-up action.  Salt buckets = 1024 and
-num_partitions = 256 — identical plan at both levels, ≥ 4× max cores
-so the high level is never partition-starved.
+sink) after a JVM warm-up action.  Both levels run the program's
+default plan: 4 salt buckets and one kernel task per core.
 
 ## Supplementary: why the levels are pinned (unpinned 8 vs 32 for transparency)
 

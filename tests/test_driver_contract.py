@@ -101,8 +101,8 @@ def test_entry_smoke(spark):
 def test_kernel_plan_has_one_python_runner(spark, contract, name):
     """Generation is fused into the extraction kernel: one MapInArrow
     (one Python runner per task), one shuffle Exchange (the salted
-    proxy repartition), and, with no explicit num_partitions, one
-    task per core."""
+    proxy repartition, placing each bucket by its id), and, with no
+    explicit num_partitions, one task per core."""
     import re
 
     qs, _ = contract
@@ -111,7 +111,8 @@ def test_kernel_plan_has_one_python_runner(spark, contract, name):
     exchanges = re.findall(r"Exchange (\w+)\((.*?), (\d+)\)", plan)
     assert len(exchanges) == 1 and plan.count("Exchange") == 1, plan
     kind, key, n = exchanges[0]
-    assert kind == "hashpartitioning" and key.startswith("_salt_bucket"), plan
+    assert kind == "shufflepartitionidpassthrough", plan
+    assert key.startswith("direct_shuffle_partition_id(_salt_bucket"), plan
     assert int(n) == spark.sparkContext.defaultParallelism
 
 

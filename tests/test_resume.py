@@ -357,7 +357,7 @@ def test_incremental_job_extracts_only_new_snapshots(spark, tmp_path):
 
     tbl.append(_ledger_docs(spark, "d1", "d2"))
     r1 = run_incremental_job(
-        spark, tbl, out, cursor, salt_buckets=8, num_partitions=2)
+        spark, tbl, out, cursor, num_partitions=2)
     assert not r1["skipped"] and len(r1["segments"]) == 1
 
     def by_batch():
@@ -373,14 +373,14 @@ def test_incremental_job_extracts_only_new_snapshots(spark, tmp_path):
     tbl.compact(spark, target_files=1)     # seq 3 (rewrites d1-d3)
     tbl.append(_ledger_docs(spark, "d4"))  # seq 4
     r2 = run_incremental_job(
-        spark, tbl, out, cursor, salt_buckets=8, num_partitions=2)
+        spark, tbl, out, cursor, num_partitions=2)
     assert [s["batch_id"] for s in r2["segments"]] == [2, 4]
     # d1/d2 appear once (batch 1); the compaction's rewrite of them is
     # never re-emitted; d3 and d4 land under their own segment batches
     assert by_batch() == {1: {"d1", "d2"}, 2: {"d3"}, 4: {"d4"}}
 
     r3 = run_incremental_job(
-        spark, tbl, out, cursor, salt_buckets=8, num_partitions=2)
+        spark, tbl, out, cursor, num_partitions=2)
     assert r3["skipped"] and by_batch() == {1: {"d1", "d2"}, 2: {"d3"},
                                             4: {"d4"}}
 
@@ -398,11 +398,9 @@ def test_incremental_job_retracts_deletes_as_tombstones(spark, tmp_path):
     out = str(tmp_path / "out")
     cursor = str(tmp_path / "cursor.json")
     tbl.append(_ledger_docs(spark, "d1", "d2"))               # seq 1
-    run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
-                        num_partitions=2)
+    run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
     tbl.delete_where(spark, "doc_id = 'd1'", "doc_id")        # seq 2
-    r = run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
-                            num_partitions=2)
+    r = run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
     assert r["segments"] == [] and r["tombstones"] == [
         {"snapshot": tbl.current_snapshot()["snapshot_id"], "batch_id": 2}]
 
@@ -434,7 +432,7 @@ def test_incremental_job_retracts_deletes_as_tombstones(spark, tmp_path):
     assert [r["doc_id"] for r in live.collect()] == ["d2"]
     # idempotent re-run after table advances by a no-op? cursor is
     # current -> skipped, tombstones untouched
-    assert run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
+    assert run_incremental_job(spark, tbl, out, cursor,
                                num_partitions=2)["skipped"]
 
 
@@ -454,7 +452,7 @@ def test_incremental_first_consumption_after_compaction(spark, tmp_path):
     out = str(tmp_path / "out")
     r = run_incremental_job(
         spark, tbl, out, str(tmp_path / "c.json"),
-        salt_buckets=8, num_partitions=2,
+        num_partitions=2,
     )
     assert len(r["segments"]) == 1
     got = {row["doc_id"] for row in spark.read.parquet(out).collect()}
@@ -469,7 +467,7 @@ def test_incremental_first_consumption_after_compaction(spark, tmp_path):
     out2 = str(tmp_path / "out2")
     r2 = run_incremental_job(
         spark, tbl2, out2, str(tmp_path / "c2.json"),
-        salt_buckets=8, num_partitions=2,
+        num_partitions=2,
     )
     assert len(r2["segments"]) == 1
     got2 = {row["doc_id"] for row in spark.read.parquet(out2).collect()}
@@ -541,20 +539,17 @@ def test_incremental_replay_of_multi_segment_window(spark, tmp_path):
     out = str(tmp_path / "out")
     cursor = str(tmp_path / "cursor.json")
     tbl.append(_ledger_docs(spark, "d1", "d2"))           # seq 1
-    run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
-                        num_partitions=2)
+    run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
     shutil.copy(cursor, str(tmp_path / "cursor_r1.json"))
     tbl.append(_ledger_docs(spark, "d3"))                 # seq 2
     tbl.compact(spark, target_files=1)                    # seq 3
     tbl.append(_ledger_docs(spark, "d4"))                 # seq 4
-    r2 = run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
-                             num_partitions=2)
+    r2 = run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
     want = _batches(spark, out)
     assert want == {1: {"d1", "d2"}, 2: {"d3"}, 4: {"d4"}}
 
     shutil.copy(str(tmp_path / "cursor_r1.json"), cursor)  # the crash
-    replay = run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
-                                 num_partitions=2)
+    replay = run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
     assert replay["segments"] == r2["segments"]
     assert [s["batch_id"] for s in replay["segments"]] == [2, 4]
     assert _batches(spark, out) == want
@@ -572,23 +567,51 @@ def test_incremental_replay_of_multi_tombstone_window(spark, tmp_path):
     tombs = f"{out}/_tombstones"
     cursor = str(tmp_path / "cursor.json")
     tbl.append(_ledger_docs(spark, "d1", "d2", "d3"))     # seq 1
-    run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
-                        num_partitions=2)
+    run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
     shutil.copy(cursor, str(tmp_path / "cursor_r1.json"))
     tbl.delete_where(spark, "doc_id = 'd1'", "doc_id")    # seq 2
     tbl.delete_where(spark, "doc_id = 'd2'", "doc_id")    # seq 3
-    r2 = run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
-                             num_partitions=2)
+    r2 = run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
     assert [t["batch_id"] for t in r2["tombstones"]] == [2, 3]
     want_rows, want_tombs = _batches(spark, out), _batches(spark, tombs)
     assert want_tombs == {2: {"d1"}, 3: {"d2"}}
 
     shutil.copy(str(tmp_path / "cursor_r1.json"), cursor)  # the crash
-    replay = run_incremental_job(spark, tbl, out, cursor, salt_buckets=8,
-                                 num_partitions=2)
+    replay = run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
     assert replay["tombstones"] == r2["tombstones"]
     assert _batches(spark, out) == want_rows == {1: {"d1", "d2", "d3"}}
     assert _batches(spark, tombs) == want_tombs
+
+
+def test_incremental_replay_under_another_bucket_count(spark, tmp_path):
+    """A crashed window replayed on a smaller core budget runs under
+    another derived bucket count (8 buckets on 2 tasks, then 4 on 1).
+    The sink is keyed by ``_batch_id`` alone, so the replay replaces
+    the batch whole: no row of the first attempt stays beside it."""
+    from accountant_pdf_extract_spark.plans.job import run_incremental_job
+    from accountant_pdf_extract_spark.plans.pipeline import SALT_COL
+    from accountant_pdf_extract_spark.sources.catalog import DocTable
+
+    tbl = DocTable(str(tmp_path / "tbl"))
+    out = str(tmp_path / "out")
+    cursor = str(tmp_path / "cursor.json")
+    tbl.append(_ledger_docs(spark, *(f"a{i}" for i in range(16))))  # seq 1
+    run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
+    shutil.copy(cursor, str(tmp_path / "cursor_r1.json"))
+    tbl.append(_ledger_docs(spark, *(f"b{i}" for i in range(16))))  # seq 2
+    r2 = run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
+    want = _batches(spark, out)
+    assert want == {1: {f"a{i}" for i in range(16)},
+                    2: {f"b{i}" for i in range(16)}}
+
+    shutil.copy(str(tmp_path / "cursor_r1.json"), cursor)  # the crash
+    replay = run_incremental_job(spark, tbl, out, cursor, num_partitions=1)
+    assert replay["segments"] == r2["segments"]
+    assert _batches(spark, out) == want
+    sink = spark.read.parquet(out)
+    assert SALT_COL not in sink.columns
+    keys = [(r["doc_id"], r["order"]) for r in sink.collect()]
+    assert len(keys) == len(set(keys)) == 32
 
 
 def test_incremental_refuses_output_beyond_table_head(spark, tmp_path):
@@ -608,7 +631,7 @@ def test_incremental_refuses_output_beyond_table_head(spark, tmp_path):
     for d in ("a1", "a2", "a3"):                          # seq 1..3
         old.append(_ledger_docs(spark, d))
     run_incremental_job(spark, old, out, str(tmp_path / "old.json"),
-                        salt_buckets=8, num_partitions=2)
+                        num_partitions=2)
     assert set(_batches(spark, out)) == {3}
 
     def tree():
@@ -622,8 +645,7 @@ def test_incremental_refuses_output_beyond_table_head(spark, tmp_path):
     new.append(_ledger_docs(spark, "b1"))                 # seq 1
     cursor = str(tmp_path / "new.json")
     with pytest.raises(ValueError, match="_batch_id=3"):
-        run_incremental_job(spark, new, out, cursor, salt_buckets=8,
-                            num_partitions=2)
+        run_incremental_job(spark, new, out, cursor, num_partitions=2)
     assert tree() == before
     assert not os.path.exists(cursor)
 
@@ -839,6 +861,25 @@ def test_run_job_starts_only_its_write_jobs(spark, tmp_path):
 
     _, write_jobs = _jobs_started_by(spark, bare_write)
     assert write_jobs and len(jobs) == len(write_jobs)
+
+
+def test_bucket_b_runs_on_task_b_mod_tasks(spark):
+    """The salted repartition places bucket b on task b mod the task
+    count: with 16 buckets on 4 tasks, each output partition holds
+    exactly the non-empty buckets congruent to its id mod 4 (hashing
+    the bucket values put 3/3/4/6 buckets on the four tasks)."""
+    from accountant_pdf_extract_spark.plans.pipeline import SALT_COL, extract
+
+    inp = _ledger_docs(spark, *(f"doc-{i:08d}" for i in range(200)))
+    flat = extract(inp, salt_buckets=16, num_partitions=4, keep_salt=True)
+    rows = flat.select(
+        F.spark_partition_id().alias("p"), SALT_COL).distinct().collect()
+    by_task = {}
+    for r in rows:
+        by_task.setdefault(r["p"], set()).add(r[SALT_COL])
+    buckets = set().union(*by_task.values())
+    assert len(buckets) == 16
+    assert by_task == {p: {b for b in buckets if b % 4 == p} for p in range(4)}
 
 
 def test_tally_merge_absorbs_duplicates_and_refuses_conflicts():

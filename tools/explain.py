@@ -21,10 +21,11 @@ COMMENT = {
         "q_extract_spans: ONE Exchange (the spec-mandated salted "
         "repartition, on the narrow proxy rows before any payload "
         "exists, into defaultParallelism partitions — one task per "
-        "core); everything after it is map-only: ONE MapInArrow that "
-        "generates each document and extracts it in the same Python "
-        "runner, then the sink. Scan shows ReadSchema pruned to "
-        "doc_id+text."
+        "core, salt bucket b placed on task b mod defaultParallelism "
+        "by id, not by hash); everything after it is map-only: ONE "
+        "MapInArrow that generates each document and extracts it in "
+        "the same Python runner, then the sink. Scan shows ReadSchema "
+        "pruned to doc_id+text."
     ),
     "q_agg": (
         "partial_ hash aggregate before the exchange (map-side "

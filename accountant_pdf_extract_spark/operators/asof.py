@@ -44,7 +44,7 @@ def asof_join_backward(
     """
     left_cols = left.columns
     # output columns must be unambiguous, and the _side/_r tags must
-    # not clobber caller data — refuse up front (rangejoin house rule)
+    # not clobber caller data — refuse up front
     clash = (set(right_cols) & set(left_cols)) | (
         {"_side", "_r"} & (set(left_cols) | set(right_cols))
     )

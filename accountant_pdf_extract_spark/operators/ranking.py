@@ -1,5 +1,5 @@
-"""Scale-safe EXACT global ranking (row_number / ntile over a whole
-table) without a single-partition sort.
+"""Scale-safe EXACT global ranking (ntile over a whole table) without
+a single-partition sort.
 
 ``Window.orderBy(...)`` with no ``partitionBy`` funnels the entire
 input through ONE task — the classic 100-TB scale killer (fine at
@@ -34,24 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-_INTERNAL = ("_rk", "_tb", "_bkt", "_off", "_total", "_cnt")
-
-
-def global_row_number(
-    df: DataFrame,
-    rank_expr: Column,
-    tiebreak: Column,
-    num_buckets: int = 32,
-    pos_col: str = "pos",
-) -> DataFrame:
-    """Exact 1-based global position ordered by (``rank_expr`` ASC,
-    ``tiebreak`` ASC), appended as ``pos_col`` (and nothing else).
-    ``rank_expr`` must be numeric (it is range-bucketed); order DESC by
-    negating it.  ``tiebreak`` must be unique per row or positions are
-    ambiguous."""
-    return _pos_with_total(
-        df, rank_expr, tiebreak, num_buckets, pos_col
-    ).drop("_total")
+_INTERNAL = ("_rk", "_tb", "_bkt", "_off", "_total", "_cnt", "_pos")
 
 
 def _pos_with_total(
@@ -59,13 +42,13 @@ def _pos_with_total(
     rank_expr: Column,
     tiebreak: Column,
     num_buckets: int,
-    pos_col: str,
 ) -> DataFrame:
-    """Internal: position plus the total row count as ``_total`` (the
-    ntile formula needs it; the public API does not expose it)."""
+    """Exact 1-based global position ``_pos`` ordered by (``rank_expr``
+    ASC, ``tiebreak`` ASC), plus the total row count as ``_total`` (the
+    ntile formula needs it)."""
     if num_buckets < 1:
         raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
-    clash = (set(_INTERNAL) | {pos_col}) & set(df.columns)
+    clash = set(_INTERNAL) & set(df.columns)
     if clash:
         raise ValueError(
             f"columns {sorted(clash)} collide with ranking internals/"
@@ -117,7 +100,7 @@ def _pos_with_total(
     w = Window.partitionBy("_bkt").orderBy("_rk", "_tb")
     return (
         b.join(F.broadcast(offsets), "_bkt")
-        .withColumn(pos_col, F.row_number().over(w) + F.col("_off"))
+        .withColumn("_pos", F.row_number().over(w) + F.col("_off"))
         .drop("_rk", "_tb", "_bkt", "_off")
     )
 
@@ -135,7 +118,7 @@ def scalable_ntile(
     global position — no unpartitioned data-sized window anywhere."""
     if n_tiles < 1:
         raise ValueError(f"n_tiles must be >= 1, got {n_tiles}")
-    pos = _pos_with_total(df, rank_expr, tiebreak, num_buckets, "_pos")
+    pos = _pos_with_total(df, rank_expr, tiebreak, num_buckets)
     base = F.floor(F.col("_total") / n_tiles)
     rem = F.col("_total") % n_tiles
     big_span = rem * (base + 1)  # rows covered by the (base+1)-sized tiles

@@ -72,20 +72,6 @@ def sessionize(
     )
 
 
-def session_stats(
-    events: DataFrame, gap_minutes: int = 30
-) -> DataFrame:
-    """Per (user, session): event count + span seconds."""
-    s = sessionize(events, gap_minutes)
-    return s.groupBy("user_id", "session_idx").agg(
-        F.count("*").alias("n_events"),
-        (
-            F.max(ntz_epoch_seconds(F.col("ts")))
-            - F.min(ntz_epoch_seconds(F.col("ts")))
-        ).alias("span_s"),
-    )
-
-
 def grouped_stats(events: DataFrame) -> DataFrame:
     """Per-user robust stats via grouped-map ``applyInPandas`` (the
     A5 custom vectorized aggregate surface): median/IQR on integer

@@ -6,7 +6,6 @@ Catalyst and oracle-checkable:
   |queries| × |corpus| × dim rows, so gate query count.
 * ``cosine_near_dup_pairs`` — embedding-cosine near-duplicate pairs
   over an id-capped pair space.
-* ``quantize_embeddings`` — per-vector int8 quantization.
 
 Quantization note: for engine-vs-oracle determinism the top-k and
 near-dup paths work on milli-quantized integer components
@@ -123,24 +122,4 @@ def cosine_near_dup_pairs(
             .alias("cos_milli"),
         )
         .where(F.col("cos_milli") >= threshold_milli)
-    )
-
-
-def quantize_embeddings(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Symmetric int8 quantization per vector (the storage/ANN-index
-    compression step): q_i = round(x_i * 127 / max|x|), scale recorded
-    in milli units.  Pure Catalyst per-row HOFs — map-only, no
-    shuffle, 4x smaller than float32.  Zero vectors quantize to all
-    zeros with scale 0."""
-    as_double = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    mx = F.array_max(F.transform(as_double, lambda x: F.abs(x)))
-    q = F.when(mx > 0, F.transform(
-        as_double, lambda x: F.round(x * 127 / mx).cast("long")
-    )).otherwise(F.transform(as_double, lambda x: F.lit(0).cast("long")))
-    return df.select(
-        F.col(id_col),
-        q.alias("q8"),
-        F.round(mx * 1000).cast("long").alias("max_abs_milli"),
     )

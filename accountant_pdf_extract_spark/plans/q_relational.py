@@ -387,20 +387,6 @@ def q_except(spark, sf):
     return o.subtract(li)
 
 
-@register(
-    "q_intersect",
-    """
-    SELECT c_custkey FROM customer
-    INTERSECT
-    SELECT o_custkey AS c_custkey FROM orders
-    """,
-)
-def q_intersect(spark, sf):
-    c = t(spark, sf, "customer").select("c_custkey")
-    o = t(spark, sf, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return c.intersect(o)
-
-
 # ---------------------------------------------------------------- scalar: json/date
 
 
@@ -438,24 +424,6 @@ def q_dates(spark, sf):
         .select(F.to_date("ts").alias("day"), "user_id")
         .groupBy("day")
         .agg(F.count("*").alias("n"), F.countDistinct("user_id").alias("n_users"))
-    )
-
-
-@register(
-    "q_date_roundtrip",
-    """
-    SELECT o_orderkey,
-           strftime(o_orderdate, '%d.%m.%Y') AS dotted,
-           CAST(strptime(strftime(o_orderdate, '%d.%m.%Y'), '%d.%m.%Y') AS DATE) AS parsed
-    FROM orders
-    """,
-)
-def q_date_roundtrip(spark, sf):
-    dotted = F.date_format("o_orderdate", "dd.MM.yyyy")
-    return t(spark, sf, "orders").select(
-        "o_orderkey",
-        dotted.alias("dotted"),
-        F.to_date(dotted, "dd.MM.yyyy").alias("parsed"),
     )
 
 
@@ -570,24 +538,6 @@ def q_sort(spark, sf):
 
 
 @register(
-    "q_hof_filter",
-    """
-    SELECT vec_id,
-           len(list_filter(embedding, x -> x > 0)) AS n_pos,
-           len(list_filter(embedding, x -> x < 0)) AS n_neg
-    FROM embeddings
-    """,
-)
-def q_hof_filter(spark, sf):
-    e = t(spark, sf, "embeddings")
-    return e.select(
-        "vec_id",
-        F.size(F.filter("embedding", lambda x: x > 0)).alias("n_pos"),
-        F.size(F.filter("embedding", lambda x: x < 0)).alias("n_neg"),
-    )
-
-
-@register(
     "q_sessionize",
     """
     WITH lagd AS (
@@ -612,32 +562,6 @@ def q_sessionize(spark, sf):
 
 
 @register(
-    "q_session_stats",
-    """
-    WITH lagd AS (
-      SELECT user_id, event_id, ts,
-             CASE WHEN floor(epoch(ts)) - lag(floor(epoch(ts))) OVER
-                    (PARTITION BY user_id ORDER BY ts, event_id) > 1800
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events WHERE ts IS NOT NULL),
-    sess AS (
-      SELECT user_id, ts,
-             CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS BIGINT) AS session_idx
-      FROM lagd)
-    SELECT user_id, session_idx, count(*) AS n_events,
-           CAST(max(floor(epoch(ts))) - min(floor(epoch(ts))) AS BIGINT) AS span_s
-    FROM sess GROUP BY user_id, session_idx
-    """,
-)
-def q_session_stats(spark, sf):
-    from accountant_pdf_extract_spark.operators.sessions import session_stats
-
-    return session_stats(t(spark, sf, "events"), gap_minutes=30)
-
-
-@register(
     "q_grouped_stats",
     """
     SELECT user_id, count(*) AS n_events,
@@ -651,32 +575,6 @@ def q_grouped_stats(spark, sf):
     from accountant_pdf_extract_spark.operators.sessions import grouped_stats
 
     return grouped_stats(t(spark, sf, "events"))
-
-
-@register(
-    "q_pivot",
-    """
-    SELECT l_returnflag,
-           CAST(sum(CASE WHEN l_linestatus = 'F'
-               THEN CAST(round(l_quantity * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS qty_f,
-           CAST(sum(CASE WHEN l_linestatus = 'O'
-               THEN CAST(round(l_quantity * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS qty_o
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def q_pivot(spark, sf):
-    cc = cents(F.col("l_quantity"))
-    out = (
-        t(spark, sf, "lineitem")
-        .groupBy("l_returnflag")
-        .pivot("l_linestatus", ["F", "O"])
-        .agg(F.sum(cc))
-    )
-    return out.select(
-        "l_returnflag",
-        F.coalesce(F.col("F"), F.lit(0)).alias("qty_f"),
-        F.coalesce(F.col("O"), F.lit(0)).alias("qty_o"),
-    )
 
 
 @register(
@@ -703,53 +601,6 @@ def q_ntile(spark, sf):
         F.col("c_custkey"),
         tile_col="quartile",
     ).select("c_custkey", "quartile")
-
-
-@register(
-    "q_percentile",
-    """
-    SELECT l_returnflag,
-           quantile_cont(CAST(round(l_extendedprice * 100) AS BIGINT), 0.5)
-             AS p50_cents,
-           quantile_cont(CAST(round(l_extendedprice * 100) AS BIGINT), 0.95)
-             AS p95_cents
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def q_percentile(spark, sf):
-    cc = cents(F.col("l_extendedprice"))
-    return (
-        t(spark, sf, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-            F.percentile(cc, F.lit(0.5)).alias("p50_cents"),
-            F.percentile(cc, F.lit(0.95)).alias("p95_cents"),
-        )
-    )
-
-
-@register(
-    "q_like",
-    """
-    SELECT p_brand, count(*) AS n,
-           CAST(sum(CAST(round(p_retailprice * 100) AS BIGINT)) AS BIGINT) AS price_cents
-    FROM part
-    WHERE p_type LIKE '%ARD%' AND p_size BETWEEN 5 AND 40
-    GROUP BY p_brand
-    """,
-)
-def q_like(spark, sf):
-    return (
-        t(spark, sf, "part")
-        .where(F.col("p_type").like("%ARD%") & F.col("p_size").between(5, 40))
-        .groupBy("p_brand")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(cents(F.col("p_retailprice"))).alias(
-                "price_cents"
-            ),
-        )
-    )
 
 
 @register(
@@ -810,158 +661,3 @@ def q_asof(spark, sf):
         left, right, on="ts", by="user_id",
         right_cols=["quote_id", "quote_cents"],
     ).drop("ts")
-
-
-@register(
-    "q_histbin",
-    """
-    SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS bin,
-           count(*) AS n,
-           CAST(min(o_orderkey) AS BIGINT) AS min_key
-    FROM orders GROUP BY bin
-    """,
-)
-def q_histbin(spark, sf):
-    """Histogram binning: fixed-width buckets over order totals."""
-    return (
-        t(spark, sf, "orders")
-        .groupBy(
-            F.floor(F.col("o_totalprice") / 50000).cast("long").alias("bin")
-        )
-        .agg(F.count("*").alias("n"), F.min("o_orderkey").alias("min_key"))
-    )
-
-
-@register(
-    "q_countif",
-    """
-    SELECT o_orderpriority,
-           count(*) FILTER (WHERE o_totalprice > 150000) AS n_big,
-           count(*) FILTER (WHERE o_orderstatus = 'F') AS n_finished,
-           count(*) AS n
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
-def q_countif(spark, sf):
-    """Conditional aggregation: count_if / FILTER-clause twins."""
-    return (
-        t(spark, sf, "orders")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count_if(F.col("o_totalprice") > 150000).alias("n_big"),
-            F.count_if(F.col("o_orderstatus") == "F").alias("n_finished"),
-            F.count("*").alias("n"),
-        )
-    )
-
-
-@register(
-    "q_promo_share",
-    """
-    SELECT CAST(floor(
-             1000.0 * sum(CASE WHEN p.p_type LIKE 'PROMO%'
-                 THEN CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)
-                 ELSE 0 END)
-             / sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT))
-           ) AS BIGINT) AS promo_milli
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    """,
-)
-def q_promo_share(spark, sf):
-    li = t(spark, sf, "lineitem")
-    p = t(spark, sf, "part")
-    cc = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    promo = F.when(F.col("p_type").like("PROMO%"), cc).otherwise(F.lit(0))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .agg(
-            F.floor(F.lit(1000.0) * F.sum(promo) / F.sum(cc))
-            .cast("long")
-            .alias("promo_milli")
-        )
-    )
-
-
-@register(
-    "q_range_join",
-    """
-    WITH p AS (
-      SELECT event_id, user_id,
-             CAST(floor(epoch(ts) / 86400.0) AS BIGINT) - 10592 AS d
-      FROM events),
-    iv AS (
-      SELECT o_orderkey, o_orderpriority,
-             CAST(floor(epoch(o_orderdate) / 86400.0) AS BIGINT) AS lo,
-             CAST(floor(epoch(o_orderdate) / 86400.0) AS BIGINT) + 7 AS hi
-      FROM orders)
-    SELECT o_orderpriority, count(*) AS n,
-           CAST(sum(event_id) AS BIGINT) AS id_sum,
-           CAST(sum(o_orderkey) AS BIGINT) AS key_sum
-    FROM p JOIN iv ON p.d BETWEEN iv.lo AND iv.hi
-    GROUP BY o_orderpriority
-    """,
-)
-def q_range_join(spark, sf):
-    """Interval containment join WITHOUT a BroadcastNestedLoopJoin:
-    events (points, epoch days) against 7-day order windows via the
-    bucketed equi-join in operators/rangejoin.py; the oracle runs the
-    plain non-equi BETWEEN join.  Aggregated so the match set verifies
-    exactly cross-engine.
-
-    Event days are shifted by a CONSTANT 10592 to land inside the
-    order-date era (events are generated in 2024, days ~19723-19752;
-    orders span days 9131-11535 at every SF) — without the shift the
-    domains are disjoint and the query passes vacuously with 0 rows,
-    gating nothing."""
-    from accountant_pdf_extract_spark.operators.rangejoin import range_join
-
-    pts = t(spark, sf, "events").select(
-        "event_id",
-        "user_id",
-        (F.floor(F.unix_timestamp("ts") / 86400) - 10592).alias("d"),
-    )
-    iv = (
-        t(spark, sf, "orders")
-        .select(
-            "o_orderkey",
-            "o_orderpriority",
-            F.floor(F.unix_timestamp("o_orderdate") / 86400).alias("lo"),
-        )
-        .withColumn("hi", F.col("lo") + 7)
-    )
-    return (
-        range_join(pts, iv, "d", "lo", "hi", bucket_width=7)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("event_id").alias("id_sum"),
-            F.sum("o_orderkey").alias("key_sum"),
-        )
-    )
-
-
-@register(
-    "q_global_rank",
-    """
-    SELECT o_orderkey,
-           CAST(row_number() OVER (
-             ORDER BY CAST(round(o_totalprice * 100) AS BIGINT) DESC,
-                      o_orderkey) AS BIGINT) AS pos
-    FROM orders
-    """,
-)
-def q_global_rank(spark, sf):
-    """Exact global row_number over the whole table with NO
-    unpartitioned data window (operators/ranking.py: range-bucketed
-    partitioned windows + broadcast offsets); the oracle runs the
-    plain global window."""
-    from accountant_pdf_extract_spark.operators.ranking import (
-        global_row_number,
-    )
-
-    return global_row_number(
-        t(spark, sf, "orders"),
-        -cents(F.col("o_totalprice")),
-        F.col("o_orderkey"),
-        num_buckets=32,
-    ).select("o_orderkey", "pos")

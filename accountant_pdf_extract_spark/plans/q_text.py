@@ -45,25 +45,6 @@ def q_regex(spark, sf):
 
 
 @register(
-    "q_strnorm",
-    """
-    SELECT doc_id,
-           upper(substr(trim(text), 1, 20)) AS head_upper,
-           length(text) AS n,
-           replace(substr(text, 1, 30), ' ', '_') AS underscored
-    FROM documents
-    """,
-)
-def q_strnorm(spark, sf):
-    return t(spark, sf, "documents").select(
-        "doc_id",
-        F.upper(F.substring(F.trim(F.col("text")), 1, 20)).alias("head_upper"),
-        F.length("text").alias("n"),
-        F.regexp_replace(F.substring("text", 1, 30), " ", "_").alias("underscored"),
-    )
-
-
-@register(
     "q_linefreq",
     """
     SELECT word, count(*) AS n, count(DISTINCT doc_id) AS n_docs
@@ -323,26 +304,6 @@ def q_dedup_minhash(spark, sf):
 
 
 @register(
-    "q_dedup_minhash_pairs",
-    f"""
-    WITH sh AS ({_SHINGLE_SQL}),
-    banded AS (SELECT sid, band, shingle
-               FROM sh, unnest([0,1,2,3]) AS b(band)),
-    buckets AS (
-      SELECT sid, band,
-             min(md5(CAST(band AS VARCHAR) || '-' || shingle)) AS bucket
-      FROM banded GROUP BY sid, band)
-    SELECT DISTINCT x.sid AS a, y.sid AS b
-    FROM buckets x JOIN buckets y USING (band, bucket)
-    WHERE x.sid < y.sid
-    """,
-)
-def q_dedup_minhash_pairs(spark, sf):
-    docs = t(spark, sf, "documents").where(F.col("doc_id") < 40)
-    return dedup.minhash_candidate_pairs(dedup.minhash_bands(docs, k=8, bands=4))
-
-
-@register(
     "q_dedup_lsh_rescored",
     f"""
     WITH sh AS ({_SHINGLE_SQL}),
@@ -464,27 +425,6 @@ def q_embed_topk(spark, sf):
 def q_dedup_embed(spark, sf):
     return similarity.cosine_near_dup_pairs(
         t(spark, sf, "embeddings"), max_id=100, threshold_milli=250
-    )
-
-
-@register(
-    "q_amount_cents_udf",
-    """
-    SELECT o_orderkey,
-           CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-    FROM orders
-    """,
-)
-def q_amount_cents_udf(spark, sf):
-    """Scalar pandas_udf surface: format each price as a display amount
-    string, then vector-parse it back to cents."""
-    from accountant_pdf_extract_spark.functions.amounts import amount_to_cents
-
-    amount_str = F.concat(
-        F.lit("$"), F.col("o_totalprice").cast("decimal(18,2)").cast("string")
-    )
-    return t(spark, sf, "orders").select(
-        "o_orderkey", amount_to_cents(amount_str).alias("cents")
     )
 
 
@@ -634,173 +574,3 @@ def q_term_stats(spark, sf):
     return textstats.term_doc_stats(
         t(spark, sf, "documents"), min_df=50
     )
-
-
-@register(
-    "q_chunk",
-    """
-    WITH toks AS (
-      SELECT doc_id, list_filter(
-               regexp_split_to_array(trim(text), '\\s+'), x -> x <> '') AS tk
-      FROM documents),
-    nn AS (SELECT doc_id, tk, len(tk) AS n FROM toks WHERE len(tk) > 0),
-    ch AS (SELECT doc_id, tk,
-                  unnest(generate_series(0, (greatest(n - 8, 1) - 1) // 24))
-                    AS chunk_id
-           FROM nn)
-    SELECT doc_id, chunk_id,
-           array_to_string(tk[chunk_id*24+1 : chunk_id*24+32], ' ')
-             AS chunk_text,
-           CAST(len(tk[chunk_id*24+1 : chunk_id*24+32]) AS BIGINT)
-             AS n_chunk_tokens
-    FROM ch
-    """,
-)
-def q_chunk(spark, sf):
-    """Overlapping token-window chunking (32-token chunks, 8-token
-    overlap → step 24): the stage between cleaning and shard packing.
-    Map-side sequence+slice HOFs; oracle mirrors with list slicing."""
-    from accountant_pdf_extract_spark.operators.chunking import chunk_text
-
-    return chunk_text(
-        t(spark, sf, "documents"), chunk_tokens=32, overlap=8
-    )
-
-
-@register(
-    "q_quantize",
-    """
-    WITH m AS (
-      SELECT vec_id,
-             list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))
-               AS mx,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings)
-    SELECT vec_id,
-           array_to_string(
-             CASE WHEN mx > 0
-                  THEN list_transform(
-                         e, x -> CAST(CAST(round(x * 127 / mx) AS BIGINT)
-                                      AS VARCHAR))
-                  ELSE list_transform(e, x -> '0') END, ',') AS q8,
-           CAST(round(mx * 1000) AS BIGINT) AS max_abs_milli
-    FROM m
-    """,
-)
-def q_quantize(spark, sf):
-    """Symmetric int8 embedding quantization (array output stringified
-    for the cross-engine hash; FLOAT components cast to DOUBLE before
-    arithmetic on both sides)."""
-    from accountant_pdf_extract_spark.operators.similarity import (
-        quantize_embeddings,
-    )
-
-    q = quantize_embeddings(t(spark, sf, "embeddings"))
-    return q.select(
-        "vec_id",
-        F.array_join(
-            F.transform(F.col("q8"), lambda x: x.cast("string")), ","
-        ).alias("q8"),
-        "max_abs_milli",
-    )
-
-
-@register(
-    "q_repetition",
-    r"""
-    WITH tok AS (
-      SELECT doc_id, generate_subscripts(l, 1) AS i, unnest(l) AS t
-      FROM (SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                               x -> x <> '') AS l
-            FROM documents)),
-    tc AS (SELECT doc_id, t, count(*) AS c FROM tok GROUP BY doc_id, t),
-    tstat AS (SELECT doc_id,
-                     CAST(sum(c) AS BIGINT) AS n,
-                     CAST(max(c) AS BIGINT) AS best,
-                     CAST(coalesce(sum(CASE WHEN c >= 2 THEN c END), 0) AS BIGINT) AS dup
-              FROM tc GROUP BY doc_id),
-    big AS (SELECT a.doc_id, a.t || ' ' || b.t AS g
-            FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.i = a.i + 1),
-    bc AS (SELECT doc_id, g, count(*) AS c FROM big GROUP BY doc_id, g),
-    bstat AS (SELECT doc_id,
-                     CAST(sum(c) AS BIGINT) AS nb,
-                     CAST(max(c) AS BIGINT) AS best,
-                     CAST(coalesce(sum(CASE WHEN c >= 2 THEN c END), 0) AS BIGINT) AS dup
-              FROM bc GROUP BY doc_id)
-    SELECT d.doc_id,
-           CAST(coalesce(ts.n, 0) AS BIGINT) AS n_tokens,
-           CAST(CASE WHEN ts.n > 0 THEN floor(ts.best * 1000.0 / ts.n) ELSE 0 END AS BIGINT) AS top_token_milli,
-           CAST(CASE WHEN ts.n > 0 THEN floor(ts.dup * 1000.0 / ts.n) ELSE 0 END AS BIGINT) AS dup_token_milli,
-           CAST(CASE WHEN bs.nb > 0 THEN floor(bs.best * 1000.0 / bs.nb) ELSE 0 END AS BIGINT) AS top_bigram_milli,
-           CAST(CASE WHEN bs.nb > 0 THEN floor(bs.dup * 1000.0 / bs.nb) ELSE 0 END AS BIGINT) AS dup_bigram_milli
-    FROM documents d
-    LEFT JOIN tstat ts USING (doc_id)
-    LEFT JOIN bstat bs USING (doc_id)
-    """,
-)
-def q_repetition(spark, sf):
-    """Gopher-style repetition quality signals — engine computes every
-    stat map-side per row (array_sort + linear run-length fold, bigrams
-    from zip_with over shifted slices: ZERO exchanges), while the
-    oracle does the explode + per-doc GROUP BY."""
-    return textstats.repetition_features(t(spark, sf, "documents"))
-
-
-@register(
-    "q_oov",
-    r"""
-    WITH tok AS (
-      SELECT doc_id, unnest(list_filter(
-               regexp_split_to_array(lower(trim(text)), '\s+'),
-               x -> x <> '')) AS t
-      FROM documents),
-    v AS (SELECT t FROM (SELECT t, count(*) AS c FROM tok GROUP BY t
-                         ORDER BY c DESC, t ASC LIMIT 20)),
-    per AS (SELECT doc_id,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(CASE WHEN t NOT IN (SELECT t FROM v)
-                            THEN 1 ELSE 0 END) AS BIGINT) AS oov
-            FROM tok GROUP BY doc_id)
-    SELECT d.doc_id,
-           CAST(coalesce(per.n, 0) AS BIGINT) AS n_tokens,
-           CAST(CASE WHEN per.n > 0 THEN floor(per.oov * 1000.0 / per.n)
-                ELSE 0 END AS BIGINT) AS oov_milli
-    FROM documents d LEFT JOIN per USING (doc_id)
-    """,
-)
-def q_oov(spark, sf):
-    """Out-of-vocabulary rate vs the corpus top-20 vocabulary: the
-    vocabulary cut is TakeOrderedAndProject (never a global sort), the
-    20 survivors collapse to one broadcast array, and scoring is a
-    map-side HOF — the corpus never shuffles for the scoring pass."""
-    return textstats.oov_rate(t(spark, sf, "documents"), vocab_size=20)
-
-
-@register(
-    "q_jsonl_roundtrip",
-    """
-    SELECT doc_id, text, lang, source, n_chars FROM documents
-    """,
-)
-def q_jsonl_roundtrip(spark, sf):
-    """Lossless-export proof: the engine writes `documents` to
-    content-addressed gzip JSONL shards and returns the READ-BACK
-    rows, while the oracle reads the parquet directly — the driver's
-    full-value hash compare then certifies the export/import is
-    byte-lossless for every row (ids, unicode text, nulls, counts)."""
-    import hashlib
-    import tempfile
-
-    from accountant_pdf_extract_spark.sources.jsonl import (
-        read_jsonl,
-        write_jsonl_shards,
-    )
-
-    docs = t(spark, sf, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    tag = hashlib.md5(sf.encode()).hexdigest()[:8]
-    out = f"{tempfile.gettempdir()}/apes_jsonl_export_{tag}"
-    write_jsonl_shards(docs, out, n_shards=8)
-    return read_jsonl(spark, out, docs.schema)

@@ -159,895 +159,3 @@ def tpch_q6(spark, sf):
         ).alias("revenue_cents"),
         F.count("*").alias("n"),
     )
-
-
-@register(
-    "tpch_q10",
-    """
-    SELECT c_custkey, c_name, n_name,
-           CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                         AS BIGINT)) AS BIGINT) AS revenue_cents
-    FROM customer, orders, lineitem, nation
-    WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-      AND l_returnflag = 'R' AND c_nationkey = n_nationkey
-    GROUP BY c_custkey, c_name, n_name
-    ORDER BY revenue_cents DESC, c_custkey
-    LIMIT 20
-    """,
-)
-def tpch_q10(spark, sf):
-    """Returned-item revenue by customer (TPC-H Q10 shape): fact-side
-    shuffle joins orders⋈lineitem, broadcast nation dim, top-20 via
-    TakeOrderedAndProject (never a global-sort window)."""
-    li = t(spark, sf, "lineitem").where(F.col("l_returnflag") == "R")
-    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        t(spark, sf, "customer")
-        .join(t(spark, sf, "orders"), F.col("c_custkey") == F.col("o_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            F.broadcast(t(spark, sf, "nation")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(rev).alias("revenue_cents"))
-        .orderBy(F.desc("revenue_cents"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-@register(
-    "tpch_q18",
-    """
-    WITH big AS (
-      SELECT l_orderkey,
-             CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT)
-               AS qty_cents
-      FROM lineitem GROUP BY l_orderkey
-      HAVING sum(CAST(round(l_quantity * 100) AS BIGINT)) > 30000)
-    SELECT c_custkey, o_orderkey, qty_cents,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS total_cents
-    FROM big JOIN orders ON o_orderkey = l_orderkey
-             JOIN customer ON c_custkey = o_custkey
-    """,
-)
-def tpch_q18(spark, sf):
-    """Large-volume orders (TPC-H Q18 shape): pre-aggregate the fact
-    side FIRST (map-side partial agg shrinks lineitem to one row per
-    order), then join the small survivor set — never join-then-agg."""
-    big = (
-        t(spark, sf, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sum(cents(F.col("l_quantity"))).alias("qty_cents"))
-        .where(F.col("qty_cents") > 30000)
-    )
-    return (
-        big.join(
-            t(spark, sf, "orders"), F.col("o_orderkey") == F.col("l_orderkey")
-        )
-        .join(t(spark, sf, "customer"), F.col("c_custkey") == F.col("o_custkey"))
-        .select(
-            "c_custkey",
-            "o_orderkey",
-            "qty_cents",
-            cents(F.col("o_totalprice")).alias("total_cents"),
-        )
-    )
-
-
-@register(
-    "tpch_q4",
-    """
-    SELECT o_orderpriority, count(*) AS order_count
-    FROM orders o
-    WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o_orderdate < TIMESTAMP '1996-07-01'
-      AND EXISTS (
-        SELECT 1 FROM lineitem l
-        WHERE l.l_orderkey = o.o_orderkey
-          AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY)
-    GROUP BY o_orderpriority
-    """,
-)
-def tpch_q4(spark, sf):
-    """Order-priority checking (TPC-H Q4 shape, late-shipment proxy —
-    this lineitem carries l_shipdate, not commit/receipt dates):
-    EXISTS compiles to a LEFT SEMI join with a compound non-equi
-    condition; the lineitem side stays unaggregated (semi join
-    short-circuits per order)."""
-    o = t(spark, sf, "orders").where(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1996-07-01")
-    )
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_shipdate")
-    return (
-        o.join(
-            li,
-            (F.col("l_orderkey") == F.col("o_orderkey"))
-            & (F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 30)),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-    )
-
-
-@register(
-    "tpch_q12",
-    """
-    SELECT l_returnflag,
-           CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-      AND l_shipdate < TIMESTAMP '1998-01-01'
-    GROUP BY l_returnflag
-    """,
-)
-def tpch_q12(spark, sf):
-    """Shipping-class split (TPC-H Q12 shape over the available
-    columns): conditional CASE sums inside one partial+final hash
-    aggregate after the fact join."""
-    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    li = t(spark, sf, "lineitem").where(
-        (F.col("l_shipdate") >= "1997-01-01")
-        & (F.col("l_shipdate") < "1998-01-01")
-    )
-    return (
-        t(spark, sf, "orders")
-        .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(hi, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~hi, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
-
-
-@register(
-    "tpch_q7",
-    """
-    SELECT supp_nation, cust_nation, l_year, CAST(sum(v) AS BIGINT) AS revenue_cents
-    FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                 CAST(year(l.l_shipdate) AS BIGINT) AS l_year,
-                 CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT) AS v
-          FROM supplier s
-          JOIN lineitem l ON s.s_suppkey = l.l_suppkey
-          JOIN orders o ON o.o_orderkey = l.l_orderkey
-          JOIN customer c ON c.c_custkey = o.o_custkey
-          JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-          JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-          WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-                 OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-            AND l.l_shipdate BETWEEN TIMESTAMP '1995-01-01 00:00:00'
-                                 AND TIMESTAMP '1996-12-31 00:00:00')
-    GROUP BY supp_nation, cust_nation, l_year
-    """,
-)
-def tpch_q7(spark, sf):
-    """Q7 volume-shipping shape (nation-pair revenue by year).  The
-    two nation dims broadcast (25 rows); the nation-pair disjunction is
-    applied post-join while supplier/customer pre-filter to the two
-    nations so the fact joins stay small."""
-    n = t(spark, sf, "nation").where(F.col("n_name").isin("NATION_1", "NATION_2"))
-    s = t(spark, sf, "supplier").join(
-        F.broadcast(n.select(F.col("n_nationkey").alias("sn_key"),
-                             F.col("n_name").alias("supp_nation"))),
-        F.col("s_nationkey") == F.col("sn_key"),
-    )
-    c = t(spark, sf, "customer").join(
-        F.broadcast(n.select(F.col("n_nationkey").alias("cn_key"),
-                             F.col("n_name").alias("cust_nation"))),
-        F.col("c_nationkey") == F.col("cn_key"),
-    )
-    li = t(spark, sf, "lineitem").where(
-        F.col("l_shipdate").between("1995-01-01", "1996-12-31")
-    )
-    cc = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        li.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(t(spark, sf, "orders"), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .where(
-            ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
-            | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-        )
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").cast("long").alias("l_year"),
-        )
-        .agg(F.sum(cc).alias("revenue_cents"))
-    )
-
-
-@register(
-    "tpch_q13",
-    """
-    SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-    FROM (SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT) AS c_count
-          FROM customer c LEFT OUTER JOIN orders o
-            ON c.c_custkey = o.o_custkey
-           AND o.o_orderpriority <> '1-URGENT'
-          GROUP BY c.c_custkey)
-    GROUP BY c_count
-    """,
-)
-def tpch_q13(spark, sf):
-    """Q13 customer-order-count distribution: LEFT OUTER join with a
-    join-side predicate (urgent orders excluded WITHOUT dropping
-    order-less customers), then a two-level aggregate."""
-    c = t(spark, sf, "customer")
-    o = t(spark, sf, "orders").where(F.col("o_orderpriority") != "1-URGENT")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-        .groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-    )
-
-
-@register(
-    "tpch_q17",
-    """
-    WITH pf AS (SELECT p_partkey FROM part
-                WHERE p_brand = 'Brand#23' AND p_size < 15),
-         lp AS (SELECT l.l_partkey,
-                       CAST(round(l.l_quantity * 100) AS BIGINT) AS q_cents,
-                       CAST(round(l.l_extendedprice * 100) AS BIGINT) AS p_cents
-                FROM lineitem l JOIN pf ON l.l_partkey = pf.p_partkey),
-         ag AS (SELECT l_partkey,
-                       CAST(sum(q_cents) AS BIGINT) AS sum_q,
-                       CAST(count(*) AS BIGINT) AS cnt
-                FROM lp GROUP BY l_partkey)
-    SELECT CAST(coalesce(sum(lp.p_cents), 0) // 7 AS BIGINT) AS avg_yearly_cents
-    FROM lp JOIN ag ON lp.l_partkey = ag.l_partkey
-    WHERE lp.q_cents * 5 * ag.cnt < ag.sum_q
-    """,
-)
-def tpch_q17(spark, sf):
-    """Q17 small-quantity-order revenue (per-part avg correlated
-    subquery).  Engine plan: the brand/size filter broadcasts into the
-    fact join, then the per-part average becomes a PARTITIONED window
-    (sum/count over l_partkey) — one exchange, no self-join, no
-    re-scan; the quantity test is pure integer arithmetic
-    (q*5*cnt < sum_q  <=>  qty < 0.2*avg)."""
-    from pyspark.sql.window import Window
-
-    pf = t(spark, sf, "part").where(
-        (F.col("p_brand") == "Brand#23") & (F.col("p_size") < 15)
-    ).select("p_partkey")
-    lp = (
-        t(spark, sf, "lineitem")
-        .join(F.broadcast(pf), F.col("l_partkey") == F.col("p_partkey"))
-        .select(
-            "l_partkey",
-            cents(F.col("l_quantity")).alias("q_cents"),
-            cents(F.col("l_extendedprice")).alias("p_cents"),
-        )
-    )
-    w = Window.partitionBy("l_partkey")
-    return (
-        lp.withColumn("sum_q", F.sum("q_cents").over(w))
-        .withColumn("cnt", F.count("*").over(w))
-        .where(F.col("q_cents") * 5 * F.col("cnt") < F.col("sum_q"))
-        .agg(
-            F.expr("coalesce(sum(p_cents), 0) div 7")
-            .cast("long")
-            .alias("avg_yearly_cents")
-        )
-    )
-
-
-@register(
-    "tpch_q19",
-    """
-    SELECT CAST(coalesce(sum(
-             CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)
-           ), 0) AS BIGINT) AS revenue_cents
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
-           AND l.l_quantity BETWEEN 1 AND 11)
-       OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 10
-           AND l.l_quantity BETWEEN 10 AND 20)
-       OR (p.p_brand = 'Brand#34' AND p.p_size BETWEEN 1 AND 15
-           AND l.l_quantity BETWEEN 20 AND 30)
-    """,
-)
-def tpch_q19(spark, sf):
-    """Q19 disjunctive-predicate join.  The OR spans both sides, so
-    Catalyst cannot push anything to either scan by itself — the
-    engine derives the implied single-side filters (brand IN the three
-    brands / size <= 15 on part, quantity <= 30 on lineitem) so both
-    scans prune BEFORE the join, and the exact disjunction runs as the
-    residual post-join filter."""
-    p = t(spark, sf, "part").where(
-        F.col("p_brand").isin("Brand#12", "Brand#23", "Brand#34")
-        & F.col("p_size").between(1, 15)
-    )
-    li = t(spark, sf, "lineitem").where(F.col("l_quantity").between(1, 30))
-    q = F.col("l_quantity")
-    cond = (
-        ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 5) & q.between(1, 11))
-        | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 10) & q.between(10, 20))
-        | ((F.col("p_brand") == "Brand#34") & F.col("p_size").between(1, 15) & q.between(20, 30))
-    )
-    cc = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
-        .where(cond)
-        .agg(F.coalesce(F.sum(cc), F.lit(0)).cast("long").alias("revenue_cents"))
-    )
-
-
-@register(
-    "tpch_q22",
-    """
-    WITH pool AS (SELECT c_custkey, c_nationkey,
-                         CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-                  FROM customer WHERE c_nationkey IN (1, 3, 5, 7, 9)),
-         s AS (SELECT CAST(sum(cents) AS BIGINT) AS total,
-                      CAST(count(*) AS BIGINT) AS n
-               FROM pool WHERE cents > 0)
-    SELECT c_nationkey, CAST(count(*) AS BIGINT) AS numcust,
-           CAST(sum(cents) AS BIGINT) AS totacctbal_cents
-    FROM pool, s
-    WHERE pool.cents > 0 AND pool.cents * s.n > s.total
-      AND NOT EXISTS (SELECT 1 FROM orders o
-                      WHERE o.o_custkey = pool.c_custkey
-                        AND o.o_orderpriority = '1-URGENT')
-    GROUP BY c_nationkey
-    """,
-)
-def tpch_q22(spark, sf):
-    """Q22 global-avg + anti-join shape: customers in five nations
-    with above-average positive balance and no URGENT orders (the
-    driver testdata gives every customer at least one order, so the
-    classic no-orders predicate would be vacuously empty — the
-    filtered anti-join keeps the identical plan shape with a
-    non-trivial result).  The mean test is pure integer (cents*n >
-    total — strict, no float avg crosses the engines); the (total, n)
-    scalar broadcasts; the no-urgent-orders test is a shuffle LEFT
-    ANTI against orders (orders' custkey set is too big to broadcast
-    at scale)."""
-    pool = (
-        t(spark, sf, "customer")
-        .where(F.col("c_nationkey").isin(1, 3, 5, 7, 9))
-        .select(
-            "c_custkey",
-            "c_nationkey",
-            cents(F.col("c_acctbal")).alias("cents"),
-        )
-    )
-    s = pool.where(F.col("cents") > 0).agg(
-        F.sum("cents").alias("total"), F.count("*").alias("n")
-    )
-    o = (
-        t(spark, sf, "orders")
-        .where(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_custkey")
-    )
-    return (
-        pool.where(F.col("cents") > 0)
-        .crossJoin(F.broadcast(s))
-        .where(F.col("cents") * F.col("n") > F.col("total"))
-        .join(o, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .groupBy("c_nationkey")
-        .agg(
-            F.count("*").alias("numcust"),
-            F.sum("cents").alias("totacctbal_cents"),
-        )
-    )
-
-
-@register(
-    "tpch_q8",
-    """
-    SELECT o_year,
-           CAST(floor(1000.0
-             * sum(CASE WHEN nation = 'NATION_1' THEN v ELSE 0 END)
-             / sum(v)) AS BIGINT) AS mkt_share_milli
-    FROM (SELECT CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-                 CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT) AS v,
-                 n2.n_name AS nation
-          FROM part p
-          JOIN lineitem l ON p.p_partkey = l.l_partkey
-          JOIN supplier s ON s.s_suppkey = l.l_suppkey
-          JOIN orders o ON o.o_orderkey = l.l_orderkey
-          JOIN customer c ON c.c_custkey = o.o_custkey
-          JOIN nation n1 ON c.c_nationkey = n1.n_nationkey
-          JOIN region r ON n1.n_regionkey = r.r_regionkey
-          JOIN nation n2 ON s.s_nationkey = n2.n_nationkey
-          WHERE r.r_name = 'ASIA'
-            AND p.p_type = 'ECONOMY'
-            AND o.o_orderdate BETWEEN TIMESTAMP '1995-01-01 00:00:00'
-                                  AND TIMESTAMP '1996-12-31 00:00:00')
-    GROUP BY o_year
-    """,
-)
-def tpch_q8(spark, sf):
-    """Q8 market-share shape: NATION_1 suppliers' share of ECONOMY-part
-    volume sold into ASIA customers, by order year, in integer milli
-    (conditional-sum / total-sum, floored — the same integer-share
-    convention as q_promo_share).  Seven relations: part pre-filters
-    and broadcasts into the fact; nation/region dims broadcast; the
-    customer-side nation->region chain prunes customers BEFORE the
-    fact join; only orders-lineitem shuffle at scale."""
-    p = t(spark, sf, "part").where(F.col("p_type") == "ECONOMY").select("p_partkey")
-    r = t(spark, sf, "region").where(F.col("r_name") == "ASIA").select("r_regionkey")
-    n1 = (
-        t(spark, sf, "nation")
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select(F.col("n_nationkey").alias("cn_key"))
-    )
-    c = (
-        t(spark, sf, "customer")
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("cn_key"))
-        .select("c_custkey")
-    )
-    n2 = t(spark, sf, "nation").select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("nation")
-    )
-    s = (
-        t(spark, sf, "supplier")
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("sn_key"))
-        .select("s_suppkey", "nation")
-    )
-    o = t(spark, sf, "orders").where(
-        F.col("o_orderdate").between("1995-01-01", "1996-12-31")
-    )
-    li = t(spark, sf, "lineitem")
-    v = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"), "left_semi")
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            F.year("o_orderdate").cast("long").alias("o_year"),
-            v.alias("v"),
-            "nation",
-        )
-        .groupBy("o_year")
-        .agg(
-            F.floor(
-                F.lit(1000.0)
-                * F.sum(F.when(F.col("nation") == "NATION_1", F.col("v")).otherwise(0))
-                / F.sum("v")
-            )
-            .cast("long")
-            .alias("mkt_share_milli")
-        )
-    )
-
-
-@register(
-    "tpch_q15",
-    """
-    WITH rev AS (
-      SELECT l_suppkey AS supplier_no,
-             CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                           AS BIGINT)) AS BIGINT) AS total_cents
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-      GROUP BY l_suppkey)
-    SELECT s.s_suppkey, s.s_name, r.total_cents
-    FROM supplier s JOIN rev r ON s.s_suppkey = r.supplier_no
-    WHERE r.total_cents = (SELECT max(total_cents) FROM rev)
-    """,
-)
-def tpch_q15(spark, sf):
-    """Q15 top-supplier shape (the revenue 'view' + its max): one
-    fact-side aggregate builds the revenue relation, its single-row
-    max broadcasts back as an equi-filter (never an unpartitioned
-    rank window over the whole relation), and the supplier dim joins
-    only the surviving row(s)."""
-    li = t(spark, sf, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1996-04-01")
-    )
-    rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(
-            cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        ).alias("total_cents")
-    )
-    mx = rev.agg(F.max("total_cents").alias("mx"))
-    top = rev.join(
-        F.broadcast(mx), F.col("total_cents") == F.col("mx")
-    ).select("supplier_no", "total_cents")
-    s = t(spark, sf, "supplier")
-    return (
-        s.join(top, F.col("s_suppkey") == F.col("supplier_no"))
-        .select("s_suppkey", "s_name", "total_cents")
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: the remaining TPC-H shapes (Q2, Q9, Q11, Q14, Q16, Q20, Q21),
-# adapted to this testdata's columns: there is NO partsupp table, so the
-# part-supplier link (and its "cost") derives from lineitem — the
-# min-line-price relation stands in for ps_supplycost; lineitem has no
-# commit/receipt dates, so "late" means l_shipdate > o_orderdate + 60
-# days (same adaptation family as tpch_q4's +30).
-# --------------------------------------------------------------------------
-
-
-@register(
-    "tpch_q2",
-    """
-    WITH ps AS (SELECT l_partkey, l_suppkey,
-                       CAST(min(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS cost_cents
-                FROM lineitem GROUP BY l_partkey, l_suppkey),
-         eu AS (SELECT s.s_suppkey, s.s_name, s.s_acctbal, n.n_name
-                FROM supplier s
-                JOIN nation n ON s.s_nationkey = n.n_nationkey
-                JOIN region r ON n.n_regionkey = r.r_regionkey
-                WHERE r.r_name = 'EUROPE'),
-         cand AS (SELECT p.p_partkey, p.p_name, eu.s_suppkey, eu.s_name,
-                         eu.s_acctbal, eu.n_name, ps.cost_cents,
-                         CAST(min(ps.cost_cents) OVER (PARTITION BY p.p_partkey) AS BIGINT) AS min_cost
-                  FROM ps
-                  JOIN part p ON p.p_partkey = ps.l_partkey
-                  JOIN eu ON eu.s_suppkey = ps.l_suppkey
-                  WHERE p.p_size <= 15 AND p.p_type = 'STANDARD')
-    SELECT s_acctbal, s_name, n_name, p_partkey, p_name, cost_cents
-    FROM cand WHERE cost_cents = min_cost
-    ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-    LIMIT 100
-    """,
-)
-def tpch_q2(spark, sf):
-    """Q2 min-cost-supplier shape (correlated MIN subquery).  The
-    part-supplier 'cost' relation derives from lineitem (min line
-    price cents per (part, supplier) — no partsupp in this testdata).
-    Engine plan: one hash-agg builds ps, region-filtered suppliers
-    broadcast into it, the per-part minimum is a PARTITIONED window
-    over p_partkey (never a self-join re-scan), and the final top-100
-    is TakeOrderedAndProject.  All money stays integer cents."""
-    from pyspark.sql.window import Window
-
-    ps = (
-        t(spark, sf, "lineitem")
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.min(cents(F.col("l_extendedprice"))).alias("cost_cents"))
-    )
-    n = t(spark, sf, "nation")
-    r = t(spark, sf, "region").where(F.col("r_name") == "EUROPE")
-    eu = (
-        t(spark, sf, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
-    p = t(spark, sf, "part").where(
-        (F.col("p_size") <= 15) & (F.col("p_type") == "STANDARD")
-    ).select("p_partkey", "p_name")
-    w = Window.partitionBy("p_partkey")
-    return (
-        ps.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
-        .join(F.broadcast(eu), F.col("s_suppkey") == F.col("l_suppkey"))
-        .withColumn("min_cost", F.min("cost_cents").over(w))
-        .where(F.col("cost_cents") == F.col("min_cost"))
-        .orderBy(
-            F.desc("s_acctbal"), F.asc("n_name"), F.asc("s_name"),
-            F.asc("p_partkey"),
-        )
-        .limit(100)
-        .select(
-            "s_acctbal", "s_name", "n_name", "p_partkey", "p_name",
-            "cost_cents",
-        )
-    )
-
-
-@register(
-    "tpch_q9",
-    """
-    SELECT nation,
-           o_year,
-           CAST(sum(v) AS BIGINT) AS profit_cents
-    FROM (SELECT n.n_name AS nation,
-                 CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-                 CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT) AS v
-          FROM part p
-          JOIN lineitem l ON p.p_partkey = l.l_partkey
-          JOIN supplier s ON s.s_suppkey = l.l_suppkey
-          JOIN orders o ON o.o_orderkey = l.l_orderkey
-          JOIN nation n ON s.s_nationkey = n.n_nationkey
-          WHERE p.p_name LIKE '%blue%')
-    GROUP BY nation, o_year
-    ORDER BY nation, o_year DESC
-    """,
-)
-def tpch_q9(spark, sf):
-    """Q9 product-type-profit shape: pattern-LIKE part filter + 5-way
-    join, grouped by supplier nation x order year.  (ps_supplycost
-    does not exist in this testdata; profit = discounted revenue.)
-    Engine plan: the LIKE-filtered part dim broadcasts, supplier and
-    nation broadcast, so the only shuffle is lineitem⋈orders plus the
-    final two-key hash aggregate."""
-    p = t(spark, sf, "part").where(F.col("p_name").like("%blue%")).select(
-        "p_partkey"
-    )
-    li = t(spark, sf, "lineitem")
-    s = t(spark, sf, "supplier").select("s_suppkey", "s_nationkey")
-    o = t(spark, sf, "orders").select("o_orderkey", "o_orderdate")
-    n = t(spark, sf, "nation")
-    v = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
-        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("long").alias("o_year"),
-        )
-        .agg(F.sum(v).alias("profit_cents"))
-        .orderBy(F.asc("nation"), F.desc("o_year"))
-    )
-
-
-@register(
-    "tpch_q11",
-    """
-    WITH val AS (SELECT l.l_partkey,
-                        CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS value_cents
-                 FROM lineitem l
-                 JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                 JOIN nation n ON s.s_nationkey = n.n_nationkey
-                 WHERE n.n_name = 'NATION_9'
-                 GROUP BY l.l_partkey)
-    SELECT l_partkey, value_cents
-    FROM val
-    WHERE value_cents * (SELECT count(*) FROM val)
-          > 4 * (SELECT CAST(sum(value_cents) AS BIGINT) FROM val)
-    ORDER BY value_cents DESC, l_partkey
-    """,
-)
-def tpch_q11(spark, sf):
-    """Q11 important-stock shape: per-part value for one nation's
-    suppliers, kept iff above a fraction of the TOTAL (scalar
-    subquery + HAVING).  The fraction test is exact integer
-    arithmetic (value*n_parts > 4*total  <=>  value > 4x the mean part
-    value — a SCALE-STABLE threshold, unlike TPC-H's fixed fraction
-    which empties as the part count grows).  Engine
-    plan: one hash-agg builds val, its one-row total broadcasts back
-    as a filter — the relation is never window-scanned or re-built."""
-    n = t(spark, sf, "nation").where(F.col("n_name") == "NATION_9")
-    s = t(spark, sf, "supplier").join(
-        F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
-    ).select("s_suppkey")
-    val = (
-        t(spark, sf, "lineitem")
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("l_partkey")
-        .agg(F.sum(cents(F.col("l_extendedprice"))).alias("value_cents"))
-    )
-    total = val.agg(
-        F.sum("value_cents").cast("long").alias("total_cents"),
-        F.count("*").alias("n_parts"),
-    )
-    return (
-        val.join(F.broadcast(total))
-        .where(F.col("value_cents") * F.col("n_parts") > 4 * F.col("total_cents"))
-        .orderBy(F.desc("value_cents"), F.asc("l_partkey"))
-        .select("l_partkey", "value_cents")
-    )
-
-
-@register(
-    "tpch_q14",
-    """
-    SELECT CAST(floor(1000.0
-             * sum(CASE WHEN p.p_type = 'PROMO' THEN v ELSE 0 END)
-             / sum(v)) AS BIGINT) AS promo_share_milli
-    FROM (SELECT l_partkey,
-                 CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT) AS v
-          FROM lineitem
-          WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-            AND l_shipdate < TIMESTAMP '1996-02-01 00:00:00') l
-    JOIN part p ON p.p_partkey = l.l_partkey
-    """,
-)
-def tpch_q14(spark, sf):
-    """Q14 promo-revenue shape: conditional-sum / total-sum over one
-    ship month, in integer milli (the q8/q_promo_share convention —
-    floor(1000*x/y) on BIGINT sums is engine-exact).  Part dim
-    broadcasts; the month filter prunes the fact scan."""
-    li = t(spark, sf, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1996-02-01")
-    )
-    p = t(spark, sf, "part").select("p_partkey", "p_type")
-    v = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        li.select("l_partkey", v.alias("v"))
-        .join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
-        .agg(
-            F.floor(
-                1000.0
-                * F.sum(F.when(F.col("p_type") == "PROMO", F.col("v")).otherwise(0))
-                / F.sum("v")
-            )
-            .cast("long")
-            .alias("promo_share_milli")
-        )
-    )
-
-
-@register(
-    "tpch_q16",
-    """
-    WITH link AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
-    SELECT p.p_brand, p.p_type, p.p_size,
-           count(DISTINCT link.l_suppkey) AS supplier_cnt
-    FROM link
-    JOIN part p ON p.p_partkey = link.l_partkey
-    WHERE p.p_brand <> 'Brand#4'
-      AND p.p_type <> 'PROMO'
-      AND p.p_size IN (1, 9, 14, 19, 23, 36, 45, 49)
-      AND link.l_suppkey NOT IN
-          (SELECT s_suppkey FROM supplier WHERE s_name LIKE '%7')
-    GROUP BY p.p_brand, p.p_type, p.p_size
-    ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
-    """,
-)
-def tpch_q16(spark, sf):
-    """Q16 supplier-count shape: distinct part-supplier link (the
-    partsupp stand-in), excluded-supplier NOT IN as a broadcast LEFT
-    ANTI join (suppkey is non-null so NOT IN == anti), then a
-    count-distinct per (brand, type, size)."""
-    link = t(spark, sf, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    p = t(spark, sf, "part").where(
-        (F.col("p_brand") != "Brand#4")
-        & (F.col("p_type") != "PROMO")
-        & F.col("p_size").isin(1, 9, 14, 19, 23, 36, 45, 49)
-    )
-    bad = t(spark, sf, "supplier").where(F.col("s_name").like("%7")).select(
-        "s_suppkey"
-    )
-    return (
-        link.join(
-            F.broadcast(bad),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-            "left_anti",
-        )
-        .join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(
-            F.desc("supplier_cnt"), F.asc("p_brand"), F.asc("p_type"),
-            F.asc("p_size"),
-        )
-    )
-
-
-@register(
-    "tpch_q20",
-    """
-    WITH gp AS (SELECT p_partkey FROM part WHERE p_name LIKE 'red%'),
-         big AS (SELECT l_suppkey
-                 FROM lineitem
-                 JOIN gp ON gp.p_partkey = lineitem.l_partkey
-                 WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-                   AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-                 GROUP BY l_suppkey, l_partkey
-                 HAVING CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) > 3000)
-    SELECT s.s_suppkey, s.s_name
-    FROM supplier s
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    WHERE n.n_name = 'NATION_9'
-      AND s.s_suppkey IN (SELECT l_suppkey FROM big)
-    ORDER BY s.s_name
-    """,
-)
-def tpch_q20(spark, sf):
-    """Q20 excess-stock shape: nested IN-subquery over a HAVING
-    aggregate (suppliers who moved > 30 units of any red-prefix part
-    in 1996), run as a LEFT SEMI join.  The part filter broadcasts
-    into the fact scan; the HAVING aggregate is the only shuffle."""
-    gp = t(spark, sf, "part").where(F.col("p_name").like("red%")).select(
-        "p_partkey"
-    )
-    big = (
-        t(spark, sf, "lineitem")
-        .where(
-            (F.col("l_shipdate") >= "1996-01-01")
-            & (F.col("l_shipdate") < "1997-01-01")
-        )
-        .join(F.broadcast(gp), F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("l_suppkey", "l_partkey")
-        .agg(F.sum(cents(F.col("l_quantity"))).alias("q_cents"))
-        .where(F.col("q_cents") > 3000)
-        .select("l_suppkey")
-    )
-    n = t(spark, sf, "nation").where(F.col("n_name") == "NATION_9")
-    return (
-        t(spark, sf, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(big, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
-        .orderBy(F.asc("s_name"))
-        .select("s_suppkey", "s_name")
-    )
-
-
-@register(
-    "tpch_q21",
-    """
-    WITH late AS (SELECT l.l_orderkey, l.l_suppkey
-                  FROM lineitem l
-                  JOIN orders o ON o.o_orderkey = l.l_orderkey
-                  WHERE o.o_orderstatus = 'F'
-                    AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY),
-         pairs AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem)
-    SELECT s.s_name, count(*) AS numwait
-    FROM (SELECT DISTINCT l_orderkey, l_suppkey FROM late) l1
-    JOIN supplier s ON s.s_suppkey = l1.l_suppkey
-    JOIN nation n ON n.n_nationkey = s.s_nationkey
-    WHERE n.n_name = 'NATION_9'
-      AND EXISTS (SELECT 1 FROM pairs l2
-                  WHERE l2.l_orderkey = l1.l_orderkey
-                    AND l2.l_suppkey <> l1.l_suppkey)
-      AND NOT EXISTS (SELECT 1 FROM late l3
-                      WHERE l3.l_orderkey = l1.l_orderkey
-                        AND l3.l_suppkey <> l1.l_suppkey)
-    GROUP BY s.s_name
-    ORDER BY numwait DESC, s.s_name
-    LIMIT 100
-    """,
-)
-def tpch_q21(spark, sf):
-    """Q21 waiting-supplier shape: the double EXISTS / NOT EXISTS
-    composition — supplier was the ONLY late one on a multi-supplier
-    finalized order.  'Late' adapts to this testdata as l_shipdate >
-    o_orderdate + 60 days (no receipt/commit dates; same family as
-    tpch_q4's +30).  Engine plan: late pairs built once and reused
-    for both the base relation and the NOT-EXISTS side (self anti-
-    join on orderkey with supplier inequality); the EXISTS side is a
-    semi join against the distinct order-supplier pairs."""
-    o = t(spark, sf, "orders").where(F.col("o_orderstatus") == "F").select(
-        "o_orderkey", "o_orderdate"
-    )
-    late = (
-        t(spark, sf, "lineitem")
-        .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-        .where(F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 60))
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-    )
-    pairs = t(spark, sf, "lineitem").select("l_orderkey", "l_suppkey").distinct()
-    l1 = late
-    l2 = pairs.select(
-        F.col("l_orderkey").alias("ok2"), F.col("l_suppkey").alias("sk2")
-    )
-    l3 = late.select(
-        F.col("l_orderkey").alias("ok3"), F.col("l_suppkey").alias("sk3")
-    )
-    n = t(spark, sf, "nation").where(F.col("n_name") == "NATION_9")
-    s = t(spark, sf, "supplier").join(
-        F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
-    ).select("s_suppkey", "s_name")
-    return (
-        l1.join(
-            l2,
-            (F.col("l_orderkey") == F.col("ok2"))
-            & (F.col("l_suppkey") != F.col("sk2")),
-            "left_semi",
-        )
-        .join(
-            l3,
-            (F.col("l_orderkey") == F.col("ok3"))
-            & (F.col("l_suppkey") != F.col("sk3")),
-            "left_anti",
-        )
-        .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-        .orderBy(F.desc("numwait"), F.asc("s_name"))
-        .limit(100)
-    )

@@ -30,8 +30,13 @@ def duck():
 
 
 def test_every_query_has_callable(contract):
+    from accountant_pdf_extract_spark.plans.driver_queries import _PRIORITY
+
     qs, oracles = contract
-    assert len(qs) >= 60
+    # The registry is the 50 scored queries plus the three that bench.py
+    # and perfbench time: a query nothing scores or times is dead surface.
+    assert set(qs) == set(_PRIORITY) | {
+        "q_tokcount", "q_extract_spans", "q_extract_fields"}
     assert set(oracles) <= set(qs)
     # Every query is oracle-paired except the two kernel views, whose
     # gate is the golden-fixture suite (tests/test_golden_spans.py).  A
@@ -116,12 +121,24 @@ def test_kernel_plan_has_one_python_runner(spark, contract, name):
     assert int(n) == spark.sparkContext.defaultParallelism
 
 
+# Package-level names that no reached non-test file uses, each kept on
+# purpose.  Every entry needs its reason.
+NAME_ALLOWLIST: dict[str, str] = {
+    "parse_pdf": "pages-only view of parse_pdf_full for the PDF unit tests",
+    "DocTable": "the sources/catalog.py root: ROADMAP item 1 settles it",
+    "run_incremental_job": "resume over DocTable: ROADMAP item 1 settles it",
+}
+
+
 def test_every_package_module_is_reached():
     """Every package module is imported, directly or through other
     package modules, by a registered query, a job path, the driver
-    entry or a script.  A module only tests reach is dead surface:
+    entry or a script, and every top-level ``def``/``class`` of a
+    package module is used in some reached non-test file outside its
+    own definition.  A module or name only tests reach is dead surface:
     delete it with its tests.  Static ``ast`` walk, no Spark."""
     import ast
+    import collections
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parent.parent
@@ -175,3 +192,42 @@ def test_every_package_module_is_reached():
             reach(name)
     unreached = sorted(set(modules) - reached)
     assert not unreached, unreached
+
+    def identifiers(tree):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                yield node.id
+            elif isinstance(node, ast.Attribute):
+                yield node.attr
+            elif isinstance(node, ast.alias):
+                yield node.name.rsplit(".", 1)[-1]
+
+    # every use of an identifier in a reached non-test file, minus the
+    # uses inside the definition itself (recursion does not reach it)
+    uses = collections.Counter()
+    defs = []
+    files = [modules[m] for m in reached] + [
+        p for p in roots if not p.is_relative_to(root / pkg)]
+    for path in files:
+        if path.name.startswith("test_"):
+            continue
+        tree = ast.parse(path.read_text())
+        uses.update(identifiers(tree))
+        if path.is_relative_to(root / pkg):
+            defs += [(path, node) for node in tree.body if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))]
+
+    def registered(node):
+        # the registry is a root: queries() hands every entry out by name
+        return any(isinstance(d, ast.Call) and getattr(d.func, "id", "")
+                   == "register" for d in node.decorator_list)
+
+    unused = sorted(
+        f"{path.relative_to(root)}:{node.lineno} {node.name}"
+        for path, node in defs
+        if node.name not in NAME_ALLOWLIST and not registered(node)
+        and uses[node.name] == list(identifiers(node)).count(node.name)
+    )
+    assert not unused, unused
+    stale = sorted(set(NAME_ALLOWLIST) - {node.name for _, node in defs})
+    assert not stale, stale

@@ -1,6 +1,6 @@
 """Scale-pattern evidence tests: bucketed co-located joins (no
-Exchange), map-side dedup plans, as-of, range and ranking operators
-checked against their plain forms."""
+Exchange), map-side dedup plans, as-of and ranking operators checked
+against their plain forms."""
 
 from __future__ import annotations
 
@@ -145,51 +145,6 @@ def test_asof_join_matches_bruteforce_oracle(spark):
         assert got[lid] == expect, (lid, got[lid], expect)
 
 
-def test_global_row_number_matches_window(spark):
-    """Exact equivalence with row_number() OVER (ORDER BY ...) — but
-    built from partitioned windows + broadcast offsets only (scale
-    shape), including with heavy ties in the rank key."""
-    from pyspark.sql.window import Window
-
-    from accountant_pdf_extract_spark.operators.ranking import (
-        global_row_number,
-    )
-
-    cust = spark.read.parquet("/root/testdata/sf0.01/customer.parquet")
-    key = -F.round(F.col("c_acctbal") * 100).cast("long")
-    got = {
-        r["c_custkey"]: r["pos"]
-        for r in global_row_number(
-            cust, key, F.col("c_custkey"), num_buckets=8
-        ).select("c_custkey", "pos").collect()
-    }
-    w = Window.orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
-    want = {
-        r["c_custkey"]: r["pos"]
-        for r in cust.select(
-            "c_custkey", F.row_number().over(w).alias("pos")
-        ).collect()
-    }
-    assert got == want
-
-    # output contract: input columns + pos_col, nothing else leaks
-    out_cols = global_row_number(
-        cust, key, F.col("c_custkey"), num_buckets=8
-    ).columns
-    assert out_cols == cust.columns + ["pos"]
-
-    # heavy ties: constant rank key -> position = tiebreak order
-    tied = cust.limit(100)
-    gt = {
-        r["c_custkey"]: r["pos"]
-        for r in global_row_number(
-            tied, F.lit(0), F.col("c_custkey"), num_buckets=4
-        ).select("c_custkey", "pos").collect()
-    }
-    keys = sorted(gt)
-    assert [gt[k] for k in keys] == list(range(1, len(keys) + 1))
-
-
 def test_scalable_ntile_matches_window_ntile(spark):
     """Exact ntile semantics (first n%k tiles take the extra row) at
     several row counts, including n < k and n % k != 0."""
@@ -240,106 +195,6 @@ def test_ranking_plans_have_no_global_data_window(spark):
         partitioned = "windowspecdefinition(_bkt#" in ln
         metadata_sized = "sum(_cnt#" in ln
         assert partitioned or metadata_sized, ln
-
-
-def test_range_join_matches_nonequi_join(spark):
-    """Bucketed range join ≡ the plain non-equi BETWEEN join, including
-    the long-interval broadcast tail; the short path's physical plan
-    must be an EQUI join (hash/merge), never BroadcastNestedLoop."""
-    from accountant_pdf_extract_spark.operators.rangejoin import range_join
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").select(
-        "event_id", F.floor(F.unix_timestamp("ts") / 86400).alias("d")
-    )
-    iv = (
-        spark.read.parquet(f"{SF}/orders.parquet")
-        .select(
-            "o_orderkey",
-            F.floor(F.unix_timestamp("o_orderdate") / 86400).alias("lo"),
-        )
-        .withColumn(
-            # mixed lengths: mostly 7-day windows, a rare giant window
-            # that must route through the broadcast tail
-            "hi",
-            F.when(F.col("o_orderkey") % 997 == 0, F.col("lo") + 10_000)
-            .otherwise(F.col("lo") + 7),
-        )
-    )
-    got = range_join(ev, iv, "d", "lo", "hi", bucket_width=7, max_span_buckets=64)
-    want = ev.join(iv, F.col("d").between(F.col("lo"), F.col("hi")))
-    key = lambda r: (r["event_id"], r["o_orderkey"])  # noqa: E731
-    assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
-
-    # the bulk (short-interval) path must be an EQUI join on the
-    # bucket id — a hash/merge join keyed on _rj_b, never the
-    # BroadcastNestedLoopJoin Spark would plan for the raw BETWEEN
-    short_iv = iv.withColumn("hi", F.col("lo") + 7)
-    plan = (
-        range_join(ev, short_iv, "d", "lo", "hi", bucket_width=7)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    equi_join_lines = [
-        ln for ln in plan.splitlines()
-        if "Join" in ln and "_rj_b" in ln and "NestedLoop" not in ln
-    ]
-    assert equi_join_lines, plan
-    # the only NestedLoop allowed is the long-tail leg, which carries
-    # zero interval rows here (every window is 1-2 buckets wide)
-    for ln in plan.splitlines():
-        if "BroadcastNestedLoopJoin" in ln:
-            assert "_rj_b" not in ln
-
-    # overlapping-column refusal
-    import pytest
-
-    with pytest.raises(ValueError, match="share columns"):
-        range_join(
-            ev.withColumnRenamed("d", "lo"), iv, "lo", "lo", "hi", 7
-        )
-
-
-def test_repetition_features_plan_is_map_only(spark):
-    """The repetition signals must stay a scan->project plan: zero
-    Exchange, zero Generate/Aggregate — the property that lets
-    repetition filtering run before a pipeline's first shuffle."""
-    from accountant_pdf_extract_spark.operators.textstats import (
-        repetition_features,
-    )
-
-    df = repetition_features(spark.read.parquet(f"{SF}/documents.parquet"))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert "Generate" not in plan and "Aggregate" not in plan, plan
-
-
-def test_oov_rate_plan_scores_without_corpus_shuffle(spark):
-    """oov_rate's vocabulary cut must plan as TakeOrderedAndProject
-    (never a global sort of token counts), and the scoring side of the
-    plan must not shuffle the corpus: the only exchanges belong to the
-    vocabulary aggregation (token counts + the one-row collect_list),
-    plus the broadcast of that one row."""
-    from accountant_pdf_extract_spark.operators.textstats import oov_rate
-
-    df = oov_rate(spark.read.parquet(f"{SF}/documents.parquet"), vocab_size=20)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "BroadcastExchange" in plan, plan
-    assert "Sort " not in plan.replace("SortAggregate", ""), plan
-
-
-def test_range_join_query_is_not_vacuous(spark):
-    """q_range_join's constant era shift must keep the point and
-    interval domains overlapping: a regeneration of either table's
-    date era would silently re-vacuize the query (0 rows passes
-    parity while gating nothing — the exact bug fixed in r3)."""
-    from accountant_pdf_extract_spark.plans import driver_queries
-
-    df = driver_queries.queries()["q_range_join"](spark, SF)
-    rows = df.collect()
-    assert rows and sum(r["n"] for r in rows) > 0, (
-        "q_range_join matched nothing — the 10592-day shift no longer "
-        "lands events inside the orders era; re-derive the constant"
-    )
 
 
 def test_asof_null_keys_and_collisions(spark):
@@ -410,42 +265,28 @@ def test_packing_guards_null_tokens_and_bad_budget(spark):
     assert len(out) == 3
 
 
-def test_range_join_rejects_reserved_columns(spark):
-    import pytest
-
-    from accountant_pdf_extract_spark.operators.rangejoin import range_join
-
-    pts = spark.createDataFrame([(1, 5)], "p long, _rj_b long")
-    iv = spark.createDataFrame([(0, 10)], "lo long, hi long")
-    with pytest.raises(ValueError, match="reserved"):
-        range_join(pts, iv, "p", "lo", "hi", bucket_width=7)
-
-
 def test_global_rank_degenerate_bounds_not_empty(spark):
     """num_buckets=1 and all-NULL rank keys must DEGRADE to one bucket
     (still every row ranked), never silently drop to an empty result;
-    internal-column collisions refuse up front."""
+    internal-column collisions and a zero tile count refuse up front."""
     import pytest
 
-    from accountant_pdf_extract_spark.operators.ranking import (
-        global_row_number,
-    )
+    from accountant_pdf_extract_spark.operators.ranking import scalable_ntile
 
     df = spark.createDataFrame([(i, i * 10) for i in range(10)],
                                "id long, v long")
-    one = global_row_number(df, F.col("v"), F.col("id"), num_buckets=1)
-    assert sorted((r["id"], r["pos"]) for r in one.collect()) == [
+    one = scalable_ntile(df, 10, F.col("v"), F.col("id"), num_buckets=1)
+    assert sorted((r["id"], r["tile"]) for r in one.collect()) == [
         (i, i + 1) for i in range(10)]
 
     nulls = spark.createDataFrame([(i,) for i in range(5)], "id long")
-    got = global_row_number(
-        nulls, F.lit(None).cast("long"), F.col("id"), num_buckets=8)
-    assert sorted((r["id"], r["pos"]) for r in got.collect()) == [
+    got = scalable_ntile(
+        nulls, 5, F.lit(None).cast("long"), F.col("id"), num_buckets=8)
+    assert sorted((r["id"], r["tile"]) for r in got.collect()) == [
         (i, i + 1) for i in range(5)]
 
     with pytest.raises(ValueError, match="collide"):
-        global_row_number(df.withColumn("_rk", F.lit(1)), F.col("v"),
-                          F.col("id"))
-    from accountant_pdf_extract_spark.operators.ranking import scalable_ntile
+        scalable_ntile(df.withColumn("_rk", F.lit(1)), 2, F.col("v"),
+                       F.col("id"))
     with pytest.raises(ValueError, match="n_tiles"):
         scalable_ntile(df, 0, F.col("v"), F.col("id"))

@@ -80,68 +80,6 @@ COMMENT = {
         "rows; the old plan was one task sorting the whole customer "
         "table (VERDICT r2 #2)."
     ),
-    "q_range_join": (
-        "interval containment WITHOUT BroadcastNestedLoopJoin: "
-        "intervals explode to their overlapped buckets, the bulk join "
-        "is an EQUI join on _rj_b (+ exact BETWEEN post-filter); the "
-        "only nested-loop leg is the rare long-interval broadcast "
-        "tail, empty here. Raw non-equi joins in Spark are O(n*m) "
-        "BNLJ — the 100-TB wall this avoids."
-    ),
-    "q_global_rank": (
-        "exact global row_number with no single-partition sort: "
-        "range-bucket by approx-percentile bounds, row_number inside "
-        "each bucket (partitioned window), broadcast per-bucket "
-        "offsets. Same output as a global window, parallel at 100 TB."
-    ),
-    "tpch_q10": (
-        "returned-item revenue: fact-side shuffle joins, nation via "
-        "BroadcastExchange, and the top-20 is TakeOrderedAndProject "
-        "(per-partition partial top-k), never a global-sort window."
-    ),
-    "q_repetition": (
-        "ZERO-exchange repetition signals: bigrams via zip_with over "
-        "shifted slices, multiplicity stats via array_sort + linear "
-        "run-length fold — scan → project, no Generate/groupBy at "
-        "all; repetition filtering can run before a pipeline's first "
-        "shuffle."
-    ),
-    "q_oov": (
-        "the corpus is never shuffled for scoring: token counts "
-        "aggregate once, the vocabulary cut is TakeOrderedAndProject "
-        "(top-V by count), collapses to a one-row array, broadcasts, "
-        "and the per-doc rate is a map-side HOF over that broadcast."
-    ),
-    "tpch_q17": (
-        "per-part-average correlated subquery as ONE partitioned "
-        "window: broadcast the filtered part keys into the fact join, "
-        "a single Exchange on l_partkey feeds sum/count window + the "
-        "integer quantity test — no self-join, no second fact scan."
-    ),
-    "tpch_q2": (
-        "min-cost-supplier: the part-supplier cost relation is ONE "
-        "hash aggregate over lineitem; part + region-filtered "
-        "supplier dims broadcast into it; the per-part minimum is a "
-        "partitioned window over p_partkey (no self-join, no "
-        "re-scan); final top-100 is TakeOrderedAndProject."
-    ),
-    "tpch_q21": (
-        "waiting-supplier EXISTS/NOT-EXISTS: the late-pair relation "
-        "is built once and reused for the anti side; semi + anti "
-        "joins on l_orderkey with a supplier inequality residual; "
-        "the tiny nation-filtered supplier dim broadcasts."
-    ),
-    "tpch_q9": (
-        "LIKE-filtered part dim + supplier + nation broadcast; the "
-        "only shuffles are lineitem-orders and the final two-key "
-        "hash aggregate."
-    ),
-    "tpch_q19": (
-        "the cross-side OR cannot push down by itself, so the derived "
-        "single-side filters (brand IN, size/quantity ranges) appear "
-        "as PushedFilters on BOTH scans; the exact disjunction is the "
-        "residual post-join filter on the broadcast join."
-    ),
 }
 
 
@@ -172,9 +110,7 @@ def main() -> None:
     sections.append(("extract", qs["q_extract_spans"](spark, sf)))
     for name in ("q_filter", "q_agg", "q_join_bcast", "q_dedup_minhash",
                  "q_dedup_simhash", "q_embed_topk", "q_asof", "tpch_q5",
-                 "q_ntile", "q_range_join", "q_global_rank", "tpch_q10",
-                 "q_repetition", "q_oov", "tpch_q17", "tpch_q19",
-                 "tpch_q2", "tpch_q21", "tpch_q9"):
+                 "q_ntile"):
         sections.append((name, qs[name](spark, sf)))
 
     # resume pruning over a bucket-partitioned input

@@ -218,11 +218,13 @@ ratio under-measures true N→4N scaling.  Kernel-level control: the
 pure per-doc pipeline in 8 vs 32 OS processes (no Spark) reaches
 3.23× at 4× cores (0.81 of ideal), bounded by memory bandwidth.
 
-## Headline throughput (bench.py, sf0.1, local[32], pinned median-of-3 since r3)
+## Headline throughput (bench.py, sf0.1, local[cores], pinned median-of-3 since r3)
 
 Flagship end-to-end extraction (synth + decode + parse + strip +
 fields + assemble over the interleaved corpus derived from the sf0.1
-documents table): per-query breakdown in BENCH_r{{N}}.json.
+documents table): per-query breakdown in BENCH_r{{N}}.json.  Those
+records are history from each round's hardware (round 6: local[32]
+on 32 cores), not a baseline for another host.
 Heavy-corpus throughput: {hi['throughput_docs_s']:.0f} docs/s at just
 {args.high} pinned cores (4-10 page PDF + HTML per doc, ~1/3 of PDFs
 FlateDecode-compressed since r2).

@@ -13,7 +13,12 @@ and 8,000 kernel tasks above.  The first run pins the count in the
 commit log and every later run reuses it, so a resume on a resized
 cluster keeps its modulus.  Bucket ``b`` runs on kernel task ``b`` mod
 the task count, so the kernel runs at most ``--salt-buckets`` tasks: a
-``--num-partitions`` above it raises.
+``--num-partitions`` above it raises.  The first run also pins its
+input's file list, and a resume over another input raises.
+
+``--input`` is a parquet directory, a ``write_bucketed_input`` table,
+or a ``DocTable`` (a directory holding ``metadata/``), read at its
+current snapshot.
 
 Plan shape (one shuffle): scan → anti-join committed buckets (metadata
 only — the committed set is a broadcast list, so resume pruning is a
@@ -24,15 +29,12 @@ The commit records are the rows that the committed tasks wrote, as the
 kernel counted them per bucket while yielding them
 (``pipeline.BucketTally``), so the commit starts no Spark job and
 never lists or re-reads the output.
-
-``run_incremental_job`` writes its sink partitioned by ``_batch_id``
-only: a replayed batch is replaced whole, whatever bucket count it ran
-under.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import time
@@ -137,6 +139,16 @@ def run_job(
     with a committed one, and bucket directories a crashed first run
     left behind would stay in the output beside the new modulus's.
 
+    The input is pinned too, beside the modulus: the log's first run
+    records a SHA-256 of ``sorted(input_df.inputFiles())``, Spark's own
+    file index of the input, so taking it lists nothing and starts no
+    Spark job.  Spark names every file it writes uniquely, so an append
+    to the input or an overwrite of it changes the list.  A resume whose
+    list differs raises before any write: a committed bucket covers only
+    the documents it was run over, and the new documents that fall in it
+    would be skipped.  A frame with no input files (a generated frame,
+    ``--synth-docs``) pins the empty list.
+
     ``trust_input_bucketing``: only set True for input read via
     ``read_bucketed_input`` under this job's bucket count (which
     validates the stored count).  Otherwise a pre-existing
@@ -144,26 +156,39 @@ def run_job(
     bucketed under a different modulus would make resume pruning
     silently skip partially-committed documents."""
     log = CommitLog(commit_log_path)
-    pinned = log.pinned_salt_buckets()
-    if pinned is None:
+    input_sha = hashlib.sha256(
+        "\n".join(sorted(input_df.inputFiles())).encode()
+    ).hexdigest()
+    pin = log.pinned()
+    if pin is None:
         if log.snapshots():
             raise ValueError(
                 f"commit log at {commit_log_path!r} has sealed snapshots "
-                "but no pinned salt_buckets — it predates the pin; use "
-                "a fresh commit log + output path"
+                "but no pinned salt_buckets and input — it predates the "
+                "pin; use a fresh commit log + output path"
             )
         if salt_buckets is None:
             salt_buckets = default_salt_buckets(spark, num_partitions)
-    elif salt_buckets is None:
-        salt_buckets = pinned
-    elif salt_buckets != pinned:
-        raise ValueError(
-            f"commit log at {commit_log_path!r} is pinned to "
-            f"salt_buckets={pinned} but this run uses {salt_buckets}; "
-            "resuming across a modulus change would silently skip "
-            "documents — use the original value or a fresh commit log "
-            "+ output path"
-        )
+    else:
+        pinned_buckets, pinned_sha = pin
+        if salt_buckets is None:
+            salt_buckets = pinned_buckets
+        elif salt_buckets != pinned_buckets:
+            raise ValueError(
+                f"commit log at {commit_log_path!r} is pinned to "
+                f"salt_buckets={pinned_buckets} but this run uses "
+                f"{salt_buckets}; resuming across a modulus change would "
+                "silently skip documents — use the original value or a "
+                "fresh commit log + output path"
+            )
+        if input_sha != pinned_sha:
+            raise ValueError(
+                f"commit log at {commit_log_path!r} is pinned to another "
+                "input: its file list changed since the log's first run, "
+                "and resuming would silently skip the new documents in "
+                "committed buckets — read the same input, or start a "
+                "fresh commit log + output path"
+            )
     done = log.committed_buckets()
 
     if SALT_COL in input_df.columns and not trust_input_bucketing:
@@ -182,9 +207,9 @@ def run_job(
         num_partitions=num_partitions,
         keep_salt=True,
     )
-    if pinned is None:
+    if pin is None:
         # after extract() has accepted the plan, before the first write
-        log.pin_salt_buckets(salt_buckets)
+        log.pin(salt_buckets, input_sha)
 
     # Idempotent per-bucket overwrite: a redone bucket replaces only
     # its own partition directory.  Writer-scoped option, NOT a
@@ -207,7 +232,7 @@ def run_job(
     records = [
         {
             "partition_id": b,
-            "input_fingerprint": str(t.fingerprint),
+            "output_fingerprint": str(t.fingerprint),
             "n_docs": t.n_docs,
             "n_spans": t.n_spans,
             "n_fields": t.n_fields,
@@ -235,213 +260,14 @@ def run_job(
     }
 
 
-def run_incremental_job(
-    spark: SparkSession,
-    table,
-    output_path: str,
-    cursor_path: str,
-    num_partitions: int | None = None,
-) -> dict:
-    """Snapshot-cursor incremental extraction over a ``DocTable``: the
-    steady-state driver for a table that grows by commits — each run
-    extracts ONLY the rows added since the stored cursor and lands
-    them in the batch-keyed sink, then advances the cursor.
-
-    Mechanics:
-    - The window (cursor → current) is split into MAXIMAL append-only
-      segments at compaction boundaries (``read_incremental`` refuses
-      across a compaction; compaction snapshots add no rows, so they
-      are skipped, and rows committed before one are still emitted).
-    - Each segment writes via the batch-keyed dynamic-overwrite sink
-      (``_batch_keyed_sink``), partitioned by ``_batch_id`` only, with
-      batch id = the segment's end sequence: a crashed/re-run segment
-      REPLACES its whole ``_batch_id`` partition (idempotent, even
-      under another core budget and so another salt-bucket count),
-      earlier windows are never touched.
-    - The cursor file advances by atomic replace only AFTER all
-      segment writes committed — crash anywhere re-runs the same
-      window idempotently (exactly-once to the sink), however many
-      segments and tombstones it holds.
-    - An output holding a ``_batch_id`` beyond the table's current
-      sequence was written from another table or history: the run
-      refuses before it writes anything.
-
-    Key-version semantics: a key appended in one run and upserted in a
-    later one appears once per run, under increasing ``_batch_id`` —
-    downstream consumers keep the max ``_batch_id`` row per doc (the
-    standard CDC contract; within a single window the newest form
-    already wins via the window's delete files).
-
-    Deletions (``delete_where``) are retracted as TOMBSTONES: each
-    window ``delete_where`` snapshot's keys land under
-    ``<output>/_tombstones`` keyed by its sequence, written BEFORE the
-    cursor advances.  The full consumer contract is therefore: live
-    rows = max-``_batch_id`` row per doc, minus docs carrying a
-    tombstone with ``_batch_id`` >= that row's batch.  (Upsert delete
-    files need no tombstone — the replacement rows in the same batch
-    win the max-batch race on their own.)"""
-    cur = table.current_snapshot()
-    if cur is None:
-        raise FileNotFoundError("table has no snapshots")
-    cursor = None
-    if os.path.exists(cursor_path):
-        with open(cursor_path) as f:
-            cursor = json.load(f)["snapshot_id"]
-    if cursor == cur["snapshot_id"]:
-        return {"segments": [], "skipped": True,
-                "cursor": cur["snapshot_id"]}
-
-    sink = _batch_keyed_sink(output_path, cur["sequence"])
-    tomb_sink = _batch_keyed_sink(
-        os.path.join(output_path, "_tombstones"), cur["sequence"]
-    )
-
-    snaps = sorted(table.snapshots(), key=lambda s: s["sequence"])
-    by_id = {s["snapshot_id"]: s for s in snaps}
-    if cursor is not None and cursor not in by_id:
-        raise FileNotFoundError(
-            f"cursor snapshot {cursor!r} is not in the table history "
-            "(expired?) — expire_snapshots must keep at least the last "
-            "consumed snapshot, or delete the cursor file to force a "
-            "full re-extraction"
-        )
-    from_seq = by_id[cursor]["sequence"] if cursor is not None else 0
-    window = [s for s in snaps if from_seq < s["sequence"] <= cur["sequence"]]
-
-    # maximal append-only segments, split at compaction snapshots:
-    # a compaction closes the open segment and becomes the next
-    # segment's from-anchor (it adds no rows itself, so it is skipped)
-    segments: list[list] = []  # [from_id_or_None, to_snap]
-    if cursor is None:
-        # no cursor = first consumption: ONE full merge-on-read scan
-        # of the current snapshot is the correct (and minimal) plan.
-        # Walking the window segment-wise here was a silent-data-loss
-        # trap: a LEADING compaction (the shape expire+compact leaves)
-        # became the from-anchor, so the rewritten pre-compaction rows
-        # were never extracted — and a compaction-only window produced
-        # zero segments while still advancing the cursor.
-        segments = [[None, cur]]
-    else:
-        seg_from: str | None = cursor
-        open_seg: list | None = None
-        for s in window:
-            if "compaction_of" in s:
-                open_seg = None
-                seg_from = s["snapshot_id"]
-            elif open_seg is None:
-                open_seg = [seg_from, s]
-                segments.append(open_seg)
-            else:
-                open_seg[1] = s
-
-    done_segments = []
-    for frm, to in segments:
-        # metadata-only emptiness check: a segment of delete-only
-        # snapshots adds no data files — nothing to extract (its
-        # retraction is the tombstone pass below), skip the Spark job
-        seg_from_seq = by_id[frm]["sequence"] if frm is not None else 0
-        if not table.has_data_after(to, seg_from_seq):
-            continue
-        delta = (
-            table.read_incremental(spark, frm, to["snapshot_id"])
-            if frm is not None
-            else table.read(spark, snapshot_id=to["snapshot_id"])
-        )
-        sink(
-            extract(delta.select("doc_id", "spans"),
-                    num_partitions=num_partitions),
-            to["sequence"],
-        )
-        done_segments.append(
-            {"from": frm, "to": to["snapshot_id"], "batch_id": to["sequence"]}
-        )
-
-    # retract delete_where keys as tombstones (underscore-prefixed dir:
-    # invisible to plain parquet reads of the sink).  Written before
-    # the cursor advances, idempotent per snapshot like the segments.
-    tombstones = []
-    for s in window:
-        if "deleted_where" not in s:
-            continue
-        dels = [
-            d for d in s.get("delete_entries", [])
-            if d["seq"] == s["sequence"]
-        ]
-        if not dels:
-            continue
-        keys = spark.read.parquet(*[d["path"] for d in dels]).distinct()
-        tomb_sink(keys, s["sequence"])
-        tombstones.append(
-            {"snapshot": s["snapshot_id"], "batch_id": s["sequence"]}
-        )
-
-    # atomic cursor advance, only after every segment write committed
-    _write_json_atomic(
-        os.path.dirname(cursor_path) or ".",
-        os.path.basename(cursor_path),
-        {"snapshot_id": cur["snapshot_id"]},
-    )
-    return {"segments": done_segments, "tombstones": tombstones,
-            "skipped": False, "cursor": cur["snapshot_id"]}
-
-
-def _batch_keyed_sink(output_dir: str, head_sequence: int):
-    """Return ``sink(df, batch_id)`` writing ``df`` to ``output_dir``
-    partitioned by ``_batch_id`` with dynamic partition overwrite
-    scoped to THIS writer (per-write option, never a session-wide
-    conf): a batch re-run after a crash REPLACES its own ``_batch_id``
-    partition instead of appending duplicates.
-
-    Batch ids are table sequences, so an output whose newest
-    ``_batch_id`` is beyond ``head_sequence`` (the table's current
-    sequence) was written from another table or history, and writing
-    into it would silently mix the two.  That is refused here, once,
-    before anything is written.  A replayed window writes batch ids at
-    or below the head in any order, so the check is against the head,
-    not against each write's predecessor."""
-    existing = _max_batch_id(output_dir)
-    if existing is not None and existing > head_sequence:
-        raise ValueError(
-            f"{output_dir!r} holds _batch_id={existing}, beyond the "
-            f"table's current sequence {head_sequence} — it was written "
-            "from another table or history; use a new output dir"
-        )
-
-    def sink(df, batch_id):
-        (
-            df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(output_dir)
-        )
-
-    return sink
-
-
-def _max_batch_id(output_dir: str) -> int | None:
-    """Largest existing ``_batch_id=`` partition value, driver-side
-    listdir only (no Spark job)."""
-    try:
-        names = os.listdir(output_dir)
-    except FileNotFoundError:
-        return None
-    ids = []
-    for n in names:
-        if n.startswith("_batch_id="):
-            try:
-                ids.append(int(float(n.split("=", 1)[1])))
-            except ValueError:
-                continue
-    return max(ids) if ids else None
-
-
 def main() -> None:
     from accountant_pdf_extract_spark.session import get_spark
+    from accountant_pdf_extract_spark.sources.catalog import DocTable
     from accountant_pdf_extract_spark.sources.synth import synth_interleaved
 
     p = argparse.ArgumentParser()
-    p.add_argument("--input", help="parquet dir of the interleaved table")
+    p.add_argument("--input", help="parquet dir or DocTable of the "
+                   "interleaved table")
     p.add_argument("--synth-docs", type=int, default=0,
                    help="generate the input instead of reading it")
     p.add_argument("--output", required=True)
@@ -468,6 +294,8 @@ def main() -> None:
             salt_buckets = bucketed_input_salt_buckets(args.input)
         inp = read_bucketed_input(spark, args.input, salt_buckets)
         trusted = True
+    elif os.path.isdir(os.path.join(args.input, "metadata")):
+        inp = DocTable(args.input).read(spark)
     else:
         inp = spark.read.parquet(args.input)
     res = run_job(

@@ -108,7 +108,7 @@ FLAT_FIELDS_SCHEMA = StructType(
 COMMIT_LOG_SCHEMA = StructType(
     [
         StructField("partition_id", IntegerType()),
-        StructField("input_fingerprint", StringType()),
+        StructField("output_fingerprint", StringType()),
         StructField("n_docs", LongType()),
         StructField("n_spans", LongType()),
         StructField("n_fields", LongType()),

@@ -10,20 +10,21 @@ swap is one line per call site:
     DocTable(root).read(spark)              →  spark.read.format("iceberg").load(tbl)
     DocTable(root).append(df)               →  df.writeTo(tbl).append()
     DocTable(root).read(spark, snapshot_id) →  spark.read.option("snapshot-id", id)...
-    DocTable(root).upsert(df, "doc_id")     →  MERGE INTO tbl USING df ON ... (v2 MoR)
-    DocTable(root).delete_where(spark, p, k)→  DELETE FROM tbl WHERE p
 
 Protocol: data files land under ``data/`` with unique names; a
 snapshot JSON (atomic rename) lists the complete file set visible at
 that snapshot plus the parent pointer.  Readers list files from the
 manifest — never from the directory — so a crashed writer can leave
-orphan files without corrupting any reader.
+orphan files without corrupting any reader.  ``plans/job.py`` reads an
+``--input`` that holds a ``metadata/`` directory through ``read``.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -59,30 +60,7 @@ class DocTable:
         snaps = self.snapshots()
         return snaps[-1] if snaps else None
 
-    def _snapshot_at(self, snapshot_id: str | None) -> dict | None:
-        snaps = self.snapshots()
-        if not snaps:
-            return None
-        if snapshot_id is None:
-            return snaps[-1]
-        for s in snaps:
-            if s["snapshot_id"] == snapshot_id:
-                return s
-        raise KeyError(f"unknown snapshot {snapshot_id!r}")
-
     # -- write ---------------------------------------------------------------
-
-    def _write_data_files(self, df: DataFrame, prefix: str) -> list[str]:
-        """Stage data files under a unique dir; return their paths."""
-        staging = os.path.join(
-            self.data_dir, f"{prefix}-{uuid.uuid4().hex[:12]}"
-        )
-        df.write.mode("error").parquet(staging)
-        return sorted(
-            os.path.join(staging, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet")
-        )
 
     def _try_seal(self, snap: dict) -> bool:
         """Compare-and-swap seal: the snapshot's SEQUENCE claims a
@@ -137,25 +115,14 @@ class DocTable:
         different snapshot at the same sequence.  Only a claim with
         unreadable/incomplete JSON (impossible via this writer
         protocol) falls back to a grace-leased steal."""
-        import glob
-        import json as _json
-
         published = glob.glob(
             os.path.join(self.meta_dir, f"{sequence:012d}-*.json")
         )
         if published:
             return  # normal lost-CAS: the claim backs a real snapshot
-        latest = self.current_snapshot()
-        if latest is not None and sequence <= latest["sequence"]:
-            # the claim's sequence is BEHIND published history: either
-            # its snapshot was published and later expired (manifests
-            # gone, data files GC'd — rolling forward would resurrect a
-            # manifest of deleted files), or it's dead contention junk.
-            # Never roll backward-history claims forward.
-            return
         try:
             with open(claim) as f:
-                snap = _json.load(f)
+                snap = json.load(f)
             sid = snap["snapshot_id"]
         except (FileNotFoundError, ValueError, KeyError):
             self._steal_corrupt_claim(claim)
@@ -183,427 +150,51 @@ class DocTable:
             return
         os.remove(stale)
 
-    def _commit_snapshot(self, build) -> str:
-        """Retry loop: re-read the parent and rebuild the snapshot via
-        ``build(parent)`` until the CAS seal wins."""
-        for _ in range(20):
-            parent = self.current_snapshot()
-            snap = build(parent)
-            if self._try_seal(snap):
-                return snap["snapshot_id"]
-        raise RuntimeError("commit contention: lost the CAS 20 times")
-
-    @staticmethod
-    def _discard_staged(files: list[str]) -> None:
-        """Remove staged-but-never-committed files (their whole staging
-        dirs) after a refused commit — no snapshot references them, and
-        expire_snapshots only GCs files that expired manifests name, so
-        without this every refusal leaks files forever."""
-        import shutil
-
-        for d in {os.path.dirname(f) for f in files}:
-            shutil.rmtree(d, ignore_errors=True)
-
-    @staticmethod
-    def _entries(snap: dict | None) -> tuple[list[dict], list[dict]]:
-        """(data_entries, delete_entries) of a snapshot.  Manifests
-        written before row-level ops carry only ``files`` — those
-        predate any delete file, so a uniform seq is safe."""
-        if snap is None:
-            return [], []
-        data = snap.get("file_entries")
-        if data is None:
-            data = [
-                {"path": p, "seq": snap["sequence"]} for p in snap["files"]
-            ]
-        return data, snap.get("delete_entries", [])
-
-    def has_data_after(self, snap: dict, seq: int) -> bool:
-        """True iff ``snap``'s manifest carries any DATA file entry
-        with sequence > ``seq`` — the metadata-only emptiness probe
-        incremental consumers use to skip no-op segments (public API;
-        callers must not reach into ``_entries``)."""
-        data, _dels = self._entries(snap)
-        return any(e["seq"] > seq for e in data)
-
-    def _seal_manifest(
-        self,
-        parent: dict | None,
-        file_entries: list[dict],
-        delete_entries: list[dict],
-        extra: dict | None = None,
-    ) -> dict:
-        seq = (parent["sequence"] + 1) if parent else 1
-        # the build closures stamp NEW entries with this same derived
-        # sequence; a drift between the two derivations would corrupt
-        # merge-on-read delete scoping (d['seq'] > e['seq']) silently —
-        # assert the invariant instead of trusting the duplication
-        for e in file_entries + delete_entries:
-            if e["seq"] > seq:
-                raise AssertionError(
-                    f"entry seq {e['seq']} ahead of manifest sequence "
-                    f"{seq} — caller derived a different sequence"
-                )
-        snap = {
-            "snapshot_id": f"snap-{uuid.uuid4().hex[:12]}",
-            "sequence": seq,
-            "parent": parent["snapshot_id"] if parent else None,
-            # `files` stays the flat path list (expiry/orphan logic and
-            # legacy readers key off it); entries carry the sequences
-            # that scope merge-on-read deletes
-            "files": [e["path"] for e in file_entries],
-            "file_entries": file_entries,
-            "delete_entries": delete_entries,
-            "added_files": 0,
-            "ts_ms": int(time.time() * 1000),
-        }
-        if extra:
-            snap.update(extra)
-        return snap
-
     def append(self, df: DataFrame) -> str:
         """Atomic append: write new data files, then seal a snapshot
         whose manifest = parent files + new files.  Concurrent appends
         are linearized by the sequence CAS — the loser re-reads the
-        winner's manifest and retries, so no commit's files are lost."""
-        new_files = self._write_data_files(df, "commit")
-
-        def build(parent: dict | None) -> dict:
-            data, dels = self._entries(parent)
-            seq = (parent["sequence"] + 1) if parent else 1
-            snap = self._seal_manifest(
-                parent,
-                data + [{"path": p, "seq": seq} for p in new_files],
-                dels,
-                {"added_files": len(new_files)},
-            )
-            return snap
-
-        try:
-            return self._commit_snapshot(build)
-        except RuntimeError:
-            self._discard_staged(new_files)
-            raise
-
-    # -- row-level ops (Iceberg v2 merge-on-read shape) ----------------------
-
-    def upsert(self, df: DataFrame, key_col: str) -> str:
-        """Row-level upsert, merge-on-read: append ``df`` as new data
-        files AND an equality-delete file over ``df``'s keys in ONE
-        snapshot.  The delete is sequence-scoped — it masks only data
-        files OLDER than this commit, so the freshly written rows
-        survive while every earlier version of the same key disappears
-        at read time.  No data file is rewritten (that's ``compact``,
-        the maintenance action that materializes deletes away).
-        Concurrent-safe like append: keys mask whatever older files the
-        winning history contains."""
-        new_files = self._write_data_files(df, "commit")
-        del_files = self._write_data_files(
-            df.select(key_col).distinct(), "delete"
+        winner's manifest and retries, so no commit's files are lost.
+        A commit that loses the CAS 20 times raises and removes its
+        staged files: no snapshot references them."""
+        staging = os.path.join(
+            self.data_dir, f"commit-{uuid.uuid4().hex[:12]}"
         )
-
-        def build(parent: dict | None) -> dict:
-            data, dels = self._entries(parent)
-            seq = (parent["sequence"] + 1) if parent else 1
-            return self._seal_manifest(
-                parent,
-                data + [{"path": p, "seq": seq} for p in new_files],
-                dels
-                + [{"path": p, "key": key_col, "seq": seq} for p in del_files],
-                {"added_files": len(new_files), "upsert_key": key_col},
-            )
-
-        try:
-            return self._commit_snapshot(build)
-        except RuntimeError:
-            self._discard_staged(new_files + del_files)
-            raise
-
-    def delete_where(self, spark: SparkSession, predicate: str, key_col: str) -> str:
-        """Row-level delete, merge-on-read: evaluate ``predicate`` on
-        the CURRENT snapshot, record the matching keys as an
-        equality-delete file, seal a new snapshot with no new data.
-        REFUSES if the table advances concurrently (the predicate was
-        evaluated against the old view — committing it could miss rows
-        a concurrent writer added).  Older snapshots still read the
-        rows (time travel across delete)."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"table {self.root} has no snapshots")
-        keys = (
-            self.read(spark)
-            .where(predicate)
-            .select(key_col)
-            .distinct()
-        )
-        del_files = self._write_data_files(keys, "delete")
-
-        def build(parent: dict | None) -> dict:
-            if parent is None or parent["snapshot_id"] != cur["snapshot_id"]:
-                raise RuntimeError(
-                    "table advanced during delete_where; re-run against "
-                    "the new snapshot"
-                )
-            data, dels = self._entries(parent)
-            seq = parent["sequence"] + 1
-            return self._seal_manifest(
-                parent,
-                data,
-                dels
-                + [{"path": p, "key": key_col, "seq": seq} for p in del_files],
-                {"deleted_where": predicate},
-            )
-
-        try:
-            return self._commit_snapshot(build)
-        except RuntimeError:
-            self._discard_staged(del_files)
-            raise
-
-    # -- maintenance ----------------------------------------------------------
-
-    def expire_snapshots(self, keep_last: int = 1) -> list[str]:
-        """Iceberg-style snapshot expiry: drop all but the newest
-        ``keep_last`` snapshot manifests, then delete data files no
-        surviving snapshot references.  Readers pinned to an expired
-        snapshot fail loudly (KeyError), exactly like Iceberg after
-        ``expireSnapshots``.  Returns the deleted data-file paths."""
-        snaps = self.snapshots()
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1")
-        expired, kept = snaps[:-keep_last], snaps[-keep_last:]
-        if not expired:
-            return []
-
-        def _all_paths(s: dict) -> set[str]:
-            return set(s["files"]) | {
-                e["path"] for e in s.get("delete_entries", [])
+        df.write.mode("error").parquet(staging)
+        new_files = sorted(glob.glob(os.path.join(staging, "*.parquet")))
+        for _ in range(20):
+            parent = self.current_snapshot()
+            snap = {
+                "snapshot_id": f"snap-{uuid.uuid4().hex[:12]}",
+                "sequence": (parent["sequence"] + 1) if parent else 1,
+                "parent": parent["snapshot_id"] if parent else None,
+                "files": (parent["files"] if parent else []) + new_files,
+                "added_files": len(new_files),
+                "ts_ms": int(time.time() * 1000),
             }
-
-        live = {f for s in kept for f in _all_paths(s)}
-        dead = sorted(
-            {f for s in expired for f in _all_paths(s)} - live
-        )
-        # NOTE: the per-sequence .claim files are deliberately KEPT —
-        # they are the CAS locks.  Deleting an expired sequence's claim
-        # would let a slow writer that read a pre-expiry parent win the
-        # link at that old sequence and publish a snapshot that no
-        # read() ever sees (silent lost append), and would let the
-        # orphan-claim reclaimer resurrect an expired manifest whose
-        # data files were just deleted.  Claims are tiny; they live for
-        # the table's lifetime.
-        for s in expired:
-            for name in (
-                f"{s['sequence']:012d}-{s['snapshot_id']}.json",
-                f"{s['snapshot_id']}.json",  # legacy naming
-            ):
-                p = os.path.join(self.meta_dir, name)
-                if os.path.exists(p):
-                    os.remove(p)
-        for f in dead:
-            if os.path.exists(f):
-                os.remove(f)
-        return dead
-
-    def compact(
-        self,
-        spark: SparkSession,
-        target_files: int = 4,
-        cluster_by: list[str] | None = None,
-    ) -> str:
-        """Small-file compaction (the rewrite_data_files maintenance
-        action): rewrite the current snapshot's file set into
-        ``target_files`` files and seal a NEW snapshot over them.
-        History stays intact — older snapshots still read the original
-        files until expired.  If the table advances concurrently, the
-        compaction REFUSES (its rewritten file set reflects the old
-        state; sealing it would drop the concurrent commit's rows).
-
-        ``cluster_by``: sort-clustered rewrite (Iceberg's sort-order
-        rewrite): range-partition + sort within files on these columns,
-        so each output file owns a DISJOINT key range and parquet
-        min/max statistics prune whole files/row groups for selective
-        key predicates — the data-skipping maintenance action."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"table {self.root} has no snapshots")
-        view = self.read(spark)
-        if cluster_by:
-            view = view.repartitionByRange(
-                target_files, *cluster_by
-            ).sortWithinPartitions(*cluster_by)
-        else:
-            view = view.coalesce(target_files)
-        new_files = self._write_data_files(
-            view, "compact"
-        )
-
-        def build(parent: dict | None) -> dict:
-            if parent is None or parent["snapshot_id"] != cur["snapshot_id"]:
-                raise RuntimeError(
-                    "table advanced during compaction; re-run compact()"
-                )
-            seq = cur["sequence"] + 1
-            # compaction MATERIALIZES merge-on-read deletes: the
-            # rewritten files already exclude deleted rows, so the new
-            # manifest carries no delete entries
-            return self._seal_manifest(
-                parent,
-                [{"path": p, "seq": seq} for p in new_files],
-                [],
-                {
-                    "added_files": len(new_files),
-                    "compaction_of": cur["snapshot_id"],
-                },
-            )
-
-        try:
-            return self._commit_snapshot(build)
-        except RuntimeError:
-            self._discard_staged(new_files)
-            raise
+            if self._try_seal(snap):
+                return snap["snapshot_id"]
+        shutil.rmtree(staging, ignore_errors=True)
+        raise RuntimeError("commit contention: lost the CAS 20 times")
 
     # -- read ----------------------------------------------------------------
 
     def read(
-        self,
-        spark: SparkSession,
-        snapshot_id: str | None = None,
-        merge_schema: bool = False,
+        self, spark: SparkSession, snapshot_id: str | None = None
     ) -> DataFrame:
-        """Manifest-based scan (snapshot pinning = time travel) with
-        merge-on-read deletes: each equality-delete file masks only
-        data files whose sequence is OLDER than the delete's (Iceberg
-        v2 applicability rule), so an upsert's own rows survive its own
-        delete.  Delete keys are small relative to data — broadcast
-        anti-joins, the fact side never shuffles.  Long histories of
-        mixed-seq files read as a union of per-seq scans; ``compact``
-        collapses that back to one scan and zero delete files.  An
-        empty table raises — callers should create before reading.
-
-        ``merge_schema=True`` enables additive schema evolution: files
-        appended with extra columns union with older files, which read
-        those columns as null (parquet mergeSchema semantics — the
-        same switch Iceberg flips on schema evolution)."""
-        snap = self._snapshot_at(snapshot_id)
-        if snap is None:
+        """Manifest-based scan of the current snapshot, or of
+        ``snapshot_id`` (snapshot pinning = time travel).  An unknown
+        snapshot raises KeyError; an empty table raises — callers
+        should create before reading."""
+        snaps = self.snapshots()
+        if not snaps:
             raise FileNotFoundError(f"table {self.root} has no snapshots")
-        data, dels = self._entries(snap)
-        if not data:
-            raise FileNotFoundError(f"table {self.root} has no data files")
-        return self._scan_entries(spark, data, dels, merge_schema)
-
-    def _scan_entries(
-        self,
-        spark: SparkSession,
-        data: list[dict],
-        dels: list[dict],
-        merge_schema: bool,
-    ) -> DataFrame:
-        """Union the data-file entries with merge-on-read delete
-        masking (shared by ``read`` and ``read_incremental``)."""
-
-        def scan(paths: list[str]) -> DataFrame:
-            r = spark.read
-            if merge_schema:
-                r = r.option("mergeSchema", "true")
-            return r.parquet(*paths)
-
-        if not dels:
-            return scan([e["path"] for e in data])
-
-        from collections import defaultdict
-
-        from pyspark.sql import functions as F
-
-        groups: dict[int, list[str]] = defaultdict(list)
-        for e in data:
-            groups[e["seq"]].append(e["path"])
-        # materialize each delete key set ONCE (localCheckpoint — small
-        # metadata), then reuse it across every data-seq group instead
-        # of re-scanning the delete parquet per group
-        key_frames: dict[str, DataFrame] = {}
-        for key in {d["key"] for d in dels}:
-            parts = [
-                spark.read.parquet(d["path"])
-                .select(key)
-                .withColumn("_del_seq", F.lit(d["seq"]))
-                for d in dels
-                if d["key"] == key
-            ]
-            kf = parts[0]
-            for p in parts[1:]:
-                kf = kf.unionByName(p)
-            key_frames[key] = kf.localCheckpoint()
-        out: DataFrame | None = None
-        for seq, paths in sorted(groups.items()):
-            df = scan(paths)
-            for key, kf in key_frames.items():
-                if any(d["key"] == key and d["seq"] > seq for d in dels):
-                    keys = (
-                        kf.where(F.col("_del_seq") > seq)
-                        .select(key)
-                        .distinct()
-                    )
-                    df = df.join(F.broadcast(keys), key, "left_anti")
-            out = (
-                df
-                if out is None
-                else out.unionByName(df, allowMissingColumns=merge_schema)
+        if snapshot_id is None:
+            snap = snaps[-1]
+        else:
+            snap = next(
+                (s for s in snaps if s["snapshot_id"] == snapshot_id), None
             )
-        return out
-
-    def read_incremental(
-        self,
-        spark: SparkSession,
-        from_snapshot_id: str,
-        to_snapshot_id: str | None = None,
-        merge_schema: bool = False,
-    ) -> DataFrame:
-        """Incremental append scan (Iceberg's incremental read shape):
-        rows ADDED after ``from_snapshot_id`` up to ``to_snapshot_id``
-        (default: current) — the driver of incremental downstream
-        pipelines ("extract only what landed since the last run")
-        without ever re-scanning the existing table.
-
-        Semantics: data files committed in the window, masked by
-        window delete files with a NEWER sequence (a key appended then
-        upserted inside the window reads once, in its final form).
-        REFUSES across a compaction boundary: a compaction snapshot
-        rewrites OLD rows into new files, so emitting its files would
-        replay the whole table as "new" — the same append-only
-        restriction Iceberg's incremental scan enforces; consume the
-        window up to the compaction, then resume after it."""
-        snaps = sorted(self.snapshots(), key=lambda s: s["sequence"])
-        by_id = {s["snapshot_id"]: s for s in snaps}
-        if from_snapshot_id not in by_id:
-            raise FileNotFoundError(
-                f"unknown from_snapshot {from_snapshot_id!r} (expired?)"
-            )
-        to_snap = self._snapshot_at(to_snapshot_id)
-        if to_snap is None:
-            raise FileNotFoundError(f"table {self.root} has no snapshots")
-        from_seq = by_id[from_snapshot_id]["sequence"]
-        to_seq = to_snap["sequence"]
-        if to_seq < from_seq:
-            raise ValueError(
-                f"to_snapshot (seq {to_seq}) predates from_snapshot "
-                f"(seq {from_seq})"
-            )
-        for s in snaps:
-            if from_seq < s["sequence"] <= to_seq and "compaction_of" in s:
-                raise ValueError(
-                    "incremental read window crosses a compaction "
-                    f"(snapshot {s['snapshot_id']}); read up to its "
-                    "parent, then restart the incremental cursor after it"
-                )
-        data, dels = self._entries(to_snap)
-        added = [e for e in data if e["seq"] > from_seq]
-        win_dels = [d for d in dels if d["seq"] > from_seq]
-        if not added:
-            if not data:
-                raise FileNotFoundError(
-                    f"table {self.root} has no data files"
-                )
-            return self._scan_entries(spark, data, [], merge_schema).limit(0)
-        return self._scan_entries(spark, added, win_dels, merge_schema)
+            if snap is None:
+                raise KeyError(f"unknown snapshot {snapshot_id!r}")
+        return spark.read.parquet(*snap["files"])

@@ -24,10 +24,11 @@ Protocol (two-level commit):
    buckets are redone idempotently (deterministic kernels, seeded
    synth).
 
-A bucket id means something only under one modulus, so the log's
-first run pins its salt-bucket count (``salt_buckets.json``, written
-like a seal) before that run writes output, and every later run
-reuses or refuses it.
+A bucket id means something only under one modulus, and a committed
+bucket covers only the documents of the input it was run over.  So
+the log's first run pins both, its salt-bucket count and a SHA-256 of
+its input's file list (``pin.json``, written like a seal), before that
+run writes output, and every later run reuses or refuses them.
 
 Durability scope, stated honestly: the exact-resume guarantee covers
 PROCESS failure (kill/crash of the job), the case the protocol is
@@ -59,7 +60,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from accountant_pdf_extract_spark.schema import COMMIT_LOG_SCHEMA
 
 _ARROW_SCHEMA = to_arrow_schema(COMMIT_LOG_SCHEMA)
-_PIN = "salt_buckets.json"
+_PIN = "pin.json"
 
 
 def _fsync_dir(path: str) -> None:
@@ -101,13 +102,15 @@ class CommitLog:
                     out.append(json.load(f))
         return out
 
-    def pinned_salt_buckets(self) -> int | None:
-        """The modulus ``pin_salt_buckets`` recorded, or None."""
+    def pinned(self) -> tuple[int, str] | None:
+        """``(salt_buckets, input_files_sha256)`` as ``pin`` recorded
+        them, or None when the log has no pin."""
         try:
             with open(os.path.join(self.path, _PIN)) as f:
-                return int(json.load(f)["salt_buckets"])
+                pin = json.load(f)
         except FileNotFoundError:
             return None
+        return int(pin["salt_buckets"]), pin["input_files_sha256"]
 
     def committed_buckets(self) -> set[int]:
         done: set[int] = set()
@@ -147,7 +150,7 @@ class CommitLog:
             [
                 {
                     "partition_id": int(r["partition_id"]),
-                    "input_fingerprint": str(r["input_fingerprint"]),
+                    "output_fingerprint": str(r["output_fingerprint"]),
                     "n_docs": int(r["n_docs"]),
                     "n_spans": int(r["n_spans"]),
                     "n_fields": int(r["n_fields"]),
@@ -175,14 +178,21 @@ class CommitLog:
         _write_json_atomic(self.snapshot_dir, f"{snapshot_id}.json", snap)
         return snapshot_id
 
-    def pin_salt_buckets(self, salt_buckets: int) -> None:
-        """Pin the salt-bucket modulus of this log, before the job's
-        first write: every bucket id the log certifies is
+    def pin(self, salt_buckets: int, input_files_sha256: str) -> None:
+        """Pin the salt-bucket modulus and the input of this log, before
+        the job's first write.  Every bucket id the log certifies is
         ``pmod(xxhash64(doc_id), salt_buckets)``, so a run under another
         modulus would skip documents whose new bucket id collides with
-        a committed one.  Written like the snapshot seal."""
+        a committed one.  A run over another input would skip the new
+        documents that fall in committed buckets.  Written like the
+        snapshot seal."""
         _write_json_atomic(
-            self.path, _PIN, {"salt_buckets": int(salt_buckets)}
+            self.path,
+            _PIN,
+            {
+                "salt_buckets": int(salt_buckets),
+                "input_files_sha256": input_files_sha256,
+            },
         )
 
     def drop_snapshots(self, snapshot_ids: set[str]) -> None:

@@ -1,7 +1,7 @@
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] (default: the cores this process may run
-on) and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default, and at most: the cores this
+process may run on) and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -120,7 +120,10 @@ MAX_EXTRA_PASSES = 2  # full-pass re-runs when every pass was polluted
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    allowed = len(os.sched_getaffinity(0))
+    # never more Spark cores than this process may run on: local[8] on
+    # 4 allowed cores would report 8
+    cpus = min(int(os.environ.get("SPARK_GRAFT_CPUS", allowed)), allowed)
     # parse the scale factor BEFORE the multi-minute run — a dir not
     # ending in sf<number> must not discard three finished passes with
     # a ValueError while building the output dict

@@ -119,7 +119,7 @@ def main() -> None:
     all_buckets = sorted(res1["processed_buckets"])
     lost = all_buckets[: len(all_buckets) // 2]
     kept = [
-        {"partition_id": b, "input_fingerprint": "kept", "n_docs": 0,
+        {"partition_id": b, "output_fingerprint": "kept", "n_docs": 0,
          "n_spans": 0, "n_fields": 0, "job_wall_ms": 0}
         for b in all_buckets[len(all_buckets) // 2 :]
     ]

@@ -37,6 +37,9 @@ def test_bench_one_json_line(tmp_path):
     assert payload["unit"] == "sec"
     assert isinstance(payload["value"], (int, float)) and payload["value"] > 0
     assert payload["sf"] == 0.001
+    # the reported core count is the one Spark ran on, at most the
+    # cores this process may use (the test asks for 8)
+    assert payload["cpus"] <= len(os.sched_getaffinity(0))
     assert "q_extract_spans" in payload["queries"]
     assert all(v > 0 for v in payload["queries"].values())
     assert payload["policy"].startswith("median_of_")

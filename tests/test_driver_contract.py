@@ -125,8 +125,6 @@ def test_kernel_plan_has_one_python_runner(spark, contract, name):
 # purpose.  Every entry needs its reason.
 NAME_ALLOWLIST: dict[str, str] = {
     "parse_pdf": "pages-only view of parse_pdf_full for the PDF unit tests",
-    "DocTable": "the sources/catalog.py root: ROADMAP item 1 settles it",
-    "run_incremental_job": "resume over DocTable: ROADMAP item 1 settles it",
 }
 
 
@@ -156,8 +154,6 @@ def test_every_package_module_is_reached():
           for m in ("q_relational", "q_text", "q_tpch", "q_pipeline",
                     "job")),
         root / pkg / "session.py",
-        # the table API that run_incremental_job consumes
-        root / pkg / "sources" / "catalog.py",
         *(p for d in ("tools", "bench", "perfbench")
           for p in (root / d).glob("*.py")),
     ]

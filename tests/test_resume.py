@@ -10,6 +10,7 @@ import shutil
 import time
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from accountant_pdf_extract_spark.plans.job import run_job
@@ -66,7 +67,7 @@ def _assert_records_match_output(spark, log_path, snapshot_id, out):
     ).to_pylist()
     got = {
         r["partition_id"]: (r["n_docs"], r["n_spans"], r["n_fields"],
-                            int(r["input_fingerprint"]))
+                            int(r["output_fingerprint"]))
         for r in recs
     }
     assert got and got == _reread_tallies(spark, out, set(got))
@@ -102,7 +103,7 @@ def test_exact_resume(spark, tmp_path: pathlib.Path):
     assert len(snaps) == 1
     kept_records = [
         {
-            "partition_id": b, "input_fingerprint": "x", "n_docs": 0,
+            "partition_id": b, "output_fingerprint": "x", "n_docs": 0,
             "n_spans": 0, "n_fields": 0, "job_wall_ms": 0,
         }
         for b in sorted(all_buckets - set(lost))
@@ -178,7 +179,7 @@ def test_resume_partition_pruning(spark, tmp_path: pathlib.Path):
     lost = sorted(all_buckets)[: len(all_buckets) // 2]
     snaps = log.snapshots()
     kept = [
-        {"partition_id": b, "input_fingerprint": "x", "n_docs": 0,
+        {"partition_id": b, "output_fingerprint": "x", "n_docs": 0,
          "n_spans": 0, "n_fields": 0, "job_wall_ms": 0}
         for b in sorted(all_buckets - set(lost))
     ]
@@ -238,9 +239,9 @@ def test_salt_distribution(spark):
 def test_commit_log_records_roundtrip(spark, tmp_path: pathlib.Path):
     log = CommitLog(str(tmp_path / "clog"))
     recs = [
-        {"partition_id": 3, "input_fingerprint": "abc", "n_docs": 10,
+        {"partition_id": 3, "output_fingerprint": "abc", "n_docs": 10,
          "n_spans": 55, "n_fields": 7, "job_wall_ms": 123},
-        {"partition_id": 5, "input_fingerprint": "def", "n_docs": 2,
+        {"partition_id": 5, "output_fingerprint": "def", "n_docs": 2,
          "n_spans": 9, "n_fields": 1, "job_wall_ms": 123},
     ]
     sid = log.commit(recs, {"job_id": "t", "attempt": "1"})
@@ -257,6 +258,32 @@ def test_commit_log_empty_records(spark, tmp_path: pathlib.Path):
     log = CommitLog(str(tmp_path / "clog2"))
     assert log.records(spark).count() == 0
     assert log.committed_buckets() == set()
+
+
+def test_orphan_record_files_excluded_from_commit_log(spark, tmp_path: pathlib.Path):
+    """A record parquet whose snapshot was never sealed (crash between
+    record write and snapshot rename) must not appear in records()."""
+    log = CommitLog(str(tmp_path / "clog"))
+    log.commit(
+        [{"partition_id": 1, "output_fingerprint": "a", "n_docs": 1,
+          "n_spans": 2, "n_fields": 0, "job_wall_ms": 1}],
+        {"job_id": "ok"},
+    )
+    # orphan: records parquet exists, snapshot JSON does not
+    sealed = log.snapshots()[0]["snapshot_id"]
+    orphan_sid = "snap-000000000000-deadbeef"
+    from accountant_pdf_extract_spark.schema import COMMIT_LOG_SCHEMA
+
+    spark.createDataFrame(
+        [{"partition_id": 9, "output_fingerprint": "x", "n_docs": 9,
+          "n_spans": 9, "n_fields": 9, "job_wall_ms": 9,
+          "lineage": {}, "snapshot_id": orphan_sid}],
+        COMMIT_LOG_SCHEMA,
+    ).coalesce(1).write.parquet(f"{log.records_dir}/{orphan_sid}.parquet")
+
+    rows = log.records(spark).collect()
+    assert {r["snapshot_id"] for r in rows} == {sealed}
+    assert {r["partition_id"] for r in rows} == {1}
 
 
 def _jobs_started_by(spark, fn):
@@ -293,7 +320,7 @@ def test_commit_runs_no_spark_job_and_records_roundtrip(spark, tmp_path):
 
     log = CommitLog(str(tmp_path / "clog"))
     recs = [
-        {"partition_id": b, "input_fingerprint": str(b * 7919),
+        {"partition_id": b, "output_fingerprint": str(b * 7919),
          "n_docs": b + 1, "n_spans": 10 * b, "n_fields": b % 3,
          "job_wall_ms": 42}
         for b in range(40)
@@ -343,137 +370,6 @@ def test_partition_listing_sized_by_core_budget(spark, tmp_path):
     assert df.count() == n_dirs
 
 
-def test_incremental_job_extracts_only_new_snapshots(spark, tmp_path):
-    """Snapshot-cursor incremental extraction: first run processes the
-    full table; later runs process only window-added docs, split into
-    append-only segments around a compaction (whose rewritten rows
-    must NOT be re-emitted); an up-to-date cursor is a no-op."""
-    from accountant_pdf_extract_spark.plans.job import run_incremental_job
-    from accountant_pdf_extract_spark.sources.catalog import DocTable
-
-    tbl = DocTable(str(tmp_path / "tbl"))
-    out = str(tmp_path / "out")
-    cursor = str(tmp_path / "cursor.json")
-
-    tbl.append(_ledger_docs(spark, "d1", "d2"))
-    r1 = run_incremental_job(
-        spark, tbl, out, cursor, num_partitions=2)
-    assert not r1["skipped"] and len(r1["segments"]) == 1
-
-    def by_batch():
-        rows = spark.read.parquet(out).select("_batch_id", "doc_id").collect()
-        got = {}
-        for r in rows:
-            got.setdefault(int(r["_batch_id"]), set()).add(r["doc_id"])
-        return got
-
-    assert by_batch() == {1: {"d1", "d2"}}
-
-    tbl.append(_ledger_docs(spark, "d3"))  # seq 2
-    tbl.compact(spark, target_files=1)     # seq 3 (rewrites d1-d3)
-    tbl.append(_ledger_docs(spark, "d4"))  # seq 4
-    r2 = run_incremental_job(
-        spark, tbl, out, cursor, num_partitions=2)
-    assert [s["batch_id"] for s in r2["segments"]] == [2, 4]
-    # d1/d2 appear once (batch 1); the compaction's rewrite of them is
-    # never re-emitted; d3 and d4 land under their own segment batches
-    assert by_batch() == {1: {"d1", "d2"}, 2: {"d3"}, 4: {"d4"}}
-
-    r3 = run_incremental_job(
-        spark, tbl, out, cursor, num_partitions=2)
-    assert r3["skipped"] and by_batch() == {1: {"d1", "d2"}, 2: {"d3"},
-                                            4: {"d4"}}
-
-
-def test_incremental_job_retracts_deletes_as_tombstones(spark, tmp_path):
-    """delete_where keys must be retracted: they land under
-    <output>/_tombstones keyed by the delete snapshot's sequence, the
-    underscore dir stays invisible to plain reads of the sink, and the
-    documented consumer contract (max-batch row minus tombstoned docs)
-    yields the table's live set."""
-    from accountant_pdf_extract_spark.plans.job import run_incremental_job
-    from accountant_pdf_extract_spark.sources.catalog import DocTable
-
-    tbl = DocTable(str(tmp_path / "tbl"))
-    out = str(tmp_path / "out")
-    cursor = str(tmp_path / "cursor.json")
-    tbl.append(_ledger_docs(spark, "d1", "d2"))               # seq 1
-    run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
-    tbl.delete_where(spark, "doc_id = 'd1'", "doc_id")        # seq 2
-    r = run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
-    assert r["segments"] == [] and r["tombstones"] == [
-        {"snapshot": tbl.current_snapshot()["snapshot_id"], "batch_id": 2}]
-
-    sink = spark.read.parquet(out)
-    assert "_tombstones" not in [p for p in sink.columns]
-    assert sorted(set(r["doc_id"] for r in sink.collect())) == ["d1", "d2"]
-    tomb = spark.read.parquet(f"{out}/_tombstones")
-    assert [(r["doc_id"], int(r["_batch_id"])) for r in tomb.collect()] == [
-        ("d1", 2)]
-
-    # consumer contract: latest batch per doc, minus tombstones >= it
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    latest = (
-        sink.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy(F.desc("_batch_id"),
-                                                     F.desc("order"))),
-        ).where(F.col("rn") == 1).select("doc_id", "_batch_id")
-    )
-    live = latest.join(
-        tomb.select("doc_id", F.col("_batch_id").alias("_tomb_b")),
-        "doc_id", "left",
-    ).where(
-        F.col("_tomb_b").isNull() | (F.col("_tomb_b") < F.col("_batch_id"))
-    )
-    assert [r["doc_id"] for r in live.collect()] == ["d2"]
-    # idempotent re-run after table advances by a no-op? cursor is
-    # current -> skipped, tombstones untouched
-    assert run_incremental_job(spark, tbl, out, cursor,
-                               num_partitions=2)["skipped"]
-
-
-def test_incremental_first_consumption_after_compaction(spark, tmp_path):
-    """Silent-data-loss regression (r4 review): a FRESH consumer (no
-    cursor) whose window STARTS with a compaction — the post-
-    maintenance shape expire+compact leaves — must extract the full
-    table, not anchor on the compaction and drop everything it
-    rewrote.  Also the compaction-only-window case."""
-    from accountant_pdf_extract_spark.plans.job import run_incremental_job
-    from accountant_pdf_extract_spark.sources.catalog import DocTable
-
-    tbl = DocTable(str(tmp_path / "tbl"))
-    tbl.append(_ledger_docs(spark, "d1", "d2"))
-    tbl.compact(spark, target_files=1)
-    tbl.expire_snapshots(keep_last=1)   # history = [compaction] only
-    out = str(tmp_path / "out")
-    r = run_incremental_job(
-        spark, tbl, out, str(tmp_path / "c.json"),
-        num_partitions=2,
-    )
-    assert len(r["segments"]) == 1
-    got = {row["doc_id"] for row in spark.read.parquet(out).collect()}
-    assert got == {"d1", "d2"}
-
-    # compaction FIRST then an append: fresh consumer still gets all
-    tbl2 = DocTable(str(tmp_path / "tbl2"))
-    tbl2.append(_ledger_docs(spark, "a1"))
-    tbl2.compact(spark, target_files=1)
-    tbl2.expire_snapshots(keep_last=1)
-    tbl2.append(_ledger_docs(spark, "a2"))
-    out2 = str(tmp_path / "out2")
-    r2 = run_incremental_job(
-        spark, tbl2, out2, str(tmp_path / "c2.json"),
-        num_partitions=2,
-    )
-    assert len(r2["segments"]) == 1
-    got2 = {row["doc_id"] for row in spark.read.parquet(out2).collect()}
-    assert got2 == {"a1", "a2"}
-
-
 def test_run_job_refuses_salt_bucket_modulus_change(spark, tmp_path):
     """Resuming a commit log written under a different salt_buckets
     must raise, not silently skip colliding bucket ids."""
@@ -517,137 +413,6 @@ def test_run_job_zero_row_output_returns_empty(spark, tmp_path):
         salt_buckets=8, num_partitions=2,
     )
     assert r["processed_buckets"] == [] and r["snapshot_id"] is None
-
-
-def _batches(spark, path):
-    """``_batch_id`` → set of doc_ids under a batch-keyed sink dir."""
-    got = {}
-    for r in spark.read.parquet(path).select("_batch_id", "doc_id").collect():
-        got.setdefault(int(r["_batch_id"]), set()).add(r["doc_id"])
-    return got
-
-
-def test_incremental_replay_of_multi_segment_window(spark, tmp_path):
-    """A crash after a window's segment writes but before the cursor
-    advance re-runs the whole window: segment 2 is rewritten after
-    segment 4 is already on disk, and the output ends exactly as the
-    run that did not crash left it."""
-    from accountant_pdf_extract_spark.plans.job import run_incremental_job
-    from accountant_pdf_extract_spark.sources.catalog import DocTable
-
-    tbl = DocTable(str(tmp_path / "tbl"))
-    out = str(tmp_path / "out")
-    cursor = str(tmp_path / "cursor.json")
-    tbl.append(_ledger_docs(spark, "d1", "d2"))           # seq 1
-    run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
-    shutil.copy(cursor, str(tmp_path / "cursor_r1.json"))
-    tbl.append(_ledger_docs(spark, "d3"))                 # seq 2
-    tbl.compact(spark, target_files=1)                    # seq 3
-    tbl.append(_ledger_docs(spark, "d4"))                 # seq 4
-    r2 = run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
-    want = _batches(spark, out)
-    assert want == {1: {"d1", "d2"}, 2: {"d3"}, 4: {"d4"}}
-
-    shutil.copy(str(tmp_path / "cursor_r1.json"), cursor)  # the crash
-    replay = run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
-    assert replay["segments"] == r2["segments"]
-    assert [s["batch_id"] for s in replay["segments"]] == [2, 4]
-    assert _batches(spark, out) == want
-
-
-def test_incremental_replay_of_multi_tombstone_window(spark, tmp_path):
-    """The same crash over a window holding two ``delete_where``
-    snapshots: tombstone 2 is rewritten after tombstone 3, and the
-    sink and its tombstones end as in the run that did not crash."""
-    from accountant_pdf_extract_spark.plans.job import run_incremental_job
-    from accountant_pdf_extract_spark.sources.catalog import DocTable
-
-    tbl = DocTable(str(tmp_path / "tbl"))
-    out = str(tmp_path / "out")
-    tombs = f"{out}/_tombstones"
-    cursor = str(tmp_path / "cursor.json")
-    tbl.append(_ledger_docs(spark, "d1", "d2", "d3"))     # seq 1
-    run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
-    shutil.copy(cursor, str(tmp_path / "cursor_r1.json"))
-    tbl.delete_where(spark, "doc_id = 'd1'", "doc_id")    # seq 2
-    tbl.delete_where(spark, "doc_id = 'd2'", "doc_id")    # seq 3
-    r2 = run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
-    assert [t["batch_id"] for t in r2["tombstones"]] == [2, 3]
-    want_rows, want_tombs = _batches(spark, out), _batches(spark, tombs)
-    assert want_tombs == {2: {"d1"}, 3: {"d2"}}
-
-    shutil.copy(str(tmp_path / "cursor_r1.json"), cursor)  # the crash
-    replay = run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
-    assert replay["tombstones"] == r2["tombstones"]
-    assert _batches(spark, out) == want_rows == {1: {"d1", "d2", "d3"}}
-    assert _batches(spark, tombs) == want_tombs
-
-
-def test_incremental_replay_under_another_bucket_count(spark, tmp_path):
-    """A crashed window replayed on a smaller core budget runs under
-    another derived bucket count (8 buckets on 2 tasks, then 4 on 1).
-    The sink is keyed by ``_batch_id`` alone, so the replay replaces
-    the batch whole: no row of the first attempt stays beside it."""
-    from accountant_pdf_extract_spark.plans.job import run_incremental_job
-    from accountant_pdf_extract_spark.plans.pipeline import SALT_COL
-    from accountant_pdf_extract_spark.sources.catalog import DocTable
-
-    tbl = DocTable(str(tmp_path / "tbl"))
-    out = str(tmp_path / "out")
-    cursor = str(tmp_path / "cursor.json")
-    tbl.append(_ledger_docs(spark, *(f"a{i}" for i in range(16))))  # seq 1
-    run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
-    shutil.copy(cursor, str(tmp_path / "cursor_r1.json"))
-    tbl.append(_ledger_docs(spark, *(f"b{i}" for i in range(16))))  # seq 2
-    r2 = run_incremental_job(spark, tbl, out, cursor, num_partitions=2)
-    want = _batches(spark, out)
-    assert want == {1: {f"a{i}" for i in range(16)},
-                    2: {f"b{i}" for i in range(16)}}
-
-    shutil.copy(str(tmp_path / "cursor_r1.json"), cursor)  # the crash
-    replay = run_incremental_job(spark, tbl, out, cursor, num_partitions=1)
-    assert replay["segments"] == r2["segments"]
-    assert _batches(spark, out) == want
-    sink = spark.read.parquet(out)
-    assert SALT_COL not in sink.columns
-    keys = [(r["doc_id"], r["order"]) for r in sink.collect()]
-    assert len(keys) == len(set(keys)) == 32
-
-
-def test_incremental_refuses_output_beyond_table_head(spark, tmp_path):
-    """An output holding a ``_batch_id`` beyond the table's current
-    sequence came from another table or history: a fresh cursor run
-    against it raises before writing anything, and the cursor stays
-    absent."""
-    import os
-
-    import pytest
-
-    from accountant_pdf_extract_spark.plans.job import run_incremental_job
-    from accountant_pdf_extract_spark.sources.catalog import DocTable
-
-    out = str(tmp_path / "out")
-    old = DocTable(str(tmp_path / "old"))
-    for d in ("a1", "a2", "a3"):                          # seq 1..3
-        old.append(_ledger_docs(spark, d))
-    run_incremental_job(spark, old, out, str(tmp_path / "old.json"),
-                        num_partitions=2)
-    assert set(_batches(spark, out)) == {3}
-
-    def tree():
-        return sorted(
-            (os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
-            for d, _dirs, files in os.walk(out) for f in files
-        )
-
-    before = tree()
-    new = DocTable(str(tmp_path / "new"))
-    new.append(_ledger_docs(spark, "b1"))                 # seq 1
-    cursor = str(tmp_path / "new.json")
-    with pytest.raises(ValueError, match="_batch_id=3"):
-        run_incremental_job(spark, new, out, cursor, num_partitions=2)
-    assert tree() == before
-    assert not os.path.exists(cursor)
 
 
 def _stub_spark(parallelism):
@@ -696,7 +461,7 @@ def test_num_partitions_above_salt_buckets_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="num_partitions=16.*salt_buckets=8"):
         run_job(spark, _ledger_docs(spark, "d1"), out, log,
                 salt_buckets=8, num_partitions=16)
-    assert CommitLog(log).pinned_salt_buckets() is None
+    assert CommitLog(log).pinned() is None
     assert not os.path.exists(out)
 
 
@@ -716,7 +481,7 @@ def test_run_job_derives_and_pins_salt_buckets(spark, tmp_path):
     res = run_job(spark, inp, out, log)
     n = 4 * spark.sparkContext.defaultParallelism
     assert len(_bucket_dirs(out)) == len(res["processed_buckets"]) == n
-    assert CommitLog(log).pinned_salt_buckets() == n
+    assert CommitLog(log).pinned()[0] == n
     assert CommitLog(log).snapshots()[0]["lineage"]["salt_buckets"] == str(n)
 
 
@@ -734,7 +499,7 @@ def test_resume_keeps_pinned_salt_buckets(spark, tmp_path):
     lost = sorted(all_buckets)[: len(all_buckets) // 2]
     log.drop_snapshots({s["snapshot_id"] for s in log.snapshots()})
     log.commit(
-        [{"partition_id": b, "input_fingerprint": "x", "n_docs": 0,
+        [{"partition_id": b, "output_fingerprint": "x", "n_docs": 0,
           "n_spans": 0, "n_fields": 0, "job_wall_ms": 0}
          for b in sorted(all_buckets - set(lost))],
         {"job_id": "partial"},
@@ -745,7 +510,7 @@ def test_resume_keeps_pinned_salt_buckets(spark, tmp_path):
     assert default_salt_buckets(spark) != 8
     res2 = run_job(spark, inp, out, log_path)
     assert res2["processed_buckets"] == lost
-    assert log.pinned_salt_buckets() == 8
+    assert log.pinned()[0] == 8
     assert log.snapshots()[-1]["lineage"]["salt_buckets"] == "8"
     assert len(_bucket_dirs(out)) == len(all_buckets)
     assert _collect(spark, out) == reference
@@ -756,40 +521,103 @@ def test_pin_refuses_mismatch_before_first_commit(spark, tmp_path):
     directories but no snapshot: a re-run under another modulus raises
     before it writes anything, and a re-run under the pin redoes every
     bucket.  A log with snapshots but no pin is refused."""
-    import os
-
-    import pytest
-
     inp = _ledger_docs(spark, *(f"d{i}" for i in range(20)))
     out, log_path = str(tmp_path / "out"), str(tmp_path / "log")
     res1 = run_job(spark, inp, out, log_path, salt_buckets=8,
                    num_partitions=2)
     log = CommitLog(log_path)
     log.drop_snapshots({s["snapshot_id"] for s in log.snapshots()})
-    assert log.snapshots() == [] and log.pinned_salt_buckets() == 8
+    assert log.snapshots() == [] and log.pinned()[0] == 8
 
-    def tree():
-        return sorted(
-            (os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
-            for d, _dirs, files in os.walk(out) for f in files
-        )
-
-    before = tree()
+    before = _tree(out)
     with pytest.raises(ValueError, match="salt_buckets=8"):
         run_job(spark, inp, out, log_path, salt_buckets=16,
                 num_partitions=2)
-    assert tree() == before
+    assert _tree(out) == before
     res2 = run_job(spark, inp, out, log_path)
     assert res2["processed_buckets"] == res1["processed_buckets"]
 
     legacy = CommitLog(str(tmp_path / "legacy"))
     legacy.commit(
-        [{"partition_id": 0, "input_fingerprint": "x", "n_docs": 0,
+        [{"partition_id": 0, "output_fingerprint": "x", "n_docs": 0,
           "n_spans": 0, "n_fields": 0, "job_wall_ms": 0}],
         {"job_id": "old", "salt_buckets": "1024"},
     )
     with pytest.raises(ValueError, match="no pinned salt_buckets"):
         run_job(spark, inp, str(tmp_path / "lout"), legacy.path)
+
+
+def _tree(*paths):
+    """(path, mtime_ns) of every file under ``paths``."""
+    import os
+
+    return sorted(
+        (os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
+        for p in paths for d, _dirs, files in os.walk(p) for f in files
+    )
+
+
+@pytest.mark.parametrize(
+    "case", ["parquet_append", "crash_then_append", "doctable_append"])
+def test_resume_refuses_a_changed_input(spark, tmp_path, case):
+    """A resume over an input that gained docs since the log's first
+    run raises before any write: after an append to a parquet input,
+    after a crash that lost half the commits and then an append, and
+    after an append to a DocTable.  Unpinned, the resume skipped every
+    new doc in a committed bucket and reported success.  A resume over
+    the unchanged input (the original files, or the DocTable's first
+    snapshot) still redoes exactly the lost buckets."""
+    from accountant_pdf_extract_spark.sources.catalog import DocTable
+
+    out, log_path = str(tmp_path / "out"), str(tmp_path / "log")
+    first = _ledger_docs(spark, *(f"d{i}" for i in range(40)))
+    new = _ledger_docs(spark, *(f"n{i}" for i in range(40)))
+    if case == "doctable_append":
+        tbl = DocTable(str(tmp_path / "tbl"))
+        s1 = tbl.append(first)
+
+        def read():
+            return tbl.read(spark)
+
+        append = tbl.append
+        original = tbl.read(spark, s1)
+    else:
+        inp = str(tmp_path / "in")
+        first.write.parquet(inp)
+
+        def read():
+            return spark.read.parquet(inp)
+
+        def append(df):
+            df.write.mode("append").parquet(inp)
+
+        original = spark.read.parquet(*read().inputFiles())
+
+    res1 = run_job(spark, read(), out, log_path, salt_buckets=8,
+                   num_partitions=2)
+    reference = _collect(spark, out)
+    lost = []
+    if case == "crash_then_append":
+        log = CommitLog(log_path)
+        done = res1["processed_buckets"]
+        lost = done[: len(done) // 2]
+        log.drop_snapshots({s["snapshot_id"] for s in log.snapshots()})
+        log.commit(
+            [{"partition_id": b, "output_fingerprint": "x", "n_docs": 0,
+              "n_spans": 0, "n_fields": 0, "job_wall_ms": 0}
+             for b in done[len(done) // 2:]],
+            {"job_id": "partial"},
+        )
+
+    before = _tree(out, log_path)
+    append(new)
+    with pytest.raises(ValueError, match="pinned to another input"):
+        run_job(spark, read(), out, log_path)
+    assert _tree(out, log_path) == before
+
+    res2 = run_job(spark, original, out, log_path)
+    assert res2["processed_buckets"] == lost
+    assert _collect(spark, out) == reference
 
 
 def test_bucketed_input_defaults_to_stored_count(spark, tmp_path):
